@@ -5,13 +5,13 @@ Usage (from the repository root):
 
 One driver thread issues one query at a time: construct it, materialize
 it (the ``noop`` sink, or an upsert into a feature layer for the queries
-in ``workloads.UPSERT_KEYS``), wait, then issue the next. The seed
-generates the input tables and a fresh query order for every pass. A
-cold correctness pass first checks every result against its DuckDB
-oracle; timed passes then fill ``--seconds``. With ``--trace 0`` the
-last stdout line carries the end-to-end metrics; with ``--trace 1``
-untraced and traced passes alternate and the last line carries the
-per-layer metrics (README.md).
+in ``workloads.UPSERT_KEYS``), wait, then issue the next. The input
+tables are fixed (``sf0.01/``); the seed sets a fresh query order for
+every pass. A cold correctness pass first checks every result against
+its DuckDB oracle; timed passes then fill ``--seconds``. With
+``--trace 0`` the last stdout line carries the end-to-end metrics; with
+``--trace 1`` untraced and traced passes alternate and the last line
+carries the per-layer metrics (README.md).
 """
 
 from __future__ import annotations
@@ -37,6 +37,8 @@ from pathlib import Path  # noqa: E402
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 PACKAGE_DIR = ROOT / "terra_bonobo_nodes_spark"
+# copies of the repository's scale-factor-0.01 test tables (README.md)
+DATA_DIR = HERE / "sf0.01"
 
 from spans import SPAN_LAYERS  # noqa: E402
 from status import UDF_LAYERS  # noqa: E402
@@ -48,10 +50,31 @@ SESSION_METRICS = {
     "agg_peak_memory_bytes": "B", "broadcast_build_s": "s",
     "python_worker_start_s": "s", "probe_s": "s",
 }
+# Untimed passes after the correctness pass. With the JVM held to its
+# first-tier compiler (``pin_environment``), pass times are level from
+# the first warm pass on.
+WARM_PASSES = 1
 END_TO_END = {
-    "wall_s": "s", "construct_s": "s", "exec_s": "s", "query_p50_s": "s",
+    "wall_per_probe": "ratio", "construct_per_probe": "ratio", "exec_per_probe": "ratio",
     "setup_s": "s", "ok_frac": "ratio", "peak_rss_mb": "MB",
 }
+
+
+def median_sums(samples: dict[str, list[tuple[float, float, float]]],
+                per_probe: bool) -> tuple[float, float, float]:
+    """Sums over the queries of each query's median construct, exec and
+    construct+exec time. A sample is ``(construct_s, exec_s, probe_s)``;
+    with ``per_probe`` it is first divided by the probe timed just
+    before its pass."""
+    construct = execute = wall = 0.0
+    for qs in samples.values():
+        if not qs:
+            continue
+        scaled = [(c / p, e / p) if per_probe else (c, e) for c, e, p in qs]
+        construct += statistics.median(c for c, _ in scaled)
+        execute += statistics.median(e for _, e in scaled)
+        wall += statistics.median(c + e for c, e in scaled)
+    return construct, execute, wall
 
 
 def per_layer_units() -> dict[str, str]:
@@ -91,16 +114,23 @@ def pin_environment(run_dir: Path) -> dict[str, str]:
         mem_kib = int(next(line for line in f if line.startswith("MemTotal")).split()[1])
     heap_gib = min(4, max(2, mem_kib // (8 << 20)))
     tmp = run_dir / "tmp"
-    for sub in ("tmp", "local", "warehouse", "sink", "data"):
+    for sub in ("tmp", "local", "warehouse", "sink"):
         (run_dir / sub).mkdir(parents=True, exist_ok=True)
-    # the heap starts at its full size, so the JVM's resident peak does
-    # not depend on when the collector chose to grow it
-    java_opts = f"-Xms{heap_gib}g -Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+    # The heap starts at its full size and resident, so the JVM's
+    # resident peak does not depend on how much of it the collector
+    # happened to touch. Only the first-tier (C1) compiler runs: with the
+    # optimizing tier, pass times kept falling for eight or more passes
+    # while it compiled the planner, by up to 1.6x, and how far a run
+    # got down that slope set most of its spread.
+    java_opts = (f"-Xms{heap_gib}g -XX:+AlwaysPreTouch -XX:TieredStopAtLevel=1 "
+                 f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData")
     env = {
         "SPARK_GRAFT_CPUS": str(cpus),
         "SPARK_DRIVER_MEM": f"{heap_gib}g",
         "SPARK_LOCAL_DIRS": str(run_dir / "local"),
         "TMPDIR": str(tmp),
+        # the short-lived JVM that spark-submit starts to build the command
+        "SPARK_LAUNCHER_OPTS": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
         "PYSPARK_SUBMIT_ARGS": " ".join(
             [
                 "--conf", shlex.quote(f"spark.driver.extraJavaOptions={java_opts}"),
@@ -118,6 +148,12 @@ def vm_hwm_mb(pid: int) -> float:
     with open(f"/proc/{pid}/status") as f:
         kib = next(line for line in f if line.startswith("VmHWM")).split()[1]
     return int(kib) / 1024
+
+
+def reset_vm_hwm() -> None:
+    """Restart this process's VmHWM from its current resident size."""
+    with open("/proc/self/clear_refs", "w") as f:
+        f.write("5")
 
 
 def descendants(pid: int) -> list[int]:
@@ -268,7 +304,8 @@ class Bench:
                 exec_s = time.perf_counter() - t1
                 if traced:
                     traced.after_exec(name, write_s)
-                samples[name].append((construct_s, exec_s))
+                samples[name].append((construct_s, exec_s,
+                                      self.probes[-1] if self.probes else float("nan")))
             except Exception as exc:  # noqa: BLE001 - a failing query is a result
                 traceback.print_exc(file=sys.stderr)
                 self.failures.append(f"{name}: {type(exc).__name__}: {exc}")
@@ -279,16 +316,18 @@ class Bench:
         pass cannot set a query's median. With ``traced``, each untraced pass is paired
         with a traced one, the traced one first in every other pair, so
         both sides see the same warm-up."""
-        samples: dict[str, list[tuple[float, float]]] = defaultdict(list)
-        traced_samples: dict[str, list[tuple[float, float]]] = defaultdict(list)
+        samples: dict[str, list[tuple[float, float, float]]] = defaultdict(list)
+        traced_samples: dict[str, list[tuple[float, float, float]]] = defaultdict(list)
+        from probe import Probe
+
+        probe = Probe(self.spark)
+        probe()  # warms the probe's own codegen
         spent, last, done, pass_no = 0.0, 0.0, 0, 1
-        self.probe()  # warms the probe's own codegen
-        self.probes.clear()
         while done < 3 or spent + last <= seconds:
             if traced and done % 2:
                 self.traced_pass(pass_no, traced_samples, traced)
                 pass_no += 1
-            self.probe()
+            self.probes.append(probe())
             start = time.perf_counter()
             self.timed_pass(pass_no, samples)
             last = time.perf_counter() - start
@@ -305,24 +344,10 @@ class Bench:
         self.timed_pass(pass_no, samples, traced)
         self.rec.active = False
 
-    def probe(self) -> None:
-        """bench.py's fixed JVM-only host-load anchor (a hash aggregate
-        over a generated range: no IO, no Python), timed before a pass."""
-        from pyspark.sql import functions as F
-
-        t0 = time.perf_counter()
-        self.spark.range(50_000_000).select(F.avg(F.xxhash64("id"))).collect()
-        self.probes.append(time.perf_counter() - t0)
-
     # -- whole run ------------------------------------------------------
     def run(self) -> dict:
-        import datagen
-
         self.env = pin_environment(self.run_dir)
-        self.data_dir = str(self.run_dir / "data")
-        t = time.perf_counter()
-        data_rows = datagen.generate(self.data_dir, self.args.seed)
-        data_s = time.perf_counter() - t
+        self.data_dir = str(DATA_DIR)
 
         import spans
         from terra_bonobo_nodes_spark.session import get_spark
@@ -337,35 +362,47 @@ class Bench:
 
             registry = all_queries()
             self.queries = {n: registry[n] for n in self.names}
-            session_ready = time.perf_counter()
-            from check import Oracle
-
-            self.oracle = Oracle(ROOT, self.data_dir)
-            try:
-                return self._measure(session_ready - T0 - data_s, data_rows)
-            finally:
-                self.oracle.close()
+            return self._measure(time.perf_counter() - T0)
         finally:
             self.stop()
 
-    def _measure(self, to_session_s: float, data_rows: dict) -> dict:
-        cold_s = self.correctness_pass(self.order(0))
+    def _measure(self, to_session_s: float) -> dict:
+        from check import Oracle
+
         t0 = time.perf_counter()
-        self.timed_pass(0, defaultdict(list))  # untimed warm pass
-        setup_s = to_session_s + cold_s + time.perf_counter() - t0
+        self.oracle = Oracle(ROOT, self.data_dir)
+        try:
+            cold_s = self.correctness_pass(self.order(0))
+        finally:
+            self.oracle.close()
+        checked_s = time.perf_counter() - t0
+        # the oracles ran in this process; from here on its peak is the
+        # program's driver side only
+        reset_vm_hwm()
+        t0 = time.perf_counter()
+        for pass_no in range(-WARM_PASSES, 0):
+            self.timed_pass(pass_no, defaultdict(list))
+        warm_s = time.perf_counter() - t0
+        setup_s = to_session_s + cold_s + warm_s
+        self.phases = {"to_session_s": to_session_s, "cold_spark_s": cold_s,
+                       "cold_oracle_s": checked_s - cold_s, "warm_s": warm_s}
+        t0 = time.perf_counter()
         if self.args.trace:
             from traced import TracedPasses
 
             traced = TracedPasses(self)
-            samples, traced_samples, n = self.run_passes(self.args.seconds, traced)
-            metrics = traced.metrics(self.end_to_end(samples, setup_s),
-                                     self.end_to_end(traced_samples, setup_s), n)
+            # half the time for each side, so a traced run is about as
+            # long as an untraced one
+            samples, traced_samples, n = self.run_passes(self.args.seconds / 2, traced)
+            untraced = self.end_to_end(samples, setup_s)
+            metrics = traced.metrics(untraced, self.end_to_end(traced_samples, setup_s), n)
             units = per_layer_units()
         else:
             samples, _, n = self.run_passes(self.args.seconds)
-            metrics = self.end_to_end(samples, setup_s)
+            metrics = untraced = self.end_to_end(samples, setup_s)
             units = END_TO_END
-        self.log_artifact(samples, n, data_rows)
+        self.phases["timed_s"] = time.perf_counter() - t0
+        self.log_artifact(samples, n, untraced)
         failed = len(self.failures)
         return {
             "correct": failed == 0 and all(samples.get(q) for q in self.names),
@@ -376,32 +413,37 @@ class Bench:
         }
 
     def end_to_end(self, samples: dict, setup_s: float) -> dict[str, float]:
-        med = {q: (statistics.median(c for c, _ in s), statistics.median(e for _, e in s),
-                   statistics.median(c + e for c, e in s))
-               for q, s in samples.items() if s}
-        pooled = [c + e for s in samples.values() for c, e in s]
-        jvm_pid = self.spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+        """The end-to-end metrics, plus the undivided ``wall_s``,
+        ``construct_s`` and ``exec_s`` for the run context."""
+        raw, per_probe = median_sums(samples, False), median_sums(samples, True)
         return {
-            "wall_s": sum(m[2] for m in med.values()),
-            "construct_s": sum(m[0] for m in med.values()),
-            "exec_s": sum(m[1] for m in med.values()),
-            "query_p50_s": statistics.median(pooled) if pooled else 0.0,
+            "construct_per_probe": per_probe[0], "exec_per_probe": per_probe[1],
+            "wall_per_probe": per_probe[2],
+            "construct_s": raw[0], "exec_s": raw[1], "wall_s": raw[2],
             "setup_s": setup_s,
             "ok_frac": 1 - len(self.failures) / self.attempted,
-            "peak_rss_mb": vm_hwm_mb(jvm_pid) + vm_hwm_mb(os.getpid()),
+            "peak_rss_mb": sum(self.peak_rss_mb().values()),
         }
 
-    def log_artifact(self, samples: dict, passes: int, data_rows: dict) -> None:
+    def peak_rss_mb(self) -> dict[str, float]:
+        jvm_pid = self.spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+        return {"jvm": vm_hwm_mb(jvm_pid), "driver": vm_hwm_mb(os.getpid())}
+
+    def log_artifact(self, samples: dict, passes: int, untraced: dict) -> None:
         """Run context on stdout ahead of the result line."""
         for failure in self.failures:
             print(f"# FAILED {failure}", file=sys.stderr)
         print(json.dumps({
             "workload": self.args.workload, "seed": self.args.seed,
-            "timed_passes": passes, "env": self.env, "data_rows": data_rows,
+            "timed_passes": passes, "env": self.env,
+            "phases_s": {k: round(v, 3) for k, v in self.phases.items()},
+            "data": str(DATA_DIR.relative_to(ROOT)),
             "result_rows": self.result_rows,
+            "peak_rss_mb": self.peak_rss_mb(),
             "cold_collect_s": {q: round(s, 4) for q, s in self.cold_s.items()},
             "probe_s": [round(p, 4) for p in self.probes],
-            "query_samples_s": {q: [[round(c, 4), round(e, 4)] for c, e in s]
+            "seconds": {k: untraced[k] for k in ("wall_s", "construct_s", "exec_s")},
+            "query_samples_s": {q: [[round(c, 4), round(e, 4)] for c, e, _ in s]
                                 for q, s in samples.items()},
         }))
 

@@ -154,6 +154,11 @@ def summarize(executions: list[list[Node]], index: dict[str, set[str]]) -> dict[
                 out["session.agg_peak_memory_bytes"] += m.get("peak memory", 0.0)
             if node.name == "BroadcastExchange":
                 out["session.broadcast_build_s"] += m.get("time to build", 0.0)
+            if "written output" in m:
+                # a file write command (InsertIntoHadoopFsRelationCommand):
+                # what it wrote, not the size of its target afterwards
+                out["sinks.bytes_written"] += m["written output"]
+                out["sinks.files_written"] += m.get("number of written files", 0.0)
             if node.name.startswith("Scan "):
                 out["tables.scan_s"] += m.get("scan time", 0.0)
                 out["tables.scan_bytes"] += m.get("size of files read", 0.0)

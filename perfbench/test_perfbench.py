@@ -1,5 +1,6 @@
 """Tests of the benchmark's own code: metric extraction, UDF attribution,
-span arithmetic, the result comparator and the data generator.
+span arithmetic, sink write sizes, the result comparator and the host-load
+probe.
 
 Run from the repository root:  python3 -m pytest perfbench -p no:cacheprovider
 """
@@ -19,9 +20,11 @@ ROOT = HERE.parent
 sys.path.insert(0, str(HERE))
 
 import check  # noqa: E402
-import datagen  # noqa: E402
+import probe  # noqa: E402
+import run  # noqa: E402
 import spans  # noqa: E402
 import status  # noqa: E402
+import traced  # noqa: E402
 
 
 # -- metric strings -------------------------------------------------------
@@ -167,6 +170,12 @@ def spark():
     session.stop()
 
 
+def test_probe_runs_its_pandas_udf_in_the_python_workers(spark):
+    # the workers cannot import the probe's module, so its UDF must
+    # travel by value
+    assert probe.Probe(spark)() > 0
+
+
 def _executions_of(spark, action) -> list[list[status.Node]]:
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
@@ -211,14 +220,32 @@ def test_status_store_toy_pandas_udf(spark):
     assert "llm.udf_nodes" not in out and "plans.udf_nodes" not in out
 
 
+def test_status_store_toy_parquet_write(spark, tmp_path):
+    """Bytes and files come from the write command, so a rewrite is
+    counted again and an untouched file is not."""
+    target = tmp_path / "layer"
+    df = spark.range(20_000).selectExpr("id", "cast(id * 3 as string) AS s").repartition(3)
+    executions = _executions_of(spark, lambda: df.write.mode("overwrite").parquet(str(target)))
+    out = status.summarize(executions, {})
+    parts = [f for f in target.iterdir() if f.name.startswith("part-")]
+    assert out["sinks.files_written"] == len(parts) == 3
+    on_disk = traced.data_bytes(target)
+    assert on_disk == sum(f.stat().st_size for f in parts)
+    # the status store shows sizes to one decimal of their unit
+    assert out["sinks.bytes_written"] == pytest.approx(on_disk, rel=0.01)
+    appended = _executions_of(
+        spark, lambda: df.limit(10).write.mode("append").parquet(str(target)))
+    out = status.summarize(appended, {})
+    assert out["sinks.files_written"] == 1
+    assert out["sinks.bytes_written"] < on_disk / 3
+
+
 # -- correctness comparator ------------------------------------------------------
 
 
 @pytest.fixture(scope="module")
-def oracle(tmp_path_factory):
-    data = tmp_path_factory.mktemp("data")
-    datagen.generate(str(data), seed=7)
-    o = check.Oracle(ROOT, str(data))
+def oracle():
+    o = check.Oracle(ROOT, str(run.DATA_DIR))
     yield o
     o.close()
 
@@ -238,28 +265,27 @@ def test_mismatch_names_the_first_difference(oracle):
                            base) == "value hash mismatch"
 
 
-def test_oracle_sql_runs_on_generated_tables(oracle):
+def test_oracle_sql_runs_on_the_benchmark_tables(oracle):
+    import pyarrow.parquet as pq
+
+    region = pq.read_table(run.DATA_DIR / "region.parquet").to_pydict()
     want = oracle.expected("SELECT r_regionkey, r_name FROM region")
     got = oracle.digest(["r_name", "r_regionkey"],
-                        [(n, i) for i, n in enumerate(datagen.REGIONS)])
+                        list(zip(region["r_name"], region["r_regionkey"])))
     assert oracle.mismatch(got, want) is None
 
 
-# -- data generator and benchmark definition ------------------------------------------
+# -- benchmark definition ----------------------------------------------------------
 
 
-def test_generator_is_seeded(tmp_path):
-    for name, seed in (("a", 3), ("b", 3), ("c", 4)):
-        datagen.generate(str(tmp_path / name), seed)
-    read = lambda d, t: (tmp_path / d / f"{t}.parquet").read_bytes()  # noqa: E731
-    assert read("a", "lineitem") == read("b", "lineitem")
-    assert read("a", "documents") == read("b", "documents")
-    assert read("a", "lineitem") != read("c", "lineitem")
+def test_median_sums_divide_each_sample_by_its_pass_probe():
+    samples = {"a": [(1.0, 3.0, 1.0), (2.0, 6.0, 2.0), (9.0, 9.0, 1.0)],
+               "b": [(0.5, 0.5, 0.5)]}
+    assert run.median_sums(samples, per_probe=False) == (2.5, 6.5, 9.0)
+    assert run.median_sums(samples, per_probe=True) == (2.0, 4.0, 6.0)
 
 
 def test_benchmark_json_matches_the_reported_metrics():
-    import run
-
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     assert {m["name"]: m["unit"] for m in spec["end_to_end"]} == run.END_TO_END
     assert {m["name"]: m["unit"] for m in spec["per_layer"]} == run.per_layer_units()

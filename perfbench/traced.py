@@ -3,7 +3,8 @@
 Around every query the listener bus is drained so the status store has
 seen each execution: executions started during construction are the
 eager ones, and every execution from construction to the end of the
-sink write is folded into the per-layer executor metrics.
+sink write is folded into the per-layer executor metrics, the bytes and
+files the feature-layer writes produced among them.
 """
 
 from __future__ import annotations
@@ -31,8 +32,6 @@ class TracedPasses:
         self.eager = 0
         self.result_rows = 0
         self.write_s = 0.0
-        self.files_written = 0
-        self.bytes_written = 0
 
     def _count(self) -> int:
         self.bus.waitUntilEmpty()
@@ -52,10 +51,7 @@ class TracedPasses:
             self.totals[key] += value
         self.result_rows += self.bench.result_rows.get(name, 0)
         if name in UPSERT_KEYS:
-            files, size = tree_size(self.bench.sink_root / f"layer={name}")
             self.write_s += write_s
-            self.files_written += files
-            self.bytes_written += size
 
     def metrics(self, untraced: dict, traced: dict, passes: int) -> dict[str, float]:
         """Per-pass per-layer metrics; exits if a span silently missed."""
@@ -78,19 +74,18 @@ class TracedPasses:
         for layer in status.UDF_LAYERS:
             rows_in = self.totals.get(f"{layer}.udf_rows_in", 0.0)
             out[f"{layer}.rows_per_result"] = rows_in / max(self.result_rows, 1)
-        layer_bytes = tree_size(self.bench.sink_root)[1]
+        layer_bytes = data_bytes(self.bench.sink_root)
         out["sinks.write_s"] = self.write_s * per
-        out["sinks.bytes_written"] = self.bytes_written * per
-        out["sinks.files_written"] = self.files_written * per
         out["sinks.write_amplification"] = (
-            self.bytes_written * per / layer_bytes if layer_bytes else 0.0
+            out.get("sinks.bytes_written", 0.0) / layer_bytes if layer_bytes else 0.0
         )
         out["session.probe_s"] = statistics.median(self.bench.probes)
         out["trace.overhead_s"] = traced["wall_s"] - untraced["wall_s"]
         return out
 
 
-def tree_size(path: Path) -> tuple[int, int]:
-    """Number and total bytes of the files under ``path``."""
-    files = [p for p in path.rglob("*") if p.is_file()]
-    return len(files), sum(p.stat().st_size for p in files)
+def data_bytes(path: Path) -> int:
+    """Total bytes of the data files under ``path``: those a reader
+    lists, not ``_SUCCESS`` markers or ``.crc`` checksums."""
+    return sum(p.stat().st_size for p in path.rglob("*")
+               if p.is_file() and not p.name.startswith(("_", ".")))

@@ -5,10 +5,12 @@ Two workloads split the engine along the line its layers fall on:
 - ``geo_ingest`` spends its time in Python across the Arrow boundary:
   geometry kernels inside spatial joins, source codecs, and feature-layer
   writes. Kernel, codec and sink changes show here.
-- ``relational_llm`` runs on the JVM: relational, streaming and llm
-  curation queries whose cost is plan construction (py4j, eager jobs),
-  codegen, shuffle and scan, with almost no Python UDF work. Kernel
-  changes must read "no change" here.
+- ``relational_llm`` runs mostly on the JVM: relational, streaming and
+  llm curation queries whose cost is plan construction (py4j, eager
+  executions), codegen, shuffle and scan. Its Python UDFs are llm
+  kernels: text winnowing (llm_winnow_pairs) and the Arrow-batched
+  cosine top-k of llm_novelty_scores. It has no geometry kernels, so geo
+  kernel changes must read "no change" here.
 
 Each list is sized so that one pass takes a few seconds on four cores.
 That way a run fits a cold correctness pass plus several timed passes.
@@ -28,7 +30,7 @@ WORKLOADS: dict[str, list[str]] = {
         "star_join_revenue_by_region",
         "stream_window_agg_surface",
         "llm_winnow_pairs",
-        "llm_c4_line_filter",
+        "llm_novelty_scores",
     ],
 }
 
