@@ -13,8 +13,8 @@ Apache Sedona's so swapping to JVM execution is mechanical.
 
 from __future__ import annotations
 
+import functools
 import json
-import math
 import struct
 
 import numpy as np
@@ -87,40 +87,17 @@ def _st_pointz(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf(DoubleType())
-def _st_x(g: pd.Series) -> pd.Series:
-    def f(b):
-        geom = W.parse_wkb(b)
-        if geom is None or geom[0] != "Point" or W.is_empty(geom):
-            return None
-        return geom[1][0]
-
-    return pd.Series(_map1(g, f))
-
-
-@pandas_udf(DoubleType())
-def _st_y(g: pd.Series) -> pd.Series:
-    def f(b):
-        geom = W.parse_wkb(b)
-        if geom is None or geom[0] != "Point" or W.is_empty(geom):
-            return None
-        return geom[1][1]
-
-    return pd.Series(_map1(g, f))
-
-
 _XY_T = StructType(
     [StructField("x", DoubleType()), StructField("y", DoubleType())]
 )
 
 
-@pandas_udf(_XY_T)
-def _st_xy(g: pd.Series) -> pd.DataFrame:
-    """st_x + st_y in ONE parse (guide §4.1): the point's coordinate
-    pair as a struct, null fields for non-points/empties — exactly the
-    two kernels' per-field semantics. Vectorized fast path when the
-    whole batch is uniform 21-byte LE point WKB (the shape the
-    vectorized _st_point and point-column pipelines produce)."""
+def _xy(g: pd.Series) -> pd.DataFrame:
+    """The one coordinate-read core behind st_xy, st_x and st_y: a
+    point's (x, y) in one parse, null fields for non-points and
+    empties. Vectorized fast path when the whole batch is uniform
+    21-byte LE point WKB (the shape the vectorized _st_point and
+    point-column pipelines produce); every other batch reads per row."""
     n = len(g)
     vals = g.to_numpy()
     uniform = n > 0 and all(
@@ -145,6 +122,21 @@ def _st_xy(g: pd.Series) -> pd.DataFrame:
             xs_out.append(geom[1][0])
             ys_out.append(geom[1][1])
     return pd.DataFrame({"x": xs_out, "y": ys_out})
+
+
+@pandas_udf(_XY_T)
+def _st_xy(g: pd.Series) -> pd.DataFrame:
+    return _xy(g)
+
+
+@pandas_udf(DoubleType())
+def _st_x(g: pd.Series) -> pd.Series:
+    return _xy(g)["x"]
+
+
+@pandas_udf(DoubleType())
+def _st_y(g: pd.Series) -> pd.Series:
+    return _xy(g)["y"]
 
 
 @pandas_udf(StringType())
@@ -241,16 +233,45 @@ def _st_centroid(g: pd.Series) -> pd.Series:
     return pd.Series(_map1(g, lambda b: W.write_wkb(ops.centroid(W.parse_wkb(b)))))
 
 
-@pandas_udf(ArrayType(DoubleType()))
-def _st_bbox(g: pd.Series) -> pd.Series:
-    def f(b):
-        try:
-            bb = ops.bbox(W.parse_wkb(b))
-        except Exception:
-            return None
-        return list(bb) if bb is not None else None
+# The prepared-geometry type: what st_prepare and st_poly_prep return,
+# and what the spatial joins accept in place of a WKB column.
+PREPARED_T = StructType(
+    [
+        StructField("geom", BinaryType()),
+        StructField("bbox", ArrayType(DoubleType())),
+        StructField("boxy", BooleanType()),
+        StructField("area", DoubleType()),
+    ]
+)
 
-    return pd.Series(_map1(g, f))
+
+def _prep_row(b, repair: bool) -> tuple:
+    """The exact per-row join prep behind st_bbox_boxy, st_prepare and
+    st_poly_prep's fallback: parse WKB ``b`` (make_valid it when
+    ``repair``) and return (geom, bbox, boxy). A geometry that fails to
+    parse or repair, or has no points, gets bbox None and boxy False.
+    boxy is True for points and axis-aligned rectangle polygons — for a
+    boxy×boxy pair, bbox overlap ⇔ intersects and the overlap area is
+    closed-form, so spatial joins evaluate those pairs entirely
+    JVM-side."""
+    try:
+        geom = W.parse_wkb(b)
+        if repair:
+            geom = ops.make_valid(geom)
+        bb = ops.bbox(geom) if geom is not None else None
+    except Exception:
+        geom, bb = None, None
+    if bb is None:
+        return geom, None, False
+    return geom, list(bb), geom[0] == "Point" or ops.as_axis_rect(geom) is not None
+
+
+def _prepare_row(b) -> tuple:
+    """One PREPARED_T row: make_valid + bbox + boxy + area in one parse
+    and write; an unparseable geometry becomes POINT EMPTY."""
+    geom, bb, boxy = _prep_row(b, repair=True)
+    wkb = W.write_wkb(W.POINT_EMPTY if geom is None else geom)
+    return wkb, bb, boxy, 0.0 if bb is None else ops.area(geom)
 
 
 _BBOX_BOXY_T = StructType(
@@ -261,69 +282,35 @@ _BBOX_BOXY_T = StructType(
 )
 
 
+def _bbox_boxy(g: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame(
+        [_prep_row(b, repair=False)[1:] for b in g], columns=_BBOX_BOXY_T.names
+    )
+
+
+@pandas_udf(ArrayType(DoubleType()))
+def _st_bbox(g: pd.Series) -> pd.Series:
+    return _bbox_boxy(g)["bbox"]
+
+
 @pandas_udf(_BBOX_BOXY_T)
 def _st_bbox_boxy(g: pd.Series) -> pd.DataFrame:
-    """bbox + 'geometry IS its bbox' flag in one parse. boxy is True for
-    points and axis-aligned rectangle polygons — for a boxy×boxy pair,
-    bbox overlap ⇔ intersects and the overlap area is closed-form, so
-    spatial joins evaluate those pairs entirely JVM-side."""
-    bbs, flags = [], []
-    for b in g:
-        try:
-            geom = W.parse_wkb(b)
-            bb = ops.bbox(geom)
-        except Exception:
-            geom, bb = None, None
-        if bb is None:
-            bbs.append(None)
-            flags.append(False)
-            continue
-        bbs.append(list(bb))
-        flags.append(
-            geom[0] == "Point" or ops.as_axis_rect(geom) is not None
-        )
-    return pd.DataFrame({"bbox": bbs, "boxy": flags})
+    """bbox + 'geometry IS its bbox' flag in one parse (see _prep_row)."""
+    return _bbox_boxy(g)
 
 
-_PREPARE_T = StructType(
-    [
-        StructField("geom", BinaryType()),
-        StructField("bbox", ArrayType(DoubleType())),
-        StructField("boxy", BooleanType()),
-        StructField("area", DoubleType()),
-    ]
-)
-
-
-@pandas_udf(_PREPARE_T)
+@pandas_udf(PREPARED_T)
 def _st_prepare(g: pd.Series) -> pd.DataFrame:
     """make_valid + bbox + boxy + area in ONE parse/write — the join
     operators' per-row preparation fused so the record side crosses to
     Python once instead of three times."""
-    geoms, bbs, flags, areas = [], [], [], []
-    for b in g:
-        try:
-            geom = ops.make_valid(W.parse_wkb(b))
-            bb = ops.bbox(geom) if geom is not None else None
-        except Exception:
-            geom, bb = None, None
-        if geom is None or bb is None:
-            geoms.append(W.write_wkb(W.POINT_EMPTY) if geom is None else W.write_wkb(geom))
-            bbs.append(None)
-            flags.append(False)
-            areas.append(0.0)
-            continue
-        geoms.append(W.write_wkb(geom))
-        bbs.append(list(bb))
-        flags.append(geom[0] == "Point" or ops.as_axis_rect(geom) is not None)
-        areas.append(ops.area(geom))
-    return pd.DataFrame({"geom": geoms, "bbox": bbs, "boxy": flags, "area": areas})
+    return pd.DataFrame([_prepare_row(b) for b in g], columns=PREPARED_T.names)
 
 
 _POLY_HEAD = struct.pack("<BI", 1, 3) + struct.pack("<I", 1)  # Polygon, 1 ring
 
 
-@pandas_udf(_PREPARE_T)
+@pandas_udf(PREPARED_T)
 def _st_poly_prep(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
     """``st_prepare(st_make_polygon(xs, ys))`` fused into ONE crossing
     (guide §4.1) with a NumPy-vectorized fast path per ring-length
@@ -334,41 +321,17 @@ def _st_poly_prep(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
     mismatch, NaN coordinates, consecutive duplicate vertices within
     EPS, degenerate rings) fall back to the exact per-row chain."""
     n = len(xs)
-    geoms: list = [None] * n
-    bbs: list = [None] * n
-    flags: list = [False] * n
-    areas: list = [0.0] * n
+    xs_np = xs.to_numpy()
+    ys_np = ys.to_numpy()
+    rows: list = [None] * n
 
     def slow(i: int) -> None:
-        xv, yv = xs.iloc[i], ys.iloc[i]
-        # make_polygon semantics verbatim
-        if xv is None or yv is None or len(xv) < 3:
-            geom = W.POINT_EMPTY
-        else:
-            ring = [(float(a), float(b)) for a, b in zip(xv, yv)]
-            if ring[0] != ring[-1]:
-                ring.append(ring[0])
-            geom = ("Polygon", [ring])
-        # st_prepare semantics verbatim (parse(write(geom)) == geom)
-        try:
-            geom = ops.make_valid(geom)
-            bb = ops.bbox(geom) if geom is not None else None
-        except Exception:
-            geom, bb = None, None
-        if geom is None or bb is None:
-            geoms[i] = W.write_wkb(W.POINT_EMPTY if geom is None else geom)
-            return
-        geoms[i] = W.write_wkb(geom)
-        bbs[i] = list(bb)
-        flags[i] = geom[0] == "Point" or ops.as_axis_rect(geom) is not None
-        areas[i] = ops.area(geom)
+        rows[i] = _prepare_row(_polygon_wkb(xs_np[i], ys_np[i]))
 
     # classify rows into ring-length classes for the vectorized path
     classes: dict[tuple[int, bool], list[int]] = {}
     ax_rows: list = [None] * n
     ay_rows: list = [None] * n
-    xs_np = xs.to_numpy()
-    ys_np = ys.to_numpy()
     for i in range(n):
         xv, yv = xs_np[i], ys_np[i]
         if xv is None or yv is None:
@@ -385,10 +348,10 @@ def _st_poly_prep(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
         needs_close = ax[0] != ax[-1] or ay[0] != ay[-1]
         classes.setdefault((m, needs_close), []).append(i)
 
-    for (m, needs_close), rows in classes.items():
-        idx = np.asarray(rows)
-        X = np.stack([ax_rows[i] for i in rows])
-        Y = np.stack([ay_rows[i] for i in rows])
+    for (m, needs_close), members in classes.items():
+        idx = np.asarray(members)
+        X = np.stack([ax_rows[i] for i in members])
+        Y = np.stack([ay_rows[i] for i in members])
         if needs_close:
             X = np.concatenate([X, X[:, :1]], axis=1)
             Y = np.concatenate([Y, Y[:, :1]], axis=1)
@@ -435,12 +398,27 @@ def _st_poly_prep(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
         blob = coords.tobytes()
         stride = 16 * L
         for t in range(k):
-            i = int(io[t])
-            geoms[i] = head + blob[t * stride : (t + 1) * stride]
-            bbs[i] = [float(x0[t]), float(y0[t]), float(x1[t]), float(y1[t])]
-            flags[i] = bool(boxy_v[t])
-            areas[i] = float(ar[t])
-    return pd.DataFrame({"geom": geoms, "bbox": bbs, "boxy": flags, "area": areas})
+            rows[int(io[t])] = (
+                head + blob[t * stride : (t + 1) * stride],
+                [float(x0[t]), float(y0[t]), float(x1[t]), float(y1[t])],
+                bool(boxy_v[t]),
+                float(ar[t]),
+            )
+    return pd.DataFrame(rows, columns=PREPARED_T.names)
+
+
+def _polygon_wkb(xv, yv) -> bytes:
+    """One row of st_make_polygon: a single ring from coordinate arrays
+    (zip-truncated to the shorter one), auto-closed; POINT EMPTY for a
+    NULL array or fewer than 3 vertices."""
+    if xv is None or yv is None:
+        return W.write_wkb(W.POINT_EMPTY)
+    ring = [(float(x), float(y)) for x, y in zip(xv, yv)]
+    if len(ring) < 3:
+        return W.write_wkb(W.POINT_EMPTY)
+    if ring[0] != ring[-1]:
+        ring.append(ring[0])
+    return W.write_wkb(("Polygon", [ring]))
 
 
 @pandas_udf(BinaryType())
@@ -448,16 +426,7 @@ def _st_make_polygon(xs: pd.Series, ys: pd.Series) -> pd.Series:
     """Polygon from coordinate arrays (ring auto-closed) — the direct
     constructor for synthesized shapes: no WKT formatting + reparsing,
     one Python pass."""
-    out = []
-    for xv, yv in zip(xs, ys):
-        if xv is None or yv is None or len(xv) < 3:
-            out.append(W.write_wkb(W.POINT_EMPTY))
-            continue
-        ring = [(float(x), float(y)) for x, y in zip(xv, yv)]
-        if ring[0] != ring[-1]:
-            ring.append(ring[0])
-        out.append(W.write_wkb(("Polygon", [ring])))
-    return pd.Series(out)
+    return pd.Series([_polygon_wkb(xv, yv) for xv, yv in zip(xs, ys)])
 
 
 @pandas_udf(BinaryType())
@@ -575,14 +544,10 @@ _SIMPLIFY_SUMMARY_T = StructType(
 # one PythonUDF (ExtractPythonUDFs' canEvaluateInPython), so
 # f(inner_udf, lit) forces the inner UDF to materialize in its own
 # node — the exact split the fusion exists to remove.
-_SPECIALIZED_UDFS: dict = {}
 
 
+@functools.cache
 def _simplify_summary_udf(tol: float):
-    key = ("simplify_summary", tol)
-    if key in _SPECIALIZED_UDFS:
-        return _SPECIALIZED_UDFS[key]
-
     def _summary(g: pd.Series) -> pd.DataFrame:
         """simplify → (npoints, centroid x/y) in ONE parse and one
         crossing — the fused form of the st_npoints(st_simplify(g)) +
@@ -609,16 +574,11 @@ def _simplify_summary_udf(tol: float):
         return pd.DataFrame({"n_points": ns, "cx": cxs, "cy": cys})
 
     _summary.__name__ = f"_st_simplify_summary_{tol!r}".replace(".", "_")
-    fn = pandas_udf(_SIMPLIFY_SUMMARY_T)(_summary)
-    _SPECIALIZED_UDFS[key] = fn
-    return fn
+    return pandas_udf(_SIMPLIFY_SUMMARY_T)(_summary)
 
 
+@functools.cache
 def _subdivide_areas_udf(max_vertices: int):
-    key = ("subdivide_areas", max_vertices)
-    if key in _SPECIALIZED_UDFS:
-        return _SPECIALIZED_UDFS[key]
-
     def _areas(g: pd.Series) -> pd.Series:
         """make_valid → subdivide → area-per-part in ONE crossing —
         the fused st_area(explode(st_subdivide(st_makevalid(g))))
@@ -648,9 +608,7 @@ def _subdivide_areas_udf(max_vertices: int):
     # into a second ArrowEvalPython node (observed: every row paid the
     # 12-gon subdivision twice). The mark stops the duplication; empty
     # arrays still explode to zero rows without the pre-filter.
-    fn = pandas_udf(ArrayType(DoubleType()))(_areas).asNondeterministic()
-    _SPECIALIZED_UDFS[key] = fn
-    return fn
+    return pandas_udf(ArrayType(DoubleType()))(_areas).asNondeterministic()
 
 
 @pandas_udf(BinaryType())
@@ -771,11 +729,11 @@ def st_pointz(x, y, z) -> Column:
 
 
 def st_x(g) -> Column:
-    return _st_x(_col(g))
+    return st_xy(g)["x"]
 
 
 def st_y(g) -> Column:
-    return _st_y(_col(g))
+    return st_xy(g)["y"]
 
 
 def st_astext(g) -> Column:

@@ -12,8 +12,11 @@ uses a GiST index scan before exact DE-9IM tests.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType
 
 from terra_bonobo_nodes_spark.geo import kernels as K
 
@@ -339,12 +342,13 @@ def _kdb_candidates(
 def _candidates(
     rec: DataFrame,
     lay: DataFrame,
-    rec_bbox: Column | str,
-    lay_bbox: Column | str,
+    rec_bbox: str,
+    lay_bbox: str,
     strategy: str,
     cell: float | None,
 ) -> DataFrame:
-    """Candidate pairs whose envelopes overlap, by one of two plans:
+    """Candidate pairs whose envelopes overlap, by one of three plans
+    (the bbox args are SQL references such as ``"_rx.bbox"``):
 
     - ``broadcast``: broadcast the (dimension-sized) layer, cull with
       the bbox predicate inside whole-stage codegen. The default, and
@@ -360,37 +364,17 @@ def _candidates(
       order of a typical feature envelope: too small explodes
       replication, too large degrades to few fat partitions (AQE evens
       out the tail).
+    - ``kdb``: the quantile-partitioned big-big path
+      (:func:`_kdb_candidates`).
     """
     if strategy == "broadcast":
         return rec.join(F.broadcast(lay), _bbox_overlap(rec_bbox, lay_bbox))
     if strategy == "kdb":
-        # the kdb path keeps its Column contract (tests drive it
-        # directly); F.expr over a "_rx.bbox"-style reference is the
-        # same attribute access F.col builds
-        rb = F.expr(rec_bbox) if isinstance(rec_bbox, str) else rec_bbox
-        lb = F.expr(lay_bbox) if isinstance(lay_bbox, str) else lay_bbox
-        return _kdb_candidates(rec, lay, rb, lb)
+        return _kdb_candidates(rec, lay, F.expr(rec_bbox), F.expr(lay_bbox))
     if strategy != "grid":
         raise ValueError(f"unknown spatial join strategy {strategy!r}")
     if cell is None or cell <= 0:
         raise ValueError("grid strategy requires a positive cell size")
-    if not (isinstance(rec_bbox, str) and isinstance(lay_bbox, str)):
-        # Column args keep the grid contract too (ADVICE r17: the r17
-        # SQL-text fast path silently narrowed a previously
-        # Column-typed parameter while broadcast/kdb still accepted
-        # Columns). Route through the same SQL text by aliasing the
-        # Column to a working bbox column on each side — identical
-        # grid algebra, one extra pruned projection.
-        rec2 = rec.withColumn(
-            "_cand_rb",
-            F.expr(rec_bbox) if isinstance(rec_bbox, str) else rec_bbox,
-        )
-        lay2 = lay.withColumn(
-            "_cand_lb",
-            F.expr(lay_bbox) if isinstance(lay_bbox, str) else lay_bbox,
-        )
-        out = _candidates(rec2, lay2, "_cand_rb", "_cand_lb", strategy, cell)
-        return out.drop("_cand_rb", "_cand_lb")
     c = float(cell)
 
     # parsed SQL text throughout (the _bbox_overlap rationale): the
@@ -425,6 +409,35 @@ def _candidates(
     )
 
 
+def _prepared(
+    df: DataFrame, name: str, alias: str, default: Callable[[Column], Column]
+) -> Column:
+    """One side's prep under the prepared-geometry contract, aliased to
+    ``alias`` — a struct with at least ``geom`` (the exact kernels'
+    input) and ``bbox`` fields. ``name`` must be a WKB (binary) column,
+    prepared here by ``default``, or a :data:`K.PREPARED_T` column
+    (nullability ignored), used as-is; anything else raises."""
+    try:
+        dt = df.schema[name].dataType
+    except KeyError:
+        dt = None
+    if isinstance(dt, BinaryType):
+        return default(F.col(name)).alias(alias)
+    if dt is not None and dt.simpleString() == K.PREPARED_T.simpleString():
+        return F.col(name).alias(alias)
+    got = "no such column" if dt is None else dt.simpleString()
+    raise ValueError(
+        f"spatial join geometry column {name!r} must be binary (WKB) or "
+        f"{K.PREPARED_T.simpleString()}; got {got}"
+    )
+
+
+def _with_geom(prep: Callable[[Column], Column]) -> Callable[[Column], Column]:
+    """A default prep for metadata-only kernels: the WKB column rides
+    inside the struct as its ``geom`` field."""
+    return lambda g: prep(g).withField("geom", g)
+
+
 def boolean_intersect(
     records: DataFrame,
     layer: DataFrame,
@@ -440,44 +453,31 @@ def boolean_intersect(
     reference's swallow-and-log contract (``terra.py:238-240``; encoded
     in the ``st_intersects`` kernel).
 
-    Plan: broadcast the layer (dimension-sized) with precomputed
-    bboxes, cull pairs with the JVM bbox predicate, then split: for
-    boxy×boxy pairs (points, grid tiles — see ``st_bbox_boxy``) the
-    bbox overlap IS the exact answer, evaluated wholly in whole-stage
-    codegen; only curvy pairs reach the Python intersects kernel. The
-    record side is persisted because both branches scan it (scoped: the
-    cache is released on the next spatial-join call or via
-    ``release_spatial_caches``). Rows with no layer match keep
-    flag=False via left join + coalesce. ``strategy="grid"`` (with a
-    ``cell`` size) switches to the big-big cell-partitioned join — use
-    it when the layer is too large to broadcast."""
-    # r18: callers that already carry join-prep metadata (an `_rx`
-    # struct with bbox/boxy fields — e.g. built by the fused
-    # st_poly_prep kernel, or JVM-side for point columns whose bbox is
-    # closed-form) skip the per-row bbox kernel here entirely
-    if "_rx" in records.columns:
-        rec = _scoped_persist(records.select(id_col, record_geom, "_rx"))
-    else:
-        rec = _scoped_persist(
-            records.select(id_col, record_geom).withColumn(
-                "_rx", K.st_bbox_boxy(F.col(record_geom))
-            )
-        )
-    # the LAYER side gets the same scoped cache as the record side
-    # (r17): both the candidate join's branches re-scan it, and without
-    # the persist the layer's geometry build + bbox kernel re-run once
-    # per branch — same bounded-narrow-frame rationale as rec
-    if "_lx" in layer.columns:
-        lay = _scoped_persist(layer.select(layer_geom, "_lx"))
-    else:
-        lay = _scoped_persist(
-            layer.select(layer_geom).withColumn(
-                "_lx", K.st_bbox_boxy(F.col(layer_geom))
-            )
-        )
-    cand = _candidates(
-        rec, lay, "_rx.bbox", "_lx.bbox", strategy, cell
+    ``record_geom`` and ``layer_geom`` each name a WKB (binary) column
+    or a prepared column of type ``K.PREPARED_T``
+    (``struct<geom:binary,bbox:array<double>,boxy:boolean,area:double>``,
+    what ``st_prepare`` and ``st_poly_prep`` return). A prepared column
+    is used as-is, its ``geom`` field feeding the exact kernel; a WKB
+    column is prepared here by ``st_bbox_boxy``. Any other type raises
+    ValueError.
+
+    Plan: broadcast the layer (dimension-sized) with its bboxes, cull
+    pairs with the JVM bbox predicate, then split: for boxy×boxy pairs
+    (points, grid tiles — see ``st_bbox_boxy``) the bbox overlap IS the
+    exact answer, evaluated wholly in whole-stage codegen; only curvy
+    pairs reach the Python intersects kernel. Both prepared sides are
+    persisted because both branches scan them (scoped: see
+    ``_scoped_persist`` and ``release_spatial_caches``). Rows with no
+    layer match keep flag=False via left join + coalesce.
+    ``strategy="grid"`` (with a ``cell`` size) switches to the big-big
+    cell-partitioned join — use it when the layer is too large to
+    broadcast."""
+    prep = _with_geom(K.st_bbox_boxy)
+    rec = _scoped_persist(
+        records.select(id_col, _prepared(records, record_geom, "_rx", prep))
     )
+    lay = _scoped_persist(layer.select(_prepared(layer, layer_geom, "_lx", prep)))
+    cand = _candidates(rec, lay, "_rx.bbox", "_lx.bbox", strategy, cell)
     both_boxy = F.col("_rx.boxy") & F.col("_lx.boxy")
     fast = cand.filter(both_boxy).select(id_col)
     # NULL-mask the kernel args on the boxy pairs: Catalyst extracts the
@@ -487,14 +487,13 @@ def boolean_intersect(
     # Python for an answer the bbox join already gave. Masked args make
     # those rows a NULL-in/False-out no-op in the kernel (no parse, no
     # bytes); the ~both_boxy filter still excludes them from the union
-    # either way, so the result is unchanged (r17 bench: 2.74s ->
-    # ~1.7s warm at sf0.1).
+    # either way, so the result is unchanged.
     slow = (
         cand.filter(~both_boxy)
         .filter(
             K.st_intersects(
-                F.when(~both_boxy, F.col(record_geom)),
-                F.when(~both_boxy, F.col(layer_geom)),
+                F.when(~both_boxy, F.col("_rx.geom")),
+                F.when(~both_boxy, F.col("_lx.geom")),
             )
         )
         .select(id_col)
@@ -515,7 +514,6 @@ def intersection_percent_by_area(
     dissolve: bool = False,
     strategy: str = "broadcast",
     cell: float | None = None,
-    rect_fast: bool = True,
 ) -> DataFrame:
     """``IntersectionPercentByArea`` (``terra.py:245-279``): area of the
     record's geometry covered by the layer, as a ratio; 0.0 when no
@@ -523,41 +521,37 @@ def intersection_percent_by_area(
     intersection areas — exact when layer features are DISJOINT (grid
     tiles, the reference's workload). ``dissolve=True`` unions the
     clipped zones per record before measuring (exact for overlapping
-    layers). When the record is boxy and EVERY layer feature is boxy
-    (one lazily-computed 1-row broadcast scalar), the dissolve zones
-    are bbox-intersection rects built in whole-stage codegen and the
-    per-record union area is a rectangle sweep over 4 doubles — no
-    WKB crosses into Python for those records; any curvy layer
-    feature routes every record through the geometry-kernel path
-    (coarse routing, but then the check costs nothing and the two
-    union paths never mix for one record). ``rect_fast=False`` forces
-    the kernel path everywhere (parity testing)."""
-    # ONE fused kernel pass prepares the record side: make_valid
+    layers).
+
+    ``record_geom`` and ``layer_geom`` each name a WKB (binary) column
+    or a prepared column of type ``K.PREPARED_T``
+    (``struct<geom:binary,bbox:array<double>,boxy:boolean,area:double>``,
+    what ``st_prepare`` and ``st_poly_prep`` return). A prepared column
+    is used as-is, its ``geom`` field feeding the exact kernels; a WKB
+    column is prepared here by ``st_prepare`` (records) or
+    ``st_bbox_boxy`` (layer). Any other type raises ValueError.
+
+    When the record is boxy and EVERY layer feature is boxy (one
+    lazily-computed 1-row broadcast scalar), the dissolve zones are
+    bbox-intersection rects built in whole-stage codegen and the
+    per-record union area is a rectangle sweep over 4 doubles — no WKB
+    crosses into Python for those records; any curvy layer feature
+    routes every record through the geometry-kernel path (coarse
+    routing, but then the check costs nothing and the two union paths
+    never mix for one record)."""
+    # ONE fused kernel pass prepares a WKB record side: make_valid
     # (idempotent, so the reference's per-pair repair collapses to
-    # per-row), bbox, boxy flag, and the area denominator; persisted
-    # (scoped — released on the next spatial-join call) because the
-    # fast and slow branches both scan it
-    # r18: a caller-provided `_rx` struct (st_prepare's geom/bbox/boxy/
-    # area contract — the fused st_poly_prep kernel emits it in one
-    # vectorized crossing) skips the per-row prepare kernel here
-    if "_rx" in records.columns:
-        rec = _scoped_persist(records.select(id_col, "_rx"))
-    else:
-        rec = _scoped_persist(
-            records.select(id_col, K.st_prepare(F.col(record_geom)).alias("_rx"))
+    # per-row), bbox, boxy flag, and the area denominator. Both sides
+    # are persisted (scoped) because the fast and slow branches — and
+    # the dissolve routing scalar — each scan them.
+    rec = _scoped_persist(
+        records.select(id_col, _prepared(records, record_geom, "_rx", K.st_prepare))
+    )
+    lay = _scoped_persist(
+        layer.select(
+            _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy))
         )
-    # layer side cached too (r17): the dissolve path reads lay THREE
-    # times (routing scalar + fast/slow candidate joins) and the
-    # pairwise path twice — each read otherwise re-runs the layer's
-    # geometry build + bbox kernel (narrow frame, same FIFO bound)
-    if "_lx" in layer.columns:
-        lay = _scoped_persist(layer.select(layer_geom, "_lx"))
-    else:
-        lay = _scoped_persist(
-            layer.select(layer_geom).withColumn(
-                "_lx", K.st_bbox_boxy(F.col(layer_geom))
-            )
-        )
+    )
     if dissolve:
         # Routing scalar: 1 iff EVERY layer feature is boxy (its own
         # bbox rect) — a lazily-computed 1-row broadcast, the
@@ -569,17 +563,12 @@ def intersection_percent_by_area(
         # ArrowEvalPython node (UDFs inside a Filter evaluate on all
         # input rows; measured 16s on 550k pruned-to-zero pairs).
         lab = lay.agg(F.min(F.col("_lx.boxy").cast("int")).alias("_lab"))
-        fastp = (
-            F.lit(rect_fast)
-            & F.col("_rx.boxy")
-            & F.coalesce(F.col("_lab") == 1, F.lit(False))
-        )
+        fastp = F.col("_rx.boxy") & F.coalesce(F.col("_lab") == 1, F.lit(False))
         rec_flag = rec.crossJoin(F.broadcast(lab))
         rec_fast = rec_flag.filter(fastp).drop("_lab")
         rec_slow = rec_flag.filter(~fastp).drop("_lab")
         # parsed SQL text (the _bbox_overlap rationale): these four
-        # corners are re-referenced by the filter and the select below,
-        # and the op-by-op build cost ~0.2s per leg
+        # corners are re-referenced by the filter and the select below
         zx0 = F.expr(
             "greatest(element_at(_rx.bbox, 1), element_at(_lx.bbox, 1))"
         )
@@ -610,10 +599,9 @@ def intersection_percent_by_area(
             # JVM collect_list + ONE scalar kernel call per Arrow batch,
             # not a GROUPED_AGG (one Python invocation PER GROUP): same
             # sweep over the same multiset (the kernel sorts
-            # internally, so list order is irrelevant), but ~15k
+            # internally, so list order is irrelevant), but the
             # per-group Arrow round-trips collapse into a few batched
-            # ones — r17: 4.6s -> 2.6s on the dissolve-leg zones at
-            # sf0.1. collect_list partially aggregates map-side, so the
+            # ones. collect_list partially aggregates map-side, so the
             # exchange carries the same 4 doubles per pair either way.
             .agg(
                 F.collect_list("_zx0").alias("_lx0"),
@@ -635,9 +623,9 @@ def intersection_percent_by_area(
             _candidates(
                 rec_slow, lay, "_rx.bbox", "_lx.bbox", strategy, cell
             )
-            .filter(K.st_intersects(F.col("_rx.geom"), F.col(layer_geom)))
+            .filter(K.st_intersects(F.col("_rx.geom"), F.col("_lx.geom")))
             .withColumn(
-                "_zone", K.st_intersection(F.col("_rx.geom"), F.col(layer_geom))
+                "_zone", K.st_intersection(F.col("_rx.geom"), F.col("_lx.geom"))
             )
             .groupBy(id_col)
             .agg(K.st_union_area_agg(F.col("_zone")).alias("_zone_area"))
@@ -674,7 +662,7 @@ def intersection_percent_by_area(
     )
     slow = cand.filter(~both_boxy).select(
         id_col,
-        K.st_intersection_area(F.col("_rx.geom"), F.col(layer_geom)).alias("_ia"),
+        K.st_intersection_area(F.col("_rx.geom"), F.col("_lx.geom")).alias("_ia"),
         F.col("_rx.area").alias("_ra"),
     )
     # the area denominator rides through the aggregate (constant per
@@ -706,23 +694,29 @@ def intersection_geom(
     convention for empty results). The default collect aggregation is
     the reference's ``|=`` union when layer features are disjoint (grid
     tiles); pass ``dissolve=True`` for an OVERLAPPING layer so shared
-    regions are not double-counted downstream."""
+    regions are not double-counted downstream.
+
+    ``record_geom`` and ``layer_geom`` each name a WKB (binary) column
+    or a prepared column of type ``K.PREPARED_T``
+    (``struct<geom:binary,bbox:array<double>,boxy:boolean,area:double>``,
+    what ``st_prepare`` and ``st_poly_prep`` return). A prepared column
+    is used as-is, its ``geom`` field feeding the exact kernels; a WKB
+    column is prepared here by ``st_prepare`` (records) or ``st_bbox``
+    (layer). Any other type raises ValueError."""
     agg = K.st_union_agg if dissolve else K.st_collect_agg
-    if "_rx" in records.columns:
-        rec = records.select(id_col, "_rx")
-    else:
-        rec = records.select(id_col, K.st_prepare(F.col(record_geom)).alias("_rx"))
-    if "_lx" in layer.columns:
-        # derive the bbox-only column JVM-side from caller-provided prep
-        lay = layer.select(layer_geom, F.col("_lx.bbox").alias("_lb"))
-    else:
-        lay = layer.select(layer_geom).withColumn(
-            "_lb", K.st_bbox(F.col(layer_geom))
+    rec = records.select(id_col, _prepared(records, record_geom, "_rx", K.st_prepare))
+    lay = layer.select(
+        _prepared(
+            layer,
+            layer_geom,
+            "_lx",
+            lambda g: F.struct(g.alias("geom"), K.st_bbox(g).alias("bbox")),
         )
+    )
     zones = (
-        _candidates(rec, lay, "_rx.bbox", "_lb", strategy, cell)
-        .filter(K.st_intersects(F.col("_rx.geom"), F.col(layer_geom)))
-        .withColumn("_zone", K.st_intersection(F.col("_rx.geom"), F.col(layer_geom)))
+        _candidates(rec, lay, "_rx.bbox", "_lx.bbox", strategy, cell)
+        .filter(K.st_intersects(F.col("_rx.geom"), F.col("_lx.geom")))
+        .withColumn("_zone", K.st_intersection(F.col("_rx.geom"), F.col("_lx.geom")))
         .groupBy(id_col)
         .agg(agg(F.col("_zone")).alias("_zone"))
     )

@@ -3247,14 +3247,15 @@ def s_document_roundtrip_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("content")
         )
     )
+    xy = K.st_xy("geom")
     geo_leg = geojson_reader(g_docs, "content").select(
         F.lit("geojson").alias("kind"),
         F.col("feature_id").cast("long").alias("doc_id"),
         F.col("properties").getItem("lang").alias("lang"),
         F.col("properties").getItem("n_chars").cast("long").alias("n_chars"),
         F.col("properties").getItem("text_chk").alias("text_chk"),
-        K.st_x("geom").alias("gx"),
-        K.st_y("geom").alias("gy"),
+        xy["x"].alias("gx"),
+        xy["y"].alias("gy"),
     )
 
     return (
@@ -3323,15 +3324,16 @@ def j2_overlay_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("intersection_percent", 6).alias("intersection_percent"),
         )
 
+    prep = dict(record_geom="prep", layer_geom="layer_prep")
     pairwise = leg(
         intersection_percent_by_area(
-            _customer_rects(spark, sf_dir), _tile_layer(spark)
+            _customer_rects(spark, sf_dir), _tile_layer(spark), **prep
         ),
         "pairwise",
     )
     concave = leg(
         intersection_percent_by_area(
-            _customer_ells(spark, sf_dir), _ell_tile_layer(spark)
+            _customer_ells(spark, sf_dir), _ell_tile_layer(spark), **prep
         ),
         "concave",
     )
@@ -3345,16 +3347,12 @@ def j2_overlay_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_custkey") % 5).cast("double").alias("ky"),
     )
     kx, ky = F.col("kx"), F.col("ky")
-    # fused vectorized prep (r18) — see _customer_rects
+    # fused vectorized prep — see _customer_rects
     rpp = K.st_poly_prep(
         F.array(kx, kx + 4, kx + 4, kx),
         F.array(ky, ky, ky + 4, ky + 4),
     )
-    records = cust.select(
-        F.col("c_custkey").alias("identifier"),
-        rpp["geom"].alias("geom"),
-        rpp.alias("_rx"),
-    )
+    records = cust.select(F.col("c_custkey").alias("identifier"), rpp.alias("prep"))
     t = spark.range(0, 40, 1, 1)  # one partition — see _tile_layer
     x0 = (F.col("id") % 5).cast("double")
     y0 = (F.col("id") % 4).cast("double")
@@ -3362,9 +3360,10 @@ def j2_overlay_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(x0, x0 + 4, x0 + 4, x0),
         F.array(y0, y0, y0 + 4, y0 + 4),
     )
-    tiles = t.select(tpp["geom"].alias("layer_geom"), tpp.alias("_lx"))
+    tiles = t.select(tpp.alias("layer_prep"))
     dissolve = leg(
-        intersection_percent_by_area(records, tiles, dissolve=True), "dissolve"
+        intersection_percent_by_area(records, tiles, dissolve=True, **prep),
+        "dissolve",
     )
 
     return pairwise.unionByName(concave).unionByName(dissolve)

@@ -36,27 +36,22 @@ def _customer_rects(spark: SparkSession, sf_dir: str, half: float = 3.0) -> Data
     )
     h = F.lit(half)
     cx, cy = F.col("cx"), F.col("cy")
-    # ONE fused, vectorized crossing (r18): geometry + the spatial
-    # joins' prep metadata (`_rx` = st_prepare's struct) in a single
-    # st_poly_prep kernel — the operators detect `_rx` and skip their
-    # own per-row prepare pass
+    # ONE fused, vectorized crossing: the prepared geometry (st_prepare's
+    # struct), which the spatial joins take as record_geom="prep" and
+    # use as-is instead of running their own per-row prepare pass
     pp = K.st_poly_prep(
         F.array(cx - h, cx + h, cx + h, cx - h),
         F.array(cy - h, cy - h, cy + h, cy + h),
     )
-    return cust.select(
-        F.col("c_custkey").alias("identifier"),
-        pp["geom"].alias("geom"),
-        pp.alias("_rx"),
-    )
+    return cust.select(F.col("c_custkey").alias("identifier"), pp.alias("prep"))
 
 
 def _tile_layer(spark: SparkSession) -> DataFrame:
-    """110 disjoint 10x10 tiles covering x in [-100,0), y in [-10,100)."""
+    """110 disjoint 10x10 tiles covering x in [-100,0), y in [-10,100),
+    as one prepared column ``layer_prep`` (see _customer_rects)."""
     # ONE partition: a dimension-sized broadcast layer planned as 32
     # range slices turns each chained kernel into a 32-task Python
-    # stage (~1s of worker dispatch for 110 rows — r17 measurement:
-    # -0.6s/leg from this line alone)
+    # stage (~1s of worker dispatch for 110 rows)
     t = spark.range(0, 110, 1, 1)
     x0 = ((F.col("id") % 10) * 10 - 100).cast("double")
     y0 = ((F.col("id") / 10).cast("long") * 10 - 10).cast("double")
@@ -64,7 +59,7 @@ def _tile_layer(spark: SparkSession) -> DataFrame:
         F.array(x0, x0 + 10, x0 + 10, x0),
         F.array(y0, y0, y0 + 10, y0 + 10),
     )
-    return t.select(pp["geom"].alias("layer_geom"), pp.alias("_lx"))
+    return t.select(pp.alias("layer_prep"))
 
 
 TILES_SQL = """
@@ -94,11 +89,7 @@ def _customer_ells(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(cx, cx + 4, cx + 4, cx + 2, cx + 2, cx),
         F.array(cy, cy, cy + 2, cy + 2, cy + 4, cy + 4),
     )
-    return cust.select(
-        F.col("c_custkey").alias("identifier"),
-        pp["geom"].alias("geom"),
-        pp.alias("_rx"),
-    )
+    return cust.select(F.col("c_custkey").alias("identifier"), pp.alias("prep"))
 
 
 def _ell_tile_layer(spark: SparkSession) -> DataFrame:
@@ -110,7 +101,7 @@ def _ell_tile_layer(spark: SparkSession) -> DataFrame:
         F.array(x0, x0 + 10, x0 + 10, x0 + 5, x0 + 5, x0),
         F.array(y0, y0, y0 + 5, y0 + 5, y0 + 10, y0 + 10),
     )
-    return t.select(pp["geom"].alias("layer_geom"), pp.alias("_lx"))
+    return t.select(pp.alias("layer_prep"))
 
 
 ELLS_SQL = """
@@ -165,11 +156,8 @@ def g1_geojson_attribute_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     )
     parsed = attribute_to_geometry(ev.withColumn("gjson", gj), "gjson", drop=True)
     cent = geometry_to_centroid(parsed, "geom", "centroid")
-    return cent.select(
-        "event_id",
-        K.st_x("centroid").alias("gx"),
-        K.st_y("centroid").alias("gy"),
-    )
+    xy = K.st_xy("centroid")
+    return cent.select("event_id", xy["x"].alias("gx"), xy["y"].alias("gy"))
 
 
 # (g5_force_2d / g6_simplify_zigzag retired round 17 into
@@ -411,20 +399,19 @@ def _j1_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         ((F.col("value") % 360) - 180).alias("x"),
         ((F.col("value") % 170) - 85).alias("y"),
     )
-    # r18: a point's join-prep metadata is closed-form — bbox is
-    # [x, y, x, y] and points are always boxy — so `_rx` builds in
-    # whole-stage codegen and NO WKB parse happens for it; the geom
-    # column (the slow branch's kernel arg) stays the vectorized
-    # st_point. The operators detect `_rx`/`_lx` and skip their
-    # per-row st_bbox_boxy pass (r17: that pass was ~1s of the row).
-    pts = ev.withColumn("geom", K.st_point("x", "y")).withColumn(
-        "_rx",
-        F.expr(
-            "CASE WHEN x IS NULL OR y IS NULL OR isnan(x) OR isnan(y)"
-            " THEN named_struct('bbox', CAST(NULL AS ARRAY<DOUBLE>),"
-            "                   'boxy', false)"
-            " ELSE named_struct('bbox', array(x, y, x, y), 'boxy', true)"
-            " END"
+    # a point's prep is closed-form — bbox [x, y, x, y], always boxy,
+    # area 0 — so the prepared struct builds in whole-stage codegen
+    # around the vectorized st_point and NO WKB parse happens for it;
+    # the joins take it as record_geom="prep" and skip their per-row
+    # st_bbox_boxy pass
+    missing = F.expr("x IS NULL OR y IS NULL OR isnan(x) OR isnan(y)")
+    pts = ev.withColumn(
+        "prep",
+        F.struct(
+            K.st_point("x", "y").alias("geom"),
+            F.when(~missing, F.expr("array(x, y, x, y)")).alias("bbox"),
+            (~missing).alias("boxy"),
+            F.lit(0.0).alias("area"),
         ),
     )
     nation = load_table(spark, sf_dir, "nation").select(
@@ -432,13 +419,13 @@ def _j1_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         (((F.col("n_nationkey") % 5) * 30).cast("double") - 75).alias("y0"),
     )
     # same rectangle ring the WKT text built (float->string->float
-    # round-trips are exact), one fused vectorized crossing + `_lx`
+    # round-trips are exact), one fused vectorized crossing
     x0, y0 = F.col("x0"), F.col("y0")
     pp = K.st_poly_prep(
         F.array(x0, x0 + 10, x0 + 10, x0),
         F.array(y0, y0, y0 + 20, y0 + 20),
     )
-    layer = nation.select(pp["geom"].alias("layer_geom"), pp.alias("_lx"))
+    layer = nation.select(pp.alias("layer_prep"))
     return pts, layer
 
 
@@ -466,9 +453,10 @@ def j1_boolean_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     The two strategies CHAIN (boolean_intersect preserves its input
     columns), so no extra join is paid to combine the flags."""
     pts, layer = _j1_inputs(spark, sf_dir)
-    flagged = boolean_intersect(pts, layer, out="in_zone")
+    prep = dict(record_geom="prep", layer_geom="layer_prep")
+    flagged = boolean_intersect(pts, layer, out="in_zone", **prep)
     both = boolean_intersect(
-        flagged, layer, out="in_zone_grid", strategy="grid", cell=20.0
+        flagged, layer, out="in_zone_grid", strategy="grid", cell=20.0, **prep
     )
     return both.select(
         F.col("identifier").alias("event_id"), "in_zone", "in_zone_grid"
@@ -527,7 +515,9 @@ def g9_line_clip_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("identifier"),
         K.st_make_line(F.array(cx - 20, cx + 20), F.array(y, y)).alias("geom"),
     )
-    clipped = intersection_geom(lines, _tile_layer(spark), geom_dest="zone")
+    clipped = intersection_geom(
+        lines, _tile_layer(spark), layer_geom="layer_prep", geom_dest="zone"
+    )
     return clipped.select(
         F.col("identifier").cast("long").alias("c_custkey"),
         F.round(F.coalesce(K.st_length("zone"), F.lit(0.0)), 6).alias("clip_len"),
@@ -557,7 +547,9 @@ FROM rect r LEFT JOIN
 def j3_intersection_geom_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     rects = _customer_rects(spark, sf_dir)
     layer = _tile_layer(spark)
-    clipped = intersection_geom(rects, layer, geom_dest="zone")
+    clipped = intersection_geom(
+        rects, layer, record_geom="prep", layer_geom="layer_prep", geom_dest="zone"
+    )
     return clipped.select(
         F.col("identifier").cast("long").alias("c_custkey"),
         F.round(F.coalesce(K.st_area("zone"), F.lit(0.0)), 6).alias("zone_area"),

@@ -110,11 +110,12 @@ def s2_geojson_reader_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     feats = geojson_reader(docs, "content")
+    xy = K.st_xy("geom")
     return feats.select(
         "feature_id",
         F.col("properties").getItem("event_type").alias("event_type"),
-        K.st_x("geom").alias("gx"),
-        K.st_y("geom").alias("gy"),
+        xy["x"].alias("gx"),
+        xy["y"].alias("gy"),
     )
 
 
@@ -516,11 +517,12 @@ def e4_osm_points_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         xml_docs, layer="points", runner=osm_points_geojson_runner
     )
     feats = geojson_reader(docs, "content")
+    xy = K.st_xy("geom")
     return feats.select(
         "feature_id",
         F.col("properties").getItem("event_type").alias("event_type"),
-        K.st_x("geom").alias("gx"),
-        K.st_y("geom").alias("gy"),
+        xy["x"].alias("gx"),
+        xy["y"].alias("gy"),
     )
 
 
@@ -596,11 +598,12 @@ def s6_overpass_http_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         fetched, layer="points", runner=osm_points_geojson_runner
     )
     feats = geojson_reader(docs, "content")
+    xy = K.st_xy("geom")
     return feats.select(
         "feature_id",
         F.col("properties").getItem("event_type").alias("event_type"),
-        K.st_x("geom").alias("gx"),
-        K.st_y("geom").alias("gy"),
+        xy["x"].alias("gx"),
+        xy["y"].alias("gy"),
     )
 
 
@@ -655,11 +658,12 @@ def e5_shapefile_points_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     zips = ev.groupBy("event_type").applyInPandas(pack, "content BINARY")
     docs = zip_shapefile_to_geojson(zips, runner=shapefile_points_geojson_runner)
     feats = geojson_reader(docs, "content")
+    xy = K.st_xy("geom")
     return feats.select(
         F.col("properties").getItem("event_id").alias("event_id"),
         F.col("properties").getItem("event_type").alias("event_type"),
-        K.st_x("geom").alias("gx"),
-        K.st_y("geom").alias("gy"),
+        xy["x"].alias("gx"),
+        xy["y"].alias("gy"),
     )
 
 

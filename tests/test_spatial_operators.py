@@ -467,13 +467,16 @@ class TestKdbStrategy:
         from tests.conftest import SF_DIR
 
         pts, layer = _j1_inputs(spark, SF_DIR)
+        prep = dict(record_geom="prep", layer_geom="layer_prep")
         want = sorted(
             tuple(r)
-            for r in boolean_intersect(pts, layer, out="z").select("identifier", "z").collect()
+            for r in boolean_intersect(pts, layer, out="z", **prep)
+            .select("identifier", "z")
+            .collect()
         )
         got = sorted(
             tuple(r)
-            for r in boolean_intersect(pts, layer, out="z", strategy="kdb")
+            for r in boolean_intersect(pts, layer, out="z", strategy="kdb", **prep)
             .select("identifier", "z")
             .collect()
         )
@@ -552,7 +555,10 @@ class TestKdbStrategy:
 
         pts, layer = _j1_inputs(spark, SF_DIR)
         empty = pts.limit(0)
-        out = boolean_intersect(empty, layer, out="z", strategy="kdb")
+        out = boolean_intersect(
+            empty, layer, out="z", strategy="kdb",
+            record_geom="prep", layer_geom="layer_prep",
+        )
         assert out.count() == 0
 
     def test_kdb_equals_broadcast_on_j2_and_j3(self, spark):
@@ -573,31 +579,32 @@ class TestKdbStrategy:
         from pyspark.sql import functions as F
 
         rec, lay = _customer_rects(spark, SF_DIR), _tile_layer(spark)
+        prep = dict(record_geom="prep", layer_geom="layer_prep")
         # percent-by-area: scalar outputs compare directly
-        base = intersection_percent_by_area(rec, lay)
+        base = intersection_percent_by_area(rec, lay, **prep)
         want = sorted(
             (r[0], round(r[1], 6))
             for r in base.select("identifier", "intersection_percent").collect()
         )
         got = sorted(
             (r[0], round(r[1], 6))
-            for r in intersection_percent_by_area(rec, lay, strategy="kdb")
+            for r in intersection_percent_by_area(rec, lay, strategy="kdb", **prep)
             .select("identifier", "intersection_percent")
             .collect()
         )
         assert got == want and len(got) > 0
         # intersection geometry: the SET of pieces is plan-independent
         # but multipart ordering is not — compare via area, not raw WKB
-        def areas(df):  # geom_dest=None replaces the 'geom' column
+        def areas(df):  # geom_dest=None replaces the record_geom column
             return sorted(
                 (r[0], round(r[1] or 0.0, 6))
                 for r in df.select(
-                    "identifier", K.st_area(F.col("geom")).alias("a")
+                    "identifier", K.st_area(F.col("prep")).alias("a")
                 ).collect()
             )
 
-        g_want = areas(intersection_geom(rec, lay))
-        g_got = areas(intersection_geom(rec, lay, strategy="kdb"))
+        g_want = areas(intersection_geom(rec, lay, **prep))
+        g_got = areas(intersection_geom(rec, lay, strategy="kdb", **prep))
         assert g_got == g_want and any(a > 0 for _, a in g_got)
 
 
@@ -651,8 +658,10 @@ def test_dissolve_rect_fast_routing_parity(spark):
     """Three routings must agree exactly: all-boxy layer (every record
     on the rect path), a curvy layer feature (layer scalar flips — all
     records on the kernel path), and a curvy RECORD among boxy ones
-    (record-level split, both paths live in one query). rect_fast=False
-    is the ground truth for each."""
+    (record-level split, both paths live in one query). The ground
+    truth for each is the kernel path, forced through the
+    prepared-geometry contract by handing in records whose prep says
+    boxy=False."""
     from terra_bonobo_nodes_spark.geo import wkb as W
     from terra_bonobo_nodes_spark.operators.spatial import (
         intersection_percent_by_area,
@@ -669,10 +678,12 @@ def test_dissolve_rect_fast_routing_parity(spark):
 
     def vals(rec_rows, lay_rows, rect_fast):
         rec = spark.createDataFrame(rec_rows, "identifier string, geom binary")
+        if not rect_fast:
+            rec = rec.withColumn(
+                "geom", K.st_prepare("geom").withField("boxy", F.lit(False))
+            )
         lay = spark.createDataFrame(lay_rows, "layer_geom binary")
-        out = intersection_percent_by_area(
-            rec, lay, dissolve=True, rect_fast=rect_fast
-        )
+        out = intersection_percent_by_area(rec, lay, dissolve=True)
         return dict(out.select("identifier", "intersection_percent").collect())
 
     for rec_rows, lay_rows in [
@@ -721,27 +732,111 @@ def test_dissolve_rect_fast_plan_carries_the_sweep_agg(spark):
     assert "collect_list" in plan
 
 
-def test_grid_candidates_accept_column_bbox_args(spark):
-    """ADVICE r17: the grid strategy's SQL-text fast path must not
-    narrow the previously Column-typed bbox parameters — Column args
-    route through the same algebra (broadcast/kdb parity)."""
-    from pyspark.sql import functions as F
+# --- prepared-geometry contract ---------------------------------------------
+# record_geom/layer_geom name a WKB column or a K.PREPARED_T column;
+# anything else raises, and no other column of the caller's frame is read.
 
-    from terra_bonobo_nodes_spark.geo import kernels as K
-    from terra_bonobo_nodes_spark.operators import spatial as S
-    from terra_bonobo_nodes_spark.plans.queries_geo import _j1_inputs
-    from tests.conftest import SF_DIR
 
-    pts, layer = _j1_inputs(spark, SF_DIR)
-    rec = pts.select("identifier", "geom").withColumn(
-        "_rx", K.st_bbox_boxy(F.col("geom"))
+def _rect_wkb(x0, y0, x1, y1):
+    return W.write_wkb(
+        ("Polygon", [[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]])
     )
-    lay = layer.select("layer_geom").withColumn(
-        "_lx", K.st_bbox_boxy(F.col("layer_geom"))
+
+
+def _join_answer(op: str, rec, lay, **kw) -> dict:
+    """identifier -> the operator's answer: hit flag, covered ratio or
+    clipped area."""
+    from terra_bonobo_nodes_spark.operators.spatial import (
+        boolean_intersect,
+        intersection_geom,
+        intersection_percent_by_area,
     )
-    want = S._candidates(rec, lay, "_rx.bbox", "_lx.bbox", "grid", 20.0)
-    got = S._candidates(
-        rec, lay, F.col("_rx.bbox"), F.col("_lx.bbox"), "grid", 20.0
+
+    if op == "boolean_intersect":
+        out = boolean_intersect(rec, lay, out="v", **kw)
+    elif op == "intersection_percent_by_area":
+        out = intersection_percent_by_area(rec, lay, out="v", **kw)
+    else:
+        out = intersection_geom(rec, lay, geom_dest="zone", **kw).withColumn(
+            "v", K.st_area("zone")
+        )
+    return dict(out.select("identifier", "v").collect())
+
+
+_JOIN_OPS = ["boolean_intersect", "intersection_percent_by_area", "intersection_geom"]
+# the record (0,0)-(2,2) against the layer tile (1,1)-(3,3)
+_OVERLAP = {
+    "boolean_intersect": True,
+    "intersection_percent_by_area": 0.25,
+    "intersection_geom": 1.0,
+}
+_MISS = {
+    "boolean_intersect": False,
+    "intersection_percent_by_area": 0.0,
+    "intersection_geom": 0.0,
+}
+
+
+@pytest.fixture
+def contract_frames(spark):
+    rec = spark.createDataFrame(
+        [("a", _rect_wkb(0, 0, 2, 2), _rect_wkb(50, 50, 52, 52))],
+        "identifier string, geom binary, far binary",
     )
-    assert got.count() == want.count() > 0
-    assert sorted(got.columns) == sorted(want.columns)
+    lay = spark.createDataFrame([(_rect_wkb(1, 1, 3, 3),)], "layer_geom binary")
+    return rec, lay
+
+
+@pytest.mark.parametrize("op", _JOIN_OPS)
+@pytest.mark.parametrize("side", ["record", "layer"])
+@pytest.mark.parametrize(
+    "bad",
+    [
+        "wrong_struct",  # st_bbox_boxy's struct lacks geom/area
+        "float_area",  # PREPARED_T's field names, one field of another type
+        "wkt_string",  # neither binary nor struct
+    ],
+)
+def test_join_rejects_non_prepared_geometry_column(contract_frames, op, side, bad):
+    rec, lay = contract_frames
+    col = "geom" if side == "record" else "layer_geom"
+    g2 = {
+        "wrong_struct": K.st_bbox_boxy(col),
+        "float_area": K.st_prepare(col).withField("area", F.lit(0.0).cast("float")),
+        "wkt_string": K.st_astext(col),
+    }[bad]
+    if side == "record":
+        rec, kw = rec.withColumn("g2", g2), {"record_geom": "g2"}
+    else:
+        lay, kw = lay.withColumn("g2", g2), {"layer_geom": "g2"}
+    with pytest.raises(ValueError, match="'g2'"):
+        _join_answer(op, rec, lay, **kw)
+
+
+@pytest.mark.parametrize("op", _JOIN_OPS)
+def test_join_ignores_caller_columns_named_like_internal_aliases(
+    contract_frames, op
+):
+    rec, lay = contract_frames
+    rec = rec.withColumn("_rx", F.lit("caller data"))
+    lay = lay.withColumn("_lx", F.lit(7))
+    assert _join_answer(op, rec, lay) == {"a": _OVERLAP[op]}
+    # the caller's column rides through the join untouched
+    from terra_bonobo_nodes_spark.operators.spatial import boolean_intersect
+
+    kept = boolean_intersect(rec, lay, out="v").select("_rx").collect()
+    assert [r["_rx"] for r in kept] == ["caller data"]
+
+
+@pytest.mark.parametrize("op", _JOIN_OPS)
+def test_join_reads_the_named_geometry_column(contract_frames, op):
+    """A frame with two geometry columns — a prepared one that overlaps
+    the layer and a WKB one that does not — answers for the column
+    record_geom names, whatever the other is called."""
+    rec, lay = contract_frames
+    rec = rec.withColumn("_rx", K.st_prepare("geom"))
+    assert _join_answer(op, rec, lay, record_geom="far") == {"a": _MISS[op]}
+    assert _join_answer(op, rec, lay, record_geom="_rx") == {"a": _OVERLAP[op]}
+    # a prepared layer column is used as-is too
+    lay = lay.withColumn("tile", K.st_prepare("layer_geom"))
+    assert _join_answer(op, rec, lay, layer_geom="tile") == {"a": _OVERLAP[op]}
