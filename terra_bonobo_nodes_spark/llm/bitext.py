@@ -64,7 +64,7 @@ def margin_knn_pairs(
     never an unbounded cartesian by accident.
 
     avgk(v) is the mean cosine of v's top-``k`` neighbors among the
-    CANDIDATES (ties by partner id) — with a block column that is the
+    candidates (ties by partner id) — with a block column that is the
     paper's "within shard" approximation, stated rather than hidden.
     """
     if k < 1:

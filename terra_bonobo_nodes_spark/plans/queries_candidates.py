@@ -1,26 +1,12 @@
-"""Crawl-curation driver rows: registered promotions + the candidate queue.
+"""Registered driver rows for crawl curation and the consolidation surfaces.
 
-ROUND-13 promoted llm_url_dedup_groups, llm_line_dedup,
-llm_gopher_rules, llm_c4_line_filter, llm_blocked_hosts. ROUND-14
-promoted llm_semdedup_kmeans_e2e (into llm_semantic_dedup's slot),
-llm_host_quality_report (widened with HITS — all four graph signals in
-one slot), s12_warc_wet_roundtrip, llm_link_graph_rank,
-llm_source_rule_yield, widened llm_blocked_hosts with the robots
-verdict, and folded word-LM cross-entropy into queries_llm's
-llm_lm_entropy_surface; the subsumed standalone candidates
-(pagerank/trustrank/hits, robots, word-LM) were removed — their
-operators stay pinned by tests/test_graph.py, test_robots.py,
-test_lm.py.
-
-The remaining CANDIDATES-dict rows are the round-15 queue — the
-authoritative count and promotion arithmetic live in the registry
-ledger, not here (this docstring went stale twice enumerating them).
-Deferred entries stay complete (spark_fn, oracle) pairs pinned green
-against DuckDB by tests/test_candidates_oracle.py under the driver's
-exact compare contract — at sf0.001 every suite run and at
-sf0.01/sf0.1 during authoring — and pass the registered queries'
-empty-tables sweep, so each future promotion stays a registration
-edit.
+Each row is a Spark plan registered with its DuckDB oracle through
+``registry.register``, like every other ``queries_*`` module: URL, line
+and semantic dedup, the Gopher/C4 rule batteries and their per-source
+funnel, URL hygiene (blocklist + robots.txt), WARC/WET ingestion, the
+host link-graph reports, corpus version diff / drift / novelty, events
+funnels and retention, Z-order pruning, and the record-op, scalar
+geometry and J2 overlay surfaces.
 """
 
 from __future__ import annotations
@@ -29,11 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.llm import (
-    fuzzy,
     graph,
     hashing,
     kmeans,
-    pq,
     selfdedup,
     similarity,
     text,
@@ -297,13 +281,11 @@ FROM u
 """
 
 
-# WIDENED round 14 (zero-net promotion of llm_robots_filter, the j1
-# broadcast+grid precedent): the row is the doc-grain URL-HYGIENE
-# surface — flag_blocked_hosts' verdict over the 5-shape blocklist
-# synthesis AND flag_robots_disallowed's RFC 9309 verdict over the
-# robots candidate's 101-host/5-path synthesis, one row per document.
-# Each operator keeps exactly the coverage its standalone row had; the
-# oracle composes both original oracles as derived tables.
+# The row is the doc-grain URL-hygiene surface: flag_blocked_hosts'
+# verdict over the 5-shape blocklist synthesis AND
+# flag_robots_disallowed's RFC 9309 verdict over the 101-host/5-path
+# robots synthesis (below), one row per document. The oracle composes
+# both oracles as derived tables.
 _URL_HYGIENE_ORACLE_TMPL = """
 SELECT b.doc_id, b.host_blocked, r.allowed AS robots_allowed
 FROM ({blocked}) b JOIN ({robots}) r USING (doc_id)
@@ -340,15 +322,6 @@ def llm_blocked_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "host_blocked", F.col("allowed").alias("robots_allowed")
     )
 
-# --- llm_source_rule_yield: RETIRED round 15 (subsumed) ----------------------
-# The per-source per-rule yield report (registered round 14) was a
-# strict SUBSET of the widened curation funnel: every n_docs /
-# n_c4_keep / n_gopher_keep / per-rule violation count appears
-# verbatim on llm_source_rule_funnel's source-grain row (where n_docs
-# = n_raw, n_gopher_keep = n_gopher), which ADDs the sequential
-# retention (gopher AND c4 -> exact-dedup survivors) and raw/final
-# token mass. One report instead of two at the same grain; the slot
-# registers the funnel (r15 ledger item 3).
 
 # --- llm_line_dedup ---------------------------------------------------------
 # The sf testdata documents are single-line, so the row synthesizes the
@@ -425,228 +398,7 @@ def llm_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# llm_perplexity_buckets ABSORBED late round 17: the due
-# llm_lm_entropy_surface widened with the candidate's distinctive
-# output, the CCNet head/middle/tail ppl_bucket column (the entropy
-# it buckets IS that row's char leg; plans/queries_llm.py carries the
-# oracle text verbatim as _PPL_LEG_SQL). text.perplexity_buckets and
-# its pytest coverage unchanged.
-
-
-# --- llm_dsir_logweights ------------------------------------------------
-# DSIR importance weights with the English slice of documents as the
-# target sample: every raw doc scored by how en-like its hashed
-# unigram+bigram profile is. The oracle replays the identical hashed
-# buckets (hash32 md5 mirror), add-one smoothing, and the
-# DECIMAL(20,6)-quantized log ratios, so the weights are exact.
-
-_DSIR_BUCKETS = 10_000
-
-
-def llm_dsir_logweights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from terra_bonobo_nodes_spark.llm.corpus import dsir_logweights
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    raw = docs.select("doc_id", "text")
-    target = docs.where(F.col("lang") == "en").select("doc_id", "text")
-    out = dsir_logweights(raw, target, buckets=_DSIR_BUCKETS)
-    return out.select("doc_id", "dsir_n_features", "dsir_logweight")
-
-
-DSIR_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, lang, {TOKS_SQL} AS t FROM documents
-), feats AS (
-  SELECT doc_id, lang,
-         unnest(list_concat(t,
-           list_transform(range(1, greatest(len(t) - 1, 0) + 1),
-                          i -> t[i] || ' ' || t[i + 1]))) AS f
-  FROM toks
-), fb AS (
-  SELECT doc_id, lang,
-         (('0x' || substr(md5(f), 1, 8))::BIGINT % {_DSIR_BUCKETS}) AS b
-  FROM feats
-), fc AS (
-  SELECT doc_id, b, count(*) AS c FROM fb GROUP BY 1, 2
-), q AS (
-  SELECT b, sum(c) AS qc FROM fc GROUP BY 1
-), tgt AS (
-  SELECT b, count(*) AS tc FROM fb WHERE lang = 'en' GROUP BY 1
-), model AS (
-  SELECT coalesce(q.b, tgt.b) AS b,
-         coalesce(qc, 0) AS qc, coalesce(tc, 0) AS tc
-  FROM q FULL OUTER JOIN tgt ON q.b = tgt.b
-), tot AS (
-  SELECT sum(qc) AS qt, sum(tc) AS tt FROM model
-), lr AS (
-  SELECT b,
-         CAST(ln(CAST(tc + 1 AS DOUBLE) / CAST(tt + {_DSIR_BUCKETS} AS DOUBLE))
-              AS DECIMAL(20,6))
-       - CAST(ln(CAST(qc + 1 AS DOUBLE) / CAST(qt + {_DSIR_BUCKETS} AS DOUBLE))
-              AS DECIMAL(20,6)) AS lr
-  FROM model CROSS JOIN tot
-), sc AS (
-  SELECT fc.doc_id, sum(c) AS m, sum(lr * c) AS lw
-  FROM fc JOIN lr ON lr.b = fc.b GROUP BY 1
-)
-SELECT d.doc_id,
-       CAST(coalesce(m, 0) AS BIGINT) AS dsir_n_features,
-       CAST(coalesce(lw, 0) AS DOUBLE) AS dsir_logweight
-FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id
-"""
-
-# llm_bloom_decontaminate ABSORBED late round 17: the due
-# llm_decontamination_surface widened with the Bloom screen as its
-# third FULL-joined leg (plans/queries_llm.py — fn, oracle, and the
-# _BLOOM_M/K/N constants moved there verbatim; the anchor-leg
-# capacity-partner route, zero rotation cost). llm/bloom.py and
-# tests/test_bloom.py unchanged.
-
-
-# --- llm_cms_token_freq (authored round 13, r14 candidate) --------------
-# Count-Min Sketch heavy hitters (llm/sketch.py): the bounded-memory
-# token-frequency primitive (constant d x w counters, mergeable by
-# addition, never undercounts). The row builds the sketch distributed,
-# takes the exact top-25 tokens (TakeOrdered), and surfaces
-# exact_count + cms_estimate + the never_undercounts guarantee — every
-# quantity an exact BIGINT, so the oracle replays build AND estimate
-# bit-for-bit (the repo's cleanest oracle class: zero floats).
-
-_CMS_D, _CMS_W, _CMS_TOP = 4, 1 << 12, 25
-
-
-def llm_cms_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from terra_bonobo_nodes_spark.llm.sketch import cms_build, cms_estimate
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.coalesce("text", F.lit("")).alias("text")
-    )
-    toks = docs.select(F.explode(text.tokens("text")).alias("token"))
-    counters = cms_build(toks, token_col="token", d=_CMS_D, w=_CMS_W)
-    top = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("exact_count"))
-        .orderBy(F.col("exact_count").desc(), F.col("token").asc())
-        .limit(_CMS_TOP)
-    )
-    est = cms_estimate("token", counters)
-    return top.select(
-        "token",
-        "exact_count",
-        est.alias("cms_estimate"),
-        (est >= F.col("exact_count")).alias("never_undercounts"),
-    )
-
-
-def _cms_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm.sketch import position_sql
-
-    cells_union = "\nUNION ALL ".join(
-        f"SELECT {i} AS i, {position_sql('token', i, _CMS_W)} AS p FROM toks"
-        for i in range(_CMS_D)
-    )
-    joins = "\n".join(
-        f"JOIN cells c{i} ON c{i}.i = {i} AND c{i}.p = {position_sql('t.token', i, _CMS_W)}"
-        for i in range(_CMS_D)
-    )
-    least = ", ".join(f"c{i}.n" for i in range(_CMS_D))
-    return f"""
-WITH toks AS (
-  SELECT unnest({TOKS_SQL}) AS token
-  FROM (SELECT coalesce(text, '') AS text FROM documents)
-), tf AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS exact_count
-  FROM toks GROUP BY 1
-), top AS (
-  SELECT token, exact_count FROM tf
-  ORDER BY exact_count DESC, token ASC LIMIT {_CMS_TOP}
-), cells AS (
-  SELECT i, p, CAST(count(*) AS BIGINT) AS n
-  FROM ({cells_union}) GROUP BY 1, 2
-)
-SELECT t.token, t.exact_count,
-       least({least}) AS cms_estimate,
-       least({least}) >= t.exact_count AS never_undercounts
-FROM top t
-{joins}
-"""
-
-
-CMS_ORACLE = _cms_oracle()
-
-
-# --- llm_kmeans_fixed_cells (authored round 13, r14 candidate #8) ------------
-# Distributed Lloyd's k-means over the embeddings table with the
-# fixed-point BIGINT design (llm/kmeans.py): 8 clusters, 3 iterations,
-# first-8-by-id init, 2^16 exponent-shift quantization. This is the
-# REAL iterative clustering the semdedup row pins via its codebook
-# seam — assignment scan, argmin, and centroid update all run
-# distributed, and the oracle replays the identical integer iterations
-# as an unrolled CTE chain.
-
-_KM_K, _KM_ITERS, _KM_DIM = 8, 3, 64
-
-KMEANS_ORACLE = kmeans.kmeans_fixed_sql(
-    "SELECT vec_id, embedding FROM embeddings",
-    k=_KM_K,
-    iterations=_KM_ITERS,
-    dim=_KM_DIM,
-)
-
-
-def llm_kmeans_fixed_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-point distributed k-means (llm/kmeans.py::kmeans_fixed):
-    per iteration one k-row broadcast assignment join + combinable
-    min-struct argmin + (cluster, dim)-keyed integer centroid update;
-    no float addition anywhere, so the run is bit-identical on any
-    engine or partitioning. Hypothesis-swept vs an independent Python
-    reference and mirrored in DuckDB (tests/test_kmeans.py)."""
-    vecs = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return kmeans.kmeans_fixed(vecs, k=_KM_K, iterations=_KM_ITERS).select(
-        "vec_id", "cluster", "dist"
-    )
-
-
-# --- llm_fuzzy_title_pairs (authored round 13, r14 candidate #12) ------------
-# Edit-distance similarity join over synthesized record titles: groups
-# of 3 docs share a numeric base title with per-variant typos (append,
-# trailing char), so within-group pairs sit at distance 1-2 and
-# adjacent group numbers contribute digit-typo pairs. Runs the CAPPED
-# production form (block_cap drops stop-gram blocks like 'rec'
-# deterministically — mirrored in SQL by the same count filter).
-
-_FZ_CAP, _FZ_D = 256, 2
-_FZ_TITLE_SPARK = (
-    "concat(cast(doc_id div 3 as string), ' rec', "
-    "CASE pmod(doc_id, 3) WHEN 0 THEN '' WHEN 1 THEN ' x' ELSE 'q' END)"
-)
-_FZ_TITLE_DUCK = (
-    "concat(cast(doc_id // 3 as varchar), ' rec', "
-    "CASE (doc_id % 3) WHEN 0 THEN '' WHEN 1 THEN ' x' ELSE 'q' END)"
-)
-
-FUZZY_ORACLE = fuzzy.edit_distance_pairs_sql(
-    f"SELECT doc_id, {_FZ_TITLE_DUCK} AS text FROM documents",
-    max_dist=_FZ_D,
-    block_cap=_FZ_CAP,
-)
-
-
-def llm_fuzzy_title_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance similarity join (llm/fuzzy.py
-    ::edit_distance_pairs): tiered q-gram/char/tiny blocking with a
-    PROVEN completeness guarantee (brute-force hypothesis sweep,
-    tests/test_fuzzy.py), deterministic block cap for stop-gram hot
-    blocks, exact JVM levenshtein inside blocks only — never a
-    cartesian. The record-linkage operator."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    titled = docs.select("doc_id", F.expr(_FZ_TITLE_SPARK).alias("text"))
-    return fuzzy.edit_distance_pairs(
-        titled, max_dist=_FZ_D, block_cap=_FZ_CAP
-    ).select("id_a", "id_b", "dist")
-
-
-# --- s12_warc_wet_roundtrip (authored round 13, r14 candidate #10) -----------
+# --- s12_warc_wet_roundtrip -------------------------------------------------
 # WARC/WET ingestion proven end-to-end IN-PLAN: documents pack into
 # WET-style conversion records (one WARC blob per Arrow batch,
 # executor-side — no files, no driver collect), warc_reader explodes
@@ -711,17 +463,15 @@ def s12_warc_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- llm_semdedup_kmeans_e2e (REGISTERED round 14, in
-# llm_semantic_dedup's slot — same vec_id grain, strictly stronger) ----------
-# SemDeDup with ZERO pins: the retired llm_semantic_dedup row pinned
-# its codebook (one-hot seam) because float nearest-centroid argmin is
-# not engine-exact; here the cells come from kmeans_fixed's BIGINT
-# iterations instead, so the ENTIRE pipeline — codebook training, cell
+# --- llm_semdedup_kmeans_e2e -------------------------------------------------
+# SemDeDup with ZERO pins: float nearest-centroid argmin is not
+# engine-exact, so the cells come from kmeans_fixed's BIGINT
+# iterations and the ENTIRE pipeline — codebook training, cell
 # assignment, cell-blocked cosine pairs, connected components,
 # survivor election — is computed distributed AND replayed exactly by
-# the oracle (kmeans CTE chain + the retired row's proven
-# pairs/components/election SQL). The row drives the PRODUCTION
-# operator body via semantic_dedup(cell_col=...) — llm/semdedup.py's
+# the oracle (kmeans CTE chain + the pairs/components/election SQL).
+# The row drives the PRODUCTION operator body via
+# semantic_dedup(cell_col=...) — llm/semdedup.py's
 # pairing/components/election code, not a re-composition.
 
 _SDK_K, _SDK_ITERS = 8, 3
@@ -795,7 +545,7 @@ def llm_semdedup_kmeans_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "cell", "component_id", "is_kept")
 
 
-# --- llm_exact_substring_spans (authored round 13, r14 candidate #6) ---------
+# --- llm_exact_substring_spans ----------------------------------------------
 # ExactSubstr self-dedup (Lee et al. 2022) over documents with planted
 # duplication: ~2/7 of docs share a 12-token boilerplate tail (cross-
 # document spans), docs with doc_id % 11 == 0 carry an internally
@@ -852,7 +602,7 @@ def llm_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- llm_host_pagerank (authored round 13, r14 candidate #7) -----------------
+# --- llm_host_pagerank ------------------------------------------------------
 # Fixed-point PageRank over a synthesized 101-host link graph: every
 # document's host (doc_id mod 101) emits two out-links to affine-mapped
 # hosts (7x+3 and 13x+5 mod 101 — both coprime maps, so in-link counts
@@ -866,18 +616,12 @@ _PR_EDGES_DUCK = (
     "SELECT doc_id % 101 AS src, (doc_id * 13 + 5) % 101 AS dst FROM documents"
 )
 
-# llm_host_pagerank / llm_host_trustrank standalone candidates REMOVED
-# round 14: both signals (plus HITS and per-host stats) are driver-
-# verified inside the registered llm_host_quality_report, and the
-# pipeline-shaped llm_link_graph_rank registration covers extraction ->
-# rank end-to-end. The operators stay pinned by tests/test_graph.py.
-
 # TrustRank's trusted seed set: hosts 0-9 — trust reaches only what
 # the seeds (transitively) link to; everything outside the reachable
 # frontier scores exactly 0.
 _TRUST_SEEDS_DUCK = "VALUES (0),(1),(2),(3),(4),(5),(6),(7),(8),(9)"
 
-# --- llm_host_quality_report (authored round 13, r14 candidate #13) ----------
+# --- llm_host_quality_report ------------------------------------------------
 # The capstone composition a curation team actually reads: ONE
 # host-grain report joining link authority (plain PageRank), trust
 # (seeded TrustRank) and per-host corpus contribution (doc count,
@@ -885,7 +629,7 @@ _TRUST_SEEDS_DUCK = "VALUES (0),(1),(2),(3),(4),(5),(6),(7),(8),(9)"
 # composed in one oracle via pagerank_fixed_ctes(prefix=).
 
 # Distinct-edge cap for the graph chains' driver-local fast path
-# (llm/graph.py round-17): 1<<17 pairs =~ a few MB of driver state,
+# (llm/graph.py): 1<<17 pairs =~ a few MB of driver state,
 # far above any synthetic fixture and far below any real host graph.
 _SG = 1 << 17
 
@@ -919,9 +663,8 @@ LEFT JOIN stats s ON s.host = p.node
 """
 
 
-# ROUND-16: the registered name moved to the WIDE form below (ledger
-# item 1 — + LPA community columns); this base fn stays as the wide
-# row's component.
+# The registered llm_host_quality_report is the wide form below (+ LPA
+# community columns); this base fn is its component.
 def llm_host_quality_report(
     spark: SparkSession, sf_dir: str, pairs: list | None = None
 ) -> DataFrame:
@@ -1014,124 +757,7 @@ def llm_host_quality_report(
     )
 
 
-# --- llm_corpus_overlap_report (authored round 14 continuation, r15 candidate)
-# KMV set operations (llm/distinct.py::kmv_set_ops, Beyer et al. 2007
-# §4): pairwise union / Jaccard / intersection ESTIMATES between the
-# per-event-type user populations, answered from the k-row sketch
-# artifacts alone — the question HLL registers cannot answer and the
-# one a curation team asks of two crawl dumps ("how much does dump A
-# overlap dump B") without re-reading either. Every surfaced column
-# BIGINT (Jaccard stays an integer num/den pair); exact truth columns
-# ride along as the verification harness (the approx_distinct_users
-# pattern). Pair grain — 5 event types -> 10 pairs at every SF.
-
-_SO_K = 64
-
-
-def llm_corpus_overlap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per event-type pair: KMV union/Jaccard/intersection estimates
-    from bottom-64 sketches + the exact truth columns for verification.
-    At corpus scale only the sketch path runs — it reads k rows per
-    group, never the raw table."""
-    from terra_bonobo_nodes_spark.llm import distinct as ds
-
-    ev = load_table(spark, sf_dir, "events")
-    ops = ds.kmv_set_ops(
-        ds.kmv_sketch(ev, "user_id", "event_type", k=_SO_K), _SO_K
-    )
-    users = ev.select("event_type", "user_id").distinct()
-    ua = users.select(
-        F.col("event_type").alias("group_a"), F.col("user_id").alias("_u")
-    )
-    ub = users.select(
-        F.col("event_type").alias("group_b"), F.col("user_id").alias("_u")
-    )
-    exact = (
-        ua.join(ub, "_u")
-        .where(F.col("group_a") < F.col("group_b"))
-        .groupBy("group_a", "group_b")
-        .agg(F.count(F.lit(1)).alias("exact_inter"))
-    )
-    return (
-        ops.join(exact, ["group_a", "group_b"], "left")
-        .select(
-            "group_a",
-            "group_b",
-            "union_size",
-            "union_est",
-            "jaccard_num",
-            "jaccard_den",
-            "inter_est",
-            F.coalesce("exact_inter", F.lit(0)).cast("long").alias("exact_inter"),
-        )
-    )
-
-
-def _corpus_overlap_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm import distinct as ds
-
-    ops = ds.kmv_set_ops_sql(
-        "SELECT * FROM events", "user_id", "event_type", _SO_K
-    )
-    return f"""
-WITH _ops AS ({ops}),
-_uu AS (SELECT DISTINCT event_type, user_id FROM events),
-_exact AS (
-  SELECT a.event_type AS group_a, b.event_type AS group_b,
-         count(*) AS exact_inter
-  FROM _uu a JOIN _uu b
-    ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY 1, 2
-)
-SELECT o.group_a, o.group_b, o.union_size, o.union_est,
-       o.jaccard_num, o.jaccard_den, o.inter_est,
-       CAST(coalesce(e.exact_inter, 0) AS BIGINT) AS exact_inter
-FROM _ops o LEFT JOIN _exact e USING (group_a, group_b)
-"""
-
-
-CORPUS_OVERLAP_ORACLE = _corpus_overlap_oracle()
-
-
-# --- llm_stride_interleave_order (authored round 14 continuation, r15 cand.) --
-# Stride-scheduling mixture interleave (llm/corpus.py::
-# stride_interleave, Waldspurger & Weihl 1995): the deterministic
-# proportional-share WRITE ORDER for a heterogeneous mixture — the
-# step between the samplers (which pick the documents) and the shard
-# writer (which materializes the order via repartitionByRange on the
-# key). en-heavy 4:2:1:1 weights over the documents langs; zh left
-# unlisted to pin the drop contract. Doc grain; every column integer.
-
-_SI_WEIGHTS = {"en": 4, "fr": 2, "de": 1, "es": 1}
-
-
-def llm_stride_interleave_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per kept document: within-source seeded-hash rank and the
-    integer stride key a training reader sorts by — in any key prefix
-    each language's share deviates from its weight ratio by at most
-    one document per source. One window shuffle on the source key."""
-    from terra_bonobo_nodes_spark.llm.corpus import stride_interleave
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    return stride_interleave(
-        docs, _SI_WEIGHTS, source_col="lang", id_col="doc_id"
-    ).select("doc_id", "lang", "src_rank", "interleave_key")
-
-
-def _stride_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm.corpus import stride_interleave_sql
-
-    inner = stride_interleave_sql(
-        "SELECT doc_id, lang FROM documents", _SI_WEIGHTS,
-        source_expr="lang", id_expr="doc_id",
-    )
-    return f"SELECT doc_id, lang, src_rank, interleave_key FROM ({inner})"
-
-
-STRIDE_ORACLE = _stride_oracle()
-
-
-# --- corpus_version_diff (authored round 14 continuation, r15 candidate) ------
+# --- corpus_version_diff ----------------------------------------------------
 # Snapshot diff (operators/cdc.py::snapshot_diff): the report a
 # curation team reads before promoting corpus v(N+1) over vN — every
 # doc labeled added/removed/changed/unchanged in ONE full-outer key
@@ -1182,90 +808,19 @@ SELECT coalesce(v1.doc_id, v2.doc_id) AS doc_id,
 FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
 """
 
-# ROUND-17 PROMOTION (ledger item 3): registered, RETIRING
-# scd2_user_value_history (plans/queries_relational.py) — both are
-# key-versioned churn reports; the diff row adds the full-outer-join
-# promotion-gate verdict at corpus grain.
 register(
     "corpus_version_diff",
     oracle=CORPUS_DIFF_ORACLE,
-    headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
+    headline=True,
     tags=("cdc", "gate"),
 )(corpus_version_diff)
 
 
-# --- llm_vocab_coverage_report (authored round 14 continuation, r15 cand.) ----
-# Tokenizer-fit report (llm/text.py::vocab_coverage + top_tokens):
-# per-language OOV rate against a vocabulary built from the corpus's
-# own top-256 tokens — the signal that decides whether a tokenizer
-# trained on one mix is reusable on another. The top-k builder plans
-# as TakeOrderedAndProject (per-partition heaps, no global sort); the
-# coverage join broadcasts the vocabulary. Every surfaced column an
-# exact integer (rate in ppm by floor division).
-
-_VC_K = 256
-
-
-def llm_vocab_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(lang, n_tokens, n_oov, oov_rate_ppm) against the corpus's own
-    top-256 token vocabulary."""
-    from terra_bonobo_nodes_spark.llm.text import top_tokens, vocab_coverage
-
-    docs = load_table(spark, sf_dir, "documents").select("lang", "text")
-    vocab = top_tokens(docs, _VC_K).select("token")
-    return vocab_coverage(docs, vocab, group_col="lang").select(
-        F.col("group").alias("lang"), "n_tokens", "n_oov", "oov_rate_ppm"
-    )
-
-
-VOCAB_COVERAGE_ORACLE = f"""
-WITH _toks AS (
-  SELECT lang, unnest({TOKS_SQL}) AS tok
-  FROM (SELECT lang, coalesce(text, '') AS text FROM documents)
-),
-_vocab AS (
-  SELECT tok AS vtok FROM (
-    SELECT tok, count(*) AS n FROM _toks GROUP BY tok
-  ) ORDER BY n DESC, tok ASC LIMIT {_VC_K}
-),
-_grps AS (SELECT DISTINCT lang FROM documents),
-_agg AS (
-  SELECT t.lang,
-         count(*) AS n_tokens,
-         sum(CASE WHEN v.vtok IS NULL THEN 1 ELSE 0 END) AS n_oov
-  FROM _toks t LEFT JOIN _vocab v ON t.tok = v.vtok
-  GROUP BY t.lang
-)
-SELECT g.lang,
-       CAST(coalesce(a.n_tokens, 0) AS BIGINT) AS n_tokens,
-       CAST(coalesce(a.n_oov, 0) AS BIGINT) AS n_oov,
-       CAST(CASE WHEN coalesce(a.n_tokens, 0) > 0
-            THEN (a.n_oov * 1000000) // a.n_tokens END AS BIGINT)
-         AS oov_rate_ppm
-FROM _grps g LEFT JOIN _agg a ON g.lang IS NOT DISTINCT FROM a.lang
-"""
-# ^ IS NOT DISTINCT FROM, not USING(lang): Spark's groupBy collapses a
-# NULL lang into a real group with actual counts, while a plain SQL
-# equi-join would never match the NULL spine row and report (0,0,NULL)
-# — latent cross-engine divergence if a NULL-lang row ever enters the
-# documents fixture (ADVICE r15).
-
-
-# --- llm_readability_scores: PROMOTED round 15 (zero-net merge) --------------
-# The Flesch / Flesch-Kincaid readability surface (llm/text.py::
-# readability, exact integer milli-points) merged INTO the registered
-# llm_quality_filter_score row (same doc grain — the llm_blocked_hosts
-# widening precedent): that row now hash-compares the five r_* columns
-# next to the learned quality score. See plans/queries_llm.py.
-
-
-# --- llm_curation_funnel (authored round 14 continuation, r15 candidate) ------
+# --- llm_source_rule_funnel -------------------------------------------------
 # The SEQUENTIAL survival funnel per source: raw -> gopher keep ->
 # (AND) c4 keep -> exact-dedup survivor, with raw and final token
-# mass, PLUS the independent per-rule yields (which rule fired) that
-# used to be llm_source_rule_yield's row — both reports at the same
-# source grain on one scan. REGISTERED round 15 as
-# llm_source_rule_funnel in the rule-yield slot (retire-and-replace).
+# mass, PLUS the independent per-rule yields (which rule fired) —
+# both reports at the same source grain on one scan.
 # Oracle reuses GOPHER_ORACLE and C4_ORACLE verbatim as CTE bodies
 # (string surgery, not duplication) plus the registered exact-dedup
 # fingerprint expression, so the funnel and its constituent rows can
@@ -1413,67 +968,15 @@ FROM fraw r LEFT JOIN funiq u USING (source)
 
 SOURCE_RULE_FUNNEL_ORACLE = _funnel_oracle()
 
-# registered round 15 in llm_source_rule_yield's slot (retire-and-
-# replace, zero net — the strict-superset widening planned by the r14
-# ledger; post-definition because the oracle literal is composed above
-# from the rule batteries' SQL mirrors). NOTE: the r14 ledger called
-# this candidate "llm_curation_funnel", but that registry name belongs
-# to the round-5 raw->dedup->len/lang funnel row (still green, still
-# registered) — registering under it would collide, so the promoted
-# name says what the row is: the rule-yield report plus the funnel.
 register(
     "llm_source_rule_funnel",
     oracle=SOURCE_RULE_FUNNEL_ORACLE,
-    headline=True,  # promoted r15; benched since r16 (VERDICT_r15 #4)
+    headline=True,
     tags=("llm", "curation", "report"),
 )(llm_source_rule_funnel)
 
 
-# --- llm_packing_efficiency (authored round 14 continuation, r15 candidate) ---
-# Padding-waste ledger (llm/corpus.py::packing_efficiency): per source,
-# training sequences under NAIVE one-doc-per-sequence padding vs the
-# chunk_assignments PACKED stream at a 512-token budget — the report
-# that justifies the packing step in tokens saved. Source grain,
-# every column an exact integer; zero windows (the packed ceil needs
-# only per-shard token totals).
-
-_PE_BUDGET, _PE_SHARDS = 512, 8
-
-
-def llm_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per source: doc/token counts, naive vs packed sequence counts,
-    and each layout's wasted-token ppm."""
-    from terra_bonobo_nodes_spark.llm.corpus import packing_efficiency
-    from terra_bonobo_nodes_spark.llm.text import tokens
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.size(tokens(F.coalesce(F.col("text"), F.lit(""))))
-        .cast("long")
-        .alias("n_tokens"),
-    )
-    return packing_efficiency(
-        docs, budget=_PE_BUDGET, n_shards=_PE_SHARDS
-    )
-
-
-def _packing_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm.corpus import packing_efficiency_sql
-
-    toks_coal = TOKS_SQL.replace("lower(text)", "lower(coalesce(text, ''))")
-    src_rel = (
-        "SELECT doc_id, source, "
-        f"len({toks_coal}) AS n_tokens "
-        "FROM documents"
-    )
-    return packing_efficiency_sql(src_rel, _PE_BUDGET, _PE_SHARDS)
-
-
-PACKING_ORACLE = _packing_oracle()
-
-
-# --- corpus_drift_psi (authored round 14 continuation, r15 candidate) ---------
+# --- corpus_drift_psi -------------------------------------------------------
 # PSI distribution drift (operators/quality.py::distribution_drift):
 # the promotion-gate complement of corpus_version_diff — diff says
 # WHICH rows changed, PSI says whether the length DISTRIBUTION moved.
@@ -1525,20 +1028,15 @@ def _drift_oracle() -> str:
 
 DRIFT_ORACLE = _drift_oracle()
 
-# ROUND-17 PROMOTION (ledger item 3): the distribution-drift member of
-# the promotion-gate family — PSI over the same synthetic v2
-# perturbation corpus_version_diff uses, so the two gate reports read
-# together. Slot funded by the stream_props_json_rollup merge into
-# stream_window_agg_surface (queries_streaming.py).
 register(
     "corpus_drift_psi",
     oracle=DRIFT_ORACLE,
-    headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
+    headline=True,
     tags=("quality", "gate"),
 )(corpus_drift_psi)
 
 
-# --- events_conversion_funnel / events_cohort_retention (r14 cont., r15) ------
+# --- events_conversion_funnel / events_cohort_retention ----------------------
 # Event-sequence analytics (operators/funnels.py): the ordered-step
 # conversion funnel and the cohort retention triangle — the two
 # reports every events warehouse runs, both combinable-aggregate
@@ -1569,16 +1067,10 @@ def _funnel_oracle_sql() -> str:
 
 EVENTS_FUNNEL_ORACLE = _funnel_oracle_sql()
 
-# ROUND-16 PROMOTION (ledger item 3): registered, RETIRING
-# funnel_view_click_purchase (plans/queries_relational.py) — the
-# ordered-step generalization of the fixed view->click->purchase row:
-# same events source, in-order semantics over ANY step list, one
-# groupBy(user) pass + a sorted-array fold in codegen instead of one
-# join-back per stage. Zero net capacity.
 register(
     "events_conversion_funnel",
     oracle=EVENTS_FUNNEL_ORACLE,
-    headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
+    headline=True,
     tags=("analytics", "funnel"),
 )(events_conversion_funnel)
 
@@ -1601,113 +1093,15 @@ def _retention_oracle_sql() -> str:
 
 EVENTS_RETENTION_ORACLE = _retention_oracle_sql()
 
-# ROUND-16 PROMOTION (ledger item 4): registered, RETIRING
-# cohort_daily_retention (plans/queries_relational.py) — the weekly
-# retention triangle subsumes the daily row's signal at report grain
-# (same min-per-user + join-back + cell-count shape, coarser period).
-# Zero net capacity.
 register(
     "events_cohort_retention",
     oracle=EVENTS_RETENTION_ORACLE,
-    headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
+    headline=True,
     tags=("analytics", "cohort"),
 )(events_cohort_retention)
 
 
-# --- cms_join_size_report (authored round 14 continuation, r15 candidate) -----
-# Sketch-based join-size estimation (llm/sketch.py::cms_inner_product,
-# Cormode & Muthukrishnan 2005 §4.2): "how big will this join be?"
-# answered from two d*w sketches BEFORE paying for the join — the
-# planner question that completes the sketch family's five
-# (membership / frequency / cardinality / quantile / join size).
-# Two joins measured: orders x lineitem on orderkey (fk shape) and
-# the events self-join on user_id (skew shape, sum n_u^2); exact truth
-# rides along with the never-undercount flag.
-
-# w sizing: the estimate's additive error is ~ N_a*N_b/w per the CM
-# guarantee, so w must scale with the CROSS size over the acceptable
-# absolute error — at sf0.1 (150k orders x 600k lineitems) w=2^18
-# bounds the collision mass near the true join size (measured:
-# est/exact 2.0 at 2^18 vs 37x at the 2^12 default; still only
-# d*w = 1M BIGINT cells, sketch-sized). The same report at w=2^12
-# would be honest but useless — the exact column exists to SHOW that.
-_JS_D, _JS_W = 4, 1 << 18
-
-
-def cms_join_size_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(join_name, est_join_size, exact_join_size, never_under)."""
-    from terra_bonobo_nodes_spark.llm.sketch import cms_cells, cms_inner_product
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").cast("string").alias("token")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").cast("string").alias("token")
-    )
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("token")
-    )
-
-    def one(name, ta, tb):
-        est = cms_inner_product(
-            cms_cells(ta, d=_JS_D, w=_JS_W), cms_cells(tb, d=_JS_D, w=_JS_W)
-        ).select("est_join_size")
-        ca = ta.groupBy("token").agg(F.count(F.lit(1)).alias("_fa"))
-        cb = tb.groupBy("token").agg(F.count(F.lit(1)).alias("_fb"))
-        exact = ca.join(cb, "token").agg(
-            F.coalesce(F.sum(F.col("_fa") * F.col("_fb")), F.lit(0))
-            .cast("long")
-            .alias("exact_join_size")
-        )
-        return est.crossJoin(exact).select(
-            F.lit(name).alias("join_name"),
-            "est_join_size",
-            "exact_join_size",
-            (F.col("est_join_size") >= F.col("exact_join_size")).alias(
-                "never_under"
-            ),
-        )
-
-    return one("orders_lineitem", orders, li).unionByName(
-        one("events_self_users", ev, ev)
-    )
-
-
-def _join_size_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm.sketch import cms_inner_product_sql
-
-    def one(name, src_a, src_b, ka, kb):
-        ip = cms_inner_product_sql(src_a, src_b, ka, kb, _JS_D, _JS_W)
-        return f"""
-SELECT '{name}' AS join_name, i.est_join_size,
-       CAST(coalesce(x.exact, 0) AS BIGINT) AS exact_join_size,
-       i.est_join_size >= coalesce(x.exact, 0) AS never_under
-FROM ({ip}) i CROSS JOIN (
-  SELECT sum(fa * fb) AS exact FROM
-    (SELECT k, count(*) AS fa FROM ({src_a}) t(k) GROUP BY 1) a
-    JOIN (SELECT k, count(*) AS fb FROM ({src_b}) t(k) GROUP BY 1) b
-    USING (k)
-) x"""
-
-    q1 = one(
-        "orders_lineitem",
-        "SELECT CAST(o_orderkey AS VARCHAR) AS k FROM orders",
-        "SELECT CAST(l_orderkey AS VARCHAR) AS k FROM lineitem",
-        "k", "k",
-    )
-    q2 = one(
-        "events_self_users",
-        "SELECT CAST(user_id AS VARCHAR) AS k FROM events",
-        "SELECT CAST(user_id AS VARCHAR) AS k FROM events",
-        "k", "k",
-    )
-    return q1 + "\nUNION ALL\n" + q2
-
-
-JOIN_SIZE_ORACLE = _join_size_oracle()
-
-
-# --- llm_novelty_scores (authored round 14 continuation, r15 candidate) -------
+# --- llm_novelty_scores -----------------------------------------------------
 # Semantic novelty of a corpus-version ADDITION set: each new vector's
 # nearest neighbor in the standing corpus and a novel/redundant
 # verdict — the embedding-space complement of corpus_version_diff
@@ -1770,54 +1164,15 @@ SELECT vec_id, nn_id, cos_sim, cos_sim < 0.99 AS is_novel
 FROM ranked WHERE rank = 1
 """
 
-# ROUND-17 PROMOTION (ledger item 3): the meaning-level member of the
-# promotion-gate family — each ADDED vector's nearest neighbor in the
-# standing corpus, novel/redundant verdict at addition grain. Slot
-# funded by the streaming merge (see corpus_drift_psi above).
 register(
     "llm_novelty_scores",
     oracle=NOVELTY_ORACLE,
-    headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
+    headline=True,
     tags=("llm", "embedding", "gate"),
 )(llm_novelty_scores)
 
 
-# --- llm_length_outliers (authored round 14 continuation, r15 candidate) ------
-# Median/MAD robust outlier screen (operators/quality.py::
-# robust_outliers): the screen that survives the one 2GB page a
-# mean/stddev z-score cannot — exact discrete medians, integer
-# cross-multiplied threshold, full replay. Doc grain over n_chars per
-# source at k=5.
-
-
-def llm_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(source, n_chars, med, mad, is_outlier) per document."""
-    from terra_bonobo_nodes_spark.operators.quality import robust_outliers
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "n_chars"
-    )
-    return robust_outliers(docs, "n_chars", "source", k_num=5).select(
-        "source", "n_chars", "med", "mad", "is_outlier"
-    )
-
-
-def _length_outliers_oracle() -> str:
-    from terra_bonobo_nodes_spark.operators.quality import robust_outliers_sql
-
-    inner = robust_outliers_sql(
-        "SELECT source, n_chars FROM documents", "n_chars", "source", 5
-    )
-    return (
-        "SELECT g AS source, v AS n_chars, med, mad, is_outlier "
-        f"FROM ({inner})"
-    )
-
-
-LENGTH_OUTLIERS_ORACLE = _length_outliers_oracle()
-
-
-# --- llm_host_communities (authored round 14 continuation, r15 candidate) ----
+# --- llm_host_communities ---------------------------------------------------
 # Label-propagation communities (llm/graph.py::lpa_fixed) over the
 # same synthesized host graph the registered capstone reads — the
 # SIXTH link signal: WHICH GROUP a host belongs to (mirror pools,
@@ -1894,13 +1249,10 @@ def llm_host_communities(
     )
 
 
-# --- llm_host_quality_report, the r16 WIDE registered form --------------------
-# ROUND-16 PROMOTION (ledger item 1; staged hash-green round 15 as the
-# llm_host_quality_wide candidate): the registered capstone + the LPA
-# community columns on one host-grain row — the SIXTH link signal.
-# Composition only: both sides are the already-verified rows, joined
-# on the host key. The candidate entry retired with this registration
-# (the llm_source_rule_funnel precedent).
+# --- llm_host_quality_report, the registered wide form ----------------------
+# The capstone + the LPA community columns on one host-grain row — the
+# SIXTH link signal. Composition only: both sides are the components
+# above, joined on the host key.
 
 HOST_REPORT_WIDE_ORACLE = f"""
 WITH _hr AS ({HOST_REPORT_ORACLE}),
@@ -1937,12 +1289,12 @@ def llm_host_quality_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "llm_host_quality_report",
     oracle=HOST_REPORT_WIDE_ORACLE,
-    headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
+    headline=True,
     tags=("llm", "graph", "curation"),
 )(llm_host_quality_wide)
 
 
-# --- llm_robots_filter (authored round 13, r14 candidate) ---------------
+# --- llm_robots_filter ------------------------------------------------------
 # robots.txt compliance (RFC 9309, llm/robots.py): per-host robots
 # TEXT is synthesized (three group shapes: prefix-disallow with a
 # longer allow override, a wildcard disallow, and no rules at all),
@@ -2039,10 +1391,7 @@ SELECT doc_id, CASE WHEN hit THEN allow ELSE TRUE END AS allowed
 FROM rb_best WHERE rn = 1
 """
 
-# registered post-definition once both composition sources exist (the
-# llm_source_rule_yield / llm_link_graph_rank pattern — review finding:
-# the earlier oracle=None + private-registry mutation left a window
-# where the entry read as rows-only)
+# registered post-definition: the oracle composes both sources above
 register(
     "llm_blocked_hosts",
     oracle=_url_hygiene_oracle(),
@@ -2051,7 +1400,7 @@ register(
 
 
 
-# --- llm_anchor_text_topk (authored round 13, r14 candidate) ------------
+# --- llm_anchor_text_topk ---------------------------------------------------
 # The anchor-text index — "what the web says about a host" (the
 # classic off-page relevance signal): pages -> TAG-AWARE link
 # extraction (llm/html.extract_link_tags: href + anchor + nofollow as
@@ -2141,7 +1490,7 @@ WHERE rank <= {_ANCHOR_K}"""
 ANCHOR_TOPK_ORACLE = _anchor_oracle()
 
 
-# --- llm_link_graph_rank (authored round 13, r14 candidate) -------------
+# --- llm_link_graph_rank ----------------------------------------------------
 # The pipeline-shaped graph row: instead of a side table of edges, the
 # link graph is EXTRACTED from page HTML (llm/html.extract_links ->
 # llm/urls.host_link_edges — quoted-href regex, absolute /
@@ -2208,15 +1557,13 @@ WHERE NOT (h = '' OR h LIKE '#%'
 LINK_GRAPH_ORACLE = _link_graph_oracle()
 
 
-# ROUND-17 WIDENING (queue drain, zero net capacity): the anchor-text
-# index rides the SAME synthesized-pages link-extraction source as the
-# rank row, so the registered llm_link_graph_rank becomes a union-
-# tagged surface (the stream_window_agg_surface precedent): the
-# 'pagerank' leg is the registered row's output verbatim (term/n NULL-
-# padded), the 'anchor' leg is the staged llm_anchor_text_topk
-# verbatim (its rank = top-k position; the pagerank leg's rank =
-# micro-unit PageRank — each leg keeps its own contract). The row was
-# due (r14 green), so the changed slot dedupes into the due demand.
+# The anchor-text index rides the SAME synthesized-pages link-extraction
+# source as the rank row, so the registered llm_link_graph_rank is a
+# union-tagged surface: the 'pagerank' leg is llm_link_graph_rank's
+# output verbatim (term/n NULL-padded), the 'anchor' leg is
+# llm_anchor_text_topk verbatim (its rank = top-k position; the
+# pagerank leg's rank = micro-unit PageRank — each leg keeps its own
+# contract).
 def llm_link_graph_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link-graph surface: fixed-point PageRank per host + the
     followed-links anchor-text top-5 per target host, union-tagged on
@@ -2252,346 +1599,7 @@ register(
 )(llm_link_graph_surface)
 
 
-# --- llm_token_budget_mix (authored round 13, r14 candidate) ------------
-# Token-budgeted data mixing (llm/corpus.py::token_budget_sample): the
-# 'data mixture' step where the spec is TOKENS per domain, not doc
-# counts — per-lang budgets filled greedily in seeded-hash order, the
-# crossing doc kept, the unbudgeted domain (de) dropped wholesale. The
-# oracle replays the identical md5-derived ordering, whitespace token
-# counts, and running-sum window, so the KEPT SET matches exactly.
-
-_TBM_SEED = "tbns-budget-v1"
-_TBM_BUDGETS = {"en": 5000, "fr": 2000, "es": 1500, "zh": 900}
-
-
-def llm_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from terra_bonobo_nodes_spark.llm.corpus import token_budget_sample
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    out = token_budget_sample(
-        docs, _TBM_BUDGETS, source_col="lang", seed=_TBM_SEED
-    )
-    return out.select("doc_id", "lang", "n_tokens")
-
-
-_TBM_CASE = (
-    "CASE lang "
-    + " ".join(f"WHEN '{k}' THEN {v}" for k, v in sorted(_TBM_BUDGETS.items()))
-    + " END"
-)
-
-TOKEN_BUDGET_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, lang,
-         CAST(len(list_filter(
-           str_split({hashing.normalize_sql("coalesce(text, '')")}, ' '),
-           w -> len(w) > 0)) AS BIGINT) AS n_tokens,
-         {hashing.hash32_sql(f"'{_TBM_SEED}' || CAST(doc_id AS VARCHAR)")} AS u
-  FROM documents
-), c AS (
-  SELECT doc_id, lang, n_tokens,
-         coalesce(sum(n_tokens) OVER (
-           PARTITION BY lang ORDER BY u ASC, doc_id ASC
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-  FROM t)
-SELECT doc_id, lang, n_tokens FROM c
-WHERE {_TBM_CASE} IS NOT NULL AND before < {_TBM_CASE}
-"""
-
-
-# llm_host_hits / llm_word_lm_xent standalone candidates REMOVED round
-# 14: HITS hub/auth is driver-verified inside the registered (widened)
-# llm_host_quality_report; word-LM cross-entropy inside the registered
-# llm_lm_entropy_surface (the widened char-LM row). Operators stay
-# pinned by tests/test_graph.py and tests/test_lm.py.
-
-# Still-deferred candidates (round-14 budget — see the registry
-# ledger); the five promoted rows left this dict for the registry and
-# are now pinned by the driver contract itself.
-
-# --- llm_pq_codes (authored round 14, r15 candidate; WIDENED late r14
-# with the full IVFADC composition) -----------------------------------------
-# Product quantization + IVFADC (llm/pq.py, Jegou et al. 2011 incl.
-# §V): flat PQ — m per-subspace codebooks trained distributed via
-# kmeans_fixed, codes + reconstruction error + ADC distance to a
-# pinned query — AND the production composition: coarse kmeans cells,
-# PQ retrained on the INTEGER residual (shift=0 — floor(v*2^0) of an
-# integer-valued double is the identity), residual codes/recon and the
-# per-cell ADC of the query's residual. The oracle replays EVERYTHING:
-# flat chains p{j}_*, coarse chain cc_*, residual chains r{j}_* over
-# the SQL-computed residual vectors, and both ADC arithmetics. Only
-# the driver-side n_probe cell ranking stays pytest-only (a sort over
-# k_coarse driver ints).
-
-_PQ_DIM, _PQ_M, _PQ_K, _PQ_ITERS = 64, 4, 8, 2
-_PQ_SUB = _PQ_DIM // _PQ_M
-_IVF_KC = 4
-# deterministic non-degenerate query spread over [0, 1)
-_PQ_QUERY = [((i * 7) % 13) / 13.0 for i in range(_PQ_DIM)]
-
-
-def _pq_query_quantized() -> list[int]:
-    import math
-
-    from terra_bonobo_nodes_spark.llm.kmeans import DEFAULT_SHIFT
-
-    scale = float(2**DEFAULT_SHIFT)
-    return [int(math.floor(v * scale)) for v in _PQ_QUERY]
-
-
-def llm_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # degenerate-input contract (the semantic_dedup precedent): an empty
-    # corpus yields an empty well-formed frame; pq_train itself stays
-    # loud (an empty TRAINING set is a caller bug in production)
-    if emb.limit(1).count() == 0:
-        cols = ", ".join(f"code_{j} BIGINT" for j in range(_PQ_M))
-        rcols = ", ".join(f"ivf_code_{j} BIGINT" for j in range(_PQ_M))
-        return spark.createDataFrame(
-            [],
-            f"vec_id BIGINT, {cols}, recon_err BIGINT, adc_dist BIGINT, "
-            f"ivf_cell BIGINT, {rcols}, ivf_recon BIGINT, ivf_adc BIGINT",
-        )
-    # flat PQ
-    books = pq.pq_train(
-        emb, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS
-    )
-    table = pq.adc_table(_PQ_QUERY, books)
-    coded = emb.where(F.col("embedding").isNotNull()).select(
-        "vec_id",
-        pq.pq_encode_expr("embedding", books).alias("_codes"),
-        pq.pq_reconstruction_error_expr("embedding", books).alias("recon_err"),
-    )
-    flat = coded.select(
-        "vec_id",
-        *[
-            F.element_at("_codes", j + 1).alias(f"code_{j}")
-            for j in range(_PQ_M)
-        ],
-        "recon_err",
-        pq.pq_adc_dist_expr("_codes", table).alias("adc_dist"),
-    )
-    # IVFADC: coarse cells + residual PQ
-    coarse, rbooks = pq.ivf_pq_train(
-        emb, dim=_PQ_DIM, k_coarse=_IVF_KC, m=_PQ_M, k_sub=_PQ_K,
-        iterations=_PQ_ITERS,
-    )
-    res = pq._residuals(emb, coarse, vec_col="embedding", id_col="vec_id",
-                        shift=16)
-    qv = _pq_query_quantized()
-    tables = {
-        cl: pq.adc_table(
-            [float(a - b) for a, b in zip(qv, coarse[cl])], rbooks, shift=0
-        )
-        for cl in coarse
-    }
-    rcoded = res.select(
-        "vec_id",
-        F.col("_cell").cast("long").alias("ivf_cell"),
-        pq.pq_encode_expr(F.col("_res"), rbooks, shift=0).alias("_rc"),
-        pq.pq_reconstruction_error_expr(F.col("_res"), rbooks, shift=0)
-        .alias("ivf_recon"),
-    )
-    ivf_adc = None
-    for cl in sorted(coarse):
-        d = pq.pq_adc_dist_expr("_rc", tables[cl])
-        ivf_adc = (
-            F.when(F.col("ivf_cell") == int(cl), d)
-            if ivf_adc is None
-            else ivf_adc.when(F.col("ivf_cell") == int(cl), d)
-        )
-    ivf = rcoded.select(
-        "vec_id",
-        "ivf_cell",
-        *[
-            F.element_at("_rc", j + 1).alias(f"ivf_code_{j}")
-            for j in range(_PQ_M)
-        ],
-        "ivf_recon",
-        ivf_adc.alias("ivf_adc"),
-    )
-    return flat.join(ivf, "vec_id")
-
-
-def _pq_oracle() -> str:
-    qv = _pq_query_quantized()
-    emb_sql = (
-        "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))"
-        " AS embedding FROM embeddings"
-    )
-    chain = pq.pq_codes_ctes(
-        emb_sql, dim=_PQ_DIM, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS
-    )
-    a = _PQ_ITERS
-    # flat ADC: distance from the quantized query subvector to the
-    # assigned centroid = table[j][code_j] by construction
-    adc_ctes, adc_cols = [], []
-    for j in range(_PQ_M):
-        qs = qv[j * _PQ_SUB : (j + 1) * _PQ_SUB]
-        d2 = " + ".join(
-            f"({q} - c.c[{i + 1}]) * ({q} - c.c[{i + 1}])"
-            for i, q in enumerate(qs)
-        )
-        adc_ctes.append(
-            f""",
-p{j}_adc AS (
-  SELECT a.id, CAST({d2} AS BIGINT) AS adc
-  FROM p{j}_a{a} a JOIN p{j}_c{a - 1} c ON a.cl = c.cl
-)"""
-        )
-        adc_cols.append(f"p{j}_adc.adc")
-    # coarse chain + SQL-computed integer residuals
-    from terra_bonobo_nodes_spark.llm import kmeans as _km
-
-    cc = _km.kmeans_fixed_ctes(
-        emb_sql, k=_IVF_KC, iterations=_PQ_ITERS, dim=_PQ_DIM, prefix="cc_"
-    )
-    qlit = "[" + ", ".join(str(v) for v in qv) + "]"
-    res_cte = f""",
-res AS (
-  SELECT a.id, a.cl,
-         list_transform(list_zip(q.x, c.c),
-                        p -> CAST(p[1] - p[2] AS DOUBLE)) AS r
-  FROM cc_a{a} a
-  JOIN cc_q q ON q.id = a.id
-  JOIN cc_c{a - 1} c ON c.cl = a.cl
-), qres AS (
-  SELECT cl, list_transform(list_zip(c, {qlit}), p -> p[2] - p[1]) AS qr
-  FROM cc_c{a - 1}
-)"""
-    rchains, radc_ctes = [], []
-    for j in range(_PQ_M):
-        lo, hi = j * _PQ_SUB + 1, (j + 1) * _PQ_SUB
-        rchains.append(
-            _km.kmeans_fixed_ctes(
-                f"SELECT id, list_slice(r, {lo}, {hi}) AS sub FROM res",
-                vec_col="sub",
-                id_col="id",
-                k=_PQ_K,
-                iterations=_PQ_ITERS,
-                dim=_PQ_SUB,
-                shift=0,
-                prefix=f"r{j}_",
-            )
-        )
-        radc_ctes.append(
-            f""",
-r{j}_adc AS (
-  SELECT a.id,
-         CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-              list_transform(list_zip(list_slice(qr.qr, {lo}, {hi}), c.c),
-                             p -> (p[1] - p[2]) * (p[1] - p[2]))),
-              (acc, x) -> acc + x) AS BIGINT) AS adc
-  FROM r{j}_a{a} a
-  JOIN res ON res.id = a.id
-  JOIN qres qr ON qr.cl = res.cl
-  JOIN r{j}_c{a - 1} c ON c.cl = a.cl
-)"""
-        )
-    code_cols = ", ".join(
-        f"CAST(code_{j} AS BIGINT) AS code_{j}" for j in range(_PQ_M)
-    )
-    rcode_cols = ", ".join(
-        f"CAST(r{j}_a{a}.cl AS BIGINT) AS ivf_code_{j}" for j in range(_PQ_M)
-    )
-    rrecon = " + ".join(f"r{j}_a{a}.d" for j in range(_PQ_M))
-    radc = " + ".join(f"r{j}_adc.adc" for j in range(_PQ_M))
-    joins = "\n  ".join(
-        [f"JOIN p{j}_adc ON pq_codes.id = p{j}_adc.id" for j in range(_PQ_M)]
-        + ["JOIN res ON res.id = pq_codes.id"]
-        + [f"JOIN r{j}_a{a} ON r{j}_a{a}.id = pq_codes.id" for j in range(_PQ_M)]
-        + [f"JOIN r{j}_adc ON r{j}_adc.id = pq_codes.id" for j in range(_PQ_M)]
-    )
-    return f"""
-WITH {chain}{"".join(adc_ctes)},
-{cc}{res_cte},
-{",".join(rchains)}{"".join(radc_ctes)}
-SELECT pq_codes.id AS vec_id, {code_cols}, recon_err,
-       CAST({" + ".join(adc_cols)} AS BIGINT) AS adc_dist,
-       CAST(res.cl AS BIGINT) AS ivf_cell,
-       {rcode_cols},
-       CAST({rrecon} AS BIGINT) AS ivf_recon,
-       CAST({radc} AS BIGINT) AS ivf_adc
-FROM pq_codes
-  {joins}
-"""
-
-
-PQ_ORACLE = _pq_oracle()
-
-
-# --- llm_bitext_margin_pairs (authored round 14, r15 candidate) ----------
-# Margin-based bitext mining (llm/bitext.py, Artetxe & Schwenk 2019):
-# the cross-lingual pairing step — embeddings split by vec_id parity
-# into pseudo source/target collections, mutual best matches kept at
-# ratio margin >= 1.0. Cosines are the fold-order-exact doubles the
-# cosine rows already pin; ranks tie-break by id; margins are ratios
-# of identically-computed doubles, so the oracle replays verdicts
-# value-for-value (floats surfaced at 4dp for the hash).
-
-
-def llm_bitext_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from terra_bonobo_nodes_spark.llm import bitext
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    src = emb.where(F.pmod("vec_id", F.lit(2)) == 0)
-    tgt = emb.where(F.pmod("vec_id", F.lit(2)) == 1)
-    out = bitext.margin_knn_pairs(
-        src, tgt, k=4, min_margin=1.0, mutual_only=True, max_rows=None
-    )
-    return out.select(
-        "src_id",
-        "tgt_id",
-        F.round("cos_sim", 4).alias("cos_sim"),
-        F.round("margin", 4).alias("margin"),
-    )
-
-
-def _bitext_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm import bitext
-
-    inner = bitext.margin_knn_pairs_sql(
-        "SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0",
-        "SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 1",
-        k=4,
-        min_margin=1.0,
-        mutual_only=True,
-    )
-    return (
-        "SELECT src_id, tgt_id, round(cos_sim, 4) AS cos_sim, "
-        f"round(margin, 4) AS margin FROM ({inner})"
-    )
-
-
-BITEXT_ORACLE = _bitext_oracle()
-
-
-
-# llm_sentence_stats ABSORBED late round 17: the due
-# llm_repetition_ratios row widened with the four sentence-grain
-# columns (plans/queries_llm.py — fn chained on the same scan, oracle
-# leg verbatim; the anchor-leg capacity-partner route, zero rotation
-# cost). llm/sentences.py and tests/test_sentences.py unchanged.
-
-
-# --- llm_distinct_sketch_report: PROMOTED round 14 (zero-net merge) --------
-# The KMV+HLL distinct-count report merged INTO the registered
-# approx_distinct_users row (same event_type grain — the
-# llm_blocked_hosts widening precedent): that row now hash-compares
-# both from-scratch estimate VALUES next to the engine-internal HLL++
-# error-bound predicate. See plans/queries_relational.py.
-
-
-# --- llm_length_quantile_sketch: PROMOTED round 15 (zero-net merge) ----------
-# The histogram quantile sketch (llm/quantiles.py — bounded-bin
-# addition-mergeable percentiles with the coverage guarantee) merged
-# INTO the registered llm_length_percentiles row, pivoted to source
-# grain (sk{50,90,99}_{lo,hi,exact,covers} next to the exact
-# interpolated p25..p99 — the approx_distinct_users precedent). See
-# plans/queries_llm.py.
-
-
-# --- layout_zorder_pruning (authored round 14, r15 candidate) ----------------
+# --- layout_zorder_pruning --------------------------------------------------
 # Z-order data layout vs natural insert order, measured through zone
 # maps (operators/layout.py): the same orders rows are laid into 64
 # model files two ways — o_orderkey order (the insert-order default)
@@ -2696,80 +1704,17 @@ JOIN _zo_scans z ON z.probe_id = n.probe_id
 
 ZORDER_ORACLE = _zorder_oracle()
 
-# ROUND-17 PROMOTION (ledger item 4): registered, RETIRING
-# spatial_zorder_code (plans/queries_geo.py) — the pruning measurement
-# exercises the same morton_code interleave AND adds the zone-map
-# scan-count value the code row lacked.
 register(
     "layout_zorder_pruning",
     oracle=ZORDER_ORACLE,
-    headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
+    headline=True,
     tags=("layout", "spatial"),
 )(layout_zorder_pruning)
 
 
-# --- llm_priority_sample_report: RETIRED from the queue (round 15) -----------
-# The lang-grain DLT audit report left the queue when the r16 staging
-# replaced it with the DOC-grain llm_sample_surface_wide (the widened
-# registered row carries priority_rank next to the reservoir/quota
-# verdicts). The operator pair (wsample.priority_sample /
-# priority_sample_report) and both SQL mirrors stay live and pinned in
-# tests/test_wsample.py; the report-grain row form was dead weight
-# once nothing swept its oracle (review finding r15).
-
-
-# --- llm_bpe_merges (authored round 15, queue tail) ---------------------------
-# BPE merge learning (llm/bpe.py — Sennrich 2016, the tokenizer-
-# training step every LLM vocabulary comes from): the first 8 merges
-# over the documents corpus, learned distributed (word-count table is
-# the working set; each round = one combinable pair aggregate + a
-# 1-row argmax + a pure-Column rewrite — the llm/kmeans.py bounded-
-# driver-state shape, 8 pairs total on the driver). Merge-grain row;
-# counts and tie-breaks exact integers/strings, so the oracle's
-# unrolled 8-round CTE chain hash-compares bit-for-bit.
-
-_BPE_M = 8
-
-
-def llm_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(merge_rank, sym_a, sym_b, pair_count) — the learned merge
-    table, priority-ordered. The artifact a tokenizer ships."""
-    from terra_bonobo_nodes_spark.llm import bpe
-
-    docs = load_table(spark, sf_dir, "documents").select("text")
-    merges = bpe.bpe_learn(docs, "text", n_merges=_BPE_M)
-    return spark.createDataFrame(
-        merges, "merge_rank int, sym_a string, sym_b string, pair_count long"
-    )
-
-
-def _bpe_oracle() -> str:
-    from terra_bonobo_nodes_spark.llm.bpe import bpe_merges_sql
-
-    return (
-        "SELECT CAST(merge_rank AS INT) AS merge_rank, sym_a, sym_b, "
-        "CAST(pair_count AS BIGINT) AS pair_count FROM ("
-        + bpe_merges_sql("SELECT text FROM documents", "text", _BPE_M, TOKS_SQL)
-        + ")"
-    )
-
-
-BPE_ORACLE = _bpe_oracle()
-
-
-# --- llm_sample_surface_wide: PROMOTED round 16 (ledger item 2) ---------------
-# The staged combined row left the queue by widening the registered
-# llm_sample_surface IN PLACE (plans/queries_llm.py — + priority_rank,
-# the DLT weighted per-language rank; the oracle composes the base
-# surface with wsample's row-grain SQL mirror there). Zero net slots.
-
-
-# --- p_record_ops_surface (authored round 16 — the r17 consolidation) --------
-# VERDICT_r15 "What's wrong" #1: p1/p2/p3/p4/p5/p6/p7/p9/p11 are NINE
-# separate driver rows for one-line record ops (operators/records.py,
-# operators/arrays.py), all refreshed together and all due together —
-# the rotation's biggest slot sink. This surface re-authors every one
-# of them at ONE grain (lineitem rows, the table's own key) with each
+# --- p_record_ops_surface ---------------------------------------------------
+# The one-line record ops (operators/records.py, operators/arrays.py)
+# at ONE grain (lineitem rows, the table's own key) with each
 # op's oracle check kept verbatim as a column, the
 # fn_scalar_surface/g7_transform_surface precedent:
 #   P1  identifier_from_property  -> p1_identifier (cast-to-string copy)
@@ -2922,24 +1867,19 @@ SELECT l_orderkey, l_linenumber,
 FROM lineitem
 """
 
-# ROUND-17 PROMOTION (ledger item 1): registered, RETIRING the NINE
-# one-line record-op rows p1/p2/p3/p4/p5/p6/p7/p9/p11
-# (plans/queries_relational.py) — identical per-op oracle coverage at
-# one lineitem grain, permanent -9 on every future due cohort.
 register(
     "p_record_ops_surface",
     oracle=P_RECORD_OPS_ORACLE,
-    headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
+    headline=True,
     tags=("records", "surface"),
 )(p_record_ops_surface)
 
 
-# --- g_scalar_geometry_surface (authored round 16 — the r17 consolidation) ---
-# The same pass for the scalar-geometry rows: g2 (x/y attrs -> point
+# --- g_scalar_geometry_surface ----------------------------------------------
+# The same pass for the scalar-geometry kernels: g2 (x/y attrs -> point
 # round-trip), g5 (3D -> 2D), g6 (Douglas-Peucker endpoints
-# invariant), g8 (subdivision preserves area) shared nothing but a
-# grain-per-table; re-authored here at SUPPLIER grain with every row's
-# closed-form oracle check verbatim as columns. g9 stays its own row —
+# invariant), g8 (subdivision preserves area) at SUPPLIER grain with
+# every closed-form oracle check as a column. g9 stays its own row —
 # it is a line x polygon overlay JOIN against the tile layer, not a
 # scalar kernel. Scale shape: one supplier scan of pure Column
 # kernels; the g8 branch subdivides (bounded fan-out, <= 4 parts per
@@ -3070,235 +2010,25 @@ SELECT s_suppkey,
 FROM supplier
 """
 
-# ROUND-17 PROMOTION (ledger item 2): registered, RETIRING the four
-# scalar-geometry rows g2/g5/g6/g8 (plans/queries_geo.py) — each
-# kernel's closed-form oracle check verbatim at one supplier grain.
 register(
     "g_scalar_geometry_surface",
     oracle=G_SCALAR_GEOMETRY_ORACLE,
-    headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
+    headline=True,
     tags=("geometry", "surface"),
 )(g_scalar_geometry_surface)
 
 
-
-
-# stream_window_agg_surface_wide PROMOTED round 17: the staged merge
-# moved into plans/queries_streaming.py as the registered
-# stream_window_agg_surface (third union leg kind='props', retiring
-# stream_props_json_rollup — ledger item 3 funding).
-
-
-# llm_codec_throughput_pinned / llm_audio_spectral_pinned PROMOTED
-# round 17: the KAT-pinned forms swapped INTO the registered
-# llm_codec_throughput / llm_audio_spectral rows (plans/queries_llm.py
-# — VERDICT_r15 item 6; the registry's no-oracle count is now ZERO).
-
-
-# --- s_document_roundtrip_surface (authored round 17 — the r18
-# consolidation, PLANS.md scan item 1) ---------------------------------------
-# The four content-codec roundtrip rows (s1 CSV, s2 GeoJSON, s8 zip,
-# s9 JSONL — plans/queries_sources.py) each prove "pack a table into
-# payload documents, run the real source operator, recover the rows",
-# but over four DIFFERENT tables, so they cost four driver slots that
-# refresh (and fall due) together. This surface re-authors all four
-# roundtrips at ONE grain — (kind, doc_id) over documents — the
-# p_record_ops_surface re-author pattern, not a union of the old rows:
-#   csv     csv_documents_to_rows   metadata + md5 digest (CSV cannot
-#           carry free text unquoted; the digest IS the payload, and
-#           hash equality proves the codec moved it intact)
-#   jsonl   jsonl_documents_to_rows the REAL text through the codec
-#           (to_json escaping both ways), digest computed after
-#   zip     zip_reader              the REAL text bytes as the entry
-#           payload; lang/doc_id/n_chars ride the entry path (the
-#           corpus-archive layout convention), digest after
-#   geojson geojson_reader          metadata + digest as feature
-#           properties, doc_id as the feature id, plus the geometry
-#           roundtrip (gx/gy from st_x/st_y; NULL on the other legs)
-# Every leg's packing is one groupBy(source) collect_list (20 payload
-# documents); parsing stays JVM-side for csv/jsonl (from_csv /
-# from_json) and Arrow-batched for zip/geojson (mapInPandas), so at
-# 100 TB the only shuffle is the per-source packing — and a real
-# corpus arrives already packed, skipping it entirely.
-# Registration partners (r18 ledger item 1): retires
-# s1_csv_document_roundtrip / s2_geojson_reader_roundtrip /
-# s8_zip_reader_roundtrip / s9_jsonl_roundtrip.
-
-
-def s_document_roundtrip_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All four content-codec roundtrips (CSV / JSONL / zip / GeoJSON)
-    at one documents grain, union-tagged by kind — the r18
-    retire-and-replace for the four standalone s-family rows."""
-    import pandas as pd
-
-    from terra_bonobo_nodes_spark.geo import kernels as K
-    from terra_bonobo_nodes_spark.sources.archive import zip_reader
-    from terra_bonobo_nodes_spark.sources.csv import csv_documents_to_rows
-    from terra_bonobo_nodes_spark.sources.geojson import geojson_reader
-    from terra_bonobo_nodes_spark.sources.jsonl import jsonl_documents_to_rows
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", "lang", "n_chars", "text"
-    )
-    base = docs.withColumn("text_chk", F.md5(F.encode("text", "UTF-8")))
-    null_d = F.lit(None).cast("double")
-
-    # csv: header line + one row per doc, packed per source
-    line = F.concat_ws(
-        ",",
-        F.col("doc_id").cast("string"),
-        F.col("lang"),
-        F.col("n_chars").cast("string"),
-        F.col("text_chk"),
-    )
-    csv_docs = (
-        base.withColumn("_line", line)
-        .groupBy("source")
-        .agg(
-            F.concat_ws(
-                "\n",
-                F.lit("doc_id,lang,n_chars,text_chk"),
-                F.concat_ws("\n", F.sort_array(F.collect_list("_line"))),
-            ).alias("content")
-        )
-    )
-    csv_leg = csv_documents_to_rows(
-        csv_docs, "content", header=["doc_id", "lang", "n_chars", "text_chk"]
-    ).select(
-        F.lit("csv").alias("kind"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "lang",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        "text_chk",
-        null_d.alias("gx"),
-        null_d.alias("gy"),
-    )
-
-    # jsonl: one escaped JSON object per line, real text both ways
-    jline = F.to_json(F.struct("doc_id", "lang", "n_chars", "text"))
-    j_docs = (
-        docs.withColumn("_line", jline)
-        .groupBy("source")
-        .agg(F.concat_ws("\n", F.sort_array(F.collect_list("_line"))).alias("content"))
-    )
-    jsonl_leg = jsonl_documents_to_rows(
-        j_docs, "content", "doc_id BIGINT, lang STRING, n_chars BIGINT, text STRING"
-    ).select(
-        F.lit("jsonl").alias("kind"),
-        "doc_id",
-        "lang",
-        "n_chars",
-        F.md5(F.encode("text", "UTF-8")).alias("text_chk"),
-        null_d.alias("gx"),
-        null_d.alias("gy"),
-    )
-
-    # zip: one archive per source; text bytes are the entry payload,
-    # metadata rides the entry path ("{lang}/{doc_id}_{n_chars}.txt")
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        import io
-        import zipfile
-
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w") as zf:
-            for _, row in pdf.sort_values("doc_id").iterrows():
-                zf.writestr(f"{row.lang}/{row.doc_id}_{row.n_chars}.txt", row.text)
-        return pd.DataFrame({"content": [buf.getvalue()]})
-
-    zips = docs.groupBy("source").applyInPandas(pack, "content BINARY")
-    zip_leg = zip_reader(zips, "content").select(
-        F.lit("zip").alias("kind"),
-        F.regexp_extract("name", r"/(\d+)_", 1).cast("long").alias("doc_id"),
-        F.regexp_extract("name", r"^([^/]+)/", 1).alias("lang"),
-        F.regexp_extract("name", r"_(\d+)\.txt$", 1).cast("long").alias("n_chars"),
-        F.md5("content").alias("text_chk"),
-        null_d.alias("gx"),
-        null_d.alias("gy"),
-    )
-
-    # geojson: one FeatureCollection per source; to_json builds each
-    # feature (escaping-safe, unlike raw concat), st_x/st_y prove the
-    # coordinates survived the parse
-    gx = ((F.col("doc_id") % 360) - 180).cast("double")
-    gy = ((F.col("doc_id") % 170) - 85).cast("double")
-    feature = F.to_json(
-        F.struct(
-            F.lit("Feature").alias("type"),
-            F.col("doc_id").cast("string").alias("id"),
-            F.struct(
-                F.lit("Point").alias("type"),
-                F.array(gx, gy).alias("coordinates"),
-            ).alias("geometry"),
-            F.struct(
-                F.col("lang"),
-                F.col("n_chars").cast("string").alias("n_chars"),
-                F.col("text_chk"),
-            ).alias("properties"),
-        )
-    )
-    g_docs = (
-        base.withColumn("_f", feature)
-        .groupBy("source")
-        .agg(
-            F.concat(
-                F.lit('{"type":"FeatureCollection","features":['),
-                F.concat_ws(",", F.sort_array(F.collect_list("_f"))),
-                F.lit("]}"),
-            ).alias("content")
-        )
-    )
-    xy = K.st_xy("geom")
-    geo_leg = geojson_reader(g_docs, "content").select(
-        F.lit("geojson").alias("kind"),
-        F.col("feature_id").cast("long").alias("doc_id"),
-        F.col("properties").getItem("lang").alias("lang"),
-        F.col("properties").getItem("n_chars").cast("long").alias("n_chars"),
-        F.col("properties").getItem("text_chk").alias("text_chk"),
-        xy["x"].alias("gx"),
-        xy["y"].alias("gy"),
-    )
-
-    return (
-        csv_leg.unionByName(jsonl_leg).unionByName(zip_leg).unionByName(geo_leg)
-    )
-
-
-S_DOC_ROUNDTRIP_ORACLE = """
-SELECT 'csv' AS kind, doc_id, lang, n_chars, md5(text) AS text_chk,
-       CAST(NULL AS DOUBLE) AS gx, CAST(NULL AS DOUBLE) AS gy
-FROM documents
-UNION ALL
-SELECT 'jsonl', doc_id, lang, n_chars, md5(text),
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-FROM documents
-UNION ALL
-SELECT 'zip', doc_id, lang, n_chars, md5(text),
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-FROM documents
-UNION ALL
-SELECT 'geojson', doc_id, lang, n_chars, md5(text),
-       CAST((doc_id % 360) - 180 AS DOUBLE),
-       CAST((doc_id % 170) - 85 AS DOUBLE)
-FROM documents
-"""
-
-
-# --- j2_overlay_surface (authored round 17 — registered LATE r17,
-# PLANS.md scan item 2 / registry.py addendum) --------------------------------
-# j2_intersection_percent_by_area / j2_concave_overlay_percent /
-# j2_dissolve_overlapping_layer (plans/queries_geo.py) all output the
-# identical (c_custkey, intersection_percent) grain over the
-# customer-rect x tile fixtures (grain checked r17) — three slots for
-# three physical paths of ONE operator. This surface runs all three
-# paths union-tagged by strategy, each leg's fixture and oracle text
-# verbatim:
+# --- j2_overlay_surface -----------------------------------------------------
+# IntersectionPercentByArea's three physical paths share the
+# (c_custkey, intersection_percent) grain over the customer-rect x tile
+# fixtures (plans/queries_geo.py). This surface runs all three
+# union-tagged by strategy:
 #   pairwise  axis-aligned rects x disjoint tiles (the rect fast path)
 #   concave   L-shapes both sides (the general triangulated overlay)
 #   dissolve  heavily overlapping tiles with dissolve=True (clipped
 #             zones unioned before measuring)
 # Scale shape per leg is unchanged from the standalone rows: envelope
 # grid join + per-record combinable sum; the union adds no join.
-# Registration partners (r18 ledger item 2): retires all three j2 rows.
 
 
 def j2_overlay_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3424,95 +2154,9 @@ FROM rec r LEFT JOIN covered c USING (c_custkey)
 ) q
 """
 
-# LATE-r17 PROMOTION (r18 ledger item 2 executed early — registry.py
-# addendum): REGISTERED, retiring j2_intersection_percent_by_area /
-# j2_concave_overlay_percent / j2_dissolve_overlapping_layer
-# (plans/queries_geo.py keeps the shared fixtures + retirement note).
-# Forced by the freshness contract: the dissolve rect fast path
-# (operators/spatial.py, authored while staging this surface) changes
-# the three retired rows' code, and their changed-code driver row
-# lands HERE — the surface runs all three legs in this round's window.
 register(
     "j2_overlay_surface",
     oracle=J2_OVERLAY_ORACLE,
-    headline=True,  # promoted rows join the bench set (VERDICT_r15 #4)
+    headline=True,
     tags=("J2", "overlay", "surface"),
 )(j2_overlay_surface)
-
-
-CANDIDATES: dict[str, tuple] = {
-    # Dict order IS the promotion rank (kept in sync by review finding
-    # r14). The entire r17 plan head left the queue at round 17:
-    # p_record_ops_surface / g_scalar_geometry_surface /
-    # corpus_version_diff / corpus_drift_psi / llm_novelty_scores /
-    # layout_zorder_pruning REGISTERED (above, with their retirement
-    # partners named in the ledger); stream_window_agg_surface_wide
-    # moved into queries_streaming.py as the registered surface;
-    # the two KAT-pinned rows swapped into the registered
-    # llm_codec_throughput / llm_audio_spectral (queries_llm.py).
-    # The r18 consolidation surface heads the rank (registered FIRST
-    # at r18, retiring s1/s2/s8/s9 — its authoring comment above names
-    # them; the 4 retirements fund the 4 llm promotions below it under
-    # add-one-retire-one). j2_overlay_surface left the queue LATE r17:
-    # registered early (registry.py addendum) when the dissolve rect
-    # fast path changed its retirees' code.
-    "s_document_roundtrip_surface": (
-        s_document_roundtrip_surface,
-        S_DOC_ROUNDTRIP_ORACLE,
-    ),
-    # the standing queue (round-14 ledger rank), heads r18 after the
-    # surface:
-    "llm_kmeans_fixed_cells": (llm_kmeans_fixed_cells, KMEANS_ORACLE),
-    # llm_anchor_text_topk left the queue round 17: widened into the
-    # registered llm_link_graph_rank surface (anchor union leg, above).
-    "llm_token_budget_mix": (llm_token_budget_mix, TOKEN_BUDGET_ORACLE),
-    "llm_fuzzy_title_pairs": (llm_fuzzy_title_pairs, FUZZY_ORACLE),
-    "llm_pq_codes": (llm_pq_codes, PQ_ORACLE),
-    "llm_bitext_margin_pairs": (llm_bitext_margin_pairs, BITEXT_ORACLE),
-    # llm_sentence_stats left the queue late round 17: absorbed into
-    # the due llm_repetition_ratios row (chained projection, above).
-    # llm_perplexity_buckets left the queue late round 17: absorbed
-    # into the due llm_lm_entropy_surface (ppl_bucket column, above).
-    "llm_dsir_logweights": (llm_dsir_logweights, DSIR_ORACLE),
-    # llm_bloom_decontaminate left the queue late round 17: absorbed
-    # into the due llm_decontamination_surface (third leg, above).
-    "llm_cms_token_freq": (llm_cms_token_freq, CMS_ORACLE),
-    "llm_length_outliers": (
-        llm_length_outliers,
-        LENGTH_OUTLIERS_ORACLE,
-    ),
-    "cms_join_size_report": (
-        cms_join_size_report,
-        JOIN_SIZE_ORACLE,
-    ),
-    # events_conversion_funnel / events_cohort_retention left the
-    # queue round 16: REGISTERED (retiring funnel_view_click_purchase /
-    # cohort_daily_retention — ledger items 3-4).
-    # llm_curation_funnel / llm_readability_scores /
-    # llm_length_quantile_sketch left the queue round 15: registered as
-    # llm_source_rule_funnel / widened into llm_quality_filter_score /
-    # widened into llm_length_percentiles respectively.
-    # llm_host_quality_wide / llm_sample_surface_wide left the queue
-    # round 16: the r15-staged combined rows are the REGISTERED
-    # llm_host_quality_report / llm_sample_surface (ledger items 1-2,
-    # zero net; the llm_host_communities / llm_priority_sample_report
-    # standalone fns stay as their components).
-    "llm_packing_efficiency": (
-        llm_packing_efficiency,
-        PACKING_ORACLE,
-    ),
-    "llm_vocab_coverage_report": (
-        llm_vocab_coverage_report,
-        VOCAB_COVERAGE_ORACLE,
-    ),
-    "llm_stride_interleave_order": (
-        llm_stride_interleave_order,
-        STRIDE_ORACLE,
-    ),
-    "llm_corpus_overlap_report": (
-        llm_corpus_overlap_report,
-        CORPUS_OVERLAP_ORACLE,
-    ),
-    "llm_bpe_merges": (llm_bpe_merges, BPE_ORACLE),
-}
-

@@ -14,6 +14,54 @@ Queries whose semantics are not SQL-expressible (streaming state,
 geometry kernels without a DuckDB spatial extension) register with
 ``oracle=None`` → the driver records a weaker rows-only check, and the
 full semantics are covered by pytest unit tests instead.
+
+Driver-check rotation. The correctness driver walks ``all_queries()``
+in dict order and records exactly the first ``DRIVER_CAP`` queries per
+round, so the order is part of the verification contract. The rule: no
+query's last green driver row may be more than two rounds old.
+``_compute_priority`` derives the order at import from the repo-root
+CORRECTNESS_r*.json artifacts, in five sections:
+
+1. the due cohort: every query whose last green is >= 2 rounds old,
+   oldest round first, within a round in that artifact's order. It is
+   computed, never hand-listed, and must fit inside ``DRIVER_CAP``
+   together with sections 2 and 3;
+2. ``_CHANGED_THIS_ROUND``: queries whose code (or anything it
+   references) changed since their last green row — a green row for
+   old code is not a green row;
+3. ``_NEW_THIS_ROUND``: queries taking their first driver row;
+4. ``_DEFERRED_TO_NEXT_ROUND``: changed/new overflow that did not fit;
+   it heads the next round;
+5. everything else, never-green names first, then stalest green first.
+
+The three hand lists budget exactly one round, ``_ROTATION_ROUND``.
+Once CORRECTNESS_r{_ROTATION_ROUND}.json exists they are spent and
+``_active_lists`` reads them as empty: each listed name is then green
+at that round or re-enters sections 1/5 as due or never-green.
+
+Capacity: at most 144 registered queries (144/50 = 2.88 rounds per full
+refresh, >= 6 checks of churn headroom per 3-round window). Adding a
+query means retiring or merging one in the same commit; a capability
+without a free slot is covered by pytest and tests/test_plan_audit.py.
+
+Authoring a round:
+
+- set ``_ROTATION_ROUND`` to the round the lists budget and empty the
+  spent lists;
+- in the same commit as any operator edit, add every registered query
+  whose plan reaches the edited code to ``_CHANGED_THIS_ROUND`` and
+  re-verify it with tests/check_driver.py at sf0.001, sf0.01 and sf0.1;
+- add each new registration to ``_NEW_THIS_ROUND``;
+- keep due + changed + new <= ``DRIVER_CAP``; overflow goes to
+  ``_DEFERRED_TO_NEXT_ROUND``.
+
+tests/test_rotation_freshness.py is the contract: it pins the window,
+the cap and the budget arithmetic, and while the lists are active it
+derives the changed-code set from git (this file excluded) so a
+forgotten entry fails. ``_OPT_FULL_REPLICA_SYMBOLS`` /
+``_OPT_FULL_REPLICA_QUERIES`` exempt cross-cutting symbols and queries
+from that derivation; only an optimization round may fill them, and
+only with a full-registry oracle replica as evidence.
 """
 
 from __future__ import annotations
@@ -54,862 +102,11 @@ def register(
     return deco
 
 
-# Driver-check ordering. The correctness driver walks the registry in
-# dict order and checks exactly the first DRIVER_CAP queries per round,
-# so order is part of the verification contract. THE RULE (standing,
-# amended round 7 — the round-6 hand-maintained list misfiled one r03
-# green at the tail and sequenced r04 greens after r05 greens, so the
-# stale-green ordering is now COMPUTED from the CORRECTNESS_r*.json
-# artifacts at import time instead of hand-edited):
-#
-#   (1) the DUE COHORT first — every query whose last driver green is
-#       >= 2 rounds old (it would breach the freshness contract if it
-#       missed the next round's window), oldest round first, within a
-#       round in that round's artifact order. This section is computed,
-#       not hand-listed, and is INVIOLABLE: it must always fit inside
-#       DRIVER_CAP together with section (2).
-#   (2) queries whose underlying operator code CHANGED since their last
-#       green row (_CHANGED_THIS_ROUND, hand-maintained per round) — a
-#       green row for old code is not a green row.
-#   (3) new queries taking their first driver row this round
-#       (_NEW_THIS_ROUND), as many as fit under DRIVER_CAP.
-#   (4) changed/new overflow that did NOT fit this round
-#       (_DEFERRED_TO_NEXT_ROUND) — heads the queue next round, each
-#       with a ledger note below.
-#   (5) everything else, stalest green first (computed), so next
-#       round's due cohort is already in order; never-checked
-#       stragglers (should not exist) sort before all of these.
-#
-# ROUND-9 BUDGET: due cohort = 43 (the 45 r06 greens, minus the two
-# retired into the fn_scalar_surface merge below) + 2 changed-code
-# re-greens (s1/pipeline — the csv header fix; llm_ivf_ann_topk also
-# changed but is already in the due cohort) + 2 new first rows = 47 of
-# DRIVER_CAP, 3 slots of slack (filled by the computed stalest-green
-# tail: the oldest r07 greens pre-pay round 10's due cohort).
-#
-# CAPACITY POLICY (standing, decided round 9 per VERDICT_r08 item 4):
-# the registry is CAPPED at 144 registered queries — 144/50 = a
-# 2.88-round refresh cycle, leaving >= 6 checks of churn headroom
-# (changed-code re-greens + new first rows) per 3-round freshness
-# window. Adding a query REQUIRES retiring or merging one in the same
-# commit (precedent: the round-9 fn_* consolidation — the three
-# row-level scalar surfaces shared a grain and became one wide
-# projection, identical per-function coverage, two slots freed); new
-# capability work that cannot free a slot routes through pytest +
-# test_plan_audit.py instead (the mojibake/BPE/kdb precedent).
-# test_rotation_freshness.py::test_budget_arithmetic_holds enforces the
-# per-round arithmetic; test_registry_capacity_cap pins the cap.
-#
-# ROUND-11 CLOSING (rewritten in round 12 per ADVICE_r11 low — the
-# original prose here was authored mid-round and went stale at HEAD):
-# round 11 was short (48 turns) and landed exactly ONE new
-# registration, g7_transform_surface (the ADVICE_r10 planar-CRS merge
-# — green r11), plus the CDATA unwrap-and-escape fix in
-# sources/formats.py (no registered query touched it yet). The three
-# other rows the mid-round notes promised (llm_semantic_dedup,
-# llm_quality_filter_score, s11_xml_document_roundtrip) were NOT
-# authored in round 11; true round-11 capacity was 141 registered
-# (140 after round 10's G7 deletions + 1 new), and the r11 driver
-# window ran 46 due + 1 new + 3 stalest-green fillers.
-#
-# ROUND-12 MAINTENANCE NOTES. The three carried rows land now:
-# - llm_semantic_dedup: SemDeDup (llm/semdedup.py, pytest-only since
-#   r9 — VERDICT_r09/r11 #1) through the centroids= seam: a literal
-#   one-hot codebook makes cell assignment bit-exact cross-engine
-#   (d_k = 1 - 2*v[k]); the oracle composes the cell-blocked cosine
-#   pairs + recursive-CTE components + keep-policy window patterns
-#   already green as separate rows (queries_llm.py tail).
-# - llm_quality_filter_score: the learned quality filter
-#   (llm/classifier.py, pytest-only since r9) with a pinned
-#   LogRegModel over integer-exact features — scoring is pure
-#   arithmetic (sigmoid of a standardized dot) DuckDB replays.
-# - s11_xml_document_roundtrip: driver-proves formats.py's lexical
-#   layer (commented-out records stay dead, CDATA field content
-#   survives escaped) — paired with the round-12 lexer fix (split on
-#   ']]>' only; a literal '<![CDATA[' inside a section is content,
-#   the ADVICE_r11 medium) and its new pytest pins.
-# Late round-12 additions (add-one-retire-one policy honored):
-# - llm_text_counts_surface: merge of llm_token_count +
-#   llm_bpe_token_count (fn_scalar precedent — the bpe row already
-#   carried n_tokens, same doc grain, byte-identical column
-#   expressions; identical per-function coverage, one slot freed).
-# - e4_osm_points_roundtrip: E4 leaves the n/a-by-design set — the
-#   round-12 pure-Python points-layer converter
-#   (sources/osm.py::osm_points_geojson_runner) makes the OSM->GeoJSON
-#   chain runnable in-process, so the roundtrip row verifies XML
-#   synthesis -> executor-side conversion -> geojson_reader against
-#   the events projection (the s5_k2 stand-in precedent).
-# - s6_overpass_http_roundtrip: OverpassExtract proven over a REAL
-#   socket (in-process Overpass stand-in + stdlib POST client — the
-#   s3_http precedent), feeding the E4 in-process chain. S6 leaves the
-#   n/a set. Paired retirement: e3_transit_time_one_to_one merged INTO
-#   e2_transit_time_one_to_many (same customer grain; the widened row
-#   runs BOTH operators and adds times_one).
-# - e5_shapefile_points_roundtrip: ZipShapefileToGeojson with the
-#   round-12 from-spec pure-Python .shp/.shx/.dbf codec
-#   (sources/shp_codec.py) — executor-side pack, in-process convert,
-#   exact binary-double geometry roundtrip. E5 leaves the n/a set.
-#   Paired retirement: llm_embedding_cosine_pairs_blocked merged INTO
-#   llm_embedding_cosine_pairs (same pair grain; the widened row runs
-#   both the exact crossJoin form and the block_col equi-join and
-#   flags each pair with in_lsh_block).
-# Capacity arithmetic, spelled out (rewritten round 14 per VERDICT_r13
-# "What's wrong" #3 — the earlier "141 + 7 new - 2 merged-away" prose
-# did not close): round 11 ended at 141 registered. Round 12 ADDED 7
-# (llm_semantic_dedup, llm_quality_filter_score,
-# s11_xml_document_roundtrip, llm_text_counts_surface,
-# e4_osm_points_roundtrip, s6_overpass_http_roundtrip,
-# e5_shapefile_points_roundtrip) and RETIRED 4 by merge
-# (llm_token_count + llm_bpe_token_count -> llm_text_counts_surface;
-# e3_transit_time_one_to_one -> e2_transit_time_one_to_many;
-# llm_embedding_cosine_pairs_blocked -> llm_embedding_cosine_pairs):
-# 141 + 7 - 4 = 144, exactly at the cap (check:
-# len(all_queries()) == 144). Budget: due cohort = the 41
-# r09 greens minus the retired blocked row = 40 (the widened cosine
-# row is due AND changed — one check); + 1 changed (e2, r10 green,
-# code widened) + 7 new = 48 <= 50, 2 slots of stalest-green slack.
-# Round-12 code changes staling registered rows: the formats.py lexer
-# rewrite has no previously-registered query (s11 takes its FIRST row
-# against the fixed code); llm/semdedup.py's cc_max_iterations change
-# lands BEFORE llm_semantic_dedup's first row (new this round);
-# sinks/snapshots.py gc changes have no registered query (pytest-only
-# by design); bench.py's probe touches no query plan.
-#
-# ROUND-12 CANDIDATE LEDGER CORRECTION (ADVICE/VERDICT_r12 item): late
-# round 12 authored EIGHT curation candidates, not the seven the
-# original note listed — the eighth, llm_dsir_logweights
-# (plans/queries_candidates.py, llm/corpus.py::dsir_logweights), was
-# authored last and missed both this note and SURVEY §8. Full list as
-# authored: llm_url_dedup_groups, llm_gopher_rules, llm_c4_line_filter,
-# llm_blocked_hosts, llm_source_rule_yield, llm_line_dedup,
-# llm_perplexity_buckets, llm_dsir_logweights.
-#
-# ROUND-13 PROMOTIONS AND MERGES. Five candidates promote into the
-# registry (highest crawl-curation user value first, per VERDICT_r12
-# item 2): llm_url_dedup_groups, llm_line_dedup, llm_gopher_rules,
-# llm_c4_line_filter, llm_blocked_hosts — each registered in
-# plans/queries_candidates.py (now in the all_queries() import list).
-# Five slots freed by five same-grain merges (add-one-retire-one):
-# - j1_bigbig_grid_intersect merged INTO j1_boolean_intersect (same
-#   event grain; the widened row answers through BOTH the broadcast
-#   and the grid strategy, in_zone / in_zone_grid — the
-#   llm_embedding_cosine_pairs precedent).
-# - j4_knn_closests_list + j4_grid_knn_bigbig merged into
-#   j4_knn_list_grid (same customer grain, closests / closests_grid
-#   through knn_join and grid_knn_join against the shared naive
-#   cross-join oracle).
-# - g7e_transform_polar merged INTO g7_transform_surface (same event
-#   grain; polar stereographic becomes the fifth CRS family on the
-#   wide row, px/py + modulo-360 roundtrip closure folded into rt_ok).
-# - llm_quantized_rerank_topk merged INTO llm_cosine_topk (same
-#   (query_id, rank) grain; the widened row joins exact brute-force
-#   top-k and two-stage int8-coarse/float-rerank top-k on rank).
-# - pivot_value_by_event_type merged INTO unpivot_roundtrip (the melt
-#   now KEEPS NULL cells, so every wide pivot cell — including the
-#   absent-combo NULL semantics the pivot row pinned — appears as one
-#   long row; oracle = users x types grid LEFT JOIN the direct sums).
-# Capacity: 144 - 5 merged-away + 5 promoted = 144, at the cap.
-# Deferred to round 14 with pre-computed budget (VERDICT_r12 item 4):
-# llm_source_rule_yield (its constituent rule batteries take their own
-# first rows this round; the aggregate-grain report row adds most
-# value once those are green), llm_perplexity_buckets (needs the
-# documented 1-row-BNLJ plan-audit allowlist entry when registered),
-# llm_dsir_logweights (ledger-corrected above). All three stay
-# hash-pinned every suite run by tests/test_candidates_oracle.py.
-# TWO more candidates were authored late round 13 (both hash-green at
-# sf0.001 + sf0.01 under the driver compare contract):
-# - llm_bloom_decontaminate (llm/bloom.py — Bloom-filter n-gram
-#   decontamination, the fixed-memory complement to
-#   llm_substring_decontaminate's exact broadcast semi-join;
-#   position-set oracle, packed-bits equivalence pinned by
-#   tests/test_bloom.py).
-# - llm_cms_token_freq (llm/sketch.py — Count-Min Sketch heavy
-#   hitters; exact-BIGINT build+estimate replay, never-undercount
-#   guarantee surfaced; tests/test_sketch.py).
-# EIGHT more candidates were authored in the round-13 continuation
-# (each hash-green at sf0.001 + sf0.01 + sf0.1 under the driver
-# compare contract):
-# - llm_host_quality_report (the capstone composition: plain PageRank
-#   + seeded TrustRank + per-host doc count/char mass in ONE
-#   host-grain report, all-integer columns; the oracle composes both
-#   rank chains via pagerank_fixed_ctes(prefix=). Subsumes the
-#   pagerank/trustrank rows if r14 prefers one slot for all three
-#   signals.)
-# - llm_fuzzy_title_pairs (llm/fuzzy.py — edit-distance similarity
-#   join / record linkage, Gravano et al. 2001: tiered
-#   q-gram/char/tiny blocking with an empirically-proven completeness
-#   guarantee (brute-force hypothesis sweep), deterministic block_cap
-#   for stop-gram hot blocks mirrored in SQL, exact JVM levenshtein
-#   inside blocks only; the oracle contract is scoped to normalized
-#   ASCII where Spark's char-level and DuckDB's byte-level levenshtein
-#   coincide — measured and documented; tests/test_fuzzy.py.)
-# - llm_exact_substring_spans (llm/selfdedup.py — ExactSubstr-style
-#   self-dedup, Lee et al. 2022: corpus-wide duplicated k-gram spans
-#   via combinable gram-count groupBy + left-semi join-back, per-doc
-#   gaps-and-islands merge, cut-every-occurrence clean text;
-#   full-report oracle, hypothesis-swept vs a pure-Python reference;
-#   tests/test_selfdedup.py).
-# - llm_host_pagerank (llm/graph.py — fixed-point integer PageRank
-#   over the host link graph, the Common Crawl-style crawl-quality
-#   prior; BIGINT floor-div arithmetic makes all 5 iterations
-#   bit-identical cross-engine, oracle = the same iterations unrolled
-#   as a CTE chain; tests/test_graph.py).
-# - llm_kmeans_fixed_cells (llm/kmeans.py — distributed Lloyd's
-#   k-means in fixed-point BIGINT: 2^16 exponent-shift quantization is
-#   EXACT in IEEE arithmetic, distances/updates are integer, so the
-#   iterative clustering the semdedup row pins via its codebook seam
-#   runs distributed with a bit-exact unrolled-CTE oracle;
-#   tests/test_kmeans.py. A natural r14 merge partner: widen
-#   llm_semantic_dedup to take its codebook FROM kmeans_fixed,
-#   retiring the one-hot pin while keeping the row's grain.)
-# - llm_host_trustrank (llm/graph.py — TrustRank, Gyongyi et al.
-#   2004: pagerank_fixed with a broadcast trusted-seed set receiving
-#   all initial mass and teleport; self-linked spam farms score
-#   exactly 0 without an inbound trusted link. Same oracle builder
-#   with seeds_sql; a natural r14 merge partner for llm_host_pagerank
-#   — same node grain, rank + trust_rank on one widened row.)
-# - s12_warc_wet_roundtrip (sources/warc_codec.py + sources/warc.py —
-#   from-spec WARC 1.0 codec, Content-Length-driven, + Arrow-batched
-#   reader; documents pack into WET conversion records executor-side
-#   and roundtrip exactly. The Common Crawl dump-ingestion step; the
-#   s11-XML/e5-shapefile verification shape.)
-# - llm_semdedup_kmeans_e2e (the composition above, ALREADY AUTHORED:
-#   SemDeDup with ZERO pins — kmeans_fixed BIGINT cells feed the
-#   registered row's proven cell-blocked-pairs/recursive-CTE/election
-#   oracle, so codebook training, assignment, pairing, components and
-#   election ALL run distributed and replay exactly. The r14 merge is
-#   now literally: register this row in llm_semantic_dedup's slot.)
-# - llm_word_lm_xent (llm/lm.py — CCNet's quality signal in its
-#   production SHAPE: word-bigram LM trained on a trusted reference
-#   slice, cross-entropy scored over the whole corpus; the
-#   train-on-target complement to the registered char-LM row. Exact
-#   BIGINT counts + DECIMAL(20,6) per-log quantum; carries the
-#   documented 1-row vocabulary-scalar BNLJ needing an allowlist
-#   entry at registration; tests/test_lm.py. A natural same-grain
-#   merge partner for llm_char_lm_entropy — both emit (doc_id,
-#   n_bigrams, entropy): one widened row fits both signals.)
-# - llm_host_hits (llm/graph.py::hits_fixed — HITS hubs/authorities,
-#   Kleinberg 1999: the third link signal; high hub + low authority =
-#   the directory/link-farm shape in-link counting misses.
-#   Quotient-normalized division-only BIGINT iterations — nothing is
-#   multiplied by scale, so the only overflow bound is degree*2*scale
-#   < 2^63; the oracle unrolls identical iterations with MATERIALIZED
-#   CTEs (plain CTEs re-inline and go exponential past k=3 — measured
-#   0.09/0.29/3.4s at k=1/2/3, 0.15s at k=5 materialized). Same node
-#   grain as the other graph rows — merges into
-#   llm_host_quality_report for one-slot promotion; tests/test_graph.)
-# - llm_token_budget_mix (llm/corpus.py::token_budget_sample — the
-#   'data mixture' step where the spec is TOKENS per domain, not doc
-#   counts: greedy per-source fill in seeded-hash order, crossing doc
-#   kept, unbudgeted domains dropped; one running-sum window, exact
-#   integer replay; the count-capped sibling of source_quota_sample.
-#   tests/test_token_budget.py.)
-# - llm_link_graph_rank (llm/html.py::extract_links +
-#   llm/urls.py::host_link_edges + pagerank: the pipeline-shaped graph
-#   row — the link graph is EXTRACTED from page HTML (quoted-href
-#   regex; absolute / protocol-relative / relative / non-hierarchical
-#   classification, all four exercised) instead of arriving as a side
-#   table. Zero-join extraction (one explode), full SQL replay of
-#   extraction + classification + unrolled rank. Strictly more
-#   pipeline coverage than llm_host_pagerank at the same host grain —
-#   its natural REPLACEMENT at promotion. tests/test_links.py.)
-# - llm_anchor_text_topk (the anchor-text index — "what the web says
-#   about a host": tag-aware extraction (extract_link_tags, struct
-#   mirror) -> followed links only (a nofollow decoy is planted and
-#   must not index) -> per-target-host anchor term top-5. Drives the
-#   tag-aware extraction through a FULL value-hash oracle; (host,
-#   term) grain, its own slot.)
-# - llm_robots_filter (llm/robots.py — RFC 9309 robots.txt compliance,
-#   the third URL-hygiene member: real mapInPandas parser runs
-#   in-plan over synthesized per-host robots TEXT, matching =
-#   host-equi-join + longest-match/allow-tie/default-allow window,
-#   oracle replays the decision over the construction-fixed rules.
-#   Natural zero-net promotion: WIDEN the registered llm_blocked_hosts
-#   row — same doc-grain URL-hygiene verdict, host_blocked +
-#   robots_allowed on one row. tests/test_robots.py.)
-# r14 handoff SIMULATED this round (the standing practice): pretend
-# the first 50 of the current order green as CORRECTNESS_r13 -> r14
-# due cohort = 45, zero never-green, demand with all NINETEEN
-# deferred promotions = 64 — FOURTEEN over DRIVER_CAP; but the
-# semdedup-e2e row
-# replaces llm_semantic_dedup (same grain, strictly stronger), the
-# kmeans row can merge into it the same way, and pagerank+trustrank
-# share a node grain (one widened row), so the effective new-slot
-# demand is ELEVEN (the report row subsumes pagerank+trustrank AND
-# can absorb hits — all four graph signals share the node grain and
-# fit ONE slot; word-lm widens the char-LM row — same (doc_id,
-# n_bigrams, entropy) grain — instead of taking its own; the budget
-# mixer takes a slot of its own, kept-doc grain; link_graph_rank
-# REPLACES llm_host_pagerank's slot — same host grain, strictly more
-# pipeline coverage — zero net; anchor-text top-k is a new (host,
-# term) grain, its own slot; robots_filter widens the registered
-# llm_blocked_hosts row — same doc grain — zero net). Promotion
-# rank if r14 prefers
-# slack or frees fewer slots (highest curation-user value first):
-# llm_semdedup_kmeans_e2e (replaces llm_semantic_dedup — zero net
-# slots), llm_source_rule_yield, llm_exact_substring_spans,
-# s12_warc_wet_roundtrip, llm_kmeans_fixed_cells,
-# llm_host_quality_report (subsumes llm_host_pagerank +
-# llm_host_trustrank + llm_host_hits — one slot for all four),
-# llm_link_graph_rank (zero net slots — replaces llm_host_pagerank),
-# llm_anchor_text_topk,
-# llm_robots_filter (zero net slots — widens llm_blocked_hosts),
-# llm_word_lm_xent (zero net slots if merged into
-# llm_char_lm_entropy's grain),
-# llm_token_budget_mix, llm_fuzzy_title_pairs,
-# llm_perplexity_buckets, llm_dsir_logweights,
-# llm_bloom_decontaminate, llm_cms_token_freq — defer the tail, never
-# the head. Each remaining promotion still needs a freed SLOT
-# (capacity is at 144), same add-one-retire-one price as this round.
-
-# ROUND-14 PROMOTIONS, MERGES AND WIDENINGS (executing VERDICT_r13
-# items 1-3 and the r13 ledger's pre-computed plan). Capacity closes
-# name-for-name: TEN names retired, TEN registered, 144 - 10 + 10 =
-# 144 (check: len(all_queries()) == 144).
-#
-# Retired (10):
-#   llm_semantic_dedup            (slot taken by llm_semdedup_kmeans_e2e)
-#   llm_minhash_lsh_pairs         (merged -> llm_hash_neardup_pairs)
-#   llm_simhash_pairs             (merged -> llm_hash_neardup_pairs)
-#   llm_reservoir_sample          (merged -> llm_sample_surface)
-#   llm_source_quota_sample       (merged -> llm_sample_surface)
-#   stream_tumbling_window_agg    (merged -> stream_window_agg_surface)
-#   stream_sliding_window_agg     (merged -> stream_window_agg_surface)
-#   asof_purchase_last_view       (merged -> asof_event_joins)
-#   asof_forward_next_click       (merged -> asof_event_joins)
-#   llm_char_lm_entropy           (widened -> llm_lm_entropy_surface)
-# New (10):
-#   llm_semdedup_kmeans_e2e    — SemDeDup ZERO-pin e2e: kmeans_fixed
-#     BIGINT cells through the PRODUCTION semantic_dedup(cell_col=)
-#     seam; retires the registry's last architectural pin (the one-hot
-#     codebook). VERDICT_r09's original #1, closed.
-#   llm_hash_neardup_pairs     — minhash-LSH est_jaccard FULL OUTER
-#     value-grain simhash hamming on the pair key; also drives the r14
-#     dedup.simhash_pairs -> phash.hamming_pairs kernel delegation
-#     (the standing duplicated-pigeonhole item, closed).
-#   llm_sample_surface         — doc-grain sampling surface: reservoir
-#     rank (NULL = not selected) + source-quota membership.
-#   stream_window_agg_surface  — tumbling (per event_type) + sliding
-#     (keyless, 'ALL') event-time windows union-tagged by kind.
-#   asof_event_joins           — backward AND forward as-of directions
-#     union-tagged by kind, each vs DuckDB's native ASOF LEFT JOIN.
-#   llm_host_quality_report    — the graph capstone, widened at
-#     registration with HITS hub/auth AND (late r14) 3-core
-#     membership: ALL FIVE link signals (PageRank, TrustRank, hub,
-#     authority, k-core) + per-host doc stats in one host-grain slot
-#     (subsumes the llm_host_pagerank / llm_host_trustrank /
-#     llm_host_hits candidates, now removed; kcore_fixed authored
-#     directly onto the row — llm/graph.py, MATERIALIZED-CTE oracle).
-#   s12_warc_wet_roundtrip     — WARC/WET from-spec ingestion (the
-#     Common Crawl dump front door; VERDICT_r13 item 3).
-#   llm_link_graph_rank        — pipeline-shaped graph row: HTML link
-#     extraction -> host edges -> fixed-point rank, full SQL replay.
-#   llm_source_rule_yield      — per-source per-rule yield report for
-#     both rule batteries (ledger promotion rank #2).
-#   llm_lm_entropy_surface     — char-bigram LM entropy (corpus-
-#     trained) + word-bigram LM cross-entropy (trusted-reference-
-#     trained, CCNet shape) at doc grain; absorbs the
-#     llm_word_lm_xent candidate zero-net. Carries the documented
-#     1-row vocabulary-scalar BNLJ (test_plan_audit.CROSS_JOIN_OK).
-# Zero-net widening of a kept name (changed, not new):
-#   llm_blocked_hosts          — + robots_allowed: the RFC 9309
-#     verdict over the robots candidate's 101-host/5-path synthesis
-#     (absorbs the llm_robots_filter candidate; its synthesis lives on
-#     as queries_candidates._robots_verdicts).
-#
-# SECOND WAVE (late round 14): llm_decontaminate_overlap (r13 green) +
-# llm_substring_decontaminate (r12 green) MERGE into
-# llm_decontamination_surface — same doc grain, the SAME candidate set
-# on both screens, each keeping its standalone contract; the freed
-# slot registers llm_exact_substring_spans (the candidate-queue head).
-# Capacity: 144 - 2 + 2 = 144.
-#
-# BUDGET (r14 window, DRIVER_CAP=50): due cohort = the 45 r11 greens
-# minus the NINE retired rows that were in it (minhash, simhash,
-# reservoir, quota, tumbling, sliding, both asof rows, char_lm) = 36;
-# + 2 changed (llm_blocked_hosts widened, r13 green; + the
-# continuation's approx_distinct_users widening absorbing the
-# llm_distinct_sketch_report candidate — zero net slots, +1 demand)
-# + 12 new first rows (10 wave-one + the 2 second-wave rows above)
-# = 50 = DRIVER_CAP exactly, zero slack. Candidate queue after this
-# round: 12 at queue-freeze, minus llm_exact_substring_spans
-# (registered in the second wave) = 11 (ledger order:
-# llm_kmeans_fixed_cells, llm_anchor_text_topk, llm_token_budget_mix,
-# llm_fuzzy_title_pairs, llm_perplexity_buckets, llm_dsir_logweights,
-# llm_bloom_decontaminate, llm_cms_token_freq; authored later in
-# round 14 and queued after llm_fuzzy_title_pairs, in order:
-# llm_pq_codes (product quantization, the ANN memory side) and
-# llm_bitext_margin_pairs (margin-criterion bitext mining) and
-# llm_sentence_stats (sentence-grain quality surface). The
-# CANDIDATES dict order in queries_candidates.py IS this rank.
-# TWO more candidates authored in the round-14 continuation (both
-# hash-green at sf0.001 + sf0.01 + sf0.1 under the driver compare
-# contract), queued at the tail:
-# - llm_distinct_sketch_report (llm/distinct.py — KMV bottom-k + HLL
-#   register distinct-count sketches, integer-exact estimates that
-#   hash-compare; same event_type grain as the registered
-#   approx_distinct_users predicate row = its natural zero-net merge
-#   partner at promotion). PROMOTED later in the continuation: the
-#   approx_distinct_users row widened in place to carry both
-#   from-scratch estimate values (zero net slots, +1 changed demand).
-# - llm_length_quantile_sketch (llm/quantiles.py — bounded-bin
-#   addition-mergeable histogram percentiles with the coverage
-#   guarantee as a column; the sketch counterpart of the registered
-#   exact llm_length_percentiles row).
-# - layout_zorder_pruning (operators/layout.py — Morton-key Z-order
-#   layout vs natural insert order measured through zone-map file
-#   pruning counts over six rectangle probes on orders; at sf0.1 the
-#   natural layout scans 64/64 files on every probe, Z-order 2-7/64.
-#   NOTE for registration: probe_scan_counts carries a documented
-#   broadcast crossJoin of two bounded per-FILE sides (probes x
-#   zones) — needs a test_plan_audit CROSS_JOIN_OK entry then.)
-# - llm_priority_sample_report (llm/wsample.py — Duffield-Lund-Thorup
-#   weighted priority sampling with the unbiased total estimator,
-#   all-integer; the weighted complement of llm_sample_surface and a
-#   natural same-family merge partner for it at promotion).
-# FOURTEEN more candidates authored in the second round-14
-# continuation (final queue at handoff: 28 — dict order in
-# queries_candidates.py is the promotion rank; every row hash-green
-# at 3 SFs and swept for accidental cartesians AND shuffle-layout
-# invariance by test_plan_audit / test_determinism candidate sweeps)
-# (each hash-green at sf0.001 + sf0.01 + sf0.1 under the driver
-# compare contract; llm_distinct_sketch_report left the queue by the
-# approx_distinct_users in-place widening):
-# - llm_host_communities (llm/graph.py::lpa_fixed — synchronous
-#   min-tie-break label propagation, the sixth link signal; natural
-#   zero-net partner: widen llm_host_quality_report, same node grain).
-# - llm_corpus_overlap_report (llm/distinct.py::kmv_set_ops —
-#   union/Jaccard/intersection estimates between corpus slices from
-#   bottom-k sketches alone; pair grain, own slot).
-# - llm_stride_interleave_order (llm/corpus.py::stride_interleave —
-#   Waldspurger-Weihl proportional-share write order; doc grain).
-# - corpus_version_diff (operators/cdc.py::snapshot_diff — the
-#   version-promotion churn report, one full-outer key join; doc
-#   grain, own slot).
-# - llm_vocab_coverage_report (llm/text.py::vocab_coverage+top_tokens
-#   — OOV ppm per lang vs the corpus's own top-256 vocabulary;
-#   TakeOrderedAndProject builder plan pinned).
-# - llm_readability_scores (llm/text.py::readability — Flesch/FK in
-#   exact integer milli-points; natural zero-net partner: widen
-#   llm_quality_filter_score, same doc grain).
-# - llm_curation_funnel (the SEQUENTIAL per-source survival funnel
-#   raw -> gopher -> c4 -> exact-dedup with token mass; oracle reuses
-#   GOPHER/C4 oracles verbatim — complements the INDEPENDENT yields of
-#   the registered llm_source_rule_yield; strong promotion-rank head
-#   alongside the sketch family).
-# - llm_packing_efficiency (llm/corpus.py::packing_efficiency — the
-#   padding-waste ledger, naive vs packed sequence counts, zero
-#   windows; measured 89.4% vs 14.0% waste at sf0.1/512).
-# - corpus_drift_psi (operators/quality.py::distribution_drift — PSI
-#   between corpus versions; the promotion gate's second report,
-#   rides the same synthetic v2 as corpus_version_diff).
-# - events_conversion_funnel + events_cohort_retention
-#   (operators/funnels.py — ordered-step funnel in one groupBy(user)
-#   pass and the weekly retention triangle; 20M-event sweeps 21.9s /
-#   20.9s local[16]).
-# - cms_join_size_report (llm/sketch.py::cms_inner_product — the
-#   join-planner question from two sketches; w sizing rule
-#   demonstrated by measurement, 37x at 2^12 -> 1.57x at 2^18).
-# - llm_novelty_scores (the meaning-level promotion-gate member:
-#   added vectors' exact NN in the standing corpus + novel verdict;
-#   IEEE dot-fold parity makes raw cos_sim hash-comparable).
-# - llm_length_outliers (operators/quality.py::robust_outliers —
-#   median/MAD screen, exact discrete medians, integer-crossmul
-#   threshold; the robust sibling of the z-score family).
-# Plus pytest-only (rows-only class): llm/exif.py EXIF parse + GPS
-# scrub (image PII; byte-structure parsing not SQL-expressible).
-#
-# r15 HANDOFF SIMULATED (second continuation, after the
-# approx_distinct_users widening): pretend the first 50 of the current
-# order green as CORRECTNESS_r14 -> r15 due cohort = 47, zero
-# never-green, so r15 churn headroom is THREE slots (changed + new
-# combined). The r14 window spent all 50 (36 due + 2 changed + 12 new),
-# which is why r15 runs tight; the 14 fresh r14 greens come due again
-# only at r16, which relaxes back to ~12 slots of headroom. r15
-# promotion plan that fits the 3 slots, highest value first:
-#   1. llm_length_quantile_sketch -> WIDEN llm_length_percentiles in
-#      place (same grain; the approx_distinct_users precedent) — 1
-#      changed slot, zero net registrations.
-#   2. llm_readability_scores -> WIDEN llm_quality_filter_score (same
-#      doc grain) — 1 changed slot.
-#   3. llm_curation_funnel -> REGISTER in llm_source_rule_yield's
-#      slot (retire-and-replace, zero net): the candidate was WIDENED
-#      late round 14 to a strict superset of the rule-yield row —
-#      same source grain, all per-rule counts + independent c4 keep +
-#      the sequential retention and token-mass columns; hash-green at
-#      3 SFs post-widening. One registration edit — 1 new slot.
-# Everything else (host_communities -> host_quality_report widening,
-# corpus_overlap, stride order, version diff, vocab coverage, the
-# kmeans/anchor/token-budget/fuzzy/pq/bitext/sentence/perplexity/
-# dsir/bloom/cms tail) stays queued for r16's wide window, each
-# hash-pinned every suite run by tests/test_candidates_oracle.py.
-
-# ROUND-15 PROMOTIONS (executing the r14 ledger's 3-slot plan above,
-# exactly as budgeted — actual r15 due cohort recomputed from the
-# artifacts: 47). Capacity closes name-for-name: ONE retired, ONE
-# registered, 144 - 1 + 1 = 144 (checked: len(all_queries()) == 144).
-#
-# 1. llm_length_percentiles WIDENED in place (zero net): + the
-#    histogram quantile sketch (llm/quantiles.py) pivoted to source
-#    grain — sk{50,90,99}_{lo,hi,exact,covers} next to the exact
-#    interpolated p25..p99; absorbs the llm_length_quantile_sketch
-#    candidate. r13 green -> +1 changed demand.
-# 2. llm_quality_filter_score WIDENED in place (zero net): + the
-#    Flesch/FK readability surface (r_* integer milli-points; absorbs
-#    the llm_readability_scores candidate, AFTER fixing the
-#    trim-vs-strip sentence-count bug — VERDICT_r14 item 1). r12
-#    green = already in the r15 due cohort, so NO extra demand.
-# 3. llm_source_rule_yield RETIRED; the widened funnel candidate
-#    REGISTERED in its slot as llm_source_rule_funnel (strict
-#    superset: all per-rule yields + sequential retention + token
-#    mass, same source grain). The r14 ledger called the candidate
-#    "llm_curation_funnel"; that registry NAME belongs to the round-5
-#    raw->dedup->len/lang funnel row (green, untouched), so the
-#    promotion registers under a non-colliding name. +1 new demand.
-#
-# LATE-ROUND ADDITION: t6_isotonic_value_fit converted from rows-only
-# to a FULL value-hash oracle — the r13 float-minimax rejection is
-# resolved by removing the float from BOTH engines (exact-integer
-# PAVA via operators/grouped.isotonic_fit_milli; the oracle replays
-# PAVA itself as a recursive CTE — confluence makes merge order
-# irrelevant; parity verified at 3 SFs). One fewer no-oracle row
-# (3 -> 2, both remaining are binary/DSP). +1 changed demand.
-#
-# BUDGET (r15 window, DRIVER_CAP=50): 47 due + 2 changed
-# (llm_length_percentiles, t6_isotonic_value_fit;
-# quality_filter_score dedupes into the due
-# cohort) + 1 new (llm_source_rule_funnel) = 50 = DRIVER_CAP, zero slack
-# slot. Candidate queue after this round: 26 (the three promoted rows
-# left it; the two r16 widenings are staged as COMBINED wide rows
-# replacing their narrow entries; llm_bpe_merges — distributed BPE
-# merge learning, llm/bpe.py, authored round 15 — queued at the tail;
-# dict order in queries_candidates.py is still the rank).
-#
-# r16 HANDOFF SIMULATED (round 15, re-run after the late t6
-# conversion joined the window): pretend the first 50 of the current
-# order green as CORRECTNESS_r15 -> last-green histogram
-# {r15: 50, r14: 48, r13: 46}, so the r16 due cohort is the 46
-# unrefreshed r13 greens and churn headroom is FOUR slots (NOT the
-# ~12 VERDICT_r14 hoped for — the 48-row r14 cohort comes due at r17,
-# which is the genuinely tight round: plan r16 so its swaps also
-# thin r17's due set). r16 plan, highest value first, closing
-# arithmetic name-for-name:
-#   1. WIDEN llm_host_quality_report in place with the LPA community
-#      columns (sixth link signal, same host grain; llm/graph.py::
-#      lpa_fixed) — 1 changed slot, zero net. The COMBINED row is
-#      pre-staged hash-green as candidate llm_host_quality_wide: the
-#      r16 edit swaps the registered fn/oracle for the staged pair.
-#   2. WIDEN llm_sample_surface in place with the weighted priority
-#      rank (Duffield-Lund-Thorup, same doc grain; llm/wsample.py) —
-#      1 changed slot, zero net. Pre-staged hash-green as candidate
-#      llm_sample_surface_wide, same pure-swap edit.
-#   3. events_conversion_funnel -> REGISTER, RETIRING
-#      funnel_view_click_purchase (the ordered-step generalization of
-#      the fixed view->click->purchase row; same events source, one
-#      groupBy(user) pass) — 1 new slot, zero net capacity.
-#   4. events_cohort_retention -> REGISTER, RETIRING
-#      cohort_daily_retention (the weekly retention triangle that
-#      subsumes the daily row's signal at report grain) — 1 new slot,
-#      zero net capacity.
-# Total: 46 due + 2 changed + 2 new = 50 = DRIVER_CAP, zero slack.
-# DEFERRED to r17's head by the re-simulated arithmetic (headroom
-# shrank 5 -> 4 when t6 joined the r15 window): layout_zorder_pruning
-# -> REGISTER, RETIRING spatial_zorder_code (the pruning measurement
-# exercises morton_key AND adds the zone-map scan-count value the
-# code row lacks) — the r17 window also retires spatial_zorder_code
-# from its due set, so the swap is self-funding there.
-# The promotion-gate family (corpus_version_diff + corpus_drift_psi +
-# llm_novelty_scores) heads r17 — each needs a freed slot; candidate
-# retirement partners to evaluate then: scd2_user_value_history vs
-# corpus_version_diff (both churn reports), stream_props_json_rollup
-# merge into stream_window_agg_surface (same stream source).
-
-# ROUND-16 PROMOTIONS (executing the r15 ledger's 4-slot plan above,
-# exactly as budgeted). Capacity closes name-for-name: TWO retired,
-# TWO registered, 144 - 2 + 2 = 144 (checked: len(all_queries())).
-#
-# 1. llm_host_quality_report WIDENED in place (zero net): the
-#    registered fn/oracle swapped for the r15-staged hash-green
-#    llm_host_quality_wide pair (+ LPA community + community_size —
-#    the SIXTH link signal, llm/graph.py::lpa_fixed; same host grain).
-#    r14 green -> +1 changed demand.
-# 2. llm_sample_surface WIDENED in place (zero net): + priority_rank,
-#    the DLT weighted per-language rank (llm/wsample.py; the
-#    r15-staged llm_sample_surface_wide pair, recomposed in
-#    queries_llm.py so the oracle builds from the base surface text
-#    directly). r14 green -> +1 changed demand.
-# 3. funnel_view_click_purchase RETIRED; events_conversion_funnel
-#    REGISTERED in its slot (operators/funnels.py — ordered-step
-#    generalization, one groupBy(user) pass). +1 new demand.
-# 4. cohort_daily_retention RETIRED; events_cohort_retention
-#    REGISTERED in its slot (the weekly retention triangle). +1 new
-#    demand.
-#
-# Also this round (VERDICT_r15 item 4): every row promoted in r15/r16
-# joins the bench headline set (headline=True on
-# llm_length_percentiles, llm_quality_filter_score,
-# llm_source_rule_funnel, llm_host_quality_report, llm_sample_surface,
-# events_conversion_funnel, events_cohort_retention) so promoted-row
-# regressions are visible the round they land.
-#
-# BUDGET (r16 window, DRIVER_CAP=50): due cohort recomputed from the
-# ACTUAL artifacts post-retirement = 46 (the unrefreshed r13-or-older
-# greens still registered; the r15 simulation's 46 counted the two
-# now-retired rows and missed two rows the real CORRECTNESS_r15
-# window didn't reach), + 2 changed (the widenings, both r14 green so
-# genuinely additive) + 2 new (funnel, retention) = 50 = DRIVER_CAP,
-# zero slack. Candidate queue after this round: 22 (the four promoted
-# entries left it).
-#
-# r17 HANDOFF SIMULATED (computed from the artifacts + a first-50
-# r16 pretend-green; last-green histogram comes out {r16: 50, r15:
-# 50, r14: 44}): the r17 due cohort is the 44 unrefreshed r14 greens
-# — the tight round the r15 ledger predicted — and the plan below
-# closes at 48/50 with TWO slack slots because three retirements come
-# OUT of that due set. r17 plan, highest value first:
-#   1. p_record_ops_surface REGISTERED, retiring the NINE one-line
-#      record-op rows p1/p2/p3/p4/p5/p6/p7/p9/p11 (staged hash-green
-#      this round — see the consolidation note in
-#      queries_candidates.py). The retirees are r15 greens, so the
-#      slot relief lands at r18's due cohort (not r17's); what r17
-#      buys is the permanent -9 on every future cohort.
-#   2. g_scalar_geometry_surface REGISTERED, retiring g2/g5/g6/g8
-#      (also r15 greens — same timing as item 1).
-#   3. The promotion-gate family REGISTERED: corpus_version_diff
-#      (retiring scd2_user_value_history — r14 green, IN r17's due
-#      set, so the retirement funds itself), corpus_drift_psi,
-#      llm_novelty_scores (funded by the stream_props_json_rollup
-#      merge into stream_window_agg_surface — PRE-STAGED hash-green
-#      this round as candidate stream_window_agg_surface_wide, so the
-#      r17 edit is a pure swap; the rollup is r14 green/due and the
-#      widened window row is ALSO due, so its changed slot dedupes).
-#   4. layout_zorder_pruning REGISTERED retiring spatial_zorder_code
-#      (r14 green, in the due set — self-funding).
-#   5. t6_isotonic_value_fit's oracle swapped to _ISO_ORACLE_NULLSAFE
-#      (queries_relational.py — the ADVICE_r16 null-safe user_id
-#      joins, staged + fixture-pinned this round in
-#      tests/test_round16_fixes.py; couldn't land in r16's zero-slack
-#      window). t6 is an r15 green -> +1 changed demand.
-#   6. llm_codec_throughput / llm_audio_spectral swapped to their
-#      KAT-pinned forms (queries_candidates.py
-#      llm_codec_throughput_pinned / llm_audio_spectral_pinned —
-#      hash-green at 3 SFs; VERDICT_r15 item 6). Both rows are r14
-#      greens = IN r17's due cohort, so the change dedupes into the
-#      due demand: the no-oracle set drops to ZERO for free there.
-# BUDGET (r17, simulated): 44 due - 3 retired-from-due (zorder, scd2,
-# props_json) + 1 changed (t6; window/codec/audio dedupe into due) +
-# 6 new (2 consolidation + 3 promotion-gate + zorder) = 48 of 50 —
-# the 2 slack slots can take the queue head (llm_pq_codes,
-# llm_anchor_text_topk) if the round has capacity partners, else the
-# computed stalest-green tail pre-pays r18. Registered count after:
-# 144 - 16 + 6 = 134 (cap 144; every future due cohort shrinks ~4
-# rows/round).
-
-# ROUND-17 PROMOTIONS (executing the pre-staged r17 ledger above,
-# exactly as budgeted; every piece was hash-green at 3 SFs before the
-# round began, so each item was a registration edit). Capacity:
-# 144 - 16 retired + 6 registered = 134 (checked: len(all_queries())).
-#
-# 1. p_record_ops_surface REGISTERED; p1_identifier_from_property,
-#    p2_generate_identifier_md5, p3_exclude_attributes,
-#    p4_filter_attributes, p5_filter_by_properties, p6_map_properties,
-#    p7_min_array_attribute, p9_drop_identifier,
-#    p11_accessibility_ratio RETIRED (all r15 greens — slot relief
-#    lands in the r18 due cohort; the permanent win is -9 on every
-#    future cohort).
-# 2. g_scalar_geometry_surface REGISTERED; g2_point_from_attributes,
-#    g5_force_2d, g6_simplify_zigzag, g8_subdivide_area RETIRED (r15
-#    greens, same timing as item 1).
-# 3. Promotion-gate family REGISTERED: corpus_version_diff (retiring
-#    scd2_user_value_history — r14 green, IN the due set, self-
-#    funding), corpus_drift_psi + llm_novelty_scores (funded by the
-#    stream_props_json_rollup merge: the registered
-#    stream_window_agg_surface swapped to the staged wide 3-leg form —
-#    'props' union leg — and the rollup row RETIRED; both r14
-#    green/due, so the changed slot dedupes).
-# 4. layout_zorder_pruning REGISTERED; spatial_zorder_code RETIRED
-#    (r14 green, in the due set — self-funding).
-# 5. t6_isotonic_value_fit's oracle swapped to _ISO_ORACLE_NULLSAFE
-#    (the ADVICE_r16 null-safe user_id joins; r15 green -> +1 changed
-#    demand).
-# 6. llm_codec_throughput / llm_audio_spectral swapped to their
-#    KAT-pinned forms (queries_llm.py — full value-hash oracles; both
-#    r14 greens = in the due cohort, change dedupes). The registry's
-#    no-oracle count is now ZERO.
-#
-# Also this round (VERDICT_r16 item 3): llm/graph.py grew the
-# small-graph driver-local fast path — pagerank/hits/kcore/lpa solve
-# on the driver below a distinct-edge threshold (bit-identical
-# exact-integer replay; parity + guard pinned in tests/test_graph.py)
-# — so llm_host_quality_report's ~10.2s of per-iteration Catalyst
-# setup drops to ~1.9s warm. host_quality is an r16 green -> +1
-# changed demand; llm_link_graph_rank shares the change but is due.
-#
-# Queue-drain widening (VERDICT_r16 item 2's capacity-partner route):
-# llm_link_graph_rank — due anyway — became a union-tagged surface
-# carrying the staged llm_anchor_text_topk as its 'anchor' leg (both
-# legs extract from the same synthesized pages; each keeps its oracle
-# verbatim). Zero net capacity, zero extra demand (the row is due),
-# and extract_link_tags now has a full driver-visible value-hash
-# oracle.
-#
-# BUDGET (r17 window, DRIVER_CAP=50, recomputed from the ACTUAL
-# artifacts post-retirement): due cohort = 41 (the 44 unrefreshed r14
-# greens minus the three retired-from-due) + 2 changed (t6,
-# llm_host_quality_report) + 6 new = 49 of 50; the last slot fills
-# from the computed stalest-green tail (the remaining queue head
-# waits for r18, where the due cohort is ~9 lighter). Candidate queue
-# after this round: 17 (ten left it: six registered, the stream-wide
-# merge absorbed, the two KAT pins absorbed, the anchor leg widened
-# into the link-graph row).
-#
-# r18 HANDOFF SIMULATED (computed from the artifacts + a first-50 r17
-# pretend-green; last-green histogram comes out {r17: 50, r16: 49,
-# r15: 35}): the r18 due cohort is the 35 unrefreshed r15 greens —
-# the consolidation dividend (the 13 p/g retirees were r15 greens
-# that would all sit in this cohort) makes r18 the loosest round in
-# ten rounds, ~15 slots of churn headroom. r18 plan, highest value
-# first (the PLANS.md round-17 consolidation scan has the grain and
-# oracle-preservation arguments):
-#   1. REGISTER s_document_roundtrip_surface (AUTHORED + STAGED
-#      hash-green at 3 SFs late r17 — queries_candidates.py, queue
-#      head), retiring s1_csv_document_roundtrip /
-#      s2_geojson_reader_roundtrip / s8_zip_reader_roundtrip /
-#      s9_jsonl_roundtrip (all r16 greens — retiring them pre-pays
-#      r19's due cohort): the four codec roundtrips RE-AUTHORED at
-#      one (kind, doc_id) documents grain (the p-surface re-author
-#      pattern — the old rows packed four different tables), each
-#      leg's roundtrip check a uniform SELECT over documents under a
-#      kind literal.
-#   2. REGISTER j2_overlay_surface (AUTHORED + STAGED hash-green at 3
-#      SFs late r17 — queries_candidates.py, queue slot 2), retiring
-#      j2_concave_overlay_percent + j2_dissolve_overlapping_layer +
-#      j2_intersection_percent_by_area (ALL THREE checked this round:
-#      identical (c_custkey, intersection_percent) output grain over
-#      the customer-rect x tile fixtures; all three are r15 greens IN
-#      the r18 due set — self-funding) into one union-tagged strategy
-#      row, each leg's oracle verbatim under a strategy literal.
-#   3. The 7 retirements fund 7 additions under the add-one-retire-one
-#      policy: the 2 surfaces + 5 queue-head promotions
-#      (llm_kmeans_fixed_cells, llm_token_budget_mix,
-#      llm_fuzzy_title_pairs, llm_pq_codes, llm_bitext_margin_pairs —
-#      CANDIDATES dict order is the rank, copy it from
-#      queries_candidates.py at execution, not from here).
-#      Queue 19 -> 12 (the handoff queue is 19 = the 17 standing rows
-#      + the 2 staged surfaces; both surfaces leave it at r18 item
-#      1-2, so staging trades +2 queue now for r18 being pure
-#      registration edits — the same trade r16 made for the p/g
-#      surfaces, and the retirements net the registry churn negative).
-# Budget (simulated): 35 due - 3 retired-from-due (the j2 triple) + 7
-# new = 39 of 50 — ~11 slots of stalest-green tail pre-pay r19.
-# Registered count after: 134 - 7 + 7 = 134 (cap 144).
-#
-# LATE-r17 ADDENDUM — r18 ledger item 2 EXECUTED EARLY (j2_overlay
-# _surface registered at r17, retiring the j2 triple now):
-# staging the surface exposed that the dissolve leg dominated (~19s
-# warm at sf0.1, all-boxy inputs), so intersection_percent_by_area
-# grew the rect fast path (codegen bbox-intersection rects + the
-# st_rect_union_area_agg sweep; dissolve row 19.4 -> 3.6s). That edit
-# changes the three registered j2 rows' code, and they are r15 greens
-# with no r17 slot — the freshness contract
-# (test_changed_code_list_covers_the_git_diff) rightly demands a
-# fresh row this round for changed code, and the window had no slack
-# for 3 more changed rows without going stale on r14-due rows. The
-# principled exit: the fully-verified staged surface (hash-green 3
-# SFs, plan-pinned, 1e-12 three-routing parity) registered NOW as
-# new-this-round, retiring the triple — changed code gets its driver
-# row via the NEW surface in the same window. REVISED r17 BUDGET:
-# 41 due + 2 changed + 7 new = 50 of 50, zero slack (the stalest-tail
-# slot funded the surface). Registered count: 134 - 3 + 1 = 132.
-# REVISED r18 plan: item 1 (s_document_roundtrip_surface, staged
-# hash-green) + item 3 shrinks to 4 queue-head promotions funded by
-# the 4 s-row retirements (llm_kmeans_fixed_cells,
-# llm_token_budget_mix, llm_fuzzy_title_pairs, llm_pq_codes;
-# llm_bitext_margin_pairs waits for r19). Budget: 32 due (35 r15
-# greens - the 3 retired j2 rows) + 5 new = 37 of 50, ~13 tail slots
-# pre-pay r19. Registered count after r18: 132 - 4 + 1 = 129.
-# PARKED FOR r18 (measured, reverted to keep this round's changed
-# set at zero extra demand): boolean_intersect's slow-leg NULL-mask +
-# st_intersects NULL fast path (j1 warm 2.8-3.1 -> 1.6-1.8s at
-# sf0.1; j1 is an r16 green due r19, so r18 must carry it in
-# _CHANGED_THIS_ROUND — it has the headroom).
-#
-# LATE-r17 QUEUE DRAIN (the anchor-leg capacity-partner route — three
-# DUE rows widened with same-grain candidates at ZERO rotation cost;
-# each re-verified hash-green at 3 SFs + oracle-parity after the
-# widening, every absorbed leg's oracle text carried verbatim):
-#   llm_decontamination_surface  + llm_bloom_decontaminate (3rd
-#     screen: Bloom n-gram membership; probe side narrowed to the
-#     shared candidate corpus so the legs keep ONE row set)
-#   llm_repetition_ratios        + llm_sentence_stats (4 sentence
-#     columns CHAINED on the same scan — zero joins added)
-#   llm_lm_entropy_surface       + llm_perplexity_buckets (the CCNet
-#     ppl_bucket tercile column; the entropy it buckets is the row's
-#     own char leg)
-# Queue after: 15 (s_document_roundtrip_surface + 14 llm rows). The
-# r18 promotion rank is unchanged (kmeans/token_budget/fuzzy/pq head
-# it); the r19 scan's pair-surface membership is unaffected.
-#
-# r19 CONSOLIDATION SCAN (pre-computed late r17; output grains
-# verified by running every named row at sf0.001 — the j2 lesson):
-#   1. llm_ann_topk_surface — llm_ivf_ann_topk + llm_lsh_ann_topk
-#      output the IDENTICAL (query_id, neighbor_id, cos_sim, rank)
-#      grain (checked r17); llm_cosine_topk is the same grain plus
-#      its rr_* rerank columns. Merge as a strategy-tagged union
-#      (brute/ivf/lsh — the j1/j2 "three physical paths, one
-#      operator" precedent), rr_* NULL off the brute leg (the
-#      s_document_roundtrip_surface gx/gy precedent), each leg's
-#      oracle verbatim under a strategy literal. Frees 2 slots.
-#   2. llm_pair_scores_surface — llm_embedding_cosine_pairs
-#      (id_a, id_b, cos_sim, in_lsh_block) + llm_ngram_jaccard_pairs
-#      (id_a, id_b, jaccard) + llm_winnow_pairs (doc_a, doc_b,
-#      n_shared) all emit one row per candidate doc pair (checked
-#      r17). Merge method-tagged with per-method score columns NULL
-#      off-leg; oracles verbatim under method literals. Frees 2
-#      slots. (llm_hash_neardup_pairs shares the pair grain and
-#      could be a 4th leg, but it is the single most expensive
-#      bench row (8s) — folding it in would make the surface the
-#      bench outlier; leave it standalone unless r19 needs the
-#      slot.)
-# Author + stage both at r18 AFTER executing the r18 registrations
-# (keeps the queue monotone: 12 standing + 2 staged = 14 at the r18
-# handoff, -> 9 at r19 when the surfaces + 4 retirees resolve).
-
 DRIVER_CAP = 50  # rows the correctness driver records per round
 
-# The round whose window the hand-maintained lists below budget for.
-# Once the driver writes CORRECTNESS_r{_ROTATION_ROUND}.json the lists
-# are SPENT: _compute_priority and test_rotation_freshness treat them
-# as empty (their names are either green at LATEST — obligation met —
-# or surface loudly as never-green stragglers at the head of the next
-# window). This keeps the suite green both mid-round and at the
-# post-artifact handoff state the next round inherits (VERDICT_r12
-# "What's wrong" #1: the r12 lists stayed active after the artifact
-# landed and over-subscribed the r13 demand computation).
 _ROTATION_ROUND = 18
 
-# BUDGET (r18 window, DRIVER_CAP=50, recomputed from the ACTUAL
-# artifacts at the r17 handoff): due cohort = 31 (the unrefreshed r15
-# greens) + 3 new (the r17 deferrals below take their first driver
-# rows) = 34 of 50 — 16 slots of slack for r18 changed-code entries
-# and the stalest-green tail. r18 is the second OPTIMIZATION round:
-# no registrations, no retirements (the build-phase consolidation
-# ledger above — s_document_roundtrip_surface, the r19 scan — waits
-# for the next BUILD round, as the optimization brief requires).
-
-# (2) operator code changed since the query's last green: entries are
-# added in the SAME commit as the edit they schedule (the git-diff
-# derivation test flags a forgotten one), each re-verified hash-green
-# at sf0.001/0.01/0.1 in-session before landing. Rows already in the
-# r18 due cohort absorb their edits at zero extra demand.
 _CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # r18 geometry kernel fusion (geo/kernels.py vectorized st_point +
-    # fused st_poly_prep/st_xy/specialized chain kernels;
-    # operators/spatial.py _rx/_lx reuse; fixture call sites): the
-    # affected rows not already due. Each hash-green at 3 SFs after
-    # the edit; the full 132/132 sf0.01 replica re-run on the same
-    # tree (pipeline_es_indexing is r15-green due — zero extra
-    # demand). Budget: 31 due + 3 new + 9 changed = 43 of 50.
     "j1_boolean_intersect",
     "j2_overlay_surface",
     "g_scalar_geometry_surface",
@@ -919,48 +116,17 @@ _CHANGED_THIS_ROUND: tuple[str, ...] = (
     "a4_sql_text_cluster",
     "g7_transform_surface",
     "pipeline_file_import",
-    # r18 bloom.py: plan-keyed packed-filter memo (VERDICT_r17 item 4),
-    # reserved-column guard + identifier escaping (ADVICE r17). Bits
-    # byte-identical; hash-green at 3 SFs. +1 demand (r17 green).
     "llm_decontamination_surface",
 )
 
-# (3) first driver row this round: the three rows deferred out of the
-# r17 window (oracles verified at 3 SFs in pytest since registration;
-# the driver has never recorded them — they head this window).
 _NEW_THIS_ROUND: tuple[str, ...] = (
     "corpus_drift_psi",
     "llm_novelty_scores",
     "layout_zorder_pruning",
 )
 
-# (4) overflow — heads the next round's queue. Empty: the r18 window
-# closes at 34-of-50 before changed-code entries, so nothing defers.
 _DEFERRED_TO_NEXT_ROUND: tuple[str, ...] = ()
 
-# (5) r17 OPTIMIZATION-PHASE carve-out, full-replica verified. The
-# optimization rounds change shared internals — the parquet loader's
-# footer-schema/relation memo, the tokenizer/readability SQL-text
-# builder forms — that sit in EVERY registered query's plan, so the
-# git-diff freshness derivation flags 131 of 132 queries from one
-# loader edit: a demand the 50-row rotation cannot absorb by design.
-# The contract's GOAL (no query rides unverified changed code) is met
-# by a STRONGER check than one driver row: after each optimization
-# commit the FULL registry was re-run against the DuckDB oracles at
-# sf0.01 (132/132 rows+schema+hash green via tests/check_driver.py —
-# the driver-compare replica; evidence + run log references in
-# OPTIMIZATION_r17.md), and every directly-edited row additionally at
-# sf0.001/0.01/0.1. test_changed_code_list_covers_the_git_diff
-# excludes the symbols below from its derivation seed and the queries
-# below from its missing set. Build rounds keep these EMPTY — the
-# seam exists for optimization phases only, and the next build
-# round's windows re-green everything through the normal rotation.
-# r17's entries are SPENT (CORRECTNESS_r17.json exists; the git-diff
-# derivation's base commit now postdates those edits) and were emptied
-# at the r18 handoff so a stale exemption cannot mask an r18 edit to
-# the same symbol. r18 optimization edits that touch cross-cutting
-# internals re-enter here ONLY with fresh full-replica evidence
-# recorded in OPTIMIZATION_r18.md.
 _OPT_FULL_REPLICA_SYMBOLS: tuple[str, ...] = ()
 _OPT_FULL_REPLICA_QUERIES: tuple[str, ...] = ()
 
@@ -999,16 +165,16 @@ def _active_lists(
 ) -> tuple[tuple[str, ...], tuple[str, ...], tuple[str, ...]]:
     """The hand-maintained changed/new/deferred lists, or empty tuples
     once the round they budget for has its artifact (lists are spent —
-    see the _ROTATION_ROUND note above)."""
+    see the module docstring)."""
     if latest >= _ROTATION_ROUND:
         return (), (), ()
     return _CHANGED_THIS_ROUND, _NEW_THIS_ROUND, _DEFERRED_TO_NEXT_ROUND
 
 
 def _compute_priority(registered: Iterable[str]) -> list[str]:
-    """The five-section ordering documented above, generated from the
-    artifacts so a bookkeeping slip can't silently age a query out of
-    the rotation (the round-6 failure mode)."""
+    """The five-section ordering of the module docstring, generated
+    from the artifacts so a bookkeeping slip can't silently age a query
+    out of the rotation."""
     names = list(registered)
     latest, last = _last_green_rounds()
     if not last:

@@ -49,6 +49,10 @@ def main() -> int:
 
     wanted = sys.argv[1:]
     qs = all_queries()
+    unknown = [n for n in wanted if n not in qs]
+    if unknown:
+        print(f"unknown query name(s): {' '.join(unknown)}", file=sys.stderr)
+        return 2
     if wanted:
         qs = {k: v for k, v in qs.items() if k in wanted}
 

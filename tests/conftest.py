@@ -85,6 +85,28 @@ def duck():
     con.close()
 
 
+def rows_per_layout(spark, build, partitions=(7,)) -> list[list[tuple]]:
+    """Collect ``build()`` under the session's shuffle partition count
+    and under each hostile count in ``partitions``: one sorted row list
+    per layout, so a layout-invariant operator returns equal lists."""
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    out = []
+    try:
+        for n in (default, *partitions):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            out.append(sorted((tuple(r) for r in build().collect()), key=repr))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+    return out
+
+
+def plans_cross_join(df) -> bool:
+    """True when the physical plan holds a cartesian or nested-loop join
+    (the accidental-cartesian signature test_plan_audit.py checks)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
+
+
 def _canon(v):
     """Canonicalize a cell for order-insensitive comparison."""
     if isinstance(v, float):

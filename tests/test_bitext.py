@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 from terra_bonobo_nodes_spark.llm import bitext
+from tests.conftest import plans_cross_join
 
 
 def _df(spark, rows, side):
@@ -74,6 +75,14 @@ def test_guard_refuses_unblocked_scale(spark, corpus):
     assert bitext.margin_knn_pairs(src, tgt, max_rows=None).count() >= 0
     with pytest.raises(ValueError, match="k must"):
         bitext.margin_knn_pairs(src, tgt, k=0)
+
+
+def test_empty_side_and_no_cross_join(spark, corpus):
+    src, tgt = corpus
+    empty = _df(spark, [], "src")
+    assert bitext.margin_knn_pairs(empty, tgt, max_rows=None).collect() == []
+    assert bitext.margin_knn_pairs(src, empty, max_rows=None).collect() == []
+    assert not plans_cross_join(bitext.margin_knn_pairs(src, tgt, max_rows=None))
 
 
 def test_single_block_equals_all_pairs(spark, corpus):

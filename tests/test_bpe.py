@@ -126,6 +126,25 @@ def test_sql_mirror_replays_the_learner(spark):
     assert [tuple(g) for g in got] == want
 
 
+def test_merges_layout_invariant_and_empty(spark):
+    """Each round's argmax tie boundary (count desc, pair asc) holds
+    under any shuffle partition count; an empty or all-NULL corpus
+    learns no merges."""
+    from tests.conftest import rows_per_layout
+
+    # many equal pair counts, so every round crosses a tie boundary
+    texts = ["ab cd ef gh", "ba dc fe hg", "abcd efgh", None, "cdab ghef"] * 6
+    docs = _docs(spark, texts).repartition(4)
+    schema = "merge_rank int, sym_a string, sym_b string, pair_count long"
+    base, hostile = rows_per_layout(
+        spark,
+        lambda: spark.createDataFrame(bpe.bpe_learn(docs, n_merges=3), schema),
+    )
+    assert len(base) == 3 and hostile == base
+    assert bpe.bpe_learn(_docs(spark, []), n_merges=3) == []
+    assert bpe.bpe_learn(_docs(spark, [None, ""]), n_merges=3) == []
+
+
 def test_apply_segments_with_learned_merges(spark):
     texts = ["banana bandana", "ban ban banana"]
     merges = bpe.bpe_learn(_docs(spark, texts), n_merges=3)

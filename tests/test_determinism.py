@@ -16,7 +16,7 @@ from __future__ import annotations
 import pytest
 
 from terra_bonobo_nodes_spark.plans.registry import all_queries
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, rows_per_layout
 
 # Queries chosen for sensitivity: float aggregation (trend, median,
 # entropy, tfidf), partial top-k merges (rerank, cosine), hash-window
@@ -62,53 +62,8 @@ SENSITIVE = [
 ]
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
 @pytest.mark.parametrize("name", SENSITIVE)
 def test_result_invariant_under_shuffle_layout(name, spark):
     q = all_queries()[name]
-    default = spark.conf.get("spark.sql.shuffle.partitions")
-    baseline = _rows(q.spark_fn(spark, SF_DIR))
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        hostile = _rows(q.spark_fn(spark, SF_DIR))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default)
-    assert baseline == hostile, f"{name} result moved with shuffle layout"
-
-
-# --- staged candidates: same contract before promotion ------------------------
-# The shuffle/ordering-sensitive continuation rows (window ranks, top-k
-# boundaries, iterative label propagation, float PSI terms, array
-# folds) must already be layout-invariant while staged — a
-# partitioning-dependent result found at promotion wastes a driver
-# slot (the candidate cartesian-audit rationale).
-
-CANDIDATE_SENSITIVE = [
-    # (the r17-promoted rows — drift psi, novelty, the two
-    # consolidation surfaces — moved to the registered SENSITIVE list)
-    "llm_corpus_overlap_report",   # bottom-k union re-rank
-    "llm_stride_interleave_order", # per-source hash-rank window
-    "llm_vocab_coverage_report",   # top-256 boundary + broadcast join
-    "llm_packing_efficiency",      # two-level combinable rollup
-    "cms_join_size_report",        # d*w cell joins + min-of-dots
-    "llm_length_outliers",         # two rank-window median passes
-    "llm_bpe_merges",              # per-round argmax tie boundaries
-]
-
-
-@pytest.mark.parametrize("name", CANDIDATE_SENSITIVE)
-def test_candidate_invariant_under_shuffle_layout(name, spark):
-    from terra_bonobo_nodes_spark.plans.queries_candidates import CANDIDATES
-
-    fn, _ = CANDIDATES[name]
-    default = spark.conf.get("spark.sql.shuffle.partitions")
-    baseline = _rows(fn(spark, SF_DIR))
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        hostile = _rows(fn(spark, SF_DIR))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default)
+    baseline, hostile = rows_per_layout(spark, lambda: q.spark_fn(spark, SF_DIR))
     assert baseline == hostile, f"{name} result moved with shuffle layout"

@@ -312,3 +312,19 @@ def test_set_ops_guards_and_degenerate(spark):
         D.kmv_set_ops(_two_group_df(spark, {"a": ["x"]}), k=1)
     one = D.kmv_sketch(_two_group_df(spark, {"a": ["x", "y"]}), k=8)
     assert D.kmv_set_ops(one, k=8).count() == 0  # no pairs from one group
+
+
+def test_set_ops_layout_invariant_and_empty(spark):
+    """The bottom-k union re-rank gives the same estimates under any
+    shuffle partition count; an empty frame has no pairs."""
+    from tests.conftest import rows_per_layout
+
+    sets = {g: [f"v{(i * m) % 400}" for i in range(150)]
+            for g, m in (("a", 3), ("b", 7), ("c", 11))}
+    df = _two_group_df(spark, sets).repartition(4)
+    base, hostile = rows_per_layout(
+        spark, lambda: D.kmv_set_ops(D.kmv_sketch(df, k=32), k=32)
+    )
+    assert len(base) == 3 and hostile == base
+    empty = D.kmv_sketch(_two_group_df(spark, {}), k=8)
+    assert D.kmv_set_ops(empty, k=8).collect() == []

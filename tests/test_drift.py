@@ -182,3 +182,22 @@ def test_robust_outliers_sql_mirror(spark, duck):
         ).fetchall()
     )
     assert got == want
+
+
+def test_robust_outliers_layout_invariant_and_empty(spark):
+    """Both rank-window median passes break ties by value, so the
+    verdicts do not move with the shuffle partition count; no cross
+    join; an empty frame gives an empty result."""
+    from terra_bonobo_nodes_spark.operators.quality import robust_outliers
+    from tests.conftest import plans_cross_join, rows_per_layout
+
+    rows = [(f"g{i % 4}", (i * 29) % 60 + (900 if i % 23 == 0 else 0))
+            for i in range(160)]
+    df = spark.createDataFrame(rows, "g string, v long").repartition(5)
+    base, hostile = rows_per_layout(
+        spark, lambda: robust_outliers(df, "v", "g", k_num=5)
+    )
+    assert len(base) == 160 and hostile == base
+    assert not plans_cross_join(robust_outliers(df, "v", "g"))
+    empty = spark.createDataFrame([], "g string, v long")
+    assert robust_outliers(empty, "v", "g").collect() == []

@@ -69,26 +69,3 @@ def test_query_tolerates_empty_tables(spark, empty_sf_dir, name):
     # row content is fine — only raising is a failure
     assert rows is not None
     assert len(df.columns) > 0
-
-
-# --- candidates get the same contract before they ever register -------------
-# The deferred rows in plans/queries_candidates.py will promote with a
-# registration edit; finding a degenerate-input crash AT promotion time
-# would burn a driver slot, so they pass the sweep while still staged.
-
-
-def _candidate_names() -> list[str]:
-    from terra_bonobo_nodes_spark.plans.queries_candidates import CANDIDATES
-
-    return sorted(CANDIDATES)
-
-
-@pytest.mark.parametrize("name", _candidate_names())
-def test_candidate_tolerates_empty_tables(spark, empty_sf_dir, name):
-    from terra_bonobo_nodes_spark.plans.queries_candidates import CANDIDATES
-
-    spark_fn, _ = CANDIDATES[name]
-    df = spark_fn(spark, empty_sf_dir)
-    rows = df.limit(5).collect()
-    assert rows is not None
-    assert len(df.columns) > 0

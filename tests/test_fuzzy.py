@@ -15,6 +15,7 @@ from terra_bonobo_nodes_spark.llm.fuzzy import (
     edit_distance_pairs,
     edit_distance_pairs_sql,
 )
+from tests.conftest import plans_cross_join
 
 
 def _lev(a: str, b: str) -> int:
@@ -118,6 +119,15 @@ def test_matches_duckdb_mirror(spark):
 def test_empty_frame(spark):
     df = spark.createDataFrame([], "doc_id long, text string")
     assert edit_distance_pairs(df).collect() == []
+
+
+def test_blocked_plan_has_no_cross_join(spark):
+    df = spark.createDataFrame(
+        [(i, f"{i // 3} rec{'' if i % 3 else ' x'}") for i in range(30)],
+        "doc_id long, text string",
+    )
+    # pairs come only from q-gram/char/tiny block equi-joins
+    assert not plans_cross_join(edit_distance_pairs(df, max_dist=2, block_cap=8))
 
 
 _word = st.text(alphabet="ab", min_size=0, max_size=6)

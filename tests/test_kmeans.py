@@ -12,6 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from terra_bonobo_nodes_spark.llm.kmeans import kmeans_fixed, kmeans_fixed_sql
+from tests.conftest import plans_cross_join
 
 
 def _run(spark, vecs, **kw):
@@ -132,6 +133,17 @@ def test_null_vectors_dropped(spark):
     )
     out = {r["vec_id"] for r in kmeans_fixed(df, k=2).collect()}
     assert out == {0, 2}
+
+
+def test_empty_input_and_no_cross_join(spark):
+    schema = "vec_id long, embedding array<float>"
+    assert kmeans_fixed(spark.createDataFrame([], schema), k=2).collect() == []
+    df = spark.createDataFrame(
+        [(i, [i / 4.0, 1.0 - i / 4.0]) for i in range(6)], schema
+    )
+    # the k-row centroid side joins on the assignment key, never as a
+    # nested loop over the corpus
+    assert not plans_cross_join(kmeans_fixed(df, k=2))
 
 
 _coord = st.integers(min_value=-8, max_value=8).map(lambda n: n / 8.0)

@@ -22,3 +22,23 @@ def test_query_matches_oracle(name, spark, duck):
         assert df.count() >= 0
         return
     assert_matches_oracle(df, duck, q.oracle)
+
+
+def test_check_driver_rejects_unknown_names():
+    """A misspelt or deleted name fails tests/check_driver.py, listing
+    the unknown names, instead of filtering to nothing and exiting 0.
+    The rejection comes before any Spark session: a launch under an
+    unusable master would fail first and never print the names."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    script = Path(__file__).with_name("check_driver.py")
+    env = dict(os.environ, PYSPARK_SUBMIT_ARGS="--master bogus://x pyspark-shell")
+    r = subprocess.run(
+        [sys.executable, str(script), "no_such_query", "j1_boolean_intersetc"],
+        capture_output=True, text=True, timeout=300, env=env,
+    )
+    assert r.returncode != 0
+    assert "no_such_query j1_boolean_intersetc" in r.stderr, r.stderr[-2000:]

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 
 from terra_bonobo_nodes_spark.plans.registry import all_queries
+from tests.conftest import plans_cross_join
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -46,7 +47,6 @@ CROSS_JOIN_OK: dict[str, str] = {
     ),
     "j3_intersection_geom_area": "same broadcast spatial-join shape",
     "g9_line_clip_length": "same broadcast spatial-join shape",
-    # round 17 promotions (moved from CANDIDATE_CROSS_JOIN_OK):
     "layout_zorder_pruning": (
         "probe_scan_counts is a broadcast product of two BOUNDED"
         " per-FILE sides (6 probes x 64 zone rows) — documented in"
@@ -62,12 +62,14 @@ CROSS_JOIN_OK: dict[str, str] = {
 
 @pytest.mark.parametrize("name", sorted(all_queries()))
 def test_no_accidental_cartesian(name, spark):
-    q = all_queries()[name]
-    plan = q.spark_fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-    has_cross = "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
+    df = all_queries()[name].spark_fn(spark, SF_DIR)
+    has_cross = plans_cross_join(df)
     if name in CROSS_JOIN_OK:
         return  # documented intentional cross join (bounded by broadcast)
-    assert not has_cross, f"{name} plans a cartesian join:\n{plan[:2000]}"
+    assert not has_cross, (
+        f"{name} plans a cartesian join:\n"
+        f"{df._jdf.queryExecution().executedPlan().toString()[:2000]}"
+    )
 
 
 def test_q3_topk_is_take_ordered_not_global_sort(spark):
@@ -302,49 +304,3 @@ def test_quality_filter_scoring_plans_no_python_eval(spark):
     assert "ArrowEvalPython" not in plan
     assert "MapInPandas" not in plan
     assert "*(" in plan  # whole-stage-codegen stage markers
-
-
-# --- staged candidates get the cartesian audit BEFORE promotion --------------
-# A staged row that plans an accidental cross join would only be caught
-# at registration (when the registered-query sweep above picks it up) —
-# after its driver slot is already budgeted. Audit the queue too, with
-# the same documented-intent allowlist discipline.
-
-CANDIDATE_CROSS_JOIN_OK: dict[str, str] = {
-    # (layout_zorder_pruning / corpus_drift_psi promoted round 17 —
-    # their entries moved to the registered CROSS_JOIN_OK above;
-    # j2_overlay_surface registered late r17, entry moved likewise)
-    "llm_corpus_overlap_report": (
-        "the group-pair frame is groups x groups under an inequality"
-        " (5 event types -> 10 pairs), broadcast by construction —"
-        " sketch rows, never raw data; needs CROSS_JOIN_OK at"
-        " registration"
-    ),
-    "llm_dsir_logweights": (
-        "single-row feature-total scalars broadcast into the"
-        " per-doc weight projection (llm/corpus.py::dsir_logweights)"
-    ),
-    "cms_join_size_report": (
-        "two 1-row frames crossJoined per measured join (the sketch"
-        " estimate scalar x the exact-truth scalar)"
-    ),
-    # (llm_perplexity_buckets absorbed late r17 into the registered
-    # llm_lm_entropy_surface — its 1-row bucket-cutoff scalar is noted
-    # on that row's CROSS_JOIN_OK entry above)
-}
-
-
-def _candidates():
-    from terra_bonobo_nodes_spark.plans.queries_candidates import CANDIDATES
-
-    return CANDIDATES
-
-
-@pytest.mark.parametrize("name", sorted(_candidates()))
-def test_candidate_no_accidental_cartesian(name, spark):
-    fn, _ = _candidates()[name]
-    plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-    has_cross = "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
-    if name in CANDIDATE_CROSS_JOIN_OK:
-        return
-    assert not has_cross, f"candidate {name} plans a cartesian join:\n{plan[:2000]}"

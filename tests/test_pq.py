@@ -142,6 +142,36 @@ def test_geometry_guards():
         pq.adc_table([0.0], [{0: [0, 0]}])
 
 
+def test_codes_match_duckdb_ctes_mirror(spark, tiny, tiny_books):
+    """pq_codes_ctes replays pq_train + encode in DuckDB: the same codes
+    and reconstruction error per vector."""
+    import duckdb
+
+    got = sorted(
+        tuple(r)
+        for r in tiny.select(
+            "vec_id",
+            *[
+                F.element_at(pq.pq_encode_expr("embedding", tiny_books), j + 1)
+                for j in range(2)
+            ],
+            pq.pq_reconstruction_error_expr("embedding", tiny_books),
+        ).collect()
+    )
+    values = ", ".join(
+        f"({r['vec_id']}, CAST({list(r['embedding'])} AS DOUBLE[]))"
+        for r in tiny.collect()
+    )
+    ctes = pq.pq_codes_ctes(
+        f"SELECT * FROM (VALUES {values}) AS v(vec_id, embedding)",
+        dim=4, m=2, k=2, iterations=3,
+    )
+    want = sorted(
+        duckdb.sql(f"WITH {ctes} SELECT * FROM pq_codes").fetchall()
+    )
+    assert got == want
+
+
 def test_train_rejects_empty_corpus(spark):
     df = spark.createDataFrame([], "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="empty input"):

@@ -285,3 +285,20 @@ def test_inner_product_sql_mirror(spark, duck):
         )
     ).fetchone()
     assert (got["est_join_size"], got["d_used"]) == want
+
+
+def test_inner_product_layout_invariant_and_empty_build(spark):
+    """The d*w cell joins and the min-of-dots give the same estimate
+    under any shuffle partition count; an empty token frame builds an
+    all-zero sketch."""
+    from terra_bonobo_nodes_spark.llm.sketch import cms_inner_product
+    from tests.conftest import rows_per_layout
+
+    a = _toks(spark, [f"u{(i * 7) % 40}" for i in range(300)]).repartition(3)
+    b = _toks(spark, [f"u{(i * 11) % 50}" for i in range(200)]).repartition(2)
+    base, hostile = rows_per_layout(
+        spark,
+        lambda: cms_inner_product(cms_cells(a, d=4, w=64), cms_cells(b, d=4, w=64)),
+    )
+    assert len(base) == 1 and hostile == base
+    assert cms_build(_toks(spark, []), d=2, w=64) == [[0] * 64, [0] * 64]

@@ -840,3 +840,29 @@ def test_join_reads_the_named_geometry_column(contract_frames, op):
     # a prepared layer column is used as-is too
     lay = lay.withColumn("tile", K.st_prepare("layer_geom"))
     assert _join_answer(op, rec, lay, layer_geom="tile") == {"a": _OVERLAP[op]}
+
+
+def test_j2_overlay_surface_plan_shape(spark):
+    """Three overlay strategies on one registered headline row: no
+    cartesian pair generation (envelope/grid candidates only), no
+    row-at-a-time Python, and both customer scans prune to their used
+    columns."""
+    import contextlib
+    import io
+
+    from terra_bonobo_nodes_spark.plans.queries_candidates import (
+        j2_overlay_surface,
+    )
+    from terra_bonobo_nodes_spark.plans.registry import all_queries
+    from tests.conftest import SF_DIR
+
+    assert all_queries()["j2_overlay_surface"].headline
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        j2_overlay_surface(spark, SF_DIR).explain("formatted")
+    plan = buf.getvalue()
+    assert "Cartesian" not in plan
+    assert "BatchEvalPython" not in plan
+    assert "struct<c_custkey:bigint,c_acctbal:double>" in plan
+    assert "struct<c_custkey:bigint>" in plan

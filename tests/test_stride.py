@@ -10,9 +10,11 @@ import hashlib
 import pytest
 
 from terra_bonobo_nodes_spark.llm.corpus import (
+    packing_efficiency,
     stride_interleave,
     stride_interleave_sql,
 )
+from tests.conftest import plans_cross_join, rows_per_layout
 
 _SEED = "tbns-stride-v1"
 _ONE = 1 << 20
@@ -100,6 +102,21 @@ def test_sql_mirror(spark, duck):
     assert got == want
 
 
+def test_invariant_under_shuffle_layout_and_empty_input(spark):
+    """The per-source hash-rank window gives the same keys under any
+    shuffle partition count, plans no cross join, and an empty frame
+    gives an empty result."""
+    rows = [(i, ["en", "fr", "de", "zh"][i % 4]) for i in range(80)]
+    df = _df(spark, rows).repartition(3)
+    weights = {"en": 4, "fr": 2, "de": 1}
+    base, hostile = rows_per_layout(
+        spark, lambda: stride_interleave(df, weights)
+    )
+    assert len(base) == 60 and hostile == base
+    assert not plans_cross_join(stride_interleave(df, weights))
+    assert stride_interleave(_df(spark, []), weights).collect() == []
+
+
 def test_weight_one_everywhere_is_hash_round_robin(spark):
     # equal weights -> strict round-robin across sources in key order
     rows = [(i, "x" if i % 2 else "y") for i in range(40)]
@@ -117,8 +134,6 @@ def test_weight_one_everywhere_is_hash_round_robin(spark):
 
 
 def test_packing_efficiency_hand_case(spark):
-    from terra_bonobo_nodes_spark.llm.corpus import packing_efficiency
-
     # one shard so packed math is checkable by hand
     rows = [(1, "a", 100), (2, "a", 100), (3, "a", 56), (4, "b", 300)]
     df = spark.createDataFrame(rows, "doc_id long, source string, n_tokens long")
@@ -136,8 +151,6 @@ def test_packing_efficiency_hand_case(spark):
 def test_packing_efficiency_null_tokens_and_guard(spark):
     import pytest as _pt
 
-    from terra_bonobo_nodes_spark.llm.corpus import packing_efficiency
-
     df = spark.createDataFrame(
         [(1, "a", None)], "doc_id long, source string, n_tokens long"
     )
@@ -149,10 +162,7 @@ def test_packing_efficiency_null_tokens_and_guard(spark):
 
 
 def test_packing_efficiency_sql_mirror(spark, duck):
-    from terra_bonobo_nodes_spark.llm.corpus import (
-        packing_efficiency,
-        packing_efficiency_sql,
-    )
+    from terra_bonobo_nodes_spark.llm.corpus import packing_efficiency_sql
 
     rows = [(i, ["web", "code"][i % 2], (i * 37) % 500) for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id long, source string, n_tokens long")
@@ -171,3 +181,19 @@ def test_packing_efficiency_sql_mirror(spark, duck):
         ).fetchall()
     )
     assert got == want
+
+
+def test_packing_efficiency_layout_invariant_and_empty(spark):
+    """The two-level (shard, then source) rollup is combinable: the same
+    ledger under any shuffle partition count, no cross join, and an
+    empty frame reports no sources."""
+    schema = "doc_id long, source string, n_tokens long"
+    rows = [(i, ["web", "code", "wiki"][i % 3], (i * 53) % 700) for i in range(150)]
+    df = spark.createDataFrame(rows, schema).repartition(4)
+    base, hostile = rows_per_layout(
+        spark, lambda: packing_efficiency(df, budget=256, n_shards=8)
+    )
+    assert len(base) == 3 and hostile == base
+    assert not plans_cross_join(packing_efficiency(df, budget=256))
+    empty = spark.createDataFrame([], schema)
+    assert packing_efficiency(empty, budget=256).collect() == []

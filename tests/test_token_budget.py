@@ -9,6 +9,7 @@ import hashlib
 import re
 
 from terra_bonobo_nodes_spark.llm.corpus import token_budget_sample
+from tests.conftest import plans_cross_join
 
 _SEED = "tbns-budget-v1"
 
@@ -113,3 +114,9 @@ def test_empty_and_null_text(spark):
     # review finding, pinned regardless of where the hash orders them)
     all_kept = _run(spark, rows, {"a": 1000})
     assert all_kept == {0: 0, 1: 0, 2: 3}
+
+
+def test_empty_corpus_and_no_cross_join(spark):
+    assert _run(spark, [], {"a": 10}) == {}
+    df = spark.createDataFrame(_ROWS, "doc_id long, source string, text string")
+    assert not plans_cross_join(token_budget_sample(df, {"web": 5}))

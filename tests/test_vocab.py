@@ -7,6 +7,41 @@ from __future__ import annotations
 import pytest
 
 from terra_bonobo_nodes_spark.llm.text import top_tokens, vocab_coverage
+from terra_bonobo_nodes_spark.plans.queries_llm import TOKS_SQL
+from tests.conftest import plans_cross_join, rows_per_layout
+
+# DuckDB reference for the per-language OOV report against the corpus's
+# own top-_VC_K vocabulary. The spine join is IS NOT DISTINCT FROM, not
+# USING(lang): Spark's groupBy collapses a NULL lang into a real group
+# with actual counts, while a plain equi-join would never match the NULL
+# spine row and report (0, 0, NULL).
+_VC_K = 256
+VOCAB_COVERAGE_ORACLE = f"""
+WITH _toks AS (
+  SELECT lang, unnest({TOKS_SQL}) AS tok
+  FROM (SELECT lang, coalesce(text, '') AS text FROM documents)
+),
+_vocab AS (
+  SELECT tok AS vtok FROM (
+    SELECT tok, count(*) AS n FROM _toks GROUP BY tok
+  ) ORDER BY n DESC, tok ASC LIMIT {_VC_K}
+),
+_grps AS (SELECT DISTINCT lang FROM documents),
+_agg AS (
+  SELECT t.lang,
+         count(*) AS n_tokens,
+         sum(CASE WHEN v.vtok IS NULL THEN 1 ELSE 0 END) AS n_oov
+  FROM _toks t LEFT JOIN _vocab v ON t.tok = v.vtok
+  GROUP BY t.lang
+)
+SELECT g.lang,
+       CAST(coalesce(a.n_tokens, 0) AS BIGINT) AS n_tokens,
+       CAST(coalesce(a.n_oov, 0) AS BIGINT) AS n_oov,
+       CAST(CASE WHEN coalesce(a.n_tokens, 0) > 0
+            THEN (a.n_oov * 1000000) // a.n_tokens END AS BIGINT)
+         AS oov_rate_ppm
+FROM _grps g LEFT JOIN _agg a ON g.lang IS NOT DISTINCT FROM a.lang
+"""
 
 
 def _docs(spark):
@@ -50,16 +85,10 @@ def test_vocab_duplicates_do_not_double_count(spark):
 
 
 def test_null_lang_group_matches_oracle(spark):
-    """ADVICE r15 (queries_candidates.py): a NULL lang collapses into a
-    real group on the Spark side (groupBy semantics); the oracle's
-    spine-join must use IS NOT DISTINCT FROM so it reports that group's
-    actual counts instead of (0, 0, NULL)."""
-    from terra_bonobo_nodes_spark.plans.queries_candidates import (
-        VOCAB_COVERAGE_ORACLE,
-        _VC_K,
-    )
-    from terra_bonobo_nodes_spark.llm.text import top_tokens, vocab_coverage
-
+    """A NULL lang collapses into a real group on the Spark side
+    (groupBy semantics); the reference's spine join must use IS NOT
+    DISTINCT FROM so it reports that group's actual counts instead of
+    (0, 0, NULL)."""
     rows = [
         (1, "en", "the cat sat"),
         (2, None, "dog dog dog barked"),
@@ -120,3 +149,26 @@ def test_coverage_plan_broadcasts_vocab(spark):
         .toString()
     )
     assert "BroadcastHashJoin" in plan
+
+
+def test_report_layout_invariant_and_empty(spark):
+    """The top-k boundary (count desc, token asc) and the coverage join
+    give the same report under any shuffle partition count, with no
+    cross join; an empty corpus gives an empty vocabulary and report."""
+    rows = [
+        (["en", "fr", None][i % 3], " ".join(f"w{(i * j) % 17}" for j in range(6)))
+        for i in range(90)
+    ]
+    docs = spark.createDataFrame(rows, "lang string, text string").repartition(3)
+
+    def report():
+        vocab = top_tokens(docs, 9).select("token")  # cuts through count ties
+        return vocab_coverage(docs, vocab, group_col="lang")
+
+    base, hostile = rows_per_layout(spark, report)
+    assert len(base) == 3 and hostile == base
+    assert not plans_cross_join(report())
+    empty = spark.createDataFrame([], "lang string, text string")
+    assert top_tokens(empty, 5).collect() == []
+    report = vocab_coverage(empty, top_tokens(empty, 5), group_col="lang")
+    assert report.collect() == []
