@@ -58,7 +58,7 @@ def knn_join(
     tie_breaker: str | None = None,
     distance_col: str = "distance",
     rank_col: str = "rank",
-    broadcast_right: bool = True,
+    cell: float | None = None,
 ) -> DataFrame:
     """``ClosestFeatures`` (``terra.py:282-331``): k nearest right-rows
     per left-row by euclidean distance, optional ``distance < max``,
@@ -71,90 +71,60 @@ def knn_join(
     (a right-side column) makes the top-k deterministic under equal
     distances.
 
-    Plan: (broadcast) cross/theta join -> window top-k per left id.
+    ``cell`` picks the candidate-pair plan; both end in the same
+    distance, ``max_distance`` filter and window top-k per left id.
     The reference issues one ordered+limited PostGIS query per record;
     here it is one distributed join plus one window.
 
-    Scale: with a dimension-sized right side (the common case —
-    "closest hospital/station"), broadcast makes this shuffle-free
-    except the window's hash partition on ``left_id``, which is
-    perfectly parallel. For two huge sides use ``grid_knn_join`` below:
-    an equi-join on grid cells instead of a cross product.
+    - ``cell=None``: broadcast cross join. With a dimension-sized right
+      side (the common case — "closest hospital/station") it is
+      shuffle-free except the window's hash partition on ``left_id``,
+      which is perfectly parallel.
+    - a finite ``cell > 0`` (requires ``max_distance``): the grid plan
+      for two huge sides. Both sides bucket into ``cell``-sized grid
+      cells, each left row replicates into the neighborhood of
+      ``reach = ceil(max_distance / cell)`` cells in every direction,
+      and the sides equi-join on the cell key instead of a cross
+      product. Any pair within ``max_distance`` is at most ``reach``
+      cells apart on each axis, so it shares a replicated cell and the
+      result equals the broadcast plan's. ``cell < max_distance``
+      trades a wider replication factor for finer partitions — useful
+      under skew.
+
+    Any other ``cell`` (zero, negative, NaN, infinite), or a ``cell``
+    without ``max_distance``, raises ValueError.
     """
     lx, ly = left_xy
     rx, ry = right_xy
-    if not broadcast_right and max_distance is None:
-        raise ValueError(
-            "knn_join with broadcast_right=False and no max_distance is a "
-            "full shuffled cartesian product; use grid_knn_join (big-big, "
-            "needs max_distance) or pass a max_distance to bound the join"
-        )
     r = right.filter(right_filter) if right_filter is not None else right
-    r = F.broadcast(r) if broadcast_right else r
+    if cell is None:
+        joined = left.crossJoin(F.broadcast(r))
+    else:
+        if not (math.isfinite(cell) and cell > 0):
+            raise ValueError(f"cell must be a finite number > 0, got {cell!r}")
+        if max_distance is None:
+            raise ValueError("knn_join with a cell needs max_distance")
+        c = float(cell)
+        reach = math.ceil(max_distance / c)
+        offsets = F.array(*[F.lit(i) for i in range(-reach, reach + 1)])
+        lcells = (
+            left.withColumn("_cx0", F.floor(F.col(lx) / c).cast("long"))
+            .withColumn("_cy0", F.floor(F.col(ly) / c).cast("long"))
+            .withColumn("_dx", F.explode(offsets))
+            .withColumn("_dy", F.explode(offsets))
+            .withColumn("_cx", F.col("_cx0") + F.col("_dx"))
+            .withColumn("_cy", F.col("_cy0") + F.col("_dy"))
+            .drop("_cx0", "_cy0", "_dx", "_dy")
+        )
+        rcells = r.withColumn("_cx", F.floor(F.col(rx) / c).cast("long")).withColumn(
+            "_cy", F.floor(F.col(ry) / c).cast("long")
+        )
+        joined = lcells.join(rcells, on=["_cx", "_cy"]).drop("_cx", "_cy")
     dx = F.col(lx) - F.col(rx)
     dy = F.col(ly) - F.col(ry)
-    joined = left.crossJoin(r).withColumn(distance_col, F.sqrt(dx * dx + dy * dy))
+    joined = joined.withColumn(distance_col, F.sqrt(dx * dx + dy * dy))
     if max_distance is not None:
         joined = joined.filter(F.col(distance_col) < F.lit(max_distance))
-    order = [F.col(distance_col).asc()]
-    if tie_breaker:
-        order.append(F.col(tie_breaker).asc())
-    w = Window.partitionBy(F.col(left_id)).orderBy(*order)
-    return joined.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
-    )
-
-
-def grid_knn_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_xy: tuple[str, str],
-    right_xy: tuple[str, str],
-    left_id: str,
-    k: int,
-    max_distance: float,
-    cell: float | None = None,
-    tie_breaker: str | None = None,
-    distance_col: str = "distance",
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Scale path for kNN when neither side broadcasts.
-
-    Buckets both sides into grid cells of size ``cell`` (default
-    ``max_distance``), replicates each left row into the neighborhood of
-    ``r = ceil(max_distance / cell)`` cells in every direction, and
-    equi-joins on the cell key — candidate pairs are then exact-filtered
-    by distance and top-k'd. Any pair within ``max_distance`` is at most
-    ``r`` cells apart on each axis, so it shares a replicated cell and
-    results equal the naive join; the shuffle is an equi-join on cell
-    keys instead of a cross product. (``cell < max_distance`` trades a
-    wider replication factor for finer partitions — useful under skew.)
-    """
-    c = float(cell or max_distance)
-    lx, ly = left_xy
-    rx, ry = right_xy
-    reach = math.ceil(max_distance / c)
-    offsets = F.array(*[F.lit(i) for i in range(-reach, reach + 1)])
-    lcells = (
-        left.withColumn("_cx0", F.floor(F.col(lx) / c).cast("long"))
-        .withColumn("_cy0", F.floor(F.col(ly) / c).cast("long"))
-        .withColumn("_dx", F.explode(offsets))
-        .withColumn("_dy", F.explode(offsets))
-        .withColumn("_cx", F.col("_cx0") + F.col("_dx"))
-        .withColumn("_cy", F.col("_cy0") + F.col("_dy"))
-        .drop("_cx0", "_cy0", "_dx", "_dy")
-    )
-    rcells = right.withColumn("_cx", F.floor(F.col(rx) / c).cast("long")).withColumn(
-        "_cy", F.floor(F.col(ry) / c).cast("long")
-    )
-    dx = F.col(lx) - F.col(rx)
-    dy = F.col(ly) - F.col(ry)
-    # explicit products (not pow): IEEE-deterministic and identical to
-    # the oracle's sqrt(dx*dx + dy*dy) expression shape
-    joined = lcells.join(rcells, on=["_cx", "_cy"], how="inner").withColumn(
-        distance_col, F.sqrt(dx * dx + dy * dy)
-    )
-    joined = joined.filter(F.col(distance_col) < F.lit(max_distance)).drop("_cx", "_cy")
     order = [F.col(distance_col).asc()]
     if tie_breaker:
         order.append(F.col(tie_breaker).asc())

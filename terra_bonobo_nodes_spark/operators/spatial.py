@@ -4,14 +4,16 @@ Re-expresses the reference's PostGIS-backed nodes (SURVEY.md §2.4, §2.6)
 as DataFrame plans over WKB columns + the ``geo.kernels`` pandas UDFs.
 
 Scale design: the Python kernel is only invoked on candidate pairs.
-Joins prefilter JVM-side wherever possible (broadcast of the
-dimension-sized layer, grid-cell equi-join for big-big); the kernel
-then does exact geometry per Arrow batch. This mirrors how PostGIS
-uses a GiST index scan before exact DE-9IM tests.
+The spatial joins prefilter JVM-side by one of two plans, chosen by
+their ``cell`` argument: ``cell=None`` broadcasts the dimension-sized
+layer; a positive ``cell`` runs the grid-cell equi-join for big-big
+inputs. The kernel then does exact geometry per Arrow batch. This
+mirrors how PostGIS uses a GiST index scan before exact DE-9IM tests.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
@@ -169,48 +171,36 @@ def layer_clusters_geo(
 # --- J1-J3: spatial joins ----------------------------------------------------
 
 
-def _bbox_overlap(a: Column | str, b: Column | str) -> Column:
+def _bbox_overlap(a: str, b: str) -> Column:
     """JVM-evaluated envelope-overlap predicate over st_bbox arrays —
     the GiST-index-scan analogue: the cross join's pairs are culled in
     whole-stage codegen and only envelope-overlapping candidates reach
     the Python geometry kernel. Null bboxes (empty/bad geometry) fail
     the predicate, matching intersects()=False for empties.
 
-    String args are SQL references ("_rx.bbox") and parse as ONE
+    The args are SQL references ("_rx.bbox") and parse as ONE
     expression — op-by-op Column building pays a py4j round-trip per
     operator (~0.3-5 ms each), and the spatial joins build this
-    predicate several times per operator call. Identical tree."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"element_at({a}, 1) <= element_at({b}, 3) AND "
-            f"element_at({b}, 1) <= element_at({a}, 3) AND "
-            f"element_at({a}, 2) <= element_at({b}, 4) AND "
-            f"element_at({b}, 2) <= element_at({a}, 4)"
-        )
-    return (
-        (F.element_at(a, 1) <= F.element_at(b, 3))
-        & (F.element_at(b, 1) <= F.element_at(a, 3))
-        & (F.element_at(a, 2) <= F.element_at(b, 4))
-        & (F.element_at(b, 2) <= F.element_at(a, 4))
+    predicate several times per operator call."""
+    return F.expr(
+        f"element_at({a}, 1) <= element_at({b}, 3) AND "
+        f"element_at({b}, 1) <= element_at({a}, 3) AND "
+        f"element_at({a}, 2) <= element_at({b}, 4) AND "
+        f"element_at({b}, 2) <= element_at({a}, 4)"
     )
 
 
 _LIVE_CACHES: list[DataFrame] = []
 
-# How many spatial-join record-side caches may be live at once. >1 so a
-# MULTI-LEG query (e.g. the overlay surface: three operator calls whose
-# branches all execute inside ONE final plan) keeps every leg's prep
-# cached — with the old evict-on-next-call rule only the LAST call's
-# cache survived to execution and the earlier legs re-ran their
-# geometry-kernel prep once per branch (r17 measurement: the pairwise
-# leg spent ~2.9s with zero Python pairs, all of it duplicated
-# ArrowEvalPython prep; the before-plan holds 56 ArrowEvalPython vs 6
-# cache scans). Still bounded (ADVICE r01): a long-lived session holds
-# at most the last few record sides, each a narrow (id, struct) frame.
-# 12, not 6, since r17 also caches the LAYER side: a three-leg surface
-# (j2_overlay) holds 3 record + 3 layer caches live inside ONE plan,
-# and j1's two strategies another 2+2 — 12 keeps every live cache of
-# the widest registered query resident while staying a hard bound.
+# How many spatial-join caches (record and layer sides) may be live at
+# once. >1 so a MULTI-LEG query, whose operator calls all execute inside
+# ONE final plan, keeps every leg's prep cached; evicting on the next
+# call would make the earlier legs re-run their geometry-kernel prep
+# once per branch. The widest registered queries are the overlay
+# surface (j2_overlay: 3 record + 3 layer caches) and j1 (a broadcast
+# and a grid call: 2 + 2), so 12 keeps every live cache resident while
+# staying a hard bound: a long-lived session holds at most the last few
+# sides, each a narrow (id, struct) frame.
 _MAX_LIVE_CACHES = 12
 
 
@@ -241,140 +231,32 @@ def release_spatial_caches() -> None:
     _LIVE_CACHES.clear()
 
 
-_KDB_STRIPS_X = 8  # leaves per axis for strategy="kdb" (64 total)
-_KDB_STRIPS_Y = 8
+def _candidates(rec: DataFrame, lay: DataFrame, cell: float | None) -> DataFrame:
+    """Candidate pairs of the prepared sides (``_rx`` on ``rec``, ``_lx``
+    on ``lay``) whose envelopes overlap. ``cell`` picks the plan:
 
-
-def _strip_index(bounds: Column, v: Column) -> Column:
-    """Index of ``v`` among sorted interior ``bounds``: the count of
-    boundaries <= v — a branch-free binary-search substitute that stays
-    inside whole-stage codegen for the small boundary arrays here."""
-    return F.aggregate(
-        bounds,
-        F.lit(0),
-        lambda acc, b: acc + F.when(b <= v, 1).otherwise(0),
-    )
-
-
-def _kdb_candidates(
-    rec: DataFrame,
-    lay: DataFrame,
-    rec_bbox: Column,
-    lay_bbox: Column,
-) -> DataFrame:
-    """The ADAPTIVE big-big path (Sedona-style sampled partitioning as
-    a two-level KDB tree): the uniform grid's weakness is skew — urban
-    clusters put most envelopes in a few hot cells no matter the cell
-    size. Here the record side's centroid QUANTILES choose the
-    partition boundaries instead: x splits into equal-count strips
-    (percentile_approx, one aggregate job), then each strip splits into
-    equal-count y leaves (one grouped aggregate job). Every leaf holds
-    ~|records|/64 envelopes BY CONSTRUCTION, whatever the spatial
-    distribution. The boundary table is a few hundred doubles —
-    collected by contract, shipped back as plan literals.
-
-    Both sides then explode into the leaves their envelope overlaps
-    (strip-index ranges via :func:`_strip_index` — no per-leaf join),
-    equi-join on (sx, sy), exact-filter envelope overlap, and
-    deduplicate with the same reporting-leaf rule as the grid path
-    (the leaf containing the min corner of the envelope intersection).
-
-    At 100 TB the two stat passes are the price of balance; cache the
-    record relation (the callers already do) so they do not rescan."""
-    rec_nn = rec.filter(rec_bbox.isNotNull())
-    cx = (F.element_at(rec_bbox, 1) + F.element_at(rec_bbox, 3)) / 2
-    cy = (F.element_at(rec_bbox, 2) + F.element_at(rec_bbox, 4)) / 2
-    px, py = _KDB_STRIPS_X, _KDB_STRIPS_Y
-    xq = [i / px for i in range(1, px)]
-    yq = [i / py for i in range(1, py)]
-    xb_row = rec_nn.select(
-        F.percentile_approx(cx, F.lit(xq).cast("array<double>")).alias("xb")
-    ).first()
-    # empty record side: x_bounds stays [], _strip_index degenerates to
-    # a single leaf and the join naturally produces zero candidates
-    x_bounds = list(xb_row["xb"] or [])
-    yb_rows = (
-        rec_nn.withColumn("_sx", _strip_index(F.lit(x_bounds).cast("array<double>"), cx))
-        .groupBy("_sx")
-        .agg(F.percentile_approx(cy, F.lit(yq).cast("array<double>")).alias("yb"))
-        .collect()
-    )
-    y_bounds = [[] for _ in range(px)]
-    for r in yb_rows:
-        y_bounds[int(r["_sx"])] = list(r["yb"] or [])
-    xb_lit = F.array(*[F.lit(float(v)) for v in x_bounds])
-    yb_lit = F.array(
-        *[F.array(*[F.lit(float(v)) for v in yb]) for yb in y_bounds]
-    )
-
-    def tiled(df: DataFrame, bbox: Column) -> DataFrame:
-        sx = F.explode(
-            F.sequence(
-                _strip_index(xb_lit, F.element_at(bbox, 1)),
-                _strip_index(xb_lit, F.element_at(bbox, 3)),
-            )
-        )
-        out = df.filter(bbox.isNotNull()).withColumn("_sx", sx)
-        yb = F.element_at(yb_lit, F.col("_sx") + 1)
-        sy = F.explode(
-            F.sequence(
-                _strip_index(yb, F.element_at(bbox, 2)),
-                _strip_index(yb, F.element_at(bbox, 4)),
-            )
-        )
-        return out.withColumn("_sy", sy)
-
-    joined = tiled(rec, rec_bbox).join(tiled(lay, lay_bbox), on=["_sx", "_sy"])
-    ix = _strip_index(
-        xb_lit, F.greatest(F.element_at(rec_bbox, 1), F.element_at(lay_bbox, 1))
-    )
-    iy = _strip_index(
-        F.element_at(yb_lit, ix + 1),
-        F.greatest(F.element_at(rec_bbox, 2), F.element_at(lay_bbox, 2)),
-    )
-    return (
-        joined.filter(_bbox_overlap(rec_bbox, lay_bbox))
-        .filter((F.col("_sx") == ix) & (F.col("_sy") == iy))
-        .drop("_sx", "_sy")
-    )
-
-
-def _candidates(
-    rec: DataFrame,
-    lay: DataFrame,
-    rec_bbox: str,
-    lay_bbox: str,
-    strategy: str,
-    cell: float | None,
-) -> DataFrame:
-    """Candidate pairs whose envelopes overlap, by one of three plans
-    (the bbox args are SQL references such as ``"_rx.bbox"``):
-
-    - ``broadcast``: broadcast the (dimension-sized) layer, cull with
-      the bbox predicate inside whole-stage codegen. The default, and
-      the right plan whenever the layer fits an executor.
-    - ``grid``: the big-big path (PostGIS GiST parity at any layer
-      size, ``terra.py:235``). Both sides explode their envelope into
-      the ``cell``-sized grid cells it covers, equi-join on the cell
-      key (a plain shuffle hash join — no broadcast, no nested-loop),
-      then exact-filter envelope overlap. A pair sharing several cells
-      is deduplicated for free by keeping it only in its *reporting
-      cell* — the cell containing the min corner of the two envelopes'
-      intersection — instead of a distinct. ``cell`` should be on the
-      order of a typical feature envelope: too small explodes
+    - ``None``: broadcast the (dimension-sized) layer, cull with the
+      bbox predicate inside whole-stage codegen. The right plan
+      whenever the layer fits an executor.
+    - a finite ``cell > 0``: the big-big grid plan (PostGIS GiST parity
+      at any layer size, ``terra.py:235``). Both sides explode their
+      envelope into the ``cell``-sized grid cells it covers, equi-join
+      on the cell key (a plain shuffle hash join — no broadcast, no
+      nested-loop), then exact-filter envelope overlap. A pair sharing
+      several cells is deduplicated for free by keeping it only in its
+      *reporting cell* — the cell containing the min corner of the two
+      envelopes' intersection — instead of a distinct. ``cell`` should
+      be on the order of a typical feature envelope: too small explodes
       replication, too large degrades to few fat partitions (AQE evens
       out the tail).
-    - ``kdb``: the quantile-partitioned big-big path
-      (:func:`_kdb_candidates`).
+
+    Any other ``cell`` (zero, negative, NaN, infinite) raises ValueError.
     """
-    if strategy == "broadcast":
+    rec_bbox, lay_bbox = "_rx.bbox", "_lx.bbox"
+    if cell is None:
         return rec.join(F.broadcast(lay), _bbox_overlap(rec_bbox, lay_bbox))
-    if strategy == "kdb":
-        return _kdb_candidates(rec, lay, F.expr(rec_bbox), F.expr(lay_bbox))
-    if strategy != "grid":
-        raise ValueError(f"unknown spatial join strategy {strategy!r}")
-    if cell is None or cell <= 0:
-        raise ValueError("grid strategy requires a positive cell size")
+    if not (math.isfinite(cell) and cell > 0):
+        raise ValueError(f"cell must be a finite number > 0, got {cell!r}")
     c = float(cell)
 
     # parsed SQL text throughout (the _bbox_overlap rationale): the
@@ -445,7 +327,6 @@ def boolean_intersect(
     record_geom: str = "geom",
     layer_geom: str = "layer_geom",
     id_col: str = IDENTIFIER,
-    strategy: str = "broadcast",
     cell: float | None = None,
 ) -> DataFrame:
     """``BooleanIntersect`` (``terra.py:214-242``): existential spatial
@@ -461,23 +342,22 @@ def boolean_intersect(
     column is prepared here by ``st_bbox_boxy``. Any other type raises
     ValueError.
 
-    Plan: broadcast the layer (dimension-sized) with its bboxes, cull
-    pairs with the JVM bbox predicate, then split: for boxy×boxy pairs
-    (points, grid tiles — see ``st_bbox_boxy``) the bbox overlap IS the
-    exact answer, evaluated wholly in whole-stage codegen; only curvy
-    pairs reach the Python intersects kernel. Both prepared sides are
-    persisted because both branches scan them (scoped: see
-    ``_scoped_persist`` and ``release_spatial_caches``). Rows with no
-    layer match keep flag=False via left join + coalesce.
-    ``strategy="grid"`` (with a ``cell`` size) switches to the big-big
-    cell-partitioned join — use it when the layer is too large to
-    broadcast."""
+    Plan: candidate pairs from the bbox join (``cell=None``: broadcast
+    the dimension-sized layer; a positive ``cell``: the big-big grid
+    equi-join, for a layer too large to broadcast — see
+    ``_candidates``), then split: for boxy×boxy pairs (points, grid
+    tiles — see ``st_bbox_boxy``) the bbox overlap IS the exact answer,
+    evaluated wholly in whole-stage codegen; only curvy pairs reach the
+    Python intersects kernel. Both prepared sides are persisted because
+    both branches scan them (scoped: see ``_scoped_persist`` and
+    ``release_spatial_caches``). Rows with no layer match keep
+    flag=False via left join + coalesce."""
     prep = _with_geom(K.st_bbox_boxy)
     rec = _scoped_persist(
         records.select(id_col, _prepared(records, record_geom, "_rx", prep))
     )
     lay = _scoped_persist(layer.select(_prepared(layer, layer_geom, "_lx", prep)))
-    cand = _candidates(rec, lay, "_rx.bbox", "_lx.bbox", strategy, cell)
+    cand = _candidates(rec, lay, cell)
     both_boxy = F.col("_rx.boxy") & F.col("_lx.boxy")
     fast = cand.filter(both_boxy).select(id_col)
     # NULL-mask the kernel args on the boxy pairs: Catalyst extracts the
@@ -512,7 +392,6 @@ def intersection_percent_by_area(
     layer_geom: str = "layer_geom",
     id_col: str = IDENTIFIER,
     dissolve: bool = False,
-    strategy: str = "broadcast",
     cell: float | None = None,
 ) -> DataFrame:
     """``IntersectionPercentByArea`` (``terra.py:245-279``): area of the
@@ -530,6 +409,10 @@ def intersection_percent_by_area(
     is used as-is, its ``geom`` field feeding the exact kernels; a WKB
     column is prepared here by ``st_prepare`` (records) or
     ``st_bbox_boxy`` (layer). Any other type raises ValueError.
+
+    ``cell`` picks the candidate-pair plan as in ``boolean_intersect``:
+    ``None`` broadcasts the layer, a positive cell size runs the grid
+    equi-join.
 
     When the record is boxy and EVERY layer feature is boxy (one
     lazily-computed 1-row broadcast scalar), the dissolve zones are
@@ -584,9 +467,7 @@ def intersection_percent_by_area(
         # boxy x all-boxy: zone rect in codegen, union area by sweep —
         # no WKB reaches Python on this path
         fast_zones = (
-            _candidates(
-                rec_fast, lay, "_rx.bbox", "_lx.bbox", strategy, cell
-            )
+            _candidates(rec_fast, lay, cell)
             .filter((zx1 > zx0) & (zy1 > zy0))
             .select(
                 id_col,
@@ -620,9 +501,7 @@ def intersection_percent_by_area(
         # aggregates in one agg — the constant-per-id denominator
         # joins back from rec below)
         slow_zones = (
-            _candidates(
-                rec_slow, lay, "_rx.bbox", "_lx.bbox", strategy, cell
-            )
+            _candidates(rec_slow, lay, cell)
             .filter(K.st_intersects(F.col("_rx.geom"), F.col("_lx.geom")))
             .withColumn(
                 "_zone", K.st_intersection(F.col("_rx.geom"), F.col("_lx.geom"))
@@ -636,9 +515,7 @@ def intersection_percent_by_area(
         joined = records.join(zones, on=id_col, how="left")
         ratio = F.coalesce(F.col("_zone_area") / F.col("_ra"), F.lit(0.0))
         return joined.withColumn(out, ratio).drop("_zone_area", "_ra")
-    cand = _candidates(
-        rec, lay, "_rx.bbox", "_lx.bbox", strategy, cell
-    )
+    cand = _candidates(rec, lay, cell)
     both_boxy = F.col("_rx.boxy") & F.col("_lx.boxy")
     # boxy×boxy overlap area is closed-form over the bboxes — evaluated
     # in whole-stage codegen, no Python; only curvy pairs hit the fused
@@ -685,7 +562,6 @@ def intersection_geom(
     geom_dest: str | None = None,
     id_col: str = IDENTIFIER,
     dissolve: bool = False,
-    strategy: str = "broadcast",
     cell: float | None = None,
 ) -> DataFrame:
     """``IntersectionGeom`` (``terra.py:523-557``): clip the record's
@@ -702,7 +578,11 @@ def intersection_geom(
     what ``st_prepare`` and ``st_poly_prep`` return). A prepared column
     is used as-is, its ``geom`` field feeding the exact kernels; a WKB
     column is prepared here by ``st_prepare`` (records) or ``st_bbox``
-    (layer). Any other type raises ValueError."""
+    (layer). Any other type raises ValueError.
+
+    ``cell`` picks the candidate-pair plan as in ``boolean_intersect``:
+    ``None`` broadcasts the layer, a positive cell size runs the grid
+    equi-join."""
     agg = K.st_union_agg if dissolve else K.st_collect_agg
     rec = records.select(id_col, _prepared(records, record_geom, "_rx", K.st_prepare))
     lay = layer.select(
@@ -714,7 +594,7 @@ def intersection_geom(
         )
     )
     zones = (
-        _candidates(rec, lay, "_rx.bbox", "_lx.bbox", strategy, cell)
+        _candidates(rec, lay, cell)
         .filter(K.st_intersects(F.col("_rx.geom"), F.col("_lx.geom")))
         .withColumn("_zone", K.st_intersection(F.col("_rx.geom"), F.col("_lx.geom")))
         .groupBy(id_col)

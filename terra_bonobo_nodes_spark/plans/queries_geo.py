@@ -442,21 +442,20 @@ def _j1_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     tags=("J1", "grid"),
 )
 def j1_boolean_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BooleanIntersect through BOTH physical strategies on one row
-    (r13 merge of the former j1_bigbig_grid_intersect, the
-    llm_embedding_cosine_pairs precedent): ``in_zone`` is the broadcast
-    dimension-join plan, ``in_zone_grid`` re-answers the same question
-    through ``strategy="grid"`` — both envelope sets tiled into 20°
-    cells, equi-joined on the cell key (no broadcast, no nested loop;
-    the plan a 100 TB layer needs). The shared oracle column is emitted
-    twice, so the row proves grid ≡ broadcast ≡ the SQL ground truth.
-    The two strategies CHAIN (boolean_intersect preserves its input
-    columns), so no extra join is paid to combine the flags."""
+    """BooleanIntersect through BOTH physical plans on one row:
+    ``in_zone`` is the broadcast dimension-join plan (``cell=None``),
+    ``in_zone_grid`` re-answers the same question with ``cell=20.0`` —
+    both envelope sets tiled into 20° cells, equi-joined on the cell
+    key (no broadcast, no nested loop; the plan a 100 TB layer needs).
+    The shared oracle column is emitted twice, so the row proves grid ≡
+    broadcast ≡ the SQL ground truth. The two calls CHAIN
+    (boolean_intersect preserves its input columns), so no extra join
+    is paid to combine the flags."""
     pts, layer = _j1_inputs(spark, sf_dir)
     prep = dict(record_geom="prep", layer_geom="layer_prep")
     flagged = boolean_intersect(pts, layer, out="in_zone", **prep)
     both = boolean_intersect(
-        flagged, layer, out="in_zone_grid", strategy="grid", cell=20.0, **prep
+        flagged, layer, out="in_zone_grid", cell=20.0, **prep
     )
     return both.select(
         F.col("identifier").alias("event_id"), "in_zone", "in_zone_grid"

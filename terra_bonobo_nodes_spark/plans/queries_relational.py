@@ -15,11 +15,7 @@ from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.operators.clustering import collect_and_sum, grid_cluster
 from terra_bonobo_nodes_spark.operators.hstore import parse_hstore_tags
-from terra_bonobo_nodes_spark.operators.joins import (
-    attribute_from_sql,
-    grid_knn_join,
-    knn_join,
-)
+from terra_bonobo_nodes_spark.operators.joins import attribute_from_sql, knn_join
 from terra_bonobo_nodes_spark.operators.stateful import (
     clean_older_than,
     running_lag_diff,
@@ -318,19 +314,17 @@ FROM ranked WHERE rank <= 3 GROUP BY c_custkey
 def j4_knn_list_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's OUTPUT shape for ClosestFeatures — the k nearest
     appended as an ordered LIST on the record (``closests``,
-    ``terra.py:326-328``) — computed through BOTH physical strategies
-    on one row (r13 merge of the former j4_knn_closests_list and
-    j4_grid_knn_bigbig, the llm_embedding_cosine_pairs precedent):
-    ``closests`` ranks via the broadcast ``knn_join``; ``closests_grid``
-    re-answers through ``grid_knn_join`` — both sides bucketed into
-    max_distance-sized cells, left replicated into its 3x3
-    neighborhood, equi-join on the cell key instead of a cross product
-    (the big-big scale path). The oracle is the NAIVE cross-join top-k
-    emitted twice, so the row proves the grid join loses no neighbors
-    within the radius AND that both strategies match the SQL ground
-    truth. collect_list is order-nondeterministic, so each list is
-    rebuilt deterministically: collect (rank, id) structs, sort_array,
-    project the ids."""
+    ``terra.py:326-328``) — computed through BOTH physical plans of
+    ``knn_join`` on one row: ``closests`` ranks via the broadcast plan
+    (``cell=None``); ``closests_grid`` re-answers with ``cell=25.0`` —
+    both sides bucketed into max_distance-sized cells, left replicated
+    into its 3x3 neighborhood, equi-join on the cell key instead of a
+    cross product (the big-big scale path). The oracle is the NAIVE
+    cross-join top-k emitted twice, so the row proves the grid join
+    loses no neighbors within the radius AND that both plans match the
+    SQL ground truth. collect_list is order-nondeterministic, so each
+    list is rebuilt deterministically: collect (rank, id) structs,
+    sort_array, project the ids."""
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         (F.col("c_acctbal") % 100.0).alias("cx"),
@@ -362,8 +356,8 @@ def j4_knn_list_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     bcast = as_list(knn_join(cust, supp, **kw), "closests")
-    grid = as_list(grid_knn_join(cust, supp, **kw), "closests_grid")
-    # both strategies emit exactly the customers with >=1 neighbor in
+    grid = as_list(knn_join(cust, supp, cell=25.0, **kw), "closests_grid")
+    # both plans emit exactly the customers with >=1 neighbor in
     # radius, so the combining join is key-equal inner
     return bcast.join(grid, on="c_custkey")
 

@@ -15,6 +15,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.llm import bpe
+from terra_bonobo_nodes_spark.plans.audit import executed_plan
 
 
 # --- independent reference (Sennrich learn_bpe semantics) ---------------------
@@ -184,3 +185,38 @@ def test_rejects_bad_n_merges(spark):
         bpe.bpe_learn(_docs(spark, ["x"]), n_merges=0)
     with pytest.raises(ValueError):
         bpe.bpe_merges_sql("SELECT 1", "text", 0, "x")
+
+
+# --- word table + Arrow-batched encode (word_frequencies, encode_words) -------
+
+
+def test_word_frequencies_is_distributed_topk(spark):
+    """The top-k cut is a distributed TakeOrderedAndProject, not a
+    global row_number window."""
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the dog sat")], "doc_id long, text string"
+    )
+    wf = bpe.word_frequencies(docs, max_words=3)
+    plan = executed_plan(wf)
+    assert "TakeOrderedAndProject" in plan
+    assert "Window" not in plan
+    rows = [(r.word, r.n) for r in wf.collect()]
+    # count desc, word asc (GPT-2-style pretokens keep the leading
+    # space, and " sat" sorts before "the") — deterministic truncation
+    assert rows == [(" sat", 2), ("the", 2), (" cat", 1)]
+
+
+def test_encode_words_string_id(spark):
+    """The mapInPandas schema derives the id type from the input, so
+    string doc ids survive the Arrow boundary."""
+    docs = spark.createDataFrame(
+        [("doc-a", "hug hug pun"), ("doc-b", "bun")], "doc_id string, text string"
+    )
+    merges = bpe.train_bpe([("hug", 10), ("pun", 12), ("bun", 4)], n_merges=4)
+    enc = bpe.encode_words(docs, merges)
+    assert dict(enc.dtypes)["doc_id"] == "string"
+    got = {r.doc_id: r.bpe_tokens for r in enc.collect()}
+    assert set(got) == {"doc-a", "doc-b"}
+    assert "".join(got["doc-a"]).startswith("hug")
+    counts = {r.doc_id: r.n_bpe_tokens for r in bpe.bpe_token_count(docs, merges).collect()}
+    assert counts["doc-a"] >= 3  # three words at least one token each

@@ -35,9 +35,9 @@ CROSS_JOIN_OK: dict[str, str] = {
     ),
     # bbox-culled broadcast spatial joins: the bbox-overlap predicate is a
     # range condition (not equi-joinable), the layer side is dimension-sized
-    # and broadcast — the GiST-index-scan shape. strategy="grid" is the
-    # big-big equi-join path, driver-proven inside the widened
-    # j1_boolean_intersect row (in_zone_grid column, r13 merge).
+    # and broadcast — the GiST-index-scan shape. A positive cell= selects
+    # the big-big grid equi-join instead, driver-proven by the
+    # in_zone_grid column of j1_boolean_intersect.
     "j1_boolean_intersect": "bbox-culled broadcast NLJ vs dimension layer",
     "j2_overlay_surface": (
         "same broadcast spatial-join shape on all three legs (the"
@@ -304,3 +304,21 @@ def test_quality_filter_scoring_plans_no_python_eval(spark):
     assert "ArrowEvalPython" not in plan
     assert "MapInPandas" not in plan
     assert "*(" in plan  # whole-stage-codegen stage markers
+
+
+def test_partition_skew_report_is_distributed_topk(spark):
+    """The hot-key ranking is a distributed TakeOrderedAndProject, not
+    a global window."""
+    from pyspark.sql import functions as F
+
+    from terra_bonobo_nodes_spark.operators.quality import partition_skew_report
+    from terra_bonobo_nodes_spark.plans.audit import executed_plan
+
+    df = spark.range(100).withColumn("k", (F.col("id") % 7).cast("string"))
+    rep = partition_skew_report(df, key_cols=["k"], top_n=3)
+    plan = executed_plan(rep)
+    assert "TakeOrderedAndProject" in plan
+    assert "Window" not in plan
+    hot = [r for r in rep.collect() if r.facet == "hot_key"]
+    # keys 0 and 1 have 15 rows, the rest 14 — ties break on the key
+    assert [(r.key, r.n_rows) for r in hot] == [("0", 15), ("1", 15), ("2", 14)]

@@ -305,3 +305,17 @@ def test_changed_code_list_covers_the_git_diff():
         "queries whose code changed since the last artifact are not "
         f"scheduled (add to _CHANGED_THIS_ROUND): {sorted(missing)}"
     )
+
+
+def test_registry_warns_without_artifacts(monkeypatch):
+    """With no CORRECTNESS artifacts the priority warns loudly instead
+    of silently degrading to an arbitrary order."""
+    import warnings
+
+    from terra_bonobo_nodes_spark.plans import registry
+
+    monkeypatch.setattr(registry, "_last_green_rounds", lambda: (0, {}))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        registry._compute_priority(["a", "b"])
+    assert any("CORRECTNESS" in str(w.message) for w in caught)

@@ -144,27 +144,6 @@ def test_intersection_percent_dissolve_overlapping_layer(spark):
     assert abs(exact.intersection_percent - 1.0) < 1e-9
 
 
-def test_knn_join_cartesian_footgun_raises(spark):
-    """broadcast_right=False with no max_distance is an unbounded
-    shuffled cartesian product — the guard must refuse it before any
-    job runs (operators/joins.py)."""
-    from terra_bonobo_nodes_spark.operators.joins import knn_join
-
-    left = spark.createDataFrame([(1, 0.0, 0.0)], ["lid", "lx", "ly"])
-    right = spark.createDataFrame([(2, 1.0, 1.0)], ["rid", "rx", "ry"])
-    with pytest.raises(ValueError, match="cartesian"):
-        knn_join(
-            left, right, ("lx", "ly"), ("rx", "ry"), "lid", k=1,
-            broadcast_right=False,
-        )
-    # bounded big-big form is accepted
-    out = knn_join(
-        left, right, ("lx", "ly"), ("rx", "ry"), "lid", k=1,
-        max_distance=10.0, broadcast_right=False,
-    )
-    assert out.count() == 1
-
-
 def _random_shapes(seed: int, n: int, kind: str):
     """Deterministic mixed rect/L-shape WKB geometries in [0,100)²;
     L-shapes force the curvy kernel path, rects stay boxy."""
@@ -192,10 +171,10 @@ def _random_shapes(seed: int, n: int, kind: str):
 
 @pytest.mark.parametrize("cell", [4.0, 40.0])
 def test_grid_strategy_equals_broadcast(spark, cell):
-    """strategy='grid' must give byte-identical answers to the broadcast
-    plan for J1/J2/J3 — including cell sizes smaller and larger than the
-    typical envelope (replication >1 cell vs everything in few cells).
-    The reporting-cell dedup is the logic under test."""
+    """The grid plan (``cell=``) must give byte-identical answers to the
+    broadcast plan for J1/J2/J3 — including cell sizes smaller and
+    larger than the typical envelope (replication >1 cell vs everything
+    in few cells). The reporting-cell dedup is the logic under test."""
     from terra_bonobo_nodes_spark.operators.spatial import (
         boolean_intersect,
         intersection_geom,
@@ -214,12 +193,12 @@ def test_grid_strategy_equals_broadcast(spark, cell):
         return {r["identifier"]: r[col] for r in df.select("identifier", col).collect()}
 
     b1 = by_id(boolean_intersect(recs, lay, out="hit"), "hit")
-    g1 = by_id(boolean_intersect(recs, lay, out="hit", strategy="grid", cell=cell), "hit")
+    g1 = by_id(boolean_intersect(recs, lay, out="hit", cell=cell), "hit")
     assert g1 == b1 and any(b1.values()) and not all(b1.values())
 
     b2 = by_id(intersection_percent_by_area(recs, lay), "intersection_percent")
     g2 = by_id(
-        intersection_percent_by_area(recs, lay, strategy="grid", cell=cell),
+        intersection_percent_by_area(recs, lay, cell=cell),
         "intersection_percent",
     )
     assert set(g2) == set(b2)
@@ -234,9 +213,100 @@ def test_grid_strategy_equals_broadcast(spark, cell):
         }
 
     b3 = area_col(intersection_geom(recs, lay))
-    g3 = area_col(intersection_geom(recs, lay, strategy="grid", cell=cell))
+    g3 = area_col(intersection_geom(recs, lay, cell=cell))
     assert set(g3) == set(b3)
     assert all(abs(g3[k] - b3[k]) < 1e-9 for k in b3)
+
+
+def test_cell_alone_plans_the_grid_join(spark):
+    """Default-profile coverage of the grid plan over boxy AND curvy
+    pairs: ``cell=`` alone selects it (a Generate over the cell
+    sequence, no broadcast nested-loop join) and every spatial join
+    answers as with ``cell=None``. The fixture has 11 envelope-
+    overlapping pairs, 8 of them curvy, one a bbox hit the exact kernel
+    rejects, and envelopes spanning several 4.0 cells."""
+    from terra_bonobo_nodes_spark.operators.spatial import (
+        boolean_intersect,
+        intersection_geom,
+        intersection_percent_by_area,
+    )
+    from terra_bonobo_nodes_spark.plans.audit import executed_plan
+
+    recs = spark.createDataFrame(
+        [(f"r{i}", g) for i, g in enumerate(_random_shapes(7, 36, "mixed"))],
+        "identifier string, geom binary",
+    )
+    lay = spark.createDataFrame(
+        [(g,) for g in _random_shapes(99, 12, "mixed")], "layer_geom binary"
+    )
+    ops = {
+        "boolean_intersect": lambda **kw: boolean_intersect(
+            recs, lay, out="v", **kw
+        ),
+        "intersection_percent_by_area": lambda **kw: intersection_percent_by_area(
+            recs, lay, out="v", **kw
+        ),
+        "intersection_geom": lambda **kw: intersection_geom(
+            recs, lay, **kw
+        ).withColumn("v", K.st_area(F.col("geom"))),
+    }
+    for name, op in ops.items():
+        grid = op(cell=4.0)
+        plan = executed_plan(grid)
+        assert "Generate" in plan and "sequence(" in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
+        got = {r["identifier"]: r["v"] for r in grid.collect()}
+        want = {r["identifier"]: r["v"] for r in op(cell=None).collect()}
+        assert got == pytest.approx(want, abs=1e-9), name
+        assert len(set(want.values())) > 1, name  # hits and misses both present
+
+
+@pytest.fixture(scope="module")
+def tiny_sides(spark):
+    rect = W.write_wkb(("Polygon", [[(0, 0), (1, 0), (1, 1), (0, 1), (0, 0)]]))
+    return {
+        "records": spark.createDataFrame([("r0", rect)], "identifier string, geom binary"),
+        "layer": spark.createDataFrame([(rect,)], "layer_geom binary"),
+        "left": spark.createDataFrame([(1, 0.0, 0.0)], ["lid", "lx", "ly"]),
+        "right": spark.createDataFrame([(2, 1.0, 1.0)], ["rid", "rx", "ry"]),
+    }
+
+
+def _join_with_cell(sides, op: str, **kw):
+    from terra_bonobo_nodes_spark.operators import spatial
+    from terra_bonobo_nodes_spark.operators.joins import knn_join
+
+    if op == "knn_join":
+        return knn_join(
+            sides["left"], sides["right"], ("lx", "ly"), ("rx", "ry"), "lid", k=1, **kw
+        )
+    extra = {"out": "v"} if op == "boolean_intersect" else {}
+    return getattr(spatial, op)(sides["records"], sides["layer"], **extra, **kw)
+
+
+@pytest.mark.parametrize("cell", [0.0, -1.0, float("nan"), float("inf")])
+@pytest.mark.parametrize(
+    "op",
+    ["boolean_intersect", "intersection_percent_by_area", "intersection_geom", "knn_join"],
+)
+def test_bad_cell_raises(tiny_sides, op, cell):
+    """A cell that is not finite and > 0 fails at plan construction
+    instead of returning no rows, falling back to another size, or
+    reaching the SQL text as ``nanD``/``infD``."""
+    kw = {"max_distance": 10.0} if op == "knn_join" else {}
+    with pytest.raises(ValueError, match="cell"):
+        _join_with_cell(tiny_sides, op, cell=cell, **kw)
+
+
+def test_knn_join_cell_needs_max_distance(tiny_sides):
+    """The kNN grid plan derives its neighborhood from max_distance, so
+    a cell without one raises; with one it answers like the broadcast
+    plan."""
+    with pytest.raises(ValueError, match="cell"):
+        _join_with_cell(tiny_sides, "knn_join", cell=5.0)
+    grid = _join_with_cell(tiny_sides, "knn_join", cell=5.0, max_distance=10.0)
+    bcast = _join_with_cell(tiny_sides, "knn_join", max_distance=10.0)
+    assert grid.collect() == bcast.collect() and grid.count() == 1
 
 
 # --- as-of join -------------------------------------------------------------
@@ -454,158 +524,6 @@ def test_zorder_layout_partitions_are_sorted_disjoint_ranges(spark):
     spans = sorted((p.lo, p.hi) for p in parts)
     for (l1, h1), (l2, h2) in zip(spans, spans[1:]):
         assert h1 <= l2, "range partitions overlap"  # disjoint min/max stats
-
-
-class TestKdbStrategy:
-    """strategy='kdb': quantile-partitioned big-big spatial join —
-    equal-count leaves by construction, so skew that starves the
-    uniform grid cannot starve this plan."""
-
-    def test_kdb_equals_broadcast_on_j1_fixture(self, spark):
-        from terra_bonobo_nodes_spark.operators.spatial import boolean_intersect
-        from terra_bonobo_nodes_spark.plans.queries_geo import _j1_inputs
-        from tests.conftest import SF_DIR
-
-        pts, layer = _j1_inputs(spark, SF_DIR)
-        prep = dict(record_geom="prep", layer_geom="layer_prep")
-        want = sorted(
-            tuple(r)
-            for r in boolean_intersect(pts, layer, out="z", **prep)
-            .select("identifier", "z")
-            .collect()
-        )
-        got = sorted(
-            tuple(r)
-            for r in boolean_intersect(pts, layer, out="z", strategy="kdb", **prep)
-            .select("identifier", "z")
-            .collect()
-        )
-        assert got == want and any(z for _, z in got)
-
-    def test_kdb_equals_broadcast_on_clustered_skew(self, spark):
-        """The case the uniform grid handles badly: 95% of features in
-        one tiny cluster. Results must still match broadcast exactly,
-        and the leaf assignment must spread the cluster (no leaf holds
-        more than ~3x the mean load) where a 10-unit grid puts ALL
-        clustered points into one cell."""
-        import numpy as np
-
-        from terra_bonobo_nodes_spark.geo import wkb as W
-        from terra_bonobo_nodes_spark.geo.kernels import st_bbox_boxy
-        from terra_bonobo_nodes_spark.operators.spatial import (
-            _kdb_candidates,
-            boolean_intersect,
-        )
-        from pyspark.sql import functions as F
-
-        rng = np.random.RandomState(3)
-        pts = []
-        for i in range(950):  # dense cluster in [0, 1)^2
-            pts.append((f"p{i}", W.write_wkb(("Point", (float(rng.rand()), float(rng.rand()))))))
-        for i in range(950, 1000):  # sparse tail over [0, 100)^2
-            pts.append(
-                (f"p{i}", W.write_wkb(("Point", (float(rng.rand() * 100), float(rng.rand() * 100)))))
-            )
-        rec = spark.createDataFrame(pts, "identifier string, geom binary")
-        ring = [(0.2, 0.2), (0.8, 0.2), (0.8, 0.8), (0.2, 0.8), (0.2, 0.2)]
-        layer = spark.createDataFrame(
-            [(W.write_wkb(("Polygon", [ring])),), (W.write_wkb(("Polygon", [[(50.0, 50.0), (60.0, 50.0), (60.0, 60.0), (50.0, 60.0), (50.0, 50.0)]])),)],
-            "layer_geom binary",
-        )
-        want = sorted(
-            tuple(r)
-            for r in boolean_intersect(rec, layer, out="z").select("identifier", "z").collect()
-        )
-        got = sorted(
-            tuple(r)
-            for r in boolean_intersect(rec, layer, out="z", strategy="kdb")
-            .select("identifier", "z")
-            .collect()
-        )
-        assert got == want and sum(1 for _, z in got if z) > 300
-
-        # leaf balance: tile the record side alone and count leaf loads
-        rx = rec.withColumn("_rx", st_bbox_boxy(F.col("geom")))
-        lx = layer.withColumn("_lx", st_bbox_boxy(F.col("layer_geom")))
-        cand = _kdb_candidates(rx, lx, F.col("_rx.bbox"), F.col("_lx.bbox"))
-        # indirect balance proof: the join completes with no single-leaf
-        # blowup — assert via the tiling itself
-        from terra_bonobo_nodes_spark.operators.spatial import _strip_index
-
-        cx = (F.element_at(F.col("_rx.bbox"), 1) + F.element_at(F.col("_rx.bbox"), 3)) / 2
-        # recompute x strips the way the strategy does and check spread
-        xq = [i / 8 for i in range(1, 8)]
-        xb = rx.select(
-            F.percentile_approx(cx, F.lit(xq).cast("array<double>")).alias("b")
-        ).first()["b"]
-        loads = (
-            rx.withColumn("_s", _strip_index(F.array(*[F.lit(float(v)) for v in xb]), cx))
-            .groupBy("_s")
-            .count()
-            .collect()
-        )
-        counts = [r["count"] for r in loads]
-        assert max(counts) <= 3 * (sum(counts) / len(counts)), counts
-        assert cand.count() > 0
-
-    def test_kdb_empty_record_side(self, spark):
-        from terra_bonobo_nodes_spark.operators.spatial import boolean_intersect
-        from terra_bonobo_nodes_spark.plans.queries_geo import _j1_inputs
-        from tests.conftest import SF_DIR
-
-        pts, layer = _j1_inputs(spark, SF_DIR)
-        empty = pts.limit(0)
-        out = boolean_intersect(
-            empty, layer, out="z", strategy="kdb",
-            record_geom="prep", layer_geom="layer_prep",
-        )
-        assert out.count() == 0
-
-    def test_kdb_equals_broadcast_on_j2_and_j3(self, spark):
-        """The strategy threads through every spatial join operator:
-        intersection percent and intersection geometry must also be
-        plan-independent."""
-        from terra_bonobo_nodes_spark.operators.spatial import (
-            intersection_geom,
-            intersection_percent_by_area,
-        )
-        from terra_bonobo_nodes_spark.plans.queries_geo import (
-            _customer_rects,
-            _tile_layer,
-        )
-        from tests.conftest import SF_DIR
-
-        from terra_bonobo_nodes_spark.geo import kernels as K
-        from pyspark.sql import functions as F
-
-        rec, lay = _customer_rects(spark, SF_DIR), _tile_layer(spark)
-        prep = dict(record_geom="prep", layer_geom="layer_prep")
-        # percent-by-area: scalar outputs compare directly
-        base = intersection_percent_by_area(rec, lay, **prep)
-        want = sorted(
-            (r[0], round(r[1], 6))
-            for r in base.select("identifier", "intersection_percent").collect()
-        )
-        got = sorted(
-            (r[0], round(r[1], 6))
-            for r in intersection_percent_by_area(rec, lay, strategy="kdb", **prep)
-            .select("identifier", "intersection_percent")
-            .collect()
-        )
-        assert got == want and len(got) > 0
-        # intersection geometry: the SET of pieces is plan-independent
-        # but multipart ordering is not — compare via area, not raw WKB
-        def areas(df):  # geom_dest=None replaces the record_geom column
-            return sorted(
-                (r[0], round(r[1] or 0.0, 6))
-                for r in df.select(
-                    "identifier", K.st_area(F.col("prep")).alias("a")
-                ).collect()
-            )
-
-        g_want = areas(intersection_geom(rec, lay, **prep))
-        g_got = areas(intersection_geom(rec, lay, strategy="kdb", **prep))
-        assert g_got == g_want and any(a > 0 for _, a in g_got)
 
 
 # --- dissolve rect fast path (late r17) --------------------------------------
