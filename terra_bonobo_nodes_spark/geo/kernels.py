@@ -688,25 +688,14 @@ def _st_union_area_agg(g: pd.Series) -> float:
 
 
 @pandas_udf(DoubleType())
-def _st_rect_union_area_agg(
-    x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series
-) -> float:
-    """GROUPED_AGG: union area of axis-aligned rects given as four
-    coordinate columns — the no-WKB fast lane for dissolve over boxy
-    inputs (the clipped zones never leave the JVM as geometries; only
-    4 doubles per pair cross into Arrow)."""
-    return ops.rect_union_area(x0.values, y0.values, x1.values, y1.values)
-
-
-@pandas_udf(DoubleType())
 def _st_rect_union_area_lists(
     x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series
 ) -> pd.Series:
-    """SCALAR twin of :func:`_st_rect_union_area_agg` over four ARRAY
-    columns (one row per group, built by JVM ``collect_list``): the
-    same sweep kernel per row, but one Python invocation per Arrow
-    batch instead of one per GROUP — r17 measurement at sf0.1 (15k
-    groups, ~450k rects): 4.6s -> 2.6s for the identical result. The
+    """SCALAR union area of axis-aligned rects given as four ARRAY
+    coordinate columns (one row per group, built by JVM
+    ``collect_list``) — the no-WKB fast lane for dissolve over boxy
+    inputs: only 4 doubles per rect cross into Arrow, and there is one
+    Python invocation per Arrow batch rather than one per group. The
     sweep sorts its input internally, so the arbitrary collect_list
     order cannot change the answer."""
     return pd.Series(
@@ -895,15 +884,9 @@ def st_union_area_agg(g) -> Column:
     return _st_union_area_agg(_col(g))
 
 
-def st_rect_union_area_agg(x0, y0, x1, y1) -> Column:
-    """Union area of the group's axis-aligned rects (4 coord cols)."""
-    return _st_rect_union_area_agg(_col(x0), _col(y0), _col(x1), _col(y1))
-
-
 def st_rect_union_area_lists(x0, y0, x1, y1) -> Column:
-    """Union area of one row's rect set given as 4 ARRAY columns —
-    the batched (one-Python-call-per-Arrow-batch) form of
-    :func:`st_rect_union_area_agg`; pair with JVM ``collect_list``."""
+    """Union area of one row's rect set given as 4 ARRAY columns, one
+    Python call per Arrow batch; pair with JVM ``collect_list``."""
     return _st_rect_union_area_lists(_col(x0), _col(y0), _col(x1), _col(y1))
 
 
@@ -948,7 +931,6 @@ _SQL_FUNCTIONS = {
     "ST_Collect_Agg": _st_collect_agg,
     "ST_Union_Agg": _st_union_agg,
     "ST_Union_Area_Agg": _st_union_area_agg,
-    "ST_Rect_Union_Area_Agg": _st_rect_union_area_agg,
 }
 
 

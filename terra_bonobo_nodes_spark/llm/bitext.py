@@ -32,14 +32,10 @@ the candidate set, exactly how production LASER mining shards.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.llm import similarity
-
-
-def _cos(va: Column, na: Column, vb: Column, nb: Column) -> Column:
-    return similarity.dot_exact(va, vb) / (na * nb)
 
 
 def margin_knn_pairs(
@@ -75,10 +71,10 @@ def margin_knn_pairs(
         a_cols.append(F.col(block_col).alias("_blk"))
         b_cols.append(F.col(block_col).alias("_blk"))
     a = src.where(F.col(vec_col).isNotNull()).select(*a_cols).withColumn(
-        "_na", similarity.norm(F.col("_va"))
+        "_na", similarity.norm("_va")
     )
     b = tgt.where(F.col(vec_col).isNotNull()).select(*b_cols).withColumn(
-        "_nb", similarity.norm(F.col("_vb"))
+        "_nb", similarity.norm("_vb")
     )
     if block_col is None and max_rows is not None:
         # guard the POST-filter frames (review finding: counting raw
@@ -98,9 +94,9 @@ def margin_knn_pairs(
     scored = cand.select(
         "src_id",
         "tgt_id",
-        _cos(F.col("_va"), F.col("_na"), F.col("_vb"), F.col("_nb")).alias(
-            "cos_sim"
-        ),
+        (
+            similarity.dot_exact("_va", "_vb") / (F.col("_na") * F.col("_nb"))
+        ).alias("cos_sim"),
     )
     w_src = Window.partitionBy("src_id").orderBy(
         F.col("cos_sim").desc(), F.col("tgt_id").asc()

@@ -211,7 +211,6 @@ def minhash_lsh_pairs(
     word_grams: bool = False,
     min_est_jaccard: float = 0.0,
     max_band_bucket: int | None = None,
-    persist_signatures: bool = True,
     with_metrics: bool = False,
     hash_fn: str = "md5",
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
@@ -236,16 +235,15 @@ def minhash_lsh_pairs(
     sigs = minhash_signatures(
         df, text_col, id_col, n_hashes, shingle_n, word_grams, hash_fn
     )
-    if persist_signatures:
-        # the self-join references sigs on both sides and Catalyst can't
-        # reuse across a BroadcastExchange — without this the whole
-        # shingle+hash pipeline runs twice. Signatures are k longs per
-        # doc (~1000x smaller than the text), so MEMORY_AND_DISK is the
-        # right call even at corpus scale; a production pipeline would
-        # write them to a table here.
-        from pyspark import StorageLevel
+    # the self-join references sigs on both sides and Catalyst can't
+    # reuse across a BroadcastExchange — without this the whole
+    # shingle+hash pipeline runs twice. Signatures are k longs per doc
+    # (~1000x smaller than the text), so MEMORY_AND_DISK is the right
+    # call even at corpus scale; a production pipeline would write them
+    # to a table here.
+    from pyspark import StorageLevel
 
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
     banded = sigs.select(
         id_col,
         "sig",
@@ -571,7 +569,7 @@ def embedding_cosine_pairs(
 
     base = [
         F.col(vec_col),
-        norm(F.col(vec_col)).alias("_n"),
+        norm(vec_col).alias("_n"),
     ]
     if block_col is not None:
         base.append(F.col(block_col).alias("_blk"))
@@ -595,8 +593,7 @@ def embedding_cosine_pairs(
             "id_a",
             "id_b",
             (
-                dot_exact(F.col("_va"), F.col("_vb"))
-                / (F.col("_na") * F.col("_nb"))
+                dot_exact("_va", "_vb") / (F.col("_na") * F.col("_nb"))
             ).alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)

@@ -1,9 +1,11 @@
 """Deterministic cross-engine hashing primitives for dedup operators.
 
 Every primitive here exists in TWO forms that produce bit-identical
-results: a PySpark Column builder and a DuckDB SQL-fragment generator,
-both driven by the same module-level constants. That is what lets the
-driver's oracle re-run MinHash/SimHash/LSH *exactly* in SQL.
+results: a Spark builder (a Column, or Spark-SQL text such as
+``band_hash_sparksql`` where one parsed expression saves py4j calls)
+and a DuckDB SQL-fragment generator, both driven by the same
+module-level constants. That is what lets the driver's oracle re-run
+MinHash/SimHash/LSH *exactly* in SQL.
 
 The base hash is the first 8 hex chars of md5 → unsigned 32-bit int.
 md5 is available and identical in Spark (JVM) and DuckDB; the engines'
@@ -237,12 +239,6 @@ def digest_slice_sql(expr: str, seed: str, i: int, mod: int) -> str:
     return f"(('0x' || substr({digest}, {1 + 8 * i}, 8))::BIGINT % {mod})"
 
 
-def band_hash(sig: Column, band: int, rows_per_band: int) -> Column:
-    """md5 of one signature band (rows_per_band consecutive components)."""
-    piece = F.slice(sig, band * rows_per_band + 1, rows_per_band)
-    return F.md5(F.array_join(F.transform(piece, lambda x: x.cast("string")), ","))
-
-
 def band_hash_sql(sig_expr: str, band: int, rows_per_band: int) -> str:
     lo = band * rows_per_band + 1
     hi = lo + rows_per_band - 1
@@ -253,9 +249,9 @@ def band_hash_sql(sig_expr: str, band: int, rows_per_band: int) -> str:
 
 
 def band_hash_sparksql(sig_expr: str, band: int, rows_per_band: int) -> str:
-    """Spark-SQL text form of :func:`band_hash` — same tree parsed in
-    one py4j round-trip instead of built op-by-op (the generated-
-    expression rule: ~0.3-5 ms of driver latency per Column op)."""
+    """Spark-SQL text of the md5 of one signature band (rows_per_band
+    consecutive components of ``sig_expr``), parsed in one py4j
+    round-trip; :func:`band_hash_sql` is its DuckDB mirror."""
     lo = band * rows_per_band + 1
     return (
         f"md5(array_join(transform(slice({sig_expr}, {lo}, {rows_per_band}), "

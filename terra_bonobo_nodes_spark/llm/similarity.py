@@ -13,6 +13,10 @@ dimension, which is elementwise the same IEEE operation sequence).
 Identical op sequence → bit-identical doubles → rankings agree without
 rounding fudges, at double speed instead of Decimal128 speed.
 
+The Spark builders (``dot_exact``, ``norm``, ``l2_normalize``,
+``hyperplane_signature``) take column NAMES and build one parsed SQL
+expression each; ``*_sql`` functions are their DuckDB mirrors.
+
 Reference has no similarity search; this is a capability extension
 (BASELINE.json north star) sized for the ``embeddings`` table.
 """
@@ -31,9 +35,7 @@ _HYPERPLANE_SEED = "tbns-hyperplane-v1"
 
 
 def dot_exact_sparksql(a: str, b: str) -> str:
-    """Spark-SQL text of :func:`dot_exact` — parsed in one py4j
-    round-trip instead of built op-by-op (the generated-expression
-    rule; identical Catalyst tree)."""
+    """Spark-SQL text of :func:`dot_exact` over two SQL expressions."""
     return (
         f"aggregate(zip_with({a}, {b}, "
         "(x, y) -> cast(x as double) * cast(y as double)), "
@@ -41,15 +43,12 @@ def dot_exact_sparksql(a: str, b: str) -> str:
     )
 
 
-def dot_exact(a: Column | str, b: Column | str) -> Column:
-    """Deterministic dot product of two float arrays: float64 left fold
-    (same bit pattern on every engine that folds in array order).
-    String args name columns and build as ONE parsed expression —
-    the cheap form for generated/looped call sites."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_exact_sparksql(f"`{a}`", f"`{b}`"))
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+def dot_exact(a: str, b: str) -> Column:
+    """Deterministic dot product of two float-array columns, named by
+    ``a`` and ``b``: float64 left fold (same bit pattern on every engine
+    that folds in array order). Built as ONE parsed expression — one
+    py4j round-trip instead of one per Column op."""
+    return F.expr(dot_exact_sparksql(f"`{a}`", f"`{b}`"))
 
 
 def dot_exact_sql(a: str, b: str) -> str:
@@ -63,43 +62,37 @@ def dot_exact_sql(a: str, b: str) -> str:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float arrays, deterministic cross-engine."""
-    return dot_exact(a, b) / (
-        F.sqrt(dot_exact(a, a)) * F.sqrt(dot_exact(b, b))
-    )
+def _norm_sparksql(a: str) -> str:
+    return f"sqrt({dot_exact_sparksql(a, a)})"
 
 
-def norm(a: Column | str) -> Column:
-    """Euclidean norm, same decimal-exact accumulation as dot_exact.
-    Precomputed once per row by the join operators — cosine then costs
-    ONE dot product per pair instead of three (bit-identical result).
-    A string arg names a column and parses as one expression."""
-    if isinstance(a, str):
-        return F.expr(f"sqrt({dot_exact_sparksql(f'`{a}`', f'`{a}`')})")
-    return F.sqrt(dot_exact(a, a))
+def norm(a: str) -> Column:
+    """Euclidean norm of the float-array column named ``a``, same left
+    fold as dot_exact, as one parsed expression. Precomputed once per
+    row by the join operators — cosine then costs ONE dot product per
+    pair instead of three (bit-identical result)."""
+    return F.expr(_norm_sparksql(f"`{a}`"))
 
 
 def norm_sql(a: str) -> str:
     return f"sqrt({dot_exact_sql(a, a)})"
 
 
-def l2_normalize(a: Column) -> Column:
-    """Unit-normalize a float vector (NULL-safe; an all-zero vector
-    yields NULL rather than a division blow-up). On the unit sphere
-    euclidean rank order EQUALS cosine rank order — the preprocessing
-    that makes euclidean-metric operators (kmeans_fixed, PQ/IVFADC)
-    rank like the cosine retrieval stack; the round-14 recall harness
-    measured the mismatch on raw vectors (PLANS.md).
+def l2_normalize(a: str) -> Column:
+    """Unit-normalize the float-array column named ``a`` (NULL-safe; an
+    all-zero vector yields NULL rather than a division blow-up). On the
+    unit sphere euclidean rank order EQUALS cosine rank order — the
+    preprocessing that makes euclidean-metric operators (kmeans_fixed,
+    PQ/IVFADC) rank like the cosine retrieval stack.
 
     The norm is bound ONCE per row via zip_with against an
-    array_repeat of the scalar (review finding: an ``x / n`` lambda
-    re-evaluates the O(d) norm fold per element — O(d^2) per
-    vector)."""
-    n = norm(a)
-    repeated = F.array_repeat(n, F.size(a))
-    return F.when(
-        n > 0, F.zip_with(a, repeated, lambda x, m: x.cast("double") / m)
+    array_repeat of the scalar (an ``x / n`` lambda would re-evaluate
+    the O(d) norm fold per element — O(d^2) per vector)."""
+    v = f"`{a}`"
+    n = _norm_sparksql(v)
+    return F.expr(
+        f"CASE WHEN {n} > 0 THEN zip_with({v}, array_repeat({n}, size({v})), "
+        "(x, m) -> cast(x as double) / m) END"
     )
 
 
@@ -113,13 +106,6 @@ def l2_normalize_sql(a: str) -> str:
     return (
         f"CASE WHEN {n} > 0 THEN "
         f"list_transform({a}, x -> CAST(x AS DOUBLE) / {n}) END"
-    )
-
-
-def cosine_sql(a: str, b: str) -> str:
-    return (
-        f"{dot_exact_sql(a, b)} / "
-        f"(sqrt({dot_exact_sql(a, a)}) * sqrt({dot_exact_sql(b, b)}))"
     )
 
 
@@ -252,30 +238,14 @@ def hyperplanes(n_planes: int, dim: int, table: int = 0) -> list[list[float]]:
     return planes
 
 
-def hyperplane_signature(vec: Column | str, planes: list[list[float]]) -> Column:
-    """Sign-bit signature: bit p = 1 iff vec · plane_p >= 0. Packed into
-    a bigint (n_planes <= 63). Built as ONE parsed expression: the
-    op-by-op form walked n_planes × dim literals over py4j (~0.3-5 ms
-    each — whole tenths of a second per table build); repr() round-trips
-    every plane weight exactly, so the parsed literals are the same
-    doubles F.lit produced. Identical tree and results."""
-    v = f"`{vec}`" if isinstance(vec, str) else None
-    if v is None:
-        # Column input: no name to splice into SQL text — keep the
-        # tree-building form for external callers
-        bits = []
-        for p, plane in enumerate(planes):
-            lits = F.array(*[F.lit(w) for w in plane])
-            d = dot_exact(vec, lits)
-            bits.append(
-                F.when(d >= 0, F.lit(1 << p).cast("bigint")).otherwise(
-                    F.lit(0).cast("bigint")
-                )
-            )
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out
+def hyperplane_signature(vec: str, planes: list[list[float]]) -> Column:
+    """Sign-bit signature of the float-array column named ``vec``: bit
+    p = 1 iff vec · plane_p >= 0. Packed into a bigint (n_planes <= 63).
+    Built as ONE parsed expression: building it op by op would walk
+    n_planes × dim literals over py4j (~0.3-5 ms each). repr()
+    round-trips every plane weight exactly, so the parsed literals are
+    the exact doubles."""
+    v = f"`{vec}`"
     terms = []
     for p, plane in enumerate(planes):
         lits = "array(" + ", ".join(f"{w!r}D" for w in plane) + ")"

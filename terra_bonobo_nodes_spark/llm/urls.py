@@ -204,23 +204,21 @@ def flag_blocked_hosts(
     id_col: str = "doc_id",
     domain_col: str = "domain",
     out: str = "host_blocked",
-    hint_broadcast: bool = True,
 ) -> DataFrame:
     """Mark rows whose URL host matches a domain blocklist (exact host
     or any parent domain, via :func:`host_suffixes`). Adds boolean
     ``out``; :func:`filter_blocked_hosts` is the filtering form.
 
     Plan shape (100 TB): the (id, suffix) projection explodes each row
-    into ~2-4 suffix rows, semi-joins the blocklist (broadcast by
-    default — curated blocklists are millions of short strings at
-    most; pass ``hint_broadcast=False`` to let AQE pick a shuffle join
-    for a giant list), reduces to the DISTINCT blocked id set (small —
-    the blocked fraction), and left-joins that marker back on the id.
-    The wide document row never flows through the explode.
+    into ~2-4 suffix rows, semi-joins the broadcast blocklist (curated
+    blocklists are millions of short strings at most), reduces to the
+    DISTINCT blocked id set (small — the blocked fraction), and
+    left-joins that marker back on the id. The wide document row never
+    flows through the explode.
     """
-    bl = blocklist.select(F.lower(F.col(domain_col)).alias("_bl_sfx")).distinct()
-    if hint_broadcast:
-        bl = F.broadcast(bl)
+    bl = F.broadcast(
+        blocklist.select(F.lower(F.col(domain_col)).alias("_bl_sfx")).distinct()
+    )
     hits = (
         df.select(
             F.col(id_col),
@@ -242,7 +240,6 @@ def filter_blocked_hosts(
     url_col: str = "url",
     id_col: str = "doc_id",
     domain_col: str = "domain",
-    hint_broadcast: bool = True,
 ) -> DataFrame:
     """Rows whose host matches no blocklist domain (suffix semantics,
     see :func:`flag_blocked_hosts`) — the crawl-pipeline filtering
@@ -254,7 +251,6 @@ def filter_blocked_hosts(
         id_col=id_col,
         domain_col=domain_col,
         out="_hb",
-        hint_broadcast=hint_broadcast,
     )
     return flagged.filter(~F.col("_hb")).drop("_hb")
 

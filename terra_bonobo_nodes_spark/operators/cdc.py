@@ -10,9 +10,8 @@ applied onto a base snapshot — the operation Delta Lake ships as
 Scale shape (100 TB): the base snapshot is the big side and is NEVER
 shuffled — collapsing the changelog costs one window over the (small)
 changelog, and applying it is a LEFT ANTI join keyed on the primary key
-(the collapsed changelog broadcasts in the common snapshot≫changelog
-case; AQE falls back to a shuffle join when a backfill-sized changelog
-arrives) plus a union. No MERGE engine support needed.
+(the collapsed changelog's key set is broadcast: the snapshot≫changelog
+case) plus a union. No MERGE engine support needed.
 """
 
 from __future__ import annotations
@@ -51,7 +50,6 @@ def apply_changes(
     seq_col: str,
     op_col: str = "op",
     delete_op: str = "D",
-    broadcast_changes: bool = True,
 ) -> DataFrame:
     """Apply a keyed changelog onto a base snapshot and return the new
     current state (the batch equivalent of Delta's APPLY CHANGES INTO).
@@ -65,10 +63,8 @@ def apply_changes(
 
     Plan: one window shuffle on the changelog, one anti-join keyed on
     the primary key, one union. The snapshot is scanned once and never
-    shuffled. ``broadcast_changes`` (default) hints the collapsed
-    changelog's key set into the anti-join build side — right for the
-    nightly-changelog case; pass ``False`` for a backfill-sized
-    changelog so the planner picks a shuffle join instead.
+    shuffled. The collapsed changelog's key set is broadcast into the
+    anti-join build side — the nightly-changelog case.
     """
     keys = list(key_cols)
     missing = [c for c in base.columns if c not in changes.columns]
@@ -78,10 +74,7 @@ def apply_changes(
             "a CDC upsert row must carry the full row image"
         )
     latest = collapse_changes(changes, keys, seq_col, op_col)
-    key_set = latest.select(*keys)
-    if broadcast_changes:
-        key_set = F.broadcast(key_set)
-    survivors = base.join(key_set, keys, "left_anti")
+    survivors = base.join(F.broadcast(latest.select(*keys)), keys, "left_anti")
     # a NULL op is a malformed CDC record, not a delete: the naive
     # `op != delete_op` filter is NULL for it, which would silently
     # drop the key from the snapshot. Fail fast in-plan instead

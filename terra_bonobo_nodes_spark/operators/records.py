@@ -97,11 +97,11 @@ def map_properties(
     return df.withColumns(dict(exprs))
 
 
-def copy_on_pipeline_split(df: DataFrame, cache: bool = False) -> DataFrame:
+def copy_on_pipeline_split(df: DataFrame) -> DataFrame:
     """``CopyOnPipelineSplit`` (``common.py:414-423``): intentional no-op.
 
     DataFrames are immutable; fan-out = reuse the same df in N branches.
-    ``cache=True`` persists the common prefix so N branches don't
-    recompute it — the actual Spark analogue of "split the pipeline".
+    A caller whose branches should not recompute a costly common prefix
+    persists it (``df.cache()``) before the split.
     """
-    return df.cache() if cache else df
+    return df

@@ -459,7 +459,7 @@ def llm_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = similarity.hyperplanes(_BLK_PLANES, EMB_DIM)
     blocked = dedup.embedding_cosine_pairs(
         emb.withColumn(
-            "blk", similarity.hyperplane_signature(F.col("embedding"), planes)
+            "blk", similarity.hyperplane_signature("embedding", planes)
         ),
         "vec_id",
         "embedding",

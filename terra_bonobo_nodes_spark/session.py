@@ -46,27 +46,16 @@ def get_spark(app_name: str = "terra_bonobo_nodes_spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Prefer shuffled-hash over sort-merge when a side's per-
-        # partition build fits memory (guide §3.1/§9): hash probe skips
-        # both sides' sorts. The AQE threshold additionally rewrites an
-        # already-planned SMJ to SHJ at runtime when every post-shuffle
-        # partition is under it; 64m matches the broadcast threshold's
-        # memory rationale (bounded per-task build). TIMING CLAIM
-        # RETRACTED (OPTIMIZATION_r17.md §10): the originally-cited
-        # "18.13s -> 16.92s" A/B was host-drift bias — the controlled
-        # alternating-order re-validation read 16.80 vs 16.73s, a
-        # wash at this fixture scale. Kept as the optimization guide's
-        # §9 baseline only: results are join-algorithm-independent
-        # (hash-verified), sort-merge still plans wherever a build
-        # side could not fit (the 64m threshold bounds it), and both
-        # knobs take env overrides so a deployment where an SHJ build
-        # side might not fit can flip back without a code change.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_PREFER_SORTMERGEJOIN", "false"),
-        )
+        # partition build fits memory: the hash probe skips both sides'
+        # sorts, and AQE rewrites a planned SMJ to SHJ at runtime when
+        # every post-shuffle partition is under 64m (the broadcast
+        # threshold's bounded per-task build). Results do not depend
+        # on the join algorithm; both are SQL confs, so a deployment
+        # can flip them back with spark.conf.set.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_SHJ_LOCAL_MAP_THRESHOLD", str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
     )
     spark = builder.getOrCreate()

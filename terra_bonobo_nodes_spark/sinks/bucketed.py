@@ -26,16 +26,13 @@ def write_bucketed(
     table: str,
     key: str | list[str],
     buckets: int = 16,
-    sorted_by_key: bool = True,
     mode: str = "overwrite",
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally bucket-sorted)
-    parquet table in the session catalog."""
+    """Persist ``df`` as a parquet table in the session catalog,
+    bucketed and bucket-sorted on ``key``."""
     keys = [key] if isinstance(key, str) else list(key)
     w = df.write.mode(mode).format("parquet").bucketBy(buckets, *keys)
-    if sorted_by_key:
-        w = w.sortBy(*keys)
-    w.saveAsTable(table)
+    w.sortBy(*keys).saveAsTable(table)
 
 
 def bucketed_join(

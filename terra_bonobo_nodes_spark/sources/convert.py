@@ -8,8 +8,7 @@ executor core converts the documents of its partitions locally, so a
 many-file ingest (thousands of OSM extracts / zipped shapefiles)
 parallelizes across the cluster and NOTHING is materialized on the
 driver. The injected ``runner`` travels to executors via cloudpickle —
-the same injection seam the driver-side path and the reference's
-mocked ``subprocess.run`` use.
+the same injection seam as the reference's mocked ``subprocess.run``.
 """
 
 from __future__ import annotations
@@ -26,30 +25,15 @@ def convert_documents(
     payload_col: str,
     cmd: list[str],
     runner: Runner,
-    *,
-    distributed: bool = True,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Run ``runner(cmd, payload) -> geojson_bytes`` over every document.
 
-    ``distributed=True`` (default, the many-file scale path): payloads
-    stay on executors; ``mapInPandas`` invokes the runner per document
-    inside each Arrow batch. ``partitions`` optionally repartitions
-    first so a directory of large extracts spreads over all cores
-    instead of clumping in the source file-split layout.
-
-    ``distributed=False``: the single-extract convenience path (one
-    Overpass response) — converts on the driver without spinning up a
-    job, same rows out.
+    Payloads stay on the executors: ``mapInPandas`` invokes the runner
+    per document inside each Arrow batch, in the input's partition
+    layout. A caller whose extracts clump in a few file splits
+    repartitions ``df`` first.
     """
     src = df.select(payload_col)
-    if not distributed:
-        rows = src.collect()
-        docs = [(runner(cmd, _as_bytes(r[0])).decode(),) for r in rows]
-        return df.sparkSession.createDataFrame(docs, "content STRING")
-
-    if partitions:
-        src = src.repartition(partitions)
 
     def convert(batches: Iterator) -> Iterator:
         import pandas as pd

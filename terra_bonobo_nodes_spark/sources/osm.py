@@ -177,18 +177,15 @@ def osm_xml_to_geojson(
     all_tags: bool = True,
     xml_col: str = "xml",
     runner: Callable[[list[str], bytes], bytes] | None = None,
-    distributed: bool = True,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Convert OSM XML payloads to GeoJSON document strings.
 
     ``runner(cmd, xml_bytes) -> geojson_bytes`` defaults to a real
     subprocess invocation (requires GDAL); tests inject a fake, the same
     strategy as the reference's mocked ``subprocess.run``
-    (``test_osm.py:35-46``). By default conversion runs on the
-    EXECUTORS (``convert.convert_documents`` mapInPandas) so a
-    many-extract ingest never lands on the driver; pass
-    ``distributed=False`` for the one-response convenience path.
+    (``test_osm.py:35-46``). Conversion runs on the executors
+    (``convert.convert_documents`` mapInPandas), so a many-extract
+    ingest never lands on the driver.
     """
     if runner is None:
 
@@ -204,6 +201,4 @@ def osm_xml_to_geojson(
                 return res.stdout
 
     cmd = build_ogr2ogr_command("/placeholder/", layer, all_tags)
-    return convert_documents(
-        df, xml_col, cmd, runner, distributed=distributed, partitions=partitions
-    )
+    return convert_documents(df, xml_col, cmd, runner)

@@ -34,15 +34,12 @@ def zip_shapefile_to_geojson(
     content_col: str = "content",
     target_srs: str = "EPSG:4326",
     runner: Callable[[list[str], bytes], bytes] | None = None,
-    distributed: bool = True,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Convert zipped-shapefile payloads to GeoJSON document strings.
 
-    Conversion runs on the executors by default (mapInPandas via
-    ``convert.convert_documents``) so a directory of zipped shapefiles
-    parallelizes across the cluster; ``distributed=False`` keeps the
-    single-archive driver path."""
+    Conversion runs on the executors (mapInPandas via
+    ``convert.convert_documents``), so a directory of zipped shapefiles
+    parallelizes across the cluster."""
     if runner is None:
 
         def runner(cmd: list[str], payload: bytes) -> bytes:  # pragma: no cover
@@ -60,6 +57,4 @@ def zip_shapefile_to_geojson(
                 return res.stdout
 
     cmd = build_shapefile_command("<payload>.zip", target_srs)
-    return convert_documents(
-        df, content_col, cmd, runner, distributed=distributed, partitions=partitions
-    )
+    return convert_documents(df, content_col, cmd, runner)

@@ -31,14 +31,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-def _events_schema(spark: SparkSession, src: str) -> T.StructType:
-    """readStream needs an explicit schema; delegate to the memoized
-    per-path footer sniff in ``tables.events_schema`` (one read per
-    process, no per-call session-config mutation)."""
-    from terra_bonobo_nodes_spark.tables import events_schema
-
-    return events_schema(spark, src)
-
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet: nanos→micros like
@@ -60,11 +52,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.makedirs(stage, exist_ok=True)
         shutil.copy(src, os.path.join(stage, "events.parquet"))
 
-    from terra_bonobo_nodes_spark.tables import normalize_events_ts
+    from terra_bonobo_nodes_spark.tables import events_schema, normalize_events_ts
 
-    schema = _events_schema(spark, src)
+    # readStream needs an explicit schema: the memoized footer sniff
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(events_schema(spark, src))
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )

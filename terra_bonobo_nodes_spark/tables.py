@@ -27,20 +27,9 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# events.ts has shipped in two parquet layouts across testdata
-# generations: TIMESTAMP(NANOS) (which Spark rejects by default,
-# [PARQUET_TYPE_ILLEGAL] — read as int64 nanos under the nanosAsLong
-# legacy flag, then truncated to micros with integer DIV, exactly what
-# DuckDB's reader does) and plain TIMESTAMP micros (read as
-# TIMESTAMP_NTZ). The resolved footer schema is immutable per file, so
-# sniff it ONCE per path per process and reuse — repeated queries pay
-# zero footer reads and no per-call session-config mutation
-# (`get_spark` sets nanosAsLong at session build).
-_EVENTS_SCHEMA_CACHE: dict[str, "T.StructType"] = {}
-
-# The same footer-schema memo for EVERY plain parquet table (r17): a
-# bare spark.read.parquet(path) runs eager schema inference — ~80-90ms
-# of driver/JVM work per call — and a bench pass calls load_table 60+
+# Footer-schema memo for every parquet table: a bare
+# spark.read.parquet(path) runs eager schema inference — ~80-90ms of
+# driver/JVM work per call — and a bench pass calls load_table 60+
 # times, so inference alone cost seconds of pure plan-construction
 # time per pass. The resolved footer schema is immutable per file
 # (deterministic testdata; any real table would version its path), so
@@ -85,13 +74,17 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
 
 
 def events_schema(spark: SparkSession, src: str):
-    """Resolved parquet schema of an events file, memoized per path."""
-    schema = _EVENTS_SCHEMA_CACHE.get(src)
-    if schema is None:
-        _ensure_nanos_conf(spark)
-        schema = spark.read.parquet(src).schema
-        _EVENTS_SCHEMA_CACHE[src] = schema
-    return schema
+    """Resolved parquet schema of an events file, memoized per path.
+
+    events.ts has shipped in two parquet layouts across testdata
+    generations: TIMESTAMP(NANOS) (which Spark rejects by default,
+    [PARQUET_TYPE_ILLEGAL] — read as int64 nanos under the nanosAsLong
+    legacy flag, then truncated to micros with integer DIV, exactly
+    what DuckDB's reader does) and plain TIMESTAMP micros (read as
+    TIMESTAMP_NTZ). Every read of the file needs the flag on the
+    session, so it is ensured before the memo lookup."""
+    _ensure_nanos_conf(spark)
+    return _table_schema(spark, src)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -158,9 +151,8 @@ def load_table(
         key = (id(spark._jsparkSession), src + "#normalized")
         df = _TABLE_DF_CACHE.get(key)
         if df is None:
-            schema = events_schema(spark, src)
-            _ensure_nanos_conf(spark)
             # the memoized schema skips Spark's own footer inference
+            schema = events_schema(spark, src)
             df = normalize_events_ts(spark.read.schema(schema).parquet(src))
             _TABLE_DF_CACHE[key] = df
         return df

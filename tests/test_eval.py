@@ -96,7 +96,7 @@ def test_l2_normalize_contract(spark):
     rows = {
         r["vec_id"]: r["n"]
         for r in df.select(
-            "vec_id", l2_normalize(F.col("embedding")).alias("n")
+            "vec_id", l2_normalize("embedding").alias("n")
         ).collect()
     }
     assert rows[0] == [0.6, 0.8]
@@ -119,7 +119,7 @@ def test_l2_normalize_sql_mirror(spark):
     got = {
         r["vec_id"]: r["n"]
         for r in df.select(
-            "vec_id", l2_normalize(F.col("embedding")).alias("n")
+            "vec_id", l2_normalize("embedding").alias("n")
         ).collect()
     }
     con = duckdb.connect()

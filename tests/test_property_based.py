@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from terra_bonobo_nodes_spark.geo import ops
@@ -89,11 +89,18 @@ def test_bbox_contains_all_points(g):
 
 @settings(max_examples=100, deadline=None)
 @given(st.lists(coord, min_size=3, max_size=8))
+# collinear at 1e5-scale: zero-area bbox, shoelace area 1.013e-6
+@example([(0.0, 237841.0), (144466.0, 237841.0), (2.0**-23, 237841.0)])
 def test_envelope_area_bounds_polygon_area(ps):
-    g = ("Polygon", [ring(ps)])
-    bb = ops.bbox(g)
-    x0, y0, x1, y1 = bb
-    assert abs(ops.area(g)) <= (x1 - x0) * (y1 - y0) + 1e-6
+    r = ring(ps)
+    g = ("Polygon", [r])
+    x0, y0, x1, y1 = ops.bbox(g)
+    # the shoelace sum of n cross terms is exact only up to its
+    # rounding error, (n+2)·2⁻⁵³·Σ(|xᵢ·yᵢ₊₁| + |xᵢ₊₁·yᵢ|)
+    rounding = (len(ps) + 2) * 2.0**-53 * sum(
+        abs(xa * yb) + abs(xb * ya) for (xa, ya), (xb, yb) in zip(r, r[1:])
+    )
+    assert abs(ops.area(g)) <= (x1 - x0) * (y1 - y0) + rounding + 1e-6
 
 
 @settings(max_examples=50, deadline=None)

@@ -117,24 +117,25 @@ FAKE_GEOJSON = json.dumps(
 
 def test_osm_pipeline_with_fake_runner(spark):
     xml_df = spark.createDataFrame([("q", "<osm/>")], "query STRING, xml STRING")
-    captured = {}
 
+    # Closure (not module-level): cloudpickle must ship it by VALUE to
+    # the executors. The runner writes what it was called with into the
+    # feature it returns, so the assertions read the output.
     def fake_runner(cmd, payload):
-        captured["cmd"] = cmd
-        captured["payload"] = payload
-        return FAKE_GEOJSON.encode()
+        feat = json.loads(FAKE_GEOJSON)
+        feat["features"][0]["properties"].update(
+            {"layer": cmd[-1], "payload": payload.decode()}
+        )
+        return json.dumps(feat).encode()
 
-    # distributed=False: the captured-dict assertion needs the runner on
-    # the driver; the distributed path is covered below.
-    docs = osm_xml_to_geojson(
-        xml_df, layer="points", runner=fake_runner, distributed=False
-    )
-    assert captured["payload"] == b"<osm/>"
-    assert captured["cmd"][-1] == "points"
+    docs = osm_xml_to_geojson(xml_df, layer="points", runner=fake_runner)
     feats = geojson_reader(docs, "content").collect()
     assert len(feats) == 1
     assert feats[0]["feature_id"] == "n1"
     assert W.parse_wkb(feats[0]["geom"]) == ("Point", (1.0, 2.0))
+    props = dict(feats[0]["properties"])
+    assert props["layer"] == "points"
+    assert props["payload"] == "<osm/>"
 
 
 def test_osm_points_geojson_runner_real_conversion():
@@ -230,10 +231,10 @@ def test_osm_conversion_distributed_no_driver_collect(spark):
     DataFrame.collect = _no_collect
     try:
         osm_docs = osm_xml_to_geojson(
-            xml_df, layer="lines", runner=_payload_echo_runner, partitions=3
+            xml_df.repartition(3), layer="lines", runner=_payload_echo_runner
         )
         osm_docs.write.format("noop").mode("overwrite").save()  # full execution
-        shp_docs = zip2gj(zips, runner=_payload_echo_runner, partitions=3)
+        shp_docs = zip2gj(zips.repartition(3), runner=_payload_echo_runner)
         shp_docs.write.format("noop").mode("overwrite").save()
     finally:
         DataFrame.collect = real_collect
@@ -1188,7 +1189,7 @@ def test_shp_runner_feeds_geojson_reader(spark):
     with pytest.raises(Exception, match="EPSG:4326"):
         zip_shapefile_to_geojson(
             zips, target_srs="EPSG:2154",
-            runner=shapefile_points_geojson_runner, distributed=False,
+            runner=shapefile_points_geojson_runner,
         ).collect()
 
 

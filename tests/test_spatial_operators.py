@@ -620,12 +620,9 @@ def test_dissolve_rect_fast_routing_parity(spark):
 
 def test_dissolve_rect_fast_plan_carries_the_sweep_agg(spark):
     """The all-boxy dissolve plan must contain the rect-sweep kernel
-    (the no-WKB lane exists as a physical path). Since the r17
-    optimization round the lane is JVM collect_list + the batched
-    SCALAR sweep kernel (_st_rect_union_area_lists — one Python call
-    per Arrow batch) instead of the GROUPED_AGG form (one call per
-    group); the pin follows the kernel rename and additionally pins
-    the collect_list aggregation that feeds it."""
+    (the no-WKB lane exists as a physical path): JVM collect_list
+    feeding the batched SCALAR sweep kernel
+    (_st_rect_union_area_lists — one Python call per Arrow batch)."""
     from terra_bonobo_nodes_spark.geo import wkb as W
     from terra_bonobo_nodes_spark.operators.spatial import (
         intersection_percent_by_area,

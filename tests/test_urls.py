@@ -293,11 +293,3 @@ def test_sql_mirror_matches_spark_on_generated_urls(spark, urls):
         con.execute(f"SELECT i, {canonical_url_sql('url')} FROM urls").fetchall()
     )
     assert sparkside == duck
-
-
-def test_flag_blocked_hosts_no_broadcast_hint(spark):
-    """hint_broadcast=False defers join strategy to AQE — same
-    verdicts, no forced broadcast of the blocklist."""
-    out = flag_blocked_hosts(_docs(spark), _blocklist(spark), hint_broadcast=False)
-    got = {r["doc_id"]: r["host_blocked"] for r in out.collect()}
-    assert got == {1: True, 2: True, 3: False, 4: False, 5: True}
