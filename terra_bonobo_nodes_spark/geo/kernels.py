@@ -682,7 +682,7 @@ def _st_union_agg(g: pd.Series) -> bytes:
 
 @pandas_udf(DoubleType())
 def _st_union_area_agg(g: pd.Series) -> float:
-    """GROUPED_AGG: area of the true union, with an exact grid-count
+    """GROUPED_AGG: area of the true union, with an exact rect-sweep
     path for rectilinear inputs (no clipping at all)."""
     return ops.union_area(W.parse_wkb(b) for b in g)
 

@@ -6,7 +6,7 @@ polygon overlay (intersection/difference for concave×concave with
 holes via ear-clip triangulation, line×polygon clipping, true cascaded
 union), Douglas-Peucker simplify, web-mercator transform,
 snap-to-grid, subdivision. Rectilinear shapes take closed-form paths
-(rect decomposition, grid counting) that skip clipping entirely. Pure
+(rect decomposition, a rect-union sweep) that skip clipping entirely. Pure
 Python/stdlib — vectorization happens at the Arrow batch boundary in
 ``kernels``.
 """
@@ -1057,42 +1057,30 @@ def union_dissolve(geoms) -> Geom:
 
 
 def union_area(geoms) -> float:
-    """Area of the true union. Rectilinear inputs use coordinate-
-    compressed grid counting (exact, robust, O(n²) cells); otherwise
-    falls back to ``area(union_dissolve(...))``."""
+    """Area of the true union. Rectilinear inputs decompose into axis
+    rects whose union :func:`rect_union_area` sweeps exactly (no
+    clipping at all); otherwise falls back to
+    ``area(union_dissolve(...))``."""
     gs = [g for g in geoms if g is not None and not is_empty(g)]
     if not gs:
         return 0.0
-    rect_lists = []
+    rects = []
     for g in gs:
         r = rectilinear_rects(g)
         if r is None:
             return area(union_dissolve(gs))
-        rect_lists.append(r)
-    rects = [r for rl in rect_lists for r in rl]
-    xs = sorted({v for r in rects for v in (r[0], r[2])})
-    ys = sorted({v for r in rects for v in (r[1], r[3])})
-    xi = {v: i for i, v in enumerate(xs)}
-    yi = {v: i for i, v in enumerate(ys)}
-    covered = set()
-    for x0, y0, x1, y1 in rects:
-        for i in range(xi[x0], xi[x1]):
-            for j in range(yi[y0], yi[y1]):
-                covered.add((i, j))
-    return sum(
-        (xs[i + 1] - xs[i]) * (ys[j + 1] - ys[j]) for i, j in covered
-    )
+        rects.extend(r)
+    return rect_union_area(*zip(*rects)) if rects else 0.0
 
 
 def rect_union_area(x0, y0, x1, y1) -> float:
-    """Union area of axis-aligned rectangles given as coordinate
-    sequences — the pure-numeric twin of ``union_area`` for the case
-    where the caller already HAS the rects as 4 numbers (no geometry
-    objects, no WKB): a vertical sweep over the distinct x
-    breakpoints, accumulating dx times the union length of the active
-    rects' y intervals. Exact (same +/*/max arithmetic as the
-    grid-count path), O(breakpoints x active log active). Degenerate
-    (zero-width/height) rects contribute nothing."""
+    """Union area of axis-aligned rectangles given as four coordinate
+    sequences (no geometry objects, no WKB): a vertical sweep over the
+    distinct x breakpoints, accumulating dx times the union length of
+    the active rects' y intervals. Exact up to float rounding,
+    O(breakpoints x active log active). Degenerate (zero-width/height)
+    rects contribute nothing. The one union-area core for axis rects:
+    :func:`union_area` routes rectilinear geometries here."""
     rects = [
         (a, b, c, d)
         for a, b, c, d in zip(x0, y0, x1, y1)

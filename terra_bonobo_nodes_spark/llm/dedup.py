@@ -230,7 +230,8 @@ def minhash_lsh_pairs(
     :func:`_cap_metrics`; reads the persisted signatures, one cheap
     extra job).
     """
-    assert n_hashes % bands == 0, "bands must divide n_hashes"
+    if n_hashes % bands:
+        raise ValueError("bands must divide n_hashes")
     rows_per_band = n_hashes // bands
     sigs = minhash_signatures(
         df, text_col, id_col, n_hashes, shingle_n, word_grams, hash_fn
@@ -631,7 +632,8 @@ def minhash_lsh_match(
     exactly like the self-join form; with ``with_metrics=True`` the
     excluded (corpus, band) row count comes back as a 1-row companion
     ``n_capped_band_rows`` DataFrame (see :func:`_cap_metrics`)."""
-    assert n_hashes % bands == 0, "bands must divide n_hashes"
+    if n_hashes % bands:
+        raise ValueError("bands must divide n_hashes")
     rows_per_band = n_hashes // bands
 
     def _banded(df: DataFrame, out_id: str) -> DataFrame:

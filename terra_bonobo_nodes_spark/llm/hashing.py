@@ -72,43 +72,6 @@ def hash32_sql(expr: str) -> str:
     return f"('0x' || substr(md5({expr}), 1, 8))::BIGINT"
 
 
-# --- fixed-length polynomial hash -------------------------------------------
-# RETAINED FOR REFERENCE, no longer the minhash default: re-measured at
-# sf0.1 (1.46M shingles) the unrolled substr/ascii chain runs ~5x
-# SLOWER than one md5+conv call — per-expression call overhead
-# dominates tiny-operand arithmetic, so fewer expression calls win
-# (see dedup.minhash_signatures). The algebra still holds: with base >
-# max codepoint the pre-mod value is the injective base-B
-# representation of the string, so collision behavior is that of the
-# single `mod p` — a fine hash when an engine makes the chain cheap.
-# Both engines return ascii('') = 0, so a trailing short shingle (doc
-# shorter than n) hashes identically too.
-
-_POLY_B = 1009  # > any codepoint in normalize()'s output alphabet
-
-
-def hash32_poly(c: Column, n: int) -> Column:
-    """Polynomial hash of the first ``n`` chars (Column form).
-
-    Horner with a mod per step keeps every intermediate below
-    MINHASH_P * _POLY_B ≈ 2^42 — no 64-bit overflow at any ``n``.
-    """
-    acc = None
-    for i in range(1, n + 1):
-        code = F.ascii(F.substring(c, i, 1)).cast("bigint")
-        acc = code if acc is None else (acc * _POLY_B + code) % MINHASH_P
-    return acc
-
-
-def hash32_poly_sql(expr: str, n: int) -> str:
-    """DuckDB fragment matching :func:`hash32_poly`."""
-    acc = None
-    for i in range(1, n + 1):
-        code = f"ascii(substr({expr}, {i}, 1))"
-        acc = code if acc is None else f"(({acc}) * {_POLY_B} + {code}) % {MINHASH_P}"
-    return f"CAST({acc} AS BIGINT)"
-
-
 # --- shingling --------------------------------------------------------------
 
 
@@ -126,16 +89,9 @@ def normalize_sql(expr: str) -> str:
     )
 
 
-def char_shingles(c: Column, n: int) -> Column:
-    """All character n-grams of the normalized text (with duplicates)."""
-    norm = normalize(c)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(1))),
-        lambda i: F.substring(norm, i, n),
-    )
-
-
 def char_shingles_sql(expr: str, n: int) -> str:
+    """All character n-grams of the normalized text (with duplicates):
+    the DuckDB mirror of :func:`explode_char_shingles`, as a list."""
     norm = normalize_sql(expr)
     return (
         f"list_transform(range(1, greatest(length({norm}) - {n - 1}, 1) + 1), "

@@ -279,78 +279,31 @@ CODEC_BENCH_SCHEMA = T.StructType(
 _CODEC_BENCH_FORMATS = ("png", "jpeg", "jpeg_progressive")
 
 
-def codec_roundtrip(
-    ids: DataFrame,
-    id_col: str = "doc_id",
-    size: tuple[int, int] = (48, 32),
-) -> DataFrame:
-    """The codec throughput stage: per id, synthesize a deterministic
-    noise image (seeded by the id — worst-case entropy-coding load),
-    ENCODE it (format = id mod 3: PNG / baseline JPEG / progressive
-    JPEG) and DECODE it back, all inside one Arrow-batched
-    ``mapInPandas`` pass. Output is fully deterministic (decode means
-    rounded to 4dp), so the stage doubles as a correctness row; its
-    purpose in bench.py is making pure-Python codec regressions visible
-    round-over-round as wall-clock (the reference has no codec surface
-    to compare against — this is engine-native multimodal capacity).
-
-    Scale shape: embarrassingly parallel, zero shuffle, driver never
-    sees a payload; at 100 TB the partition count is the only knob."""
-    import numpy as np
-
-    from terra_bonobo_nodes_spark.llm import codecs
-    from terra_bonobo_nodes_spark.llm.jpeg import decode_jpeg, encode_jpeg
-
-    w, h = size
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k.name: [] for k in CODEC_BENCH_SCHEMA}
-            for did in pdf[id_col]:
-                did = int(did)
-                rng = np.random.RandomState(did % (2**31 - 1))
-                img = rng.randint(0, 256, size=(h, w, 3)).astype(np.uint8)
-                fmt = _CODEC_BENCH_FORMATS[did % 3]
-                if fmt == "png":
-                    payload = codecs.encode_png(w, h, img.tobytes(), 4)
-                    dw, dh, raw = codecs.decode_png(payload)
-                else:
-                    payload = encode_jpeg(
-                        w, h, img.tobytes(), progressive=fmt.endswith("progressive")
-                    )
-                    dw, dh, raw = decode_jpeg(payload)
-                px = np.frombuffer(raw, dtype=np.uint8).reshape(dh, dw, 3)
-                out["asset_id"].append(did)
-                out["fmt"].append(fmt)
-                out["enc_bytes"].append(len(payload))
-                out["width"].append(dw)
-                out["height"].append(dh)
-                out["mean_r"].append(round(float(px[..., 0].mean()), 4))
-                out["mean_g"].append(round(float(px[..., 1].mean()), 4))
-                out["mean_b"].append(round(float(px[..., 2].mean()), 4))
-            yield pd.DataFrame(out)
-
-    return ids.select(id_col).mapInPandas(run, CODEC_BENCH_SCHEMA)
-
-
 def codec_roundtrip_seeded(
     ids: DataFrame,
     id_col: str = "doc_id",
     size: tuple[int, int] = (48, 32),
     seed_mod: int = 48,
 ) -> DataFrame:
-    """``codec_roundtrip`` with the noise seed keyed by ``id %
-    seed_mod`` instead of the raw id: the SAME per-image decode work
-    (every id still synthesizes, encodes and decodes its own image)
-    but only ``seed_mod`` DISTINCT images exist, so the stage's entire
-    output is restatable as a ``seed_mod``-row known-answer table — a
-    full value-hash oracle for a codec row (VERDICT_r15 item 6).
-    ``seed_mod`` must be divisible by 3 so the format choice (id mod
-    3) is a function of the seed class.
+    """The codec throughput stage: per id, synthesize a deterministic
+    noise image (worst-case entropy-coding load), ENCODE it (format =
+    id mod 3: PNG / baseline JPEG / progressive JPEG) and DECODE it
+    back, all inside one Arrow-batched ``mapInPandas`` pass. Output is
+    fully deterministic (decode means rounded to 4dp), so the stage
+    doubles as a correctness row; in bench.py it makes pure-Python
+    codec regressions visible as wall-clock (the reference has no codec
+    surface to compare against — this is engine-native multimodal
+    capacity).
 
-    A separate function rather than a parameter on ``codec_roundtrip``
-    because the registered llm_codec_throughput row (r14 green, not in
-    the r16 window) must not change code until its r17 due slot."""
+    The noise seed is ``id % seed_mod``: every id still synthesizes,
+    encodes and decodes its own image, but only ``seed_mod`` DISTINCT
+    images exist, so the stage's entire output is restatable as a
+    ``seed_mod``-row known-answer table — a full value-hash oracle.
+    ``seed_mod`` must be divisible by 3 so the format is a function of
+    the seed class.
+
+    Scale shape: embarrassingly parallel, zero shuffle, driver never
+    sees a payload; at 100 TB the partition count is the only knob."""
     import numpy as np
 
     from terra_bonobo_nodes_spark.llm import codecs

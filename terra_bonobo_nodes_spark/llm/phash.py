@@ -21,8 +21,7 @@ within the radius shares at least one block — equi-join on (block,
 value), exact hamming filter inside buckets (``bit_count(a XOR b)``,
 JVM-side). :func:`hamming_pairs` is the fingerprint-agnostic form
 (works for ANY integer fingerprint column; ``dedup.simhash_pairs``
-keeps its own inlined copy until its registered rows rotate due —
-the standing low-priority-edit rule).
+delegates to it).
 
 Decode errors follow the codec stub policy (a format is decoded or
 loudly unsupported, never faked): ``on_error='raise'`` (default)

@@ -87,16 +87,6 @@ def bpe_token_count(
     return df.withColumn(out, F.size(bpe_tokens(text_col)).cast("long"))
 
 
-def char_ngrams(text: Column | str, n: int = 5) -> Column:
-    """All character n-grams (shingles) of the normalized text."""
-    c = F.col(text) if isinstance(text, str) else text
-    norm = F.regexp_replace(F.lower(c), r"\s+", " ")
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(1))),
-        lambda i: F.substring(norm, i, n),
-    )
-
-
 def quality_score(
     df: DataFrame, text_col: str = "text", prefix: str = "q_"
 ) -> DataFrame:

@@ -93,55 +93,3 @@ def collect_and_sum(
         else:
             aggs.append(F.sum(F.col(c).cast("double")).alias(alias))
     return df.groupBy(*[F.col(c) for c in cluster_cols]).agg(*aggs)
-
-
-def morton_code(x: Column, y: Column, bits: int = 16) -> Column:
-    """Z-order (Morton) code of two NON-NEGATIVE integer cell
-    coordinates: bit i of x lands at z-bit 2i, bit i of y at 2i+1.
-    Unrolled into ``bits`` shift/mask terms — pure codegen arithmetic,
-    identical to the plain integer-arithmetic form a SQL oracle uses.
-
-    Coordinates outside [0, 2**bits) would silently ALIAS to colliding
-    codes (distant cells landing in the same row groups — exactly the
-    locality failure z-ordering exists to prevent), so the expression
-    fails fast per row instead, matching the engine's other guards
-    (knn_join cartesian, brute_force_topk cap)."""
-    xl, yl = x.cast("long"), y.cast("long")
-    lim = F.lit(1 << bits).cast("long")
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = (
-            z
-            + F.shiftleft(F.shiftright(xl, i).bitwiseAND(F.lit(1)), 2 * i)
-            + F.shiftleft(F.shiftright(yl, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        )
-    ok = (xl >= 0) & (xl < lim) & (yl >= 0) & (yl < lim)
-    return F.when(ok, z).otherwise(
-        F.raise_error(
-            F.format_string(
-                f"morton_code: coordinate out of [0, {1 << bits}) for "
-                f"bits={bits}: x=%s y=%s",
-                xl,
-                yl,
-            )
-        )
-    )
-
-
-def zorder_layout(
-    df: DataFrame,
-    x: Column,
-    y: Column,
-    bits: int = 16,
-    n_partitions: int = 32,
-    z_col: str = "z",
-) -> DataFrame:
-    """Arrange rows in Z-order: compute the Morton code, range-partition
-    on it, sort within each partition. Written as parquet, nearby cells
-    land in the same row groups, so a spatial bbox predicate prunes by
-    min/max statistics instead of scanning — the poor man's spatial
-    index at 100 TB (the engine-side analogue of the reference's
-    reliance on PostGIS GiST, SURVEY §2 spatial-indexing row). One
-    range exchange (sampled boundaries) + local sort; no global sort."""
-    out = df.withColumn(z_col, morton_code(x, y, bits))
-    return out.repartitionByRange(n_partitions, z_col).sortWithinPartitions(z_col)

@@ -14,16 +14,18 @@ rewrite do. This module provides the key and the measurement:
   steps (the standard magic-number spread), pure JVM integer ops
   inside whole-stage codegen; a repartitionByRange/sortWithinPartitions
   or write-time ``sortBy`` on this key IS the clustering step.
+- :func:`zorder_layout` — that clustering step: range-partition and
+  sort a DataFrame on the key.
 - :func:`zone_maps` — per-file min/max stats for the probe columns
   (what the table format stores per file).
 - :func:`probe_scan_counts` — for a set of rectangle predicates,
   how many files a zone-map pruner must read. Run against two
   layouts of the same rows, it turns "is this layout 100 TB-shaped"
-  into a number (the candidate row does exactly that: natural insert
-  order vs Z-order over the same orders table).
+  into a number (the layout_zorder_pruning row does exactly that:
+  natural insert order vs Z-order over the same orders table).
 
 Everything is exact BIGINT bit arithmetic (masks < 2^63, inputs
-contracted to [0, 2^31)), so layouts, zone maps, and scan counts
+guarded to [0, 2^31)), so layouts, zone maps, and scan counts
 replay bit-for-bit in DuckDB.
 """
 
@@ -44,9 +46,7 @@ _SPREAD = (
 MAX_COORD = (1 << 31) - 1
 
 
-def _spread(c: Column) -> Column:
-    # widen first: shiftleft on an INT operand stays INT and overflows
-    m = c.cast("bigint")
+def _spread(m: Column) -> Column:
     for sh, mask in _SPREAD:
         m = m.bitwiseOR(F.shiftleft(m, sh)).bitwiseAND(F.lit(mask))
     return m
@@ -57,9 +57,43 @@ def morton_key(x: Column, y: Column) -> Column:
     bit positions, y the odd — adjacent keys are adjacent in both
     dimensions at every scale. NULL in -> NULL out. The caller
     buckets raw values into the coordinate range (pmod / histogram
-    bin / epoch-day); out-of-contract inputs are the caller's bug —
-    this stays a pure 10-op codegen expression, no branches."""
-    return _spread(x).bitwiseOR(F.shiftleft(_spread(y), 1))
+    bin / epoch-day). A coordinate outside [0, MAX_COORD] would alias
+    to another cell's key (distant cells sharing row groups — the
+    locality failure Z-ordering exists to prevent), so the expression
+    fails per row instead, like the engine's other guards (knn_join
+    cartesian, brute_force_topk cap)."""
+    # widen first: shiftleft on an INT operand stays INT and overflows
+    xl, yl = x.cast("bigint"), y.cast("bigint")
+    z = _spread(xl).bitwiseOR(F.shiftleft(_spread(yl), 1))
+    bad = (xl < 0) | (xl > MAX_COORD) | (yl < 0) | (yl > MAX_COORD)
+    return F.when(
+        bad,
+        F.raise_error(
+            F.format_string(
+                f"morton_key: coordinate out of [0, {MAX_COORD}]: x=%s y=%s",
+                xl,
+                yl,
+            )
+        ),
+    ).otherwise(z)
+
+
+def zorder_layout(
+    df: DataFrame,
+    x: Column,
+    y: Column,
+    n_partitions: int = 32,
+    z_col: str = "z",
+) -> DataFrame:
+    """Arrange rows in Z-order: compute :func:`morton_key`, range-
+    partition on it, sort within each partition. Written as parquet,
+    nearby cells land in the same row groups, so a spatial bbox
+    predicate prunes by min/max statistics instead of scanning — the
+    engine-side analogue of the reference's reliance on PostGIS GiST
+    (SURVEY §2 spatial-indexing row). One range exchange (sampled
+    boundaries) + local sort; no global sort."""
+    out = df.withColumn(z_col, morton_key(x, y))
+    return out.repartitionByRange(n_partitions, z_col).sortWithinPartitions(z_col)
 
 
 def _spread_sql(expr: str) -> str:

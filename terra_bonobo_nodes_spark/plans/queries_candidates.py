@@ -1626,7 +1626,7 @@ _ZO_PROBES = [
 
 def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map pruning comparison (operators/layout.py): morton_key
-    is a 10-op codegen expression; file_assignments MODELS the write
+    is a 10-op codegen expression under a range guard; file_assignments MODELS the write
     (production = repartitionByRange on the key); zone_maps is one
     bounded per-file aggregate; probe_scan_counts is a broadcast
     product of two tiny bounded sides (probes x files). files_natural

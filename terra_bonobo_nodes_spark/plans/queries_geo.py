@@ -795,10 +795,3 @@ def g7_transform_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round(fxy["p"]["y"], 4) + z).alias("py"),
         rt_ok.alias("rt_ok"),
     )
-
-
-# spatial_zorder_code RETIRED round 17 into the registered
-# layout_zorder_pruning (plans/queries_candidates.py): the pruning
-# measurement exercises the SAME morton_code interleave (its zone maps
-# key on the code) AND adds the scan-count value the code row lacked —
-# how many files a z-range probe actually touches. Ledger item 4.

@@ -2024,12 +2024,13 @@ def llm_bm25_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doc_id % 48, so the whole output is a 48-class KAT join. The KAT was
 # generated ONCE from the production path; primary pixel correctness
 # stays pinned against independent references in tests/test_llm_ops.py
-# — the KAT's job is the cross-engine driver hash. Same per-image
-# decode work as the unseeded form (the bench signal is unchanged).
+# — the KAT's job is the cross-engine value hash. Every id still
+# encodes and decodes its own image, so the bench signal is the full
+# codec work.
 # The KAT join key is the sign-safe ((doc_id % m) + m) % m: DuckDB's %
 # returns negative remainders for negative ids while the Spark fn's
 # Python % is always non-negative — same latent oracle-join class as
-# the null-key sweep in tests/test_round16_fixes.py.
+# the null-key sweep in tests/test_oracle_parity.py.
 _CODEC_KAT_ORACLE = """
 WITH kat(k, fmt, enc_bytes, width, height, mean_r, mean_g, mean_b) AS (VALUES
   (0, 'png', 4708, 48, 32, 124.7734, 128.4915, 124.7832),

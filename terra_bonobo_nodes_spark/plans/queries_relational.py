@@ -1080,6 +1080,8 @@ def interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Both user_id joins are null-safe: Spark's groupBy + applyInPandas keeps
+# a NULL user_id as a group of its own, so the oracle must keep it too.
 _ISO_ORACLE = """
 WITH RECURSIVE
 _iso_rows AS (
@@ -1126,38 +1128,18 @@ _iso_blocks(user_id, s, e, num, den, step) AS (
 _iso_final AS (
   SELECT b.* FROM _iso_blocks b
   JOIN (SELECT user_id, max(step) AS ms FROM _iso_blocks GROUP BY 1) m
-    ON m.user_id = b.user_id AND m.ms = b.step
+    ON m.user_id IS NOT DISTINCT FROM b.user_id AND m.ms = b.step
 )
 SELECT r.user_id, r.x, (10 * f.num) // f.den AS y_iso_milli
 FROM _iso_rows r
 JOIN _iso_final f
-  ON f.user_id = r.user_id AND r.pos BETWEEN f.s AND f.e
+  ON f.user_id IS NOT DISTINCT FROM r.user_id AND r.pos BETWEEN f.s AND f.e
 """
-
-# ADVICE_r16 fix (registered at r17 per the ledger): _ISO_ORACLE's two
-# user_id equi-joins drop a NULL-user_id stratum that Spark's groupBy +
-# applyInPandas keeps as a real group — the same latent cross-engine
-# divergence class round 15 fixed in wsample/quantiles/vocab. The
-# null-safe twin below is pinned against the Spark fn on a NULL-group
-# fixture (tests/test_round16_fixes.py); fixtures have no NULL user_id,
-# so both texts hash identically today — the swap is pure null-safety
-# widening, listed in _CHANGED_THIS_ROUND (t6 is an r15 green).
-_ISO_ORACLE_NULLSAFE = _ISO_ORACLE.replace(
-    "ON m.user_id = b.user_id AND m.ms = b.step",
-    "ON m.user_id IS NOT DISTINCT FROM b.user_id AND m.ms = b.step",
-).replace(
-    "ON f.user_id = r.user_id AND r.pos BETWEEN f.s AND f.e",
-    "ON f.user_id IS NOT DISTINCT FROM r.user_id"
-    " AND r.pos BETWEEN f.s AND f.e",
-)
-# both .replace targets must have matched (a drifted _ISO_ORACLE text
-# would silently yield a no-op twin otherwise):
-assert _ISO_ORACLE_NULLSAFE.count("IS NOT DISTINCT FROM") == 2
 
 
 @register(
     "t6_isotonic_value_fit",
-    oracle=_ISO_ORACLE_NULLSAFE,
+    oracle=_ISO_ORACLE,
     tags=("analytics", "grouped-map"),
 )
 def t6_isotonic_value_fit(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,7 +16,7 @@ Plan shape: one read (file listing + footers), one ``repartition(n)``
 round-robin exchange (size-balanced output without a sort), one
 executor-parallel write into the staged dir, three driver-side renames.
 The data never visits the driver. Ordering within the table is NOT
-preserved — pair with :func:`operators.clustering.zorder_layout` when
+preserved — pair with :func:`operators.layout.zorder_layout` when
 a clustered layout should survive compaction.
 """
 

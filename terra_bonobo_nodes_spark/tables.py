@@ -160,10 +160,6 @@ def load_table(
     return _read_parquet_memo(spark, src)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def spread_small_scan(df: DataFrame) -> DataFrame:
     """Redistribute a too-narrow input across the session's cores
     before expensive per-row work (Python kernels, shingle explode +

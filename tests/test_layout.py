@@ -78,6 +78,15 @@ def test_morton_null_propagates(spark):
     )
 
 
+def test_morton_key_out_of_range_raises(spark):
+    """A coordinate outside [0, MAX_COORD] would alias to another
+    cell's key; the key fails per row instead, naming itself."""
+    for x, y in [(-1, 0), (3, 1 << 31)]:
+        df = spark.createDataFrame([(x, y)], "x long, y long")
+        with pytest.raises(Exception, match="morton_key"):
+            df.select(layout.morton_key(F.col("x"), F.col("y"))).collect()
+
+
 def test_file_assignments_deterministic_and_balanced(spark):
     df = spark.range(100).select(F.col("id"))
     a = layout.file_assignments(df, ["id"], 4)

@@ -153,6 +153,16 @@ def test_simhash_block_count_guard(near_dup_docs):
         )
 
 
+def test_minhash_lsh_band_count_guard(near_dup_docs):
+    # a ValueError, not an assert: under python -O a band count that
+    # does not divide n_hashes would truncate rows_per_band and leave
+    # the trailing signature components unbanded
+    with pytest.raises(ValueError, match="bands must divide n_hashes"):
+        dedup.minhash_lsh_pairs(near_dup_docs, "text", "doc_id", n_hashes=10, bands=4)
+    with pytest.raises(ValueError, match="bands must divide n_hashes"):
+        dedup.minhash_lsh_match(near_dup_docs, near_dup_docs, n_hashes=10, bands=4)
+
+
 def test_ngram_jaccard_exact_values(spark):
     docs = spark.createDataFrame(
         [(0, "a b c d"), (1, "a b c e"), (2, "x y z w")], ["doc_id", "text"]

@@ -42,3 +42,90 @@ def test_check_driver_rejects_unknown_names():
     )
     assert r.returncode != 0
     assert "no_such_query j1_boolean_intersetc" in r.stderr, r.stderr[-2000:]
+
+
+def test_iso_oracle_keeps_the_null_user_stratum(spark, tmp_path):
+    """A NULL user_id is a real group for Spark's groupBy+applyInPandas;
+    t6_isotonic_value_fit's oracle must keep it too (null-safe
+    user_id joins), with the same values as the Spark fit."""
+    import duckdb
+    import pandas as pd
+
+    from terra_bonobo_nodes_spark.plans.queries_relational import (
+        _ISO_ORACLE,
+        t6_isotonic_value_fit,
+    )
+    from tests.check_driver import _hash
+
+    # events fixture: one real user with a PAVA violation, one NULL-user
+    # stratum with its own violation (so the NULL group carries real
+    # values, not just row presence).
+    rows = pd.DataFrame(
+        {
+            "user_id": pd.array(
+                [7, 7, 7, None, None, None], dtype="Int64"
+            ),
+            "ts": pd.to_datetime(
+                [
+                    "2024-01-01 00:00:00",
+                    "2024-01-01 00:00:10",
+                    "2024-01-01 00:00:20",
+                    "2024-01-01 00:00:00",
+                    "2024-01-01 00:00:10",
+                    "2024-01-01 00:00:20",
+                ]
+            ),
+            "value": [3.0, 1.0, 2.0, 10.0, 4.0, 40.0],
+        }
+    )
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    spark.createDataFrame(rows).write.parquet(str(sf_dir / "events.parquet"))
+
+    sdf = t6_isotonic_value_fit(spark, str(sf_dir))
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    assert any(r[0] is None for r in srows), "fixture lost its NULL group"
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/events.parquet/*.parquet')"
+    )
+    res = con.execute(_ISO_ORACLE)
+    ocols = [d[0] for d in res.description]
+    orows = res.fetchall()
+    assert sorted(scols) == sorted(ocols)
+    assert len(srows) == len(orows)
+    assert _hash(scols, srows) == _hash(ocols, orows)
+
+
+def test_oracle_join_keys_have_no_nulls_in_fixtures():
+    """Several registered oracles join on plain equality over keys
+    that Spark's groupBy would keep as NULL groups (documents.source/
+    lang, events.user_id/event_type — e.g. the asof rows and the funnel
+    source joins). Every one is LATENT-ONLY because the testdata tables
+    contain no NULLs in those keys. This test pins that assumption: if
+    a testdata regeneration ever ships NULL keys, the latent class goes
+    LIVE and this fails loudly, naming the columns, instead of
+    surfacing as an unexplained hash mismatch later."""
+    import duckdb
+
+    bad = []
+    for table, cols in (
+        ("documents", ["source", "lang"]),
+        ("events", ["user_id", "event_type"]),
+    ):
+        for c in cols:
+            n = duckdb.sql(
+                f"SELECT count(*) FROM read_parquet('{SF_DIR}/{table}.parquet')"
+                f" WHERE {c} IS NULL"
+            ).fetchone()[0]
+            if n:
+                bad.append((table, c, n))
+    assert not bad, (
+        f"NULLs appeared in oracle join keys {bad} — convert the "
+        "plain-equality oracle joins on these columns to IS NOT "
+        "DISTINCT FROM (see t6_isotonic_value_fit's oracle) before "
+        "trusting CORRECTNESS rows that touch them"
+    )

@@ -322,3 +322,41 @@ def test_partition_skew_report_is_distributed_topk(spark):
     hot = [r for r in rep.collect() if r.facet == "hot_key"]
     # keys 0 and 1 have 15 rows, the rest 14 — ties break on the key
     assert [(r.key, r.n_rows) for r in hot] == [("0", 15), ("1", 15), ("2", 14)]
+
+
+def _formatted_plan(df) -> str:
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_record_ops_surface_plan_shape(spark):
+    """The record-ops surface's scale contract: the P5 kept/dropped
+    predicates BOTH push to the parquet scan (the partition-union must
+    not devolve into post-scan filters), joins broadcast, and nothing
+    goes cartesian."""
+    from terra_bonobo_nodes_spark.plans.queries_candidates import (
+        p_record_ops_surface,
+    )
+
+    plan = _formatted_plan(p_record_ops_surface(spark, SF_DIR))
+    assert "Cartesian" not in plan
+    assert "GreaterThan(l_quantity,30.0)" in plan  # kept branch pushed
+    assert "LessThanOrEqual(l_quantity,30.0)" in plan  # dropped branch pushed
+    # column pruning reaches the scan: the mins branch reads 2 columns
+    assert "struct<l_orderkey:bigint,l_quantity:double>" in plan
+
+
+def test_scalar_geometry_surface_plan_shape(spark):
+    from terra_bonobo_nodes_spark.plans.queries_candidates import (
+        g_scalar_geometry_surface,
+    )
+
+    plan = _formatted_plan(g_scalar_geometry_surface(spark, SF_DIR))
+    assert "Cartesian" not in plan
+    # both supplier scans prune to the 2 used columns
+    assert plan.count("struct<s_suppkey:bigint,s_acctbal:double>") >= 2

@@ -210,9 +210,9 @@ def test_rectilinear_union_matches_dissolve(rect_specs):
         )
         for x, y, w, h in rect_specs
     ]
-    grid = ops.union_area(gs)           # coordinate-compressed grid count
+    swept = ops.union_area(gs)          # rect sweep over the decomposition
     dissolved = ops.area(ops.union_dissolve(gs))  # difference-fold overlay
-    assert abs(grid - dissolved) < 1e-6 * max(1.0, grid)
+    assert abs(swept - dissolved) < 1e-6 * max(1.0, swept)
 
 
 # --- PII regex portability (Java ≡ RE2 ≡ Python re on the chosen subset) ----
@@ -311,15 +311,15 @@ def _morton_ref(x: int, y: int, bits: int) -> int:
     )
 )
 @settings(max_examples=15, deadline=None)
-def test_morton_code_bijective_and_matches_reference(spark, pts):
+def test_morton_key_bijective_and_matches_reference(spark, pts):
     from pyspark.sql import functions as F
 
-    from terra_bonobo_nodes_spark.operators.clustering import morton_code
+    from terra_bonobo_nodes_spark.operators.layout import morton_key
 
     df = spark.createDataFrame(pts, "x long, y long")
     got = {
         (r.x, r.y): r.z
-        for r in df.withColumn("z", morton_code(F.col("x"), F.col("y"), 12)).collect()
+        for r in df.withColumn("z", morton_key(F.col("x"), F.col("y"))).collect()
     }
     for x, y in pts:
         assert got[(x, y)] == _morton_ref(x, y, 12)

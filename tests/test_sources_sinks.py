@@ -913,17 +913,6 @@ def test_resample_ffill_observed_null_is_not_a_gap(spark):
     ]
 
 
-def test_morton_code_out_of_range_raises(spark):
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from terra_bonobo_nodes_spark.operators.clustering import morton_code
-
-    df = spark.createDataFrame([(1 << 8, 3)], "x long, y long")
-    with _pytest.raises(Exception, match="morton_code"):
-        df.select(morton_code(F.col("x"), F.col("y"), bits=8)).collect()
-
-
 # --- record linkage ----------------------------------------------------------
 
 

@@ -472,38 +472,15 @@ def test_interval_point_join_no_cartesian_plan(spark):
 # --- Z-order layout ----------------------------------------------------------
 
 
-def test_morton_code_matches_python_reference(spark):
-    from pyspark.sql import functions as F
-
-    from terra_bonobo_nodes_spark.operators.clustering import morton_code
-
-    def ref(x, y, bits=16):
-        z = 0
-        for i in range(bits):
-            z += ((x >> i) & 1) << (2 * i)
-            z += ((y >> i) & 1) << (2 * i + 1)
-        return z
-
-    pts = [(x, y) for x in (0, 1, 3, 5, 255, 511) for y in (0, 2, 5, 170, 511)]
-    df = spark.createDataFrame(pts, "x long, y long")
-    got = {
-        (r.x, r.y): r.z
-        for r in df.withColumn("z", morton_code(F.col("x"), F.col("y"), 16)).collect()
-    }
-    for x, y in pts:
-        assert got[(x, y)] == ref(x, y), (x, y)
-    assert got[(3, 5)] == 39  # worked example: x=011, y=101 interleave
-
-
 def test_zorder_layout_partitions_are_sorted_disjoint_ranges(spark):
     from pyspark.sql import functions as F
 
-    from terra_bonobo_nodes_spark.operators.clustering import zorder_layout
+    from terra_bonobo_nodes_spark.operators.layout import zorder_layout
 
     df = spark.range(2000).select(
         (F.col("id") % 61).alias("x"), ((F.col("id") * 7) % 53).alias("y")
     )
-    laid = zorder_layout(df, F.col("x"), F.col("y"), bits=8, n_partitions=8)
+    laid = zorder_layout(df, F.col("x"), F.col("y"), n_partitions=8)
 
     def per_part(it):
         import pandas as pd
@@ -536,10 +513,10 @@ def test_zorder_layout_partitions_are_sorted_disjoint_ranges(spark):
 # pruned-to-zero pairs at sf0.1).
 
 
-def test_rect_union_area_matches_grid_count_union():
-    """The 4-number sweep must agree with the geometry-level
-    rectilinear union (ops.union_area grid counting) on random rect
-    soups — overlapping, nested, touching, degenerate."""
+def test_rect_union_area_matches_overlay_union():
+    """The 4-number sweep must agree with the independent polygon
+    overlay (area of ops.union_dissolve) on random rect soups —
+    overlapping, nested, touching, degenerate."""
     import random
 
     from terra_bonobo_nodes_spark.geo import ops
@@ -566,8 +543,10 @@ def test_rect_union_area_matches_grid_count_union():
             [r[2] for r in rects],
             [r[3] for r in rects],
         )
-        want = ops.union_area(
-            rect_poly(*r) for r in rects if r[2] > r[0] and r[3] > r[1]
+        want = ops.area(
+            ops.union_dissolve(
+                [rect_poly(*r) for r in rects if r[2] > r[0] and r[3] > r[1]]
+            )
         )
         assert abs(got - want) < 1e-9
 
