@@ -8,7 +8,8 @@ executor core converts the documents of its partitions locally, so a
 many-file ingest (thousands of OSM extracts / zipped shapefiles)
 parallelizes across the cluster and NOTHING is materialized on the
 driver. The injected ``runner`` travels to executors via cloudpickle —
-the same injection seam as the reference's mocked ``subprocess.run``.
+the same injection seam as the reference's mocked ``subprocess.run``;
+``ogr2ogr_runner`` builds the real one.
 """
 
 from __future__ import annotations
@@ -45,6 +46,28 @@ def convert_documents(
             )
 
     return src.mapInPandas(convert, "content string")
+
+
+def ogr2ogr_runner(build_cmd: Callable[[str], list[str]], suffix: str) -> Runner:
+    """The subprocess runner both conversions default to (GDAL required):
+    write the payload to a temp file named ``*{suffix}`` (GDAL picks the
+    input driver by extension), run ``build_cmd(temp_path)`` and return
+    its stdout. A non-zero exit raises ``CalledProcessError``. The
+    placeholder ``cmd`` that ``convert_documents`` passes is ignored:
+    the real command needs the temp path."""
+
+    def run(cmd: list[str], payload: bytes) -> bytes:
+        import subprocess
+        import tempfile
+
+        with tempfile.NamedTemporaryFile(suffix=suffix) as tmp:
+            tmp.write(payload)
+            tmp.flush()
+            return subprocess.run(
+                build_cmd(tmp.name), capture_output=True, check=True
+            ).stdout
+
+    return run
 
 
 def _as_bytes(payload) -> bytes:

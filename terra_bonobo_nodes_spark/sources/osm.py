@@ -18,7 +18,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from terra_bonobo_nodes_spark.sources.convert import convert_documents
+from terra_bonobo_nodes_spark.sources.convert import convert_documents, ogr2ogr_runner
 
 OSM_LAYERS = ("points", "lines", "multilinestrings", "multipolygons", "other_relations")
 
@@ -37,12 +37,6 @@ def overpass_extract(
     return spark.createDataFrame([(query, xml)], "query STRING, xml STRING")
 
 
-import threading as _threading
-
-_OVERPASS_SERVERS: dict[str, str] = {}
-_OVERPASS_LOCK = _threading.Lock()
-
-
 def serve_overpass_xml(path: str) -> str:
     """In-process Overpass stand-in (the ``sql_http.serve_jsonl_table``
     precedent applied to S6): a daemon HTTP server whose
@@ -50,41 +44,24 @@ def serve_overpass_xml(path: str) -> str:
     ``overpass_extract``'s fetch contract — POST body carries the QL
     query, response body is OSM XML — is proven over a REAL socket
     rather than an injected fake. One cached daemon per file path for
-    the process lifetime (repeated driver invocations must not leak a
-    listener per call); returns the endpoint URL."""
+    the process lifetime; returns the endpoint URL."""
     import os
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from terra_bonobo_nodes_spark.sources.sql_http import QuietHandler, serve_memoized
 
     key = os.path.abspath(path)
-    with _OVERPASS_LOCK:
-        if key in _OVERPASS_SERVERS:
-            return _OVERPASS_SERVERS[key]
 
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):  # keep driver/pytest output clean
-                pass
+    class Handler(QuietHandler):
+        def do_POST(self):
+            if self.path != "/api/interpreter":
+                self._reply(404)
+                return
+            # drain the request body (the QL query) per HTTP/1.1
+            self.rfile.read(int(self.headers.get("Content-Length", 0)))
+            with open(key, "rb") as fh:
+                self._reply(200, fh.read(), "application/osm3s+xml")
 
-            def do_POST(self):
-                if self.path != "/api/interpreter":
-                    self.send_response(404)
-                    self.end_headers()
-                    return
-                # drain the request body (the QL query) per HTTP/1.1
-                self.rfile.read(int(self.headers.get("Content-Length", 0)))
-                with open(key, "rb") as fh:
-                    body = fh.read()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/osm3s+xml")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-        srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        threading.Thread(target=srv.serve_forever, daemon=True).start()
-        url = f"http://127.0.0.1:{srv.server_port}/api/interpreter"
-        _OVERPASS_SERVERS[key] = url
-        return url
+    return serve_memoized(("overpass_xml", key), Handler) + "/api/interpreter"
 
 
 def urllib_http_post(url: str, data: str) -> str:
@@ -188,17 +165,8 @@ def osm_xml_to_geojson(
     ingest never lands on the driver.
     """
     if runner is None:
-
-        def runner(cmd: list[str], payload: bytes) -> bytes:  # pragma: no cover
-            import subprocess
-            import tempfile
-
-            with tempfile.NamedTemporaryFile(suffix=".osm") as tmp:
-                tmp.write(payload)
-                tmp.flush()
-                full = build_ogr2ogr_command(tmp.name, layer, all_tags)
-                res = subprocess.run(full, capture_output=True, check=True)
-                return res.stdout
-
+        runner = ogr2ogr_runner(
+            lambda src: build_ogr2ogr_command(src, layer, all_tags), ".osm"
+        )
     cmd = build_ogr2ogr_command("/placeholder/", layer, all_tags)
     return convert_documents(df, xml_col, cmd, runner)

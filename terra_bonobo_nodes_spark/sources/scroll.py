@@ -19,8 +19,8 @@ for the scroll service in this environment; ``fetch_page`` is the seam
 a live deployment overrides with an HTTP/ES client (the subclass is
 cloudpickled to the executors with the source, so clients initialize
 per partition — SURVEY §2.9's per-partition service injection).
-``scroll_http.py`` is the worked live graft: the same reader paging an
-HTTP service, bounds forwarded as query params.
+``sql_http.py`` is the worked live graft: the same reader paging an
+HTTP service in LIMIT/OFFSET windows, bounds forwarded as query params.
 
 Usage::
 
@@ -80,8 +80,8 @@ def _list_pages(path: str) -> list[str]:
 
 
 def _read_page_file(path: str):
-    """JSONL page parse — the one stand-in backend implementation both
-    readers' fetch_page seams delegate to."""
+    """JSONL page parse — the one stand-in backend both readers fetch
+    pages through."""
     with open(path, encoding="utf-8") as fh:
         for line in fh:
             line = line.strip()
@@ -139,9 +139,7 @@ def _arrow_batches(
 
 class ScrollReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict) -> None:
-        if "path" not in options:
-            raise ValueError("tbns_scroll: 'path' option is required")
-        self.path = options["path"]
+        self.path = options.get("path")
         self.id_col = options.get("id_col")
         self._schema = schema
         # (op, value) bounds pushed onto the id column; applied inside
@@ -180,6 +178,8 @@ class ScrollReader(DataSourceReader):
         directory with zero pages is a legitimately empty scroll (the
         extract ran before the first ingest) and scans as 0 rows —
         same contract as the streaming reader's idle state."""
+        if self.path is None:
+            raise ValueError("tbns_scroll: 'path' option is required")
         if not os.path.isdir(self.path):
             raise FileNotFoundError(
                 f"tbns_scroll: page directory does not exist: {self.path}"
@@ -236,7 +236,7 @@ class ScrollStreamReader(DataSourceStreamReader):
     the count of pages consumed, ``latestOffset`` is the service probe
     ("how far has the scroll advanced"), and each micro-batch's
     ``partitions(start, end)`` are the newly arrived pages, fetched on
-    executors through the SAME ``fetch_page`` seam as the batch reader.
+    executors through the same page parse as the batch reader.
     Exactly-once comes from Spark's offset log: a replayed batch
     re-reads the same page range (pages are immutable once written).
 
@@ -291,13 +291,8 @@ class ScrollStreamReader(DataSourceStreamReader):
         new = pages[start["n_pages"] : end["n_pages"]]
         return [PagePartition(start["n_pages"] + i, p) for i, p in enumerate(new)]
 
-    def fetch_page(self, partition: PagePartition) -> Iterator[dict]:
-        """Same client seam as the batch reader: a live deployment
-        overrides this (alone) with its HTTP/ES call."""
-        yield from _read_page_file(partition.path)
-
     def read(self, partition: PagePartition) -> Iterator:
-        yield from _arrow_batches(self.fetch_page(partition), self._schema)
+        yield from _arrow_batches(_read_page_file(partition.path), self._schema)
 
     def commit(self, end: dict) -> None:
         # a live scroll backend would release cursors/acks up to `end`;

@@ -13,7 +13,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-from terra_bonobo_nodes_spark.sources.convert import convert_documents
+from terra_bonobo_nodes_spark.sources.convert import convert_documents, ogr2ogr_runner
 
 
 def build_shapefile_command(zip_path: str, target_srs: str = "EPSG:4326") -> list[str]:
@@ -41,20 +41,8 @@ def zip_shapefile_to_geojson(
     ``convert.convert_documents``), so a directory of zipped shapefiles
     parallelizes across the cluster."""
     if runner is None:
-
-        def runner(cmd: list[str], payload: bytes) -> bytes:  # pragma: no cover
-            import subprocess
-            import tempfile
-
-            with tempfile.NamedTemporaryFile(suffix=".zip") as tmp:
-                tmp.write(payload)
-                tmp.flush()
-                res = subprocess.run(
-                    build_shapefile_command(tmp.name, target_srs),
-                    capture_output=True,
-                    check=True,
-                )
-                return res.stdout
-
+        runner = ogr2ogr_runner(
+            lambda src: build_shapefile_command(src, target_srs), ".zip"
+        )
     cmd = build_shapefile_command("<payload>.zip", target_srs)
     return convert_documents(df, content_col, cmd, runner)

@@ -37,34 +37,6 @@ def sql_extract(
     return df
 
 
-def jdbc_extract(
-    spark: SparkSession,
-    url: str,
-    query: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    **options: str,
-) -> DataFrame:
-    """``ExtractFeatures``-style paginated scan (``terra.py:177-211``):
-    the reference pages by LIMIT/OFFSET (1000 rows, ``terra.py:194``);
-    Spark parallelizes the same scan with partitionColumn bounds — the
-    pagination IS the partitioning. Untested here (no live DB in the
-    environment); the local stand-in for tests is a parquet scan."""
-    reader = spark.read.format("jdbc").option("url", url).option("query", query)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", num_partitions)
-            .option("lowerBound", lower_bound or 0)
-            .option("upperBound", upper_bound or 1_000_000)
-        )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return decimals_to_double(reader.load())
-
-
 @dataclass(frozen=True)
 class JDBCConf:
     """Connector seam for S3/S4 (the ES-seam pattern, ``sinks/es.py``):

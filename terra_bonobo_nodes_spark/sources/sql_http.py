@@ -5,10 +5,12 @@ reference's serial LIMIT/OFFSET feature pagination
 (``ExtractFeatures``, ``terra.py:177-211``: count the queryset, then
 walk it in ``batch_size=1000`` windows, ``terra.py:194``) onto Spark's
 partitioned JDBC scan. No live database exists in this environment, so
-— the ``scroll_http.py`` precedent — this module proves the SAME
-pagination contract end-to-end against a real network service: a
-paginated rows-over-HTTP backend (tests and the registered query run
-it against an in-process stdlib ``http.server``).
+this module proves the SAME pagination contract end-to-end against a
+real network service: a paginated rows-over-HTTP backend (tests and the
+registered query run it against an in-process stdlib ``http.server``).
+It is also the worked live graft of the scroll reader's ``fetch_page``
+seam (``scroll.py``): one GET per partition on the executors, with the
+pushed id bounds forwarded server-side as query parameters.
 
 The mapping, Spark-first:
 
@@ -60,7 +62,8 @@ import math
 import os
 import threading
 from collections.abc import Iterator, Sequence
-from urllib.parse import urlencode
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import parse_qs, urlencode, urlparse
 from urllib.request import urlopen
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader
@@ -71,7 +74,8 @@ from terra_bonobo_nodes_spark.sources.scroll import (
     ScrollReader,
     _arrow_batches,
 )
-from terra_bonobo_nodes_spark.sources.scroll_http import _OP_PARAM
+
+_OP_PARAM = {">": "id_gt", ">=": "id_gte", "<": "id_lt", "<=": "id_lte", "==": "id_eq"}
 
 
 class SqlHttpDataSource(DataSource):
@@ -94,6 +98,40 @@ class SqlHttpDataSource(DataSource):
         return SqlHttpStreamReader(schema, self.options)
 
 
+def _service_options(options: dict) -> tuple[str, int, float]:
+    """``(base_url, batch_size, timeout)`` — the service options both
+    readers take. ``batch_size`` is the reference's ExtractFeatures
+    window size (``terra.py:194``)."""
+    if "base_url" not in options:
+        raise ValueError("tbns_sql_http: 'base_url' option is required")
+    batch_size = int(options.get("batch_size", 1000))
+    if batch_size <= 0:
+        raise ValueError("tbns_sql_http: batch_size must be positive")
+    return (
+        options["base_url"].rstrip("/"),
+        batch_size,
+        float(options.get("timeout", 30)),
+    )
+
+
+def _get_count(url: str, timeout: float) -> int:
+    with urlopen(url, timeout=timeout) as resp:
+        return int(json.load(resp)["count"])
+
+
+def _get_jsonl(url: str, timeout: float) -> list[dict]:
+    """One GET returning one JSON document per line. urllib holds no
+    cross-task state, so an executor needs nothing from the driver but
+    the URL (per-partition client lifecycle, the reference's
+    fresh-cursor-per-chunk, ``terra.py:177-211``)."""
+    with urlopen(url, timeout=timeout) as resp:
+        return [
+            json.loads(line)
+            for line in resp.read().decode("utf-8").splitlines()
+            if line.strip()
+        ]
+
+
 class SqlHttpReader(ScrollReader):
     """ScrollReader with its planning seam re-shaped from page-listing
     to COUNT + LIMIT/OFFSET windows. Pushdown consumption, the
@@ -101,32 +139,21 @@ class SqlHttpReader(ScrollReader):
     re-check are inherited unchanged."""
 
     def __init__(self, schema: StructType, options: dict) -> None:
-        if "base_url" not in options:
-            raise ValueError("tbns_sql_http: 'base_url' option is required")
-        self.base_url = options["base_url"].rstrip("/")
-        self.id_col = options.get("id_col")
-        # the reference's ExtractFeatures window size (terra.py:194)
-        self.batch_size = int(options.get("batch_size", 1000))
-        if self.batch_size <= 0:
-            raise ValueError("tbns_sql_http: batch_size must be positive")
-        self.timeout = float(options.get("timeout", 30))
-        self._schema = schema
-        self.bounds: list[tuple[str, float]] = []
-
-    def _bounds_query(self) -> str:
-        if not self.bounds:
-            return ""
-        return "&" + urlencode([(_OP_PARAM[op], repr(v)) for op, v in self.bounds])
+        super().__init__(schema, options)
+        self.base_url, self.batch_size, self.timeout = _service_options(options)
 
     def partitions(self) -> Sequence[PagePartition]:
         """One partition per LIMIT/OFFSET window. The COUNT probe is
         the single driver-side round-trip (``terra.py:186``); the
         bounds travel with it so count and pages enumerate the same
         queryset."""
-        q = self._bounds_query()
+        q = ""
+        if self.bounds:
+            # the service may apply them (bandwidth) or ignore them
+            # (correctness is kept by the inherited client-side _keep)
+            q = "&" + urlencode([(_OP_PARAM[op], repr(v)) for op, v in self.bounds])
         probe = f"{self.base_url}/count?{q.lstrip('&')}" if q else f"{self.base_url}/count"
-        with urlopen(probe, timeout=self.timeout) as resp:
-            total = int(json.load(resp)["count"])
+        total = _get_count(probe, self.timeout)
         if total == 0:
             return [PagePartition(0, "")]  # empty queryset: 0 rows
         n_pages = math.ceil(total / self.batch_size)
@@ -144,16 +171,9 @@ class SqlHttpReader(ScrollReader):
             for i in range(n_pages)
         ]
 
-    def fetch_page(self, partition: PagePartition) -> Iterator[dict]:
-        """One GET per window, ON the executor owning the partition —
-        urllib holds no cross-task state, so nothing but the URL is
-        serialized from the driver (per-partition client lifecycle,
-        the reference's fresh-cursor-per-chunk, ``terra.py:177-211``)."""
-        with urlopen(partition.path, timeout=self.timeout) as resp:
-            for line in resp.read().decode("utf-8").splitlines():
-                line = line.strip()
-                if line:
-                    yield json.loads(line)
+    def fetch_page(self, partition: PagePartition) -> list[dict]:
+        """One GET per window, ON the executor owning the partition."""
+        return _get_jsonl(partition.path, self.timeout)
 
 
 class SqlHttpStreamReader(DataSourceStreamReader):
@@ -174,39 +194,24 @@ class SqlHttpStreamReader(DataSourceStreamReader):
     and FAILS FAST on any mismatch instead."""
 
     def __init__(self, schema: StructType, options: dict) -> None:
-        if "base_url" not in options:
-            raise ValueError("tbns_sql_http: 'base_url' option is required")
+        self.base_url, self.batch_size, self.timeout = _service_options(options)
         if "id_col" not in options:
             raise ValueError(
                 "tbns_sql_http stream: 'id_col' option is required (the "
                 "append-only cursor column the boundary re-probe checks)"
             )
-        self.base_url = options["base_url"].rstrip("/")
         self.id_col = options["id_col"]
-        self.batch_size = int(options.get("batch_size", 1000))
-        if self.batch_size <= 0:
-            raise ValueError("tbns_sql_http: batch_size must be positive")
-        self.timeout = float(options.get("timeout", 30))
         self._schema = schema
 
-    def _fetch(self, url: str) -> list[dict]:
-        with urlopen(url, timeout=self.timeout) as resp:
-            return [
-                json.loads(line)
-                for line in resp.read().decode("utf-8").splitlines()
-                if line.strip()
-            ]
-
     def _id_at(self, pos: int):
-        rows = self._fetch(f"{self.base_url}/rows?limit=1&offset={pos}")
+        rows = _get_jsonl(f"{self.base_url}/rows?limit=1&offset={pos}", self.timeout)
         return rows[0][self.id_col] if rows else None
 
     def initialOffset(self) -> dict:
         return {"n_rows": 0, "last_id": None}
 
     def latestOffset(self) -> dict:
-        with urlopen(f"{self.base_url}/count", timeout=self.timeout) as resp:
-            n = int(json.load(resp)["count"])
+        n = _get_count(f"{self.base_url}/count", self.timeout)
         return {"n_rows": n, "last_id": self._id_at(n - 1) if n else None}
 
     def partitions(self, start: dict, end: dict) -> Sequence[PagePartition]:
@@ -234,7 +239,7 @@ class SqlHttpStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition: PagePartition) -> "Iterator":
-        yield from _arrow_batches(iter(self._fetch(partition.path)), self._schema)
+        yield from _arrow_batches(_get_jsonl(partition.path, self.timeout), self._schema)
 
     def commit(self, end: dict) -> None:
         # a live backend would advance/ack a server-side cursor here
@@ -248,8 +253,38 @@ class SqlHttpStreamReader(DataSourceStreamReader):
 # column — the smallest thing that honors the protocol above, the way
 # sinks/es.py's keyed document store stands in for a live ES node.
 
-_SERVERS: dict[str, str] = {}
+_SERVERS: dict[tuple, str] = {}
 _SERVERS_LOCK = threading.Lock()
+
+
+class QuietHandler(BaseHTTPRequestHandler):
+    """Request handler base for the in-process stand-in services: no
+    per-request log lines, one call per response."""
+
+    def log_message(self, *a):  # keep driver/pytest output clean
+        pass
+
+    def _reply(self, status: int, body: bytes = b"", content_type: str | None = None):
+        self.send_response(status)
+        if content_type is not None:
+            self.send_header("Content-Type", content_type)
+        self.send_header("Content-Length", str(len(body)))
+        self.end_headers()
+        self.wfile.write(body)
+
+
+def serve_memoized(key: tuple, handler: type[BaseHTTPRequestHandler]) -> str:
+    """Start (or reuse) one daemon ``ThreadingHTTPServer`` per ``key``
+    for the process lifetime; returns its base URL. Callers (registered
+    queries, tests) may be invoked repeatedly and must not leak a
+    listener per call, so ``key`` names everything the handler's
+    responses depend on."""
+    with _SERVERS_LOCK:
+        if key not in _SERVERS:
+            srv = ThreadingHTTPServer(("127.0.0.1", 0), handler)
+            threading.Thread(target=srv.serve_forever, daemon=True).start()
+            _SERVERS[key] = f"http://127.0.0.1:{srv.server_port}"
+        return _SERVERS[key]
 
 
 def _load_rows(path: str, id_col: str) -> list[dict]:
@@ -280,43 +315,22 @@ def _apply_bounds(rows: list[dict], id_col: str, params: dict) -> list[dict]:
 
 def serve_jsonl_table(path: str, id_col: str) -> str:
     """Start (or reuse) the stand-in paginated-SQL service for one JSONL
-    file; returns its base_url. One daemon server per file path for the
-    process lifetime — callers (registered queries, tests) may be
-    invoked repeatedly and must not leak a listener per call."""
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    from urllib.parse import parse_qs, urlparse
-
+    file ordered and bounded by ``id_col``; returns its base_url. One
+    daemon server per (file path, id column) for the process lifetime."""
     key = os.path.abspath(path)
-    with _SERVERS_LOCK:
-        if key in _SERVERS:
-            return _SERVERS[key]
 
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):  # keep driver/pytest output clean
-                pass
+    class Handler(QuietHandler):
+        def do_GET(self):
+            u = urlparse(self.path)
+            params = {k: v[0] for k, v in parse_qs(u.query).items()}
+            rows = _apply_bounds(_load_rows(key, id_col), id_col, params)
+            if u.path == "/count":
+                self._reply(200, json.dumps({"count": len(rows)}).encode())
+            elif u.path == "/rows":
+                lo = int(params.get("offset", 0))
+                hi = lo + int(params.get("limit", len(rows)))
+                self._reply(200, "\n".join(json.dumps(r) for r in rows[lo:hi]).encode())
+            else:
+                self._reply(404)
 
-            def do_GET(self):
-                u = urlparse(self.path)
-                params = {k: v[0] for k, v in parse_qs(u.query).items()}
-                rows = _apply_bounds(_load_rows(key, id_col), id_col, params)
-                if u.path == "/count":
-                    body = json.dumps({"count": len(rows)}).encode()
-                elif u.path == "/rows":
-                    lo = int(params.get("offset", 0))
-                    hi = lo + int(params.get("limit", len(rows)))
-                    body = "\n".join(
-                        json.dumps(r) for r in rows[lo:hi]
-                    ).encode()
-                else:
-                    self.send_response(404)
-                    self.end_headers()
-                    return
-                self.send_response(200)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-        srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        threading.Thread(target=srv.serve_forever, daemon=True).start()
-        _SERVERS[key] = f"http://127.0.0.1:{srv.server_port}"
-        return _SERVERS[key]
+    return serve_memoized(("jsonl_table", key, id_col), Handler)

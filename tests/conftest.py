@@ -1,10 +1,9 @@
 """Shared fixtures: one SparkSession per test session + a DuckDB oracle
-comparator that mirrors the driver's correctness check (row-count,
-column names, order-insensitive value comparison)."""
+comparator that applies the driver's correctness check (row count,
+column names, order-insensitive value hash; tests/check_driver.py)."""
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 from pathlib import Path
@@ -107,38 +106,26 @@ def plans_cross_join(df) -> bool:
     return "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def _canon(v):
-    """Canonicalize a cell for order-insensitive comparison."""
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.9g}"
-    if hasattr(v, "tolist") and not hasattr(v, "isoformat"):
-        # numpy scalar or ndarray (duckdb fetchdf round-trips lists)
-        v = v.tolist()
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon(x) for x in v)
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    if isinstance(v, dict):
-        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
-    return v
+def assert_matches_oracle(spark_df, duck_con, sql: str):
+    """The driver's compare (tests/check_driver.py): same row count,
+    same sorted column names, same order-insensitive value hash of
+    ``collect()`` against ``fetchall()`` (floats at 12 significant
+    digits)."""
+    from tests.check_driver import _hash, _norm
 
+    scols = spark_df.columns
+    srows = [tuple(r) for r in spark_df.collect()]
+    orows = duck_con.execute(sql).fetchall()
+    ocols = [d[0] for d in duck_con.description]
+    assert sorted(scols) == sorted(ocols), f"columns differ: {sorted(scols)} vs {sorted(ocols)}"
+    assert len(srows) == len(orows), f"row count {len(srows)} vs {len(orows)}"
+    if _hash(scols, srows) != _hash(ocols, orows):
 
-def assert_matches_oracle(spark_df, duck_con, sql: str, check_exact: bool = True):
-    """Mirror of the driver's compare: same row count, same column names,
-    same multiset of rows (columns sorted by name; floats canonicalized
-    to 9 significant digits)."""
-    sdf = spark_df.toPandas()
-    odf = duck_con.execute(sql).fetchdf()
-    assert sorted(sdf.columns) == sorted(
-        odf.columns
-    ), f"columns differ: {sorted(sdf.columns)} vs {sorted(odf.columns)}"
-    cols = sorted(sdf.columns)
-    assert len(sdf) == len(odf), f"row count {len(sdf)} vs {len(odf)}"
-    srows = sorted(tuple(_canon(v) for v in row) for row in sdf[cols].itertuples(index=False))
-    orows = sorted(tuple(_canon(v) for v in row) for row in odf[cols].itertuples(index=False))
-    mismatches = [
-        (a, b) for a, b in zip(srows, orows) if a != b
-    ]
-    assert srows == orows, f"value mismatch; first diffs: {mismatches[:3]}"
+        def normed(cols, rows):
+            order = sorted(range(len(cols)), key=lambda i: cols[i])
+            return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
+
+        diffs = [
+            (a, b) for a, b in zip(normed(scols, srows), normed(ocols, orows)) if a != b
+        ]
+        raise AssertionError(f"value hash mismatch; first differing rows: {diffs[:3]}")

@@ -4,6 +4,7 @@ patterns as partition-per-page parallel fetches with filter pushdown)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -59,6 +60,27 @@ def test_scroll_source_leaves_unsupported_filters_to_spark(spark, pages_dir):
     # a non-id filter is NOT consumed by pushFilters; Spark applies it
     df = _read(spark, pages_dir).where(F.col("name") == "doc5")
     assert [r["id"] for r in df.collect()] == [5]
+
+
+def test_scroll_pushed_bound_filters_non_numeric_id(spark, tmp_path):
+    lines = [
+        json.dumps({"id": 1, "name": "a"}),
+        json.dumps({"id": "oops", "name": "b"}),  # malformed upstream hit
+        json.dumps({"id": True, "name": "c"}),  # JSON bool is not an id
+        json.dumps({"id": 7, "name": "d"}),
+    ]
+    (tmp_path / "page-00000.json").write_text("\n".join(lines))
+    spark.dataSource.register(ScrollDataSource)
+    df = (
+        spark.read.format("tbns_scroll")
+        .schema("id BIGINT, name STRING")
+        .option("path", str(tmp_path))
+        .option("id_col", "id")
+        .load()
+        .where(F.col("id") >= 0)  # consumed by pushFilters
+    )
+    # previously: TypeError('>=' between str and int) on the executor
+    assert sorted(r["name"] for r in df.collect()) == ["a", "d"]
 
 
 def test_scroll_source_requires_schema_and_path(spark, pages_dir):
@@ -265,6 +287,33 @@ def test_bulk_writer_append_merges_and_overwrite_replaces(spark, tmp_path):
     assert len(staged) == 1  # superseded staging files removed
 
 
+def test_bulk_writer_gc_orphans_sweeps_crashed_job_leftovers(spark, tmp_path):
+    from terra_bonobo_nodes_spark.sources.scroll import (
+        BulkIndexDataSource,
+        read_bulk_store,
+    )
+
+    spark.dataSource.register(BulkIndexDataSource)
+    d = str(tmp_path / "bulk")
+    stage = os.path.join(d, "_staging")
+    os.makedirs(stage)
+    # a crashed earlier driver's orphan: staged, never committed/aborted
+    orphan = os.path.join(stage, "task-deadbeef0123-00000-1.json")
+    with open(orphan, "w") as fh:
+        fh.write('{"id": 99, "name": "ghost"}\n')
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
+    w = df.write.format("tbns_bulk").mode("append").option("path", d)
+    # default: orphan is invisible to readers but kept on disk
+    w.save()
+    assert os.path.exists(orphan)
+    assert sorted(r["id"] for r in read_bulk_store(d)) == [1, 2]
+    # gc_orphans=true: the next commit sweeps it; committed files stay
+    w.option("gc_orphans", "true").save()
+    assert not os.path.exists(orphan)
+    assert sorted(r["id"] for r in read_bulk_store(d)) == [1, 1, 2, 2]
+
+
 def test_scroll_batch_read_of_empty_directory_is_zero_rows(spark, tmp_path):
     """An existing-but-empty page directory is a legitimately empty
     scroll (extract before first ingest) — 0 rows, not a crash; a
@@ -336,85 +385,6 @@ def test_s10_registered_query_consumes_pushed_bounds(spark):
     assert ">= 100" not in plan  # consumed by pushFilters, not residual
 
 
-def test_http_scroll_live_backend_graft(spark):
-    """The documented live-backend graft (sources/scroll_http.py): an
-    in-process stdlib HTTP service plays the scroll backend; executors
-    fetch one page per partition over real TCP, the pushed id bounds
-    arrive server-side as query params, and the client-side re-check
-    keeps a bound-ignoring service correct."""
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    from urllib.parse import parse_qs, urlparse
-
-    from terra_bonobo_nodes_spark.sources.scroll_http import HttpScrollDataSource
-
-    pages = [
-        "\n".join(
-            json.dumps({"id": p * 4 + i, "name": f"doc{p * 4 + i}"})
-            for i in range(4)
-        )
-        for p in range(3)
-    ]
-    seen_queries: list[dict] = []
-
-    class Handler(BaseHTTPRequestHandler):
-        def log_message(self, *a):  # keep pytest output clean
-            pass
-
-        def do_GET(self):
-            u = urlparse(self.path)
-            if u.path == "/pages":
-                body = json.dumps({"pages": len(pages)}).encode()
-            else:
-                idx = int(u.path.rsplit("/", 1)[1])
-                params = {k: float(v[0]) for k, v in parse_qs(u.query).items()}
-                seen_queries.append(params)
-                lines = []
-                for line in pages[idx].splitlines():
-                    rec = json.loads(line)
-                    if "id_gte" in params and not rec["id"] >= params["id_gte"]:
-                        continue  # the service DOES apply the bound
-                    # id_lt deliberately ignored: the client-side
-                    # _keep re-check must cover for it
-                    lines.append(line)
-                body = ("\n".join(lines)).encode()
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        spark.dataSource.register(HttpScrollDataSource)
-
-        def _load():
-            # fresh load() per logical query: a filterless scan of an
-            # ALREADY-PLANNED Python-source relation reuses the previous
-            # plan, pushed bounds included (upstream caching behavior,
-            # pinned by test_pushed_filters_leak_into_filterless_rescan)
-            return (
-                spark.read.format("tbns_scroll_http")
-                .schema("id BIGINT, name STRING")
-                .option("base_url", f"http://127.0.0.1:{srv.server_port}")
-                .option("id_col", "id")
-                .load()
-            )
-
-        df = _load()
-        assert df.rdd.getNumPartitions() == 3  # one fetch per page
-        bounded = df.where((F.col("id") >= 3) & (F.col("id") < 10))
-        assert sorted(r["id"] for r in bounded.collect()) == list(range(3, 10))
-        # the consumed predicates traveled to the service
-        assert any("id_gte" in q and q["id_gte"] == 3.0 for q in seen_queries)
-        assert any("id_lt" in q and q["id_lt"] == 10.0 for q in seen_queries)
-        # unbounded read (fresh load) still sees everything
-        assert _load().count() == 12
-    finally:
-        srv.shutdown()
-        srv.server_close()
-
-
 def test_pushed_filters_leak_into_filterless_rescan(spark, pages_dir):
     """Documents an UPSTREAM Spark behavior our readers live with: the
     planned scan of a Python data source is cached on the loaded
@@ -431,39 +401,6 @@ def test_pushed_filters_leak_into_filterless_rescan(spark, pages_dir):
     assert df.count() == 7  # UPSTREAM CAVEAT — would be 12 if fixed
     assert df.where(F.col("id") >= 10).count() == 2  # re-plans: correct
     assert _read(spark, pages_dir).count() == 12  # fresh load: correct
-
-
-def test_http_scroll_empty_service_is_zero_rows(spark):
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-    from terra_bonobo_nodes_spark.sources.scroll_http import HttpScrollDataSource
-
-    class Handler(BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
-        def do_GET(self):
-            body = json.dumps({"pages": 0}).encode()
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        spark.dataSource.register(HttpScrollDataSource)
-        df = (
-            spark.read.format("tbns_scroll_http")
-            .schema("id BIGINT")
-            .option("base_url", f"http://127.0.0.1:{srv.server_port}")
-            .load()
-        )
-        assert df.count() == 0
-    finally:
-        srv.shutdown()
-        srv.server_close()
 
 
 # --- tbns_sql_http: LIMIT/OFFSET pagination over HTTP (round 9) --------------
@@ -506,6 +443,30 @@ def test_sql_http_pagination_and_pushdown(spark, tmp_path):
     # bound reaches /count: 4 remaining rows -> ONE window, not three
     assert bounded.rdd.getNumPartitions() == 1
     assert sorted(r["id"] for r in bounded.collect()) == [6, 7, 8, 9]
+
+    # the upper bound travels too: 5 rows in [3, 8) -> two windows, and
+    # 4 rows in [3, 7) -> one (the 7 rows of [3, 10) would need two)
+    window = _sql_http_load(spark, base).where((F.col("id") >= 3) & (F.col("id") < 8))
+    assert window.rdd.getNumPartitions() == 2
+    assert sorted(r["id"] for r in window.collect()) == [3, 4, 5, 6, 7]
+    narrow = _sql_http_load(spark, base).where((F.col("id") >= 3) & (F.col("id") < 7))
+    assert narrow.rdd.getNumPartitions() == 1
+
+
+def test_serve_jsonl_table_keys_its_server_on_the_id_column(tmp_path):
+    """One file served under two id columns gets two servers, each
+    ordering and bounding rows by its own column; a repeated call
+    reuses the server."""
+    from terra_bonobo_nodes_spark.sources.sql_http import _get_jsonl, serve_jsonl_table
+
+    path = tmp_path / "two_keys.jsonl"
+    path.write_text("\n".join(json.dumps({"a": i, "b": 9 - i}) for i in range(3)))
+    url_a = serve_jsonl_table(str(path), "a")
+    url_b = serve_jsonl_table(str(path), "b")
+    assert url_a != url_b
+    assert serve_jsonl_table(str(path), "a") == url_a
+    assert [r["a"] for r in _get_jsonl(f"{url_a}/rows?id_lt=2", 30)] == [0, 1]
+    assert [r["b"] for r in _get_jsonl(f"{url_b}/rows?id_lt=9", 30)] == [7, 8]
 
 
 def test_sql_http_bound_ignoring_service_stays_correct(spark):

@@ -326,6 +326,45 @@ def test_morton_key_bijective_and_matches_reference(spark, pts):
     assert len(set(got.values())) == len(pts)  # injective on the domain
 
 
+# --- HTTP SQL pagination recovers exactly, any window geometry ----------------
+
+
+@settings(max_examples=5, deadline=None)
+@given(
+    n_rows=st.integers(min_value=0, max_value=25),
+    batch=st.integers(min_value=1, max_value=7),
+    bound=st.integers(min_value=-1, max_value=30),
+)
+def test_sql_http_pagination_exact_recovery(spark, tmp_path_factory, n_rows, batch, bound):
+    import json
+
+    from pyspark.sql import functions as F
+
+    from terra_bonobo_nodes_spark.sources.sql_http import (
+        SqlHttpDataSource,
+        serve_jsonl_table,
+    )
+
+    d = tmp_path_factory.mktemp("prop_sqlhttp")
+    path = d / "db.jsonl"
+    path.write_text(
+        "\n".join(json.dumps({"id": i, "name": f"r{i}"}) for i in range(n_rows))
+    )
+    base = serve_jsonl_table(str(path), "id")
+    spark.dataSource.register(SqlHttpDataSource)
+    df = (
+        spark.read.format("tbns_sql_http")
+        .schema("id BIGINT, name STRING")
+        .option("base_url", base)
+        .option("id_col", "id")
+        .option("batch_size", str(batch))
+        .load()
+        .where(F.col("id") > bound)
+    )
+    got = sorted(r["id"] for r in df.collect())
+    assert got == [i for i in range(n_rows) if i > bound]
+
+
 # --- image codecs (round 6: PNG + baseline JPEG) ----------------------------
 
 rgb_image = st.tuples(

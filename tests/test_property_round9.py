@@ -3,21 +3,19 @@
 Same split as test_property_based.py: pure-Python kernels get wide
 random sweeps; Spark-involving properties run a handful of examples
 each (a Spark job per example) and pin structural invariants the
-example-based tests can't sweep — random pagination geometry for the
-HTTP SQL source, random separable data for the classifier parity,
-random vector corpora for the SemDeDup verdict invariants.
+example-based tests can't sweep — random separable data for the
+classifier parity, random vector corpora for the SemDeDup verdict
+invariants.
 """
 
 from __future__ import annotations
 
-import json
 import math
 
 import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 
 # --- pure-Python: token hashing ----------------------------------------------
@@ -41,41 +39,6 @@ def test_token_hash_ids_null_is_empty(dim):
 
     assert _token_hash_ids(None, dim) == []
     assert _token_hash_ids(float("nan"), dim) == []
-
-
-# --- Spark: HTTP SQL pagination recovers exactly, any geometry ----------------
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    n_rows=st.integers(min_value=0, max_value=25),
-    batch=st.integers(min_value=1, max_value=7),
-    bound=st.integers(min_value=-1, max_value=30),
-)
-def test_sql_http_pagination_exact_recovery(spark, tmp_path_factory, n_rows, batch, bound):
-    from terra_bonobo_nodes_spark.sources.sql_http import (
-        SqlHttpDataSource,
-        serve_jsonl_table,
-    )
-
-    d = tmp_path_factory.mktemp("prop_sqlhttp")
-    path = d / "db.jsonl"
-    path.write_text(
-        "\n".join(json.dumps({"id": i, "name": f"r{i}"}) for i in range(n_rows))
-    )
-    base = serve_jsonl_table(str(path), "id")
-    spark.dataSource.register(SqlHttpDataSource)
-    df = (
-        spark.read.format("tbns_sql_http")
-        .schema("id BIGINT, name STRING")
-        .option("base_url", base)
-        .option("id_col", "id")
-        .option("batch_size", str(batch))
-        .load()
-        .where(F.col("id") > bound)
-    )
-    got = sorted(r["id"] for r in df.collect())
-    assert got == [i for i in range(n_rows) if i > bound]
 
 
 # --- Spark: classifier parity on random data ----------------------------------

@@ -4,9 +4,6 @@ described."""
 
 from __future__ import annotations
 
-import json
-import os
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -127,32 +124,6 @@ def test_jpeg_fill_bytes_before_markers_decode_identically():
     assert decode_jpeg(padded) == want
 
 
-# --- ADVICE_r06: scroll pushed bound vs non-numeric id value -------------------
-
-
-def test_scroll_pushed_bound_filters_non_numeric_id(spark, tmp_path):
-    from terra_bonobo_nodes_spark.sources.scroll import ScrollDataSource
-
-    lines = [
-        json.dumps({"id": 1, "name": "a"}),
-        json.dumps({"id": "oops", "name": "b"}),  # malformed upstream hit
-        json.dumps({"id": True, "name": "c"}),  # JSON bool is not an id
-        json.dumps({"id": 7, "name": "d"}),
-    ]
-    (tmp_path / "page-00000.json").write_text("\n".join(lines))
-    spark.dataSource.register(ScrollDataSource)
-    df = (
-        spark.read.format("tbns_scroll")
-        .schema("id BIGINT, name STRING")
-        .option("path", str(tmp_path))
-        .option("id_col", "id")
-        .load()
-        .where(F.col("id") >= 0)  # consumed by pushFilters
-    )
-    # previously: TypeError('>=' between str and int) on the executor
-    assert sorted(r["name"] for r in df.collect()) == ["a", "d"]
-
-
 # --- ADVICE_r06: presig fast-path validation in minhash_lsh_match -------------
 
 
@@ -212,36 +183,6 @@ def test_minhash_lsh_match_accepts_valid_presig(spark):
     )
     slow = minhash_lsh_match(docs, docs, n_hashes=16, bands=4, shingle_n=3)
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
-
-
-# --- ADVICE_r06: bulk-writer staging GC on commit ------------------------------
-
-
-def test_bulk_writer_gc_orphans_sweeps_crashed_job_leftovers(spark, tmp_path):
-    from terra_bonobo_nodes_spark.sources.scroll import (
-        BulkIndexDataSource,
-        read_bulk_store,
-    )
-
-    spark.dataSource.register(BulkIndexDataSource)
-    d = str(tmp_path / "bulk")
-    stage = os.path.join(d, "_staging")
-    os.makedirs(stage)
-    # a crashed earlier driver's orphan: staged, never committed/aborted
-    orphan = os.path.join(stage, "task-deadbeef0123-00000-1.json")
-    with open(orphan, "w") as fh:
-        fh.write('{"id": 99, "name": "ghost"}\n')
-
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
-    w = df.write.format("tbns_bulk").mode("append").option("path", d)
-    # default: orphan is invisible to readers but kept on disk
-    w.save()
-    assert os.path.exists(orphan)
-    assert sorted(r["id"] for r in read_bulk_store(d)) == [1, 2]
-    # gc_orphans=true: the next commit sweeps it; committed files stay
-    w.option("gc_orphans", "true").save()
-    assert not os.path.exists(orphan)
-    assert sorted(r["id"] for r in read_bulk_store(d)) == [1, 1, 2, 2]
 
 
 # --- codec throughput stage (bench row, round 7) ------------------------------

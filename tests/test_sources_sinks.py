@@ -100,6 +100,29 @@ def test_ogr2ogr_command_shapes():
     assert shp[-1] == "/vsizip//tmp/x.zip"
 
 
+def test_ogr2ogr_runner_pipes_the_payload_through_a_temp_file():
+    """The default subprocess runner of both conversions, with a
+    stand-in command: the payload reaches the command as a temp file
+    carrying the input driver's suffix, stdout comes back, the file is
+    removed, and a failing command raises."""
+    import subprocess
+    import sys
+
+    from terra_bonobo_nodes_spark.sources.convert import ogr2ogr_runner
+
+    seen = []
+
+    def build_cmd(path):
+        seen.append(path)
+        return ["cat", path]
+
+    assert ogr2ogr_runner(build_cmd, ".osm")(["unused"], b"<osm/>") == b"<osm/>"
+    assert seen[0].endswith(".osm") and not os.path.exists(seen[0])
+    failing = ogr2ogr_runner(lambda p: [sys.executable, "-c", "raise SystemExit(3)"], ".zip")
+    with pytest.raises(subprocess.CalledProcessError):
+        failing(["unused"], b"PK")
+
+
 FAKE_GEOJSON = json.dumps(
     {
         "type": "FeatureCollection",
