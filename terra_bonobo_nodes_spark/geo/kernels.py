@@ -45,6 +45,27 @@ def _map1(series: pd.Series, fn) -> list:
     return [fn(v) for v in series]
 
 
+def _evaluate_once(fn, return_type):
+    """A pandas UDF over ``fn`` marked non-deterministic, so each row
+    runs it once per query.
+
+    Catalyst does not push a filter through a projection holding a
+    non-deterministic expression, and does not inline such an
+    expression into each of its references. Deterministic, the join-
+    prep kernels ran twice per row: the join's inferred
+    ``isnotnull(prep.bbox)`` filter was pushed below the prep
+    projection, which copied the UDF into a second ArrowEvalPython
+    node under it; ``posexplode`` over a UDF's array does the same
+    with its inferred ``size(...) > 0`` filter. Every Python node costs
+    a worker pass over its rows, so the mark removes the second pass.
+
+    A fresh UDF object is built from ``fn`` because
+    ``asNondeterministic()`` mutates the UDF it is called on: the
+    deterministic UDFs registered under SQL names (``_SQL_FUNCTIONS``)
+    stay as they are."""
+    return pandas_udf(fn, return_type).asNondeterministic()
+
+
 # --- constructors / accessors -----------------------------------------------
 
 
@@ -602,13 +623,10 @@ def _subdivide_areas_udf(max_vertices: int):
         )
 
     _areas.__name__ = f"_st_subdivide_areas_{max_vertices}"
-    # non-deterministic mark (guide §4.4): posexplode over this UDF's
-    # array makes the optimizer infer a size(...) > 0 filter and push
-    # it BELOW the projection, duplicating the whole subdivide chain
-    # into a second ArrowEvalPython node (observed: every row paid the
-    # 12-gon subdivision twice). The mark stops the duplication; empty
-    # arrays still explode to zero rows without the pre-filter.
-    return pandas_udf(ArrayType(DoubleType()))(_areas).asNondeterministic()
+    # posexplode over this array infers a size(...) > 0 filter that
+    # would copy the whole subdivide chain into a second Python node;
+    # empty arrays still explode to zero rows without the pre-filter
+    return _evaluate_once(_areas, ArrayType(DoubleType()))
 
 
 @pandas_udf(BinaryType())
@@ -770,29 +788,37 @@ def st_intersection_area(a, b) -> Column:
     return _st_intersection_area(_col(a), _col(b))
 
 
+# the join-prep kernels feed a join whose inferred bbox filter would
+# otherwise run them twice per row (see _evaluate_once)
+_st_bbox_once = _evaluate_once(_st_bbox.func, ArrayType(DoubleType()))
+_st_bbox_boxy_once = _evaluate_once(_st_bbox_boxy.func, _BBOX_BOXY_T)
+_st_prepare_once = _evaluate_once(_st_prepare.func, PREPARED_T)
+_st_poly_prep_once = _evaluate_once(_st_poly_prep.func, PREPARED_T)
+
+
 def st_bbox(g) -> Column:
     """[xmin, ymin, xmax, ymax], null for empty/unparseable geometry.
     Computed ONCE per row so joins can prefilter pairs JVM-side."""
-    return _st_bbox(_col(g))
+    return _st_bbox_once(_col(g))
 
 
 def st_bbox_boxy(g) -> Column:
     """struct<bbox: array<double>, boxy: boolean> — one parse per row;
     see the kernel docstring for the boxy fast-path contract."""
-    return _st_bbox_boxy(_col(g))
+    return _st_bbox_boxy_once(_col(g))
 
 
 def st_prepare(g) -> Column:
     """struct<geom, bbox, boxy, area>: make_valid + join-prep metadata
     in a single kernel pass."""
-    return _st_prepare(_col(g))
+    return _st_prepare_once(_col(g))
 
 
 def st_poly_prep(xs, ys) -> Column:
     """``st_prepare(st_make_polygon(xs, ys))`` as ONE fused,
     NumPy-vectorized crossing — the fast lane for synthesized
     single-ring polygon columns feeding the spatial joins."""
-    return _st_poly_prep(_col(xs), _col(ys))
+    return _st_poly_prep_once(_col(xs), _col(ys))
 
 
 def st_xy(g) -> Column:

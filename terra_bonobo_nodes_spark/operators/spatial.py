@@ -196,9 +196,9 @@ _LIVE_CACHES: list[DataFrame] = []
 # once. >1 so a MULTI-LEG query, whose operator calls all execute inside
 # ONE final plan, keeps every leg's prep cached; evicting on the next
 # call would make the earlier legs re-run their geometry-kernel prep
-# once per branch. The widest registered queries are the overlay
-# surface (j2_overlay: 3 record + 3 layer caches) and j1 (a broadcast
-# and a grid call: 2 + 2), so 12 keeps every live cache resident while
+# once per branch. Only intersection_percent_by_area persists, and its
+# widest registered user is the overlay surface (j2_overlay: 3 record
+# + 3 layer caches), so 12 keeps every live cache resident while
 # staying a hard bound: a long-lived session holds at most the last few
 # sides, each a narrow (id, struct) frame.
 _MAX_LIVE_CACHES = 12
@@ -306,7 +306,8 @@ def _prepared(
     if isinstance(dt, BinaryType):
         return default(F.col(name)).alias(alias)
     if dt is not None and dt.simpleString() == K.PREPARED_T.simpleString():
-        return F.col(name).alias(alias)
+        # parsed SQL text (the _bbox_overlap rationale)
+        return F.expr(f"`{name.replace('`', '``')}` AS {alias}")
     got = "no such column" if dt is None else dt.simpleString()
     raise ValueError(
         f"spatial join geometry column {name!r} must be binary (WKB) or "
@@ -342,45 +343,38 @@ def boolean_intersect(
     column is prepared here by ``st_bbox_boxy``. Any other type raises
     ValueError.
 
-    Plan: candidate pairs from the bbox join (``cell=None``: broadcast
-    the dimension-sized layer; a positive ``cell``: the big-big grid
-    equi-join, for a layer too large to broadcast — see
-    ``_candidates``), then split: for boxy×boxy pairs (points, grid
-    tiles — see ``st_bbox_boxy``) the bbox overlap IS the exact answer,
-    evaluated wholly in whole-stage codegen; only curvy pairs reach the
-    Python intersects kernel. Both prepared sides are persisted because
-    both branches scan them (scoped: see ``_scoped_persist`` and
-    ``release_spatial_caches``). Rows with no layer match keep
+    Plan: ONE candidate join from the bbox predicate (``cell=None``:
+    broadcast the dimension-sized layer; a positive ``cell``: the
+    big-big grid equi-join, for a layer too large to broadcast — see
+    ``_candidates``) keeps a pair when both sides are boxy (points,
+    grid tiles — see ``st_bbox_boxy``), where the bbox overlap IS the
+    exact answer, or when the Python intersects kernel says so. Neither
+    side is persisted: each is read once. Rows with no layer match keep
     flag=False via left join + coalesce."""
     prep = _with_geom(K.st_bbox_boxy)
-    rec = _scoped_persist(
-        records.select(id_col, _prepared(records, record_geom, "_rx", prep))
-    )
-    lay = _scoped_persist(layer.select(_prepared(layer, layer_geom, "_lx", prep)))
-    cand = _candidates(rec, lay, cell)
-    both_boxy = F.col("_rx.boxy") & F.col("_lx.boxy")
-    fast = cand.filter(both_boxy).select(id_col)
+    rec = records.select(id_col, _prepared(records, record_geom, "_rx", prep))
+    lay = layer.select(_prepared(layer, layer_geom, "_lx", prep))
+    both_boxy = "_rx.boxy AND _lx.boxy"
     # NULL-mask the kernel args on the boxy pairs: Catalyst extracts the
     # pandas UDF out of the Filter into an ArrowEvalPython node that
-    # runs on EVERY candidate row (the ~both_boxy filter evaluates
-    # above it), so without the mask each boxy pair ships its WKB to
-    # Python for an answer the bbox join already gave. Masked args make
-    # those rows a NULL-in/False-out no-op in the kernel (no parse, no
-    # bytes); the ~both_boxy filter still excludes them from the union
-    # either way, so the result is unchanged.
-    slow = (
-        cand.filter(~both_boxy)
-        .filter(
-            K.st_intersects(
-                F.when(~both_boxy, F.col("_rx.geom")),
-                F.when(~both_boxy, F.col("_lx.geom")),
-            )
-        )
-        .select(id_col)
+    # runs on EVERY candidate row, so without the mask each boxy pair
+    # ships its WKB to Python for an answer the bbox join already gave.
+    # Masked args make those rows a NULL-in/False-out no-op in the
+    # kernel (no parse, no bytes); the OR keeps them on both_boxy.
+    # Parsed SQL text (the _bbox_overlap rationale).
+    hit = F.expr(both_boxy) | K.st_intersects(
+        F.expr(f"CASE WHEN NOT ({both_boxy}) THEN _rx.geom END"),
+        F.expr(f"CASE WHEN NOT ({both_boxy}) THEN _lx.geom END"),
     )
-    hits = fast.unionByName(slow).groupBy(id_col).agg(F.lit(True).alias(out))
+    flag = f"`{out.replace('`', '``')}`"
+    hits = (
+        _candidates(rec, lay, cell)
+        .filter(hit)
+        .groupBy(id_col)
+        .agg(F.expr(f"true AS {flag}"))
+    )
     return records.join(hits, on=id_col, how="left").withColumn(
-        out, F.coalesce(F.col(out), F.lit(False))
+        out, F.expr(f"coalesce({flag}, false)")
     )
 
 

@@ -47,7 +47,14 @@ def upsert_last_writer_wins(
     (SURVEY.md §7 hard-part 5).
 
     Scale: one hash partition on the key; AQE handles skewed keys.
+    The rank rides in a working column ``_rn``; a ``df`` that already
+    has one raises ValueError instead of losing it.
     """
+    if "_rn" in df.columns:
+        raise ValueError(
+            "df already has reserved working column '_rn'; rename it "
+            "before upsert_last_writer_wins"
+        )
     w = Window.partitionBy(*key).orderBy(*order_by)
     return (
         df.withColumn("_rn", F.row_number().over(w))

@@ -701,14 +701,16 @@ def s3_http_sql_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = f"{tempfile.gettempdir()}/tbns_sqlhttp_{tag}.jsonl"
-    if not os.path.exists(path):
-        lines = "\n".join(
-            _json_dumps_row(r) for r in sup.orderBy("s_suppkey").collect()
-        )
-        tmp = f"{path}.tmp-{os.getpid()}"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(lines)
-        os.replace(tmp, path)  # atomic publish: readers never see a partial file
+    # ALWAYS rewrite, as s6 does: the file outlives the process, so an
+    # exists-check would serve a stale export once the table at this
+    # sf_dir is regenerated (the server re-reads the file per request)
+    lines = "\n".join(
+        _json_dumps_row(r) for r in sup.orderBy("s_suppkey").collect()
+    )
+    tmp = f"{path}.tmp-{os.getpid()}"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(lines)
+    os.replace(tmp, path)  # atomic publish: readers never see a partial file
     base_url = serve_jsonl_table(path, "s_suppkey")
     spark.dataSource.register(SqlHttpDataSource)
     # the reader implements pushFilters, which HARD-FAILS under a

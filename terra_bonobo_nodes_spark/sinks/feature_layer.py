@@ -4,10 +4,13 @@ Capability parity with the geostore sinks (SURVEY.md §2.2):
 
 - ``LoadFeatureInLayer`` (``terra.py:107-174``): buffered transactional
   delete-then-insert per identifier window. Here: one idempotent MERGE
-  emulated on parquet — dedupe the batch last-writer-wins, anti-join the
-  existing layer, union, overwrite. (With Delta on the cluster this is
-  a literal ``MERGE ON identifier``; parquet emulation keeps the
-  environment dependency-free.)
+  emulated on parquet in one pass — union the existing layer with the
+  batch, hash-partition once on the identifier, keep the batch's last
+  writer per identifier and the existing rows no batch row replaces,
+  overwrite. The batch is read once, so a batch built by Python stages
+  runs them once. (With Delta on the cluster this is a literal
+  ``MERGE ON identifier``; parquet emulation keeps the environment
+  dependency-free.)
 - ``CleanOlderThan`` (``terra.py:497-520``): retention delete by
   timestamp cutoff = filtered rewrite.
 
@@ -22,11 +25,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.geo import wkb as W
-from terra_bonobo_nodes_spark.operators.stateful import upsert_last_writer_wins
 from terra_bonobo_nodes_spark.sinks.atomic import (
     read_parquet_or_none,
     staged_overwrite,
@@ -34,9 +36,57 @@ from terra_bonobo_nodes_spark.sinks.atomic import (
 
 EMPTY_POINT_WKB = W.write_wkb(W.POINT_EMPTY)
 
+# working columns of the merge: which side a row came from (0 = the
+# existing layer, 1 = the batch) and whether the row stays
+_TAG, _KEEP = "_tag", "_keep"
+
 
 def _layer_path(root: str, layer: str) -> str:
     return os.path.join(root, f"layer={layer}")
+
+
+def _merged(
+    existing: DataFrame | None,
+    df: DataFrame,
+    identifier_col: str,
+    geom_col: str,
+    order_col: str | None,
+) -> DataFrame:
+    """The layer after upserting ``df`` into ``existing`` (None: no
+    layer yet), in one pass: one hash partition on the identifier ranks
+    the batch's rows first, last writer (``order_col`` descending)
+    leading. Kept: the first-ranked batch row per identifier (all null
+    identifiers count as one), and every existing row whose identifier
+    is null or touched by no batch row — so existing duplicates survive
+    an upsert that leaves their identifier alone."""
+    for side, frame in (("batch", df), ("existing layer", existing)):
+        clash = {_TAG, _KEEP} & set(frame.columns if frame is not None else ())
+        if clash:
+            raise ValueError(
+                f"{side} already has reserved working column(s) "
+                f"{sorted(clash)}; rename them before load_feature_in_layer"
+            )
+    geom = F.col(geom_col) if geom_col in df.columns else F.lit(None)
+    rows = df.withColumns(
+        {
+            geom_col: F.coalesce(geom, F.lit(EMPTY_POINT_WKB)),
+            "updated_at": F.current_timestamp(),
+            _TAG: F.lit(1),
+        }
+    )
+    if existing is not None:
+        rows = existing.withColumn(_TAG, F.lit(0)).unionByName(
+            rows, allowMissingColumns=True
+        )
+    order = [F.col(order_col).desc()] if order_col else []
+    w = Window.partitionBy(identifier_col).orderBy(F.col(_TAG).desc(), *order)
+    # batch rows rank first, so the identifier's first row tells whether
+    # the batch touches it
+    touched = F.first(_TAG).over(w) == 1
+    keep = F.when(F.col(_TAG) == 1, F.row_number().over(w) == 1).otherwise(
+        F.col(identifier_col).isNull() | ~touched
+    )
+    return rows.withColumn(_KEEP, keep).filter(F.col(_KEEP)).drop(_TAG, _KEEP)
 
 
 def load_feature_in_layer(
@@ -51,32 +101,22 @@ def load_feature_in_layer(
 
     Geometry defaults to POINT EMPTY when absent (``terra.py:167``,
     ``terra.py:24``); ``updated_at`` is stamped for retention. The batch
-    is deduped by identifier first — the reference's window-by-window
+    is deduped by identifier — the reference's window-by-window
     delete+insert double-applies on intra-batch duplicates (SURVEY §7
-    hard-part 5); dedupe makes the upsert exact.
+    hard-part 5); dedupe makes the upsert exact. A batch or layer that
+    already holds one of the merge's working columns (``_tag``,
+    ``_keep``) raises ValueError.
     """
     spark = df.sparkSession
-    out = df
-    if geom_col not in out.columns:
-        out = out.withColumn(geom_col, F.lit(EMPTY_POINT_WKB))
-    else:
-        out = out.withColumn(geom_col, F.coalesce(F.col(geom_col), F.lit(EMPTY_POINT_WKB)))
-    order = [F.col(order_col).desc()] if order_col else [F.lit(1)]
-    out = upsert_last_writer_wins(out, [identifier_col], order)
-    out = out.withColumn("updated_at", F.current_timestamp())
-
     path = _layer_path(root, layer)
     existing = read_layer(spark, root, layer)
+    merged = _merged(existing, df, identifier_col, geom_col, order_col)
     if existing is not None:
-        keep = existing.join(
-            out.select(identifier_col), on=identifier_col, how="left_anti"
-        )
-        merged = keep.unionByName(out, allowMissingColumns=True)
         # the plan reads `path`; staged swap rewrites it without a
         # driver round-trip (executors write {path}__next__, then rename)
         staged_overwrite(merged, path)
     else:
-        out.write.mode("overwrite").parquet(path)
+        merged.write.mode("overwrite").parquet(path)
 
 
 def read_layer(spark: SparkSession, root: str, layer: str) -> DataFrame | None:

@@ -453,6 +453,44 @@ def test_sql_http_pagination_and_pushdown(spark, tmp_path):
     assert narrow.rdd.getNumPartitions() == 1
 
 
+def test_s3_http_sql_pagination_serves_a_regenerated_table(spark, tmp_path):
+    """The row's JSONL export outlives the process, keyed on sf_dir: a
+    table regenerated at the same sf_dir must be served afresh, not
+    from the export of the old table."""
+    import hashlib
+    import shutil
+    import tempfile
+
+    import duckdb
+
+    from terra_bonobo_nodes_spark.plans.registry import all_queries
+    from tests.conftest import SF_DIR, assert_matches_oracle
+
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+    src = os.path.join(sf_dir, "supplier.parquet")
+    shutil.copy(os.path.join(SF_DIR, "supplier.parquet"), src)
+    q = all_queries()["s3_http_sql_pagination"]
+    export = os.path.join(
+        tempfile.gettempdir(),
+        f"tbns_sqlhttp_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}.jsonl",
+    )
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW supplier AS SELECT * FROM '{src}'")
+        assert_matches_oracle(q.spark_fn(spark, sf_dir), con, q.oracle)
+        con.execute(
+            f"COPY (SELECT * REPLACE (s_acctbal + 1 AS s_acctbal) "
+            f"FROM read_parquet('{SF_DIR}/supplier.parquet')) TO '{src}' "
+            "(FORMAT parquet)"
+        )
+        assert_matches_oracle(q.spark_fn(spark, sf_dir), con, q.oracle)
+    finally:
+        con.close()
+        if os.path.exists(export):
+            os.remove(export)
+
+
 def test_serve_jsonl_table_keys_its_server_on_the_id_column(tmp_path):
     """One file served under two id columns gets two servers, each
     ordering and bounding rows by its own column; a repeated call

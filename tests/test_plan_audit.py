@@ -360,3 +360,88 @@ def test_scalar_geometry_surface_plan_shape(spark):
     assert "Cartesian" not in plan
     # both supplier scans prune to the 2 used columns
     assert plan.count("struct<s_suppkey:bigint,s_acctbal:double>") >= 2
+
+
+def _python_nodes(spark, run) -> tuple[dict[str, int], str]:
+    """Run ``run()`` and read the final physical plans of the SQL
+    executions it started from Spark's status store: per Python node,
+    one count for each ``_st_*`` kernel it evaluates and one for a
+    ``MapInPandas`` node. Returns the counts and the plans' text."""
+    import re
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last(k: int) -> list:
+        # the store keeps only the newest executions, so its count stops
+        # growing in a long session: select by execution id instead
+        k = min(store.executionsCount(), k)
+        if k == 0:
+            return []
+        execs = store.executionsList(store.executionsCount() - k, k)
+        return [execs.apply(i) for i in range(execs.size())]
+
+    bus.waitUntilEmpty()
+    before = max((e.executionId() for e in last(1)), default=-1)
+    run()
+    bus.waitUntilEmpty()
+    plans = [e.physicalPlanDescription() for e in last(50) if e.executionId() > before]
+    counts: dict[str, int] = {}
+    for plan in plans:
+        tree, _, details = plan.partition("\n\n(")
+        # an adaptive plan prints its current (or final) plan, then the
+        # initial one; only the first is what ran
+        tree = re.split(r"== (?:Final|Current) Plan ==", tree)[-1]
+        tree = tree.split("== Initial Plan ==")[0]
+        ids = set(re.findall(r"(?:Python|InPandas)\w* \((\d+)\)", tree))
+        for block in ("(" + details).split("\n\n"):
+            m = re.match(r"\((\d+)\) (\w+)", block)
+            if not m or m.group(1) not in ids:
+                continue
+            names = set(re.findall(r"\b(_st_\w+)\(", block))
+            if m.group(2) == "MapInPandas":
+                names.add("MapInPandas")
+            for name in names:
+                counts[name] = counts.get(name, 0) + 1
+    return counts, "\n".join(plans)
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def test_spatial_rows_run_each_prep_kernel_once(spark):
+    """boolean_intersect persists neither side and the join-prep kernels
+    evaluate once per row: j1 (a broadcast and a grid call) runs one
+    point build, one layer prep and one exact kernel per call, g9 and
+    j3 one prep per side."""
+    q = all_queries()
+    counts, plan = _python_nodes(
+        spark, lambda: _noop(q["j1_boolean_intersect"].spark_fn(spark, SF_DIR))
+    )
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+    assert counts == {"_st_point": 2, "_st_poly_prep": 2, "_st_intersects": 2}
+    counts, _ = _python_nodes(
+        spark, lambda: _noop(q["g9_line_clip_length"].spark_fn(spark, SF_DIR))
+    )
+    assert counts["_st_prepare"] == 1 and counts["_st_poly_prep"] == 1
+    counts, _ = _python_nodes(
+        spark, lambda: _noop(q["j3_intersection_geom_area"].spark_fn(spark, SF_DIR))
+    )
+    assert counts["_st_poly_prep"] == 2
+
+
+def test_feature_layer_merge_reads_the_batch_once(spark, tmp_path):
+    """The upsert into an existing layer evaluates a mapInPandas-built
+    batch once: one MapInPandas node, not one per anti-join side."""
+    from terra_bonobo_nodes_spark.sinks.feature_layer import load_feature_in_layer
+
+    s2 = all_queries()["s2_geojson_reader_roundtrip"].spark_fn
+    root = str(tmp_path / "layers")
+
+    def upsert():
+        load_feature_in_layer(s2(spark, SF_DIR), root, "s2", identifier_col="feature_id")
+
+    upsert()  # creates the layer
+    counts, _ = _python_nodes(spark, upsert)
+    assert counts["MapInPandas"] == 1

@@ -10,6 +10,8 @@ import json
 import os
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.geo import wkb as W
@@ -47,6 +49,133 @@ def test_load_feature_upsert(spark, tmp_path):
     # geometry defaulted to POINT EMPTY
     geoms = [r["geom"] for r in read_layer(spark, root, "base").collect()]
     assert all(W.is_empty(W.parse_wkb(g)) for g in geoms)
+
+
+_LAYER_IDS = st.one_of(st.none(), st.sampled_from(["a", "b", "c"]))
+
+
+def _reference_upsert(existing, df, order_col):
+    """The anti-join + union formula the one-pass merge replaced: dedupe
+    the batch last-writer-wins, drop every existing row whose identifier
+    the batch holds, union."""
+    from terra_bonobo_nodes_spark.operators.stateful import upsert_last_writer_wins
+    from terra_bonobo_nodes_spark.sinks.feature_layer import EMPTY_POINT_WKB
+
+    empty = F.lit(EMPTY_POINT_WKB)
+    geom = F.coalesce(F.col("geom"), empty) if "geom" in df.columns else empty
+    order = [F.col(order_col).desc()] if order_col else [F.lit(1)]
+    out = upsert_last_writer_wins(df.withColumn("geom", geom), ["identifier"], order)
+    out = out.withColumn("updated_at", F.current_timestamp())
+    if existing is None:
+        return out
+    keep = existing.join(out.select("identifier"), on="identifier", how="left_anti")
+    return keep.unionByName(out, allowMissingColumns=True)
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    layer=st.one_of(st.none(), st.lists(_LAYER_IDS, max_size=5)),
+    batch=st.lists(
+        st.tuples(_LAYER_IDS, st.one_of(st.none(), st.just(b"g"))), max_size=5
+    ),
+    ordered=st.booleans(),
+    batch_geom=st.booleans(),
+)
+def test_one_pass_merge_matches_anti_join_union(
+    spark, layer, batch, ordered, batch_geom
+):
+    """The one-pass layer merge keeps exactly the rows of the anti-join +
+    union formula: existing null ids all stay, batch null ids collapse
+    to one row, existing duplicates survive when the batch leaves their
+    id alone. Batch rows carry val < 100 and a distinct seq, existing
+    rows val >= 100. Without order_col the surviving batch row per id is
+    any of its rows, in both formulas."""
+    import datetime
+
+    import pandas as pd
+
+    from terra_bonobo_nodes_spark.sinks.feature_layer import _merged
+
+    def frame(rows, schema):
+        # from pandas the frame plans as a local relation: no Python
+        # tasks, so an example costs a fraction of a second
+        names = [f.split()[0] for f in schema.split(", ")]
+        return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+
+    existing = None
+    if layer is not None:
+        stamp = datetime.datetime(2020, 1, 1)
+        existing = frame(
+            [(i, 100 + n, 0, b"old", stamp) for n, i in enumerate(layer)],
+            "identifier string, val int, seq int, geom binary, updated_at timestamp",
+        )
+    rows = [(i, n, n, g) for n, (i, g) in enumerate(batch)]
+    schema = "identifier string, val int, seq int, geom binary"
+    if not batch_geom:
+        rows = [r[:3] for r in rows]
+        schema = schema.rsplit(",", 1)[0]
+    df = frame(rows, schema)
+    order_col = "seq" if ordered else None
+
+    merged = _merged(existing, df, "identifier", "geom", order_col)
+    cols = sorted(c for c in merged.columns if c != "updated_at")
+    # both formulas in one job: side 0 is the merge, side 1 the reference
+    both = merged.select(F.lit(0).alias("_side"), *cols).unionByName(
+        _reference_upsert(existing, df, order_col).select(
+            F.lit(1).alias("_side"), *cols
+        )
+    )
+    out = both.collect()
+    got, want = (
+        sorted((tuple(r)[1:] for r in out if r[0] == side), key=repr)
+        for side in (0, 1)
+    )
+    if ordered:
+        assert got == want
+        return
+
+    # cols: geom, identifier, seq, val — the batch winner per id may differ
+    def split(merged_rows):
+        old = [r for r in merged_rows if r[3] >= 100]
+        new = {r[1]: r for r in merged_rows if r[3] < 100}
+        assert len(new) == len(merged_rows) - len(old)  # one batch row per id
+        return old, new
+
+    (got_old, got_new), (want_old, want_new) = split(got), split(want)
+    assert got_old == want_old and set(got_new) == set(want_new)
+    for ident, (_, _, seq, val) in got_new.items():
+        assert batch[val][0] == ident and seq == val  # one of its own rows
+
+
+def test_load_feature_in_layer_rejects_reserved_columns(spark, tmp_path):
+    """A batch or an existing layer holding one of the merge's working
+    columns fails loudly instead of losing that column."""
+    root = str(tmp_path / "layers")
+    with pytest.raises(ValueError, match="'_tag'"):
+        load_feature_in_layer(
+            spark.createDataFrame([("a", 1)], "identifier string, _tag int"),
+            root,
+            "batch_clash",
+        )
+    spark.createDataFrame([("a", True)], "identifier string, _keep boolean").write.parquet(
+        os.path.join(root, "layer=layer_clash")
+    )
+    with pytest.raises(ValueError, match="'_keep'"):
+        load_feature_in_layer(
+            spark.createDataFrame([("b",)], "identifier string"), root, "layer_clash"
+        )
+
+
+def test_upsert_last_writer_wins_rejects_reserved_rn(spark):
+    from terra_bonobo_nodes_spark.operators.stateful import upsert_last_writer_wins
+
+    df = spark.createDataFrame([("a", 7)], "identifier string, _rn int")
+    with pytest.raises(ValueError, match="'_rn'"):
+        upsert_last_writer_wins(df, ["identifier"], [F.lit(1)])
 
 
 def test_clean_older_than(spark, tmp_path):

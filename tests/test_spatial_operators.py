@@ -218,6 +218,44 @@ def test_grid_strategy_equals_broadcast(spark, cell):
     assert all(abs(g3[k] - b3[k]) < 1e-9 for k in b3)
 
 
+@pytest.mark.parametrize("cell", [None, 4.0])
+def test_boolean_intersect_matches_per_row_reference(spark, cell):
+    """boolean_intersect against the exact per-row answer: a record is
+    flagged iff ``ops.intersects`` holds for some layer geometry, a
+    kernel error counting as False. Mixed rect/L-shape sides cover the
+    boxy×boxy, boxy×curvy and curvy×curvy pairs; a NULL and a
+    malformed WKB on each side must never match."""
+    from terra_bonobo_nodes_spark.geo import ops
+    from terra_bonobo_nodes_spark.operators.spatial import boolean_intersect
+
+    bad = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\xff"  # ring cut short
+    rec_geoms = [*_random_shapes(11, 60, "mixed"), None, bad]
+    lay_geoms = [*_random_shapes(12, 20, "mixed"), None, bad]
+
+    def intersects(a, b) -> bool:
+        try:
+            return ops.intersects(W.parse_wkb(a), W.parse_wkb(b))
+        except Exception:
+            return False
+
+    want = {
+        f"r{i}": any(intersects(g, lg) for lg in lay_geoms)
+        for i, g in enumerate(rec_geoms)
+    }
+    recs = spark.createDataFrame(
+        [(f"r{i}", g) for i, g in enumerate(rec_geoms)],
+        "identifier string, geom binary",
+    )
+    lay = spark.createDataFrame([(g,) for g in lay_geoms], "layer_geom binary")
+    got = dict(
+        boolean_intersect(recs, lay, out="hit", cell=cell)
+        .select("identifier", "hit")
+        .collect()
+    )
+    assert got == want
+    assert any(want.values()) and not all(want.values())
+
+
 def test_cell_alone_plans_the_grid_join(spark):
     """Default-profile coverage of the grid plan over boxy AND curvy
     pairs: ``cell=`` alone selects it (a Generate over the cell
