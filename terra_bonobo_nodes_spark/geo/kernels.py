@@ -494,9 +494,13 @@ def _st_intersects(a: pd.Series, b: pd.Series) -> pd.Series:
 
 @pandas_udf(BinaryType())
 def _st_intersection(a: pd.Series, b: pd.Series) -> pd.Series:
+    # NULL in, NULL out: operators NULL-mask args for pairs the JVM
+    # already answered, and collect_list skips the NULL results
     return pd.Series(
         [
-            W.write_wkb(ops.intersection(W.parse_wkb(x), W.parse_wkb(y)))
+            None
+            if x is None or y is None
+            else W.write_wkb(ops.intersection(W.parse_wkb(x), W.parse_wkb(y)))
             for x, y in zip(a, b)
         ]
     )
@@ -707,21 +711,31 @@ def _st_union_area_agg(g: pd.Series) -> float:
 
 @pandas_udf(DoubleType())
 def _st_rect_union_area_lists(
-    x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series
+    x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series, zones: pd.Series
 ) -> pd.Series:
-    """SCALAR union area of axis-aligned rects given as four ARRAY
-    coordinate columns (one row per group, built by JVM
-    ``collect_list``) — the no-WKB fast lane for dissolve over boxy
-    inputs: only 4 doubles per rect cross into Arrow, and there is one
-    Python invocation per Arrow batch rather than one per group. The
-    sweep sorts its input internally, so the arbitrary collect_list
-    order cannot change the answer."""
-    return pd.Series(
-        [
-            ops.rect_union_area(a, b, c, d)
-            for a, b, c, d in zip(x0, y0, x1, y1)
+    """SCALAR union area of one row's zones: axis-aligned rects given
+    as four ARRAY coordinate columns plus an ARRAY of zone WKBs (one
+    row per group, built by JVM ``collect_list``), one Python
+    invocation per Arrow batch rather than one per group. A row with
+    no zone WKB — every zone a rect — is the rectangle sweep over 4
+    doubles per rect, the no-WKB lane for dissolve over boxy inputs;
+    otherwise the rects, as polygons, join the parsed zones in
+    :func:`ops.union_area`. The sweep sorts its input, so the arbitrary
+    collect_list order cannot change its answer; a union that falls
+    back to the polygon dissection may move in the last bits with it,
+    as the grouped ``st_union_area_agg`` does."""
+
+    def row_area(a, b, c, d, z):
+        if len(z) == 0:
+            return ops.rect_union_area(a, b, c, d)
+        rects = [
+            ("Polygon", [[(p, q), (r, q), (r, s), (p, s), (p, q)]])
+            for p, q, r, s in zip(a, b, c, d)
+            if r > p and s > q
         ]
-    )
+        return ops.union_area(rects + [W.parse_wkb(w) for w in z])
+
+    return pd.Series([row_area(*row) for row in zip(x0, y0, x1, y1, zones)])
 
 
 # --- public column API -------------------------------------------------------
@@ -910,10 +924,13 @@ def st_union_area_agg(g) -> Column:
     return _st_union_area_agg(_col(g))
 
 
-def st_rect_union_area_lists(x0, y0, x1, y1) -> Column:
-    """Union area of one row's rect set given as 4 ARRAY columns, one
-    Python call per Arrow batch; pair with JVM ``collect_list``."""
-    return _st_rect_union_area_lists(_col(x0), _col(y0), _col(x1), _col(y1))
+def st_rect_union_area_lists(x0, y0, x1, y1, zones) -> Column:
+    """Union area of one row's rects, given as 4 ARRAY coordinate
+    columns, and zone WKBs, given as an ARRAY column; one Python call
+    per Arrow batch. Pair with JVM ``collect_list``."""
+    return _st_rect_union_area_lists(
+        _col(x0), _col(y0), _col(x1), _col(y1), _col(zones)
+    )
 
 
 # --- SQL registration --------------------------------------------------------

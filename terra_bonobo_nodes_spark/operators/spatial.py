@@ -190,47 +190,6 @@ def _bbox_overlap(a: str, b: str) -> Column:
     )
 
 
-_LIVE_CACHES: list[DataFrame] = []
-
-# How many spatial-join caches (record and layer sides) may be live at
-# once. >1 so a MULTI-LEG query, whose operator calls all execute inside
-# ONE final plan, keeps every leg's prep cached; evicting on the next
-# call would make the earlier legs re-run their geometry-kernel prep
-# once per branch. Only intersection_percent_by_area persists, and its
-# widest registered user is the overlay surface (j2_overlay: 3 record
-# + 3 layer caches), so 12 keeps every live cache resident while
-# staying a hard bound: a long-lived session holds at most the last few
-# sides, each a narrow (id, struct) frame.
-_MAX_LIVE_CACHES = 12
-
-
-def _scoped_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` for the fast/slow branch reuse below, releasing
-    the OLDEST caches once more than ``_MAX_LIVE_CACHES`` spatial-join
-    invocations are live (ADVICE r01: bounded, not accumulating).
-    Unpersisting a plan that was never materialized is a no-op, so
-    early release only costs a recompute, never correctness."""
-    while len(_LIVE_CACHES) >= _MAX_LIVE_CACHES:
-        old = _LIVE_CACHES.pop(0)
-        try:
-            old.unpersist(False)
-        except Exception:
-            pass
-    _LIVE_CACHES.append(df.persist())
-    return df
-
-
-def release_spatial_caches() -> None:
-    """Explicitly release the record-side caches held by the spatial
-    joins (call after the final action of a pipeline)."""
-    for old in _LIVE_CACHES:
-        try:
-            old.unpersist(False)
-        except Exception:
-            pass
-    _LIVE_CACHES.clear()
-
-
 def _candidates(rec: DataFrame, lay: DataFrame, cell: float | None) -> DataFrame:
     """Candidate pairs of the prepared sides (``_rx`` on ``rec``, ``_lx``
     on ``lay``) whose envelopes overlap. ``cell`` picks the plan:
@@ -348,8 +307,8 @@ def boolean_intersect(
     big-big grid equi-join, for a layer too large to broadcast — see
     ``_candidates``) keeps a pair when both sides are boxy (points,
     grid tiles — see ``st_bbox_boxy``), where the bbox overlap IS the
-    exact answer, or when the Python intersects kernel says so. Neither
-    side is persisted: each is read once. Rows with no layer match keep
+    exact answer, or when the Python intersects kernel says so. Each
+    side is read once, with no cache. Rows with no layer match keep
     flag=False via left join + coalesce."""
     prep = _with_geom(K.st_bbox_boxy)
     rec = records.select(id_col, _prepared(records, record_geom, "_rx", prep))
@@ -408,143 +367,87 @@ def intersection_percent_by_area(
     ``None`` broadcasts the layer, a positive cell size runs the grid
     equi-join.
 
-    When the record is boxy and EVERY layer feature is boxy (one
-    lazily-computed 1-row broadcast scalar), the dissolve zones are
-    bbox-intersection rects built in whole-stage codegen and the
-    per-record union area is a rectangle sweep over 4 doubles — no WKB
-    crosses into Python for those records; any curvy layer feature
-    routes every record through the geometry-kernel path (coarse
-    routing, but then the check costs nothing and the two union paths
-    never mix for one record)."""
+    Plan: ONE candidate join, each side read once, routed per pair.
+    When both sides of a pair are boxy (see ``st_bbox_boxy``) the zone
+    is the bbox-intersection rect, built in whole-stage codegen: its
+    area is closed-form, and under ``dissolve`` the record's rects are
+    unioned by a rectangle sweep over 4 doubles each, so no WKB of a
+    boxy pair crosses into Python. Any other pair goes through the
+    exact geometry kernels (``dissolve`` keeps it only where the
+    geometries intersect). One aggregate per record sums the areas, or
+    unions the rects and zones, and carries the area denominator."""
     # ONE fused kernel pass prepares a WKB record side: make_valid
     # (idempotent, so the reference's per-pair repair collapses to
-    # per-row), bbox, boxy flag, and the area denominator. Both sides
-    # are persisted (scoped) because the fast and slow branches — and
-    # the dissolve routing scalar — each scan them.
-    rec = _scoped_persist(
-        records.select(id_col, _prepared(records, record_geom, "_rx", K.st_prepare))
+    # per-row), bbox, boxy flag, and the area denominator
+    rec = records.select(id_col, _prepared(records, record_geom, "_rx", K.st_prepare))
+    lay = layer.select(
+        _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy))
     )
-    lay = _scoped_persist(
-        layer.select(
-            _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy))
-        )
-    )
-    if dissolve:
-        # Routing scalar: 1 iff EVERY layer feature is boxy (its own
-        # bbox rect) — a lazily-computed 1-row broadcast, the
-        # corpus-stats-scalar pattern. The record SIDE splits before
-        # pair generation: per-record _rx.boxy AND the scalar pick the
-        # path, so no id ever lands in both unions — and the split
-        # must happen pre-join because a post-join filter would still
-        # feed every pair through the extracted st_intersects
-        # ArrowEvalPython node (UDFs inside a Filter evaluate on all
-        # input rows; measured 16s on 550k pruned-to-zero pairs).
-        lab = lay.agg(F.min(F.col("_lx.boxy").cast("int")).alias("_lab"))
-        fastp = F.col("_rx.boxy") & F.coalesce(F.col("_lab") == 1, F.lit(False))
-        rec_flag = rec.crossJoin(F.broadcast(lab))
-        rec_fast = rec_flag.filter(fastp).drop("_lab")
-        rec_slow = rec_flag.filter(~fastp).drop("_lab")
-        # parsed SQL text (the _bbox_overlap rationale): these four
-        # corners are re-referenced by the filter and the select below
-        zx0 = F.expr(
-            "greatest(element_at(_rx.bbox, 1), element_at(_lx.bbox, 1))"
-        )
-        zy0 = F.expr(
-            "greatest(element_at(_rx.bbox, 2), element_at(_lx.bbox, 2))"
-        )
-        zx1 = F.expr(
-            "least(element_at(_rx.bbox, 3), element_at(_lx.bbox, 3))"
-        )
-        zy1 = F.expr(
-            "least(element_at(_rx.bbox, 4), element_at(_lx.bbox, 4))"
-        )
-        # boxy x all-boxy: zone rect in codegen, union area by sweep —
-        # no WKB reaches Python on this path
-        fast_zones = (
-            _candidates(rec_fast, lay, cell)
-            .filter((zx1 > zx0) & (zy1 > zy0))
-            .select(
-                id_col,
-                zx0.alias("_zx0"),
-                zy0.alias("_zy0"),
-                zx1.alias("_zx1"),
-                zy1.alias("_zy1"),
-            )
-            .groupBy(id_col)
-            # JVM collect_list + ONE scalar kernel call per Arrow batch,
-            # not a GROUPED_AGG (one Python invocation PER GROUP): same
-            # sweep over the same multiset (the kernel sorts
-            # internally, so list order is irrelevant), but the
-            # per-group Arrow round-trips collapse into a few batched
-            # ones. collect_list partially aggregates map-side, so the
-            # exchange carries the same 4 doubles per pair either way.
-            .agg(
-                F.collect_list("_zx0").alias("_lx0"),
-                F.collect_list("_zy0").alias("_ly0"),
-                F.collect_list("_zx1").alias("_lx1"),
-                F.collect_list("_zy1").alias("_ly1"),
-            )
-            .select(
-                id_col,
-                K.st_rect_union_area_lists(
-                    F.col("_lx0"), F.col("_ly0"), F.col("_lx1"), F.col("_ly1")
-                ).alias("_zone_area"),
-            )
-        )
-        # general path (a GROUPED_AGG pandas UDF can't mix with JVM
-        # aggregates in one agg — the constant-per-id denominator
-        # joins back from rec below)
-        slow_zones = (
-            _candidates(rec_slow, lay, cell)
-            .filter(K.st_intersects(F.col("_rx.geom"), F.col("_lx.geom")))
-            .withColumn(
-                "_zone", K.st_intersection(F.col("_rx.geom"), F.col("_lx.geom"))
-            )
-            .groupBy(id_col)
-            .agg(K.st_union_area_agg(F.col("_zone")).alias("_zone_area"))
-        )
-        zones = fast_zones.unionByName(slow_zones).join(
-            rec.select(id_col, F.col("_rx.area").alias("_ra")), on=id_col
-        )
-        joined = records.join(zones, on=id_col, how="left")
-        ratio = F.coalesce(F.col("_zone_area") / F.col("_ra"), F.lit(0.0))
-        return joined.withColumn(out, ratio).drop("_zone_area", "_ra")
     cand = _candidates(rec, lay, cell)
-    both_boxy = F.col("_rx.boxy") & F.col("_lx.boxy")
-    # boxy×boxy overlap area is closed-form over the bboxes — evaluated
-    # in whole-stage codegen, no Python; only curvy pairs hit the fused
-    # intersection-area kernel (no exact intersects prefilter there:
-    # empty intersections add 0 to the sum). One parsed expression (the
-    # _bbox_overlap rationale); w/h re-state inline exactly as the
-    # Column form duplicated their subtrees into the when().
-    _w = (
-        "(least(element_at(_rx.bbox, 3), element_at(_lx.bbox, 3)) - "
-        "greatest(element_at(_rx.bbox, 1), element_at(_lx.bbox, 1)))"
+    # parsed SQL text throughout (the _bbox_overlap rationale)
+    both_boxy = "_rx.boxy AND _lx.boxy"
+    # the kernel args are NULL-masked on boxy pairs, as in
+    # boolean_intersect: the extracted Python node runs on EVERY
+    # candidate row, and a NULL arg ships no WKB and skips the parse
+    rx, lx = (
+        F.expr(f"CASE WHEN NOT ({both_boxy}) THEN {side}.geom END")
+        for side in ("_rx", "_lx")
     )
-    _h = (
-        "(least(element_at(_rx.bbox, 4), element_at(_lx.bbox, 4)) - "
-        "greatest(element_at(_rx.bbox, 2), element_at(_lx.bbox, 2)))"
-    )
-    rect_area = F.expr(
-        f"CASE WHEN {_w} > 0 AND {_h} > 0 THEN {_w} * {_h} ELSE 0.0D END"
-    )
-    fast = cand.filter(both_boxy).select(
-        id_col, rect_area.alias("_ia"), F.col("_rx.area").alias("_ra")
-    )
-    slow = cand.filter(~both_boxy).select(
-        id_col,
-        K.st_intersection_area(F.col("_rx.geom"), F.col("_lx.geom")).alias("_ia"),
-        F.col("_rx.area").alias("_ra"),
-    )
-    # the area denominator rides through the aggregate (constant per
-    # id), so no extra kernel pass over the records after the join
-    per_pair = (
-        fast.unionByName(slow)
-        .groupBy(id_col)
-        .agg(F.sum("_ia").alias("_zone_area"), F.max("_ra").alias("_ra"))
-    )
-    joined = records.join(per_pair, on=id_col, how="left")
-    ratio = F.coalesce(F.col("_zone_area") / F.col("_ra"), F.lit(0.0))
+    x0 = "greatest(element_at(_rx.bbox, 1), element_at(_lx.bbox, 1))"
+    y0 = "greatest(element_at(_rx.bbox, 2), element_at(_lx.bbox, 2))"
+    x1 = "least(element_at(_rx.bbox, 3), element_at(_lx.bbox, 3))"
+    y1 = "least(element_at(_rx.bbox, 4), element_at(_lx.bbox, 4))"
+    if dissolve:
+        # a boxy pair with a degenerate rect adds no area and a curvy
+        # pair that does not intersect adds no zone: both are dropped
+        rect = f"{both_boxy} AND {x1} > {x0} AND {y1} > {y0}"
+        corners = ("_zx0", "_zy0", "_zx1", "_zy1")
+        per_id = (
+            cand.filter(F.expr(rect) | K.st_intersects(rx, lx))
+            .select(
+                id_col,
+                *(
+                    F.expr(f"CASE WHEN {both_boxy} THEN {v} END AS {c}")
+                    for v, c in zip((x0, y0, x1, y1), corners)
+                ),
+                K.st_intersection(rx, lx).alias("_zone"),
+                F.expr("_rx.area AS _ra"),
+            )
+            .groupBy(id_col)
+            # JVM collect_list (it skips the NULLs: a boxy pair adds
+            # only its corners, a curvy pair only its zone) + ONE
+            # scalar kernel call per Arrow batch, not a GROUPED_AGG
+            # (one Python invocation PER GROUP); the area denominator
+            # is constant per id and rides through the aggregate
+            .agg(
+                *(F.expr(f"collect_list({c}) AS {c}") for c in corners),
+                F.expr("collect_list(_zone) AS _zones"),
+                F.expr("max(_ra) AS _ra"),
+            )
+            .select(
+                id_col,
+                K.st_rect_union_area_lists(*corners, "_zones").alias("_zone_area"),
+                "_ra",
+            )
+        )
+    else:
+        # no exact intersects prefilter here: an empty intersection
+        # adds 0 to the sum
+        w, h = f"({x1} - {x0})", f"({y1} - {y0})"
+        rect_area = f"CASE WHEN {w} > 0 AND {h} > 0 THEN {w} * {h} ELSE 0.0D END"
+        per_id = (
+            cand.select(
+                id_col,
+                F.when(F.expr(both_boxy), F.expr(rect_area))
+                .otherwise(K.st_intersection_area(rx, lx))
+                .alias("_ia"),
+                F.expr("_rx.area AS _ra"),
+            )
+            .groupBy(id_col)
+            .agg(F.expr("sum(_ia) AS _zone_area"), F.expr("max(_ra) AS _ra"))
+        )
+    joined = records.join(per_id, on=id_col, how="left")
+    ratio = F.expr("coalesce(_zone_area / _ra, 0.0D)")
     return joined.withColumn(out, ratio).drop("_zone_area", "_ra")
 
 
@@ -571,8 +474,8 @@ def intersection_geom(
     (``struct<geom:binary,bbox:array<double>,boxy:boolean,area:double>``,
     what ``st_prepare`` and ``st_poly_prep`` return). A prepared column
     is used as-is, its ``geom`` field feeding the exact kernels; a WKB
-    column is prepared here by ``st_prepare`` (records) or ``st_bbox``
-    (layer). Any other type raises ValueError.
+    column is prepared here by ``st_prepare`` (records) or
+    ``st_bbox_boxy`` (layer). Any other type raises ValueError.
 
     ``cell`` picks the candidate-pair plan as in ``boolean_intersect``:
     ``None`` broadcasts the layer, a positive cell size runs the grid
@@ -580,23 +483,20 @@ def intersection_geom(
     agg = K.st_union_agg if dissolve else K.st_collect_agg
     rec = records.select(id_col, _prepared(records, record_geom, "_rx", K.st_prepare))
     lay = layer.select(
-        _prepared(
-            layer,
-            layer_geom,
-            "_lx",
-            lambda g: F.struct(g.alias("geom"), K.st_bbox(g).alias("bbox")),
-        )
+        _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy))
     )
+    # parsed SQL text (the _bbox_overlap rationale)
+    rg, lg = F.expr("_rx.geom"), F.expr("_lx.geom")
     zones = (
         _candidates(rec, lay, cell)
-        .filter(K.st_intersects(F.col("_rx.geom"), F.col("_lx.geom")))
-        .withColumn("_zone", K.st_intersection(F.col("_rx.geom"), F.col("_lx.geom")))
+        .filter(K.st_intersects(rg, lg))
+        .select(id_col, K.st_intersection(rg, lg).alias("_zone"))
         .groupBy(id_col)
-        .agg(agg(F.col("_zone")).alias("_zone"))
+        .agg(agg(F.expr("_zone")).alias("_zone"))
     )
     dest = geom_dest or record_geom
     return records.join(zones, on=id_col, how="left").withColumn(
-        dest, F.col("_zone")
+        dest, F.expr("_zone")
     ).drop("_zone")
 
 

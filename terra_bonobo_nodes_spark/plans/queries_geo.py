@@ -463,17 +463,14 @@ def j1_boolean_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- J2: intersection percent by area ---------------------------------------
-# The THREE standalone J2 rows (j2_intersection_percent_by_area,
-# j2_concave_overlay_percent, j2_dissolve_overlapping_layer) RETIRED
-# LATE round 17 into the registered j2_overlay_surface
-# (plans/queries_candidates.py) — identical (c_custkey,
+# The three standalone J2 rows (j2_intersection_percent_by_area,
+# j2_concave_overlay_percent, j2_dissolve_overlapping_layer) are
+# retired into the registered j2_overlay_surface
+# (plans/queries_candidates.py): identical (c_custkey,
 # intersection_percent) grain, each leg's fixture and oracle text
 # verbatim under a strategy literal ('pairwise' / 'concave' /
-# 'dissolve'). Registered early (the r18 ledger item 2) because the
-# dissolve rect fast path (operators/spatial.py) changed the three
-# rows' code and the surface is where their changed-code driver row
-# lands. The shared fixtures above (_customer_rects / _tile_layer /
-# _customer_ells / _ell_tile_layer and the RECTS/TILES/ELLS SQL
+# 'dissolve'). The shared fixtures above (_customer_rects / _tile_layer
+# / _customer_ells / _ell_tile_layer and the RECTS/TILES/ELLS SQL
 # constants) stay: g9 and the surface's oracle use them.
 
 

@@ -220,3 +220,31 @@ def test_encode_words_string_id(spark):
     assert "".join(got["doc-a"]).startswith("hug")
     counts = {r.doc_id: r.n_bpe_tokens for r in bpe.bpe_token_count(docs, merges).collect()}
     assert counts["doc-a"] >= 3  # three words at least one token each
+
+
+# --- empty corpus: well-formed results, no crash -----------------------------
+
+
+@pytest.fixture()
+def empty_docs(spark):
+    return spark.createDataFrame([], "doc_id BIGINT, text STRING")
+
+
+def test_bpe_word_frequencies_empty_corpus(spark, empty_docs):
+    wf = bpe.word_frequencies(empty_docs)
+    assert wf.columns == ["word", "n"]
+    assert wf.count() == 0
+
+
+def test_bpe_train_on_empty_frequency_table(spark, empty_docs):
+    assert bpe.train_bpe(bpe.word_frequencies(empty_docs), n_merges=10) == []
+    assert bpe.train_bpe([], n_merges=10) == []
+
+
+def test_bpe_encode_empty_corpus_keeps_schema(spark, empty_docs):
+    enc = bpe.encode_words(empty_docs, merges=[("a", "b")])
+    assert enc.columns == ["doc_id", "bpe_tokens"]
+    assert enc.count() == 0
+    cnt = bpe.bpe_token_count(empty_docs, merges=[])
+    assert cnt.columns == ["doc_id", "n_bpe_tokens"]
+    assert cnt.count() == 0

@@ -67,3 +67,28 @@ def test_result_invariant_under_shuffle_layout(name, spark):
     q = all_queries()[name]
     baseline, hostile = rows_per_layout(spark, lambda: q.spark_fn(spark, SF_DIR))
     assert baseline == hostile, f"{name} result moved with shuffle layout"
+
+
+# --- golden_record: degenerate inputs ----------------------------------------
+
+
+def test_golden_record_empty_input(spark):
+    from terra_bonobo_nodes_spark.operators.linkage import golden_record
+
+    empty = spark.createDataFrame([], "rec_id BIGINT, name STRING")
+    out = golden_record(empty, "rec_id", "name")
+    assert out.columns == ["entity_id", "n_members", "canonical_name"]
+    assert out.count() == 0
+
+
+def test_golden_record_zero_pairs_all_singletons(spark):
+    """No fuzzy match anywhere: every record must still come back as
+    its own entity (the left-join + coalesce path, not a dropped row)."""
+    from terra_bonobo_nodes_spark.operators.linkage import golden_record
+
+    df = spark.createDataFrame(
+        [(1, "alpha"), (2, "zebra"), (3, "quux")], "rec_id BIGINT, name STRING"
+    )
+    out = golden_record(df, "rec_id", "name", max_distance=1)
+    got = {(r["entity_id"], r["n_members"], r["canonical_name"]) for r in out.collect()}
+    assert got == {(1, 1, "alpha"), (2, 1, "zebra"), (3, 1, "quux")}

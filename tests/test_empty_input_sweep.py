@@ -31,7 +31,7 @@ EXPECTED_RAISES: dict[str, type[BaseException]] = {
     # (empty since r13: llm_ivf_ann_topk no longer trains k-means in
     # its registered row — the one-hot centroids= seam means empty
     # corpus -> empty result, the better contract; ivf_train's own
-    # typed empty-input error is still pinned in test_round9_fixes.)
+    # typed empty-input error is still pinned in test_llm_ops.py.)
 }
 
 

@@ -224,6 +224,22 @@ def test_ivf_train_deterministic(spark, sf_dir):
     assert c1 == c2
 
 
+def test_ivf_train_empty_corpus_raises_typed(spark):
+    empty = spark.createDataFrame([], "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    with pytest.raises(ValueError, match="ivf_train"):
+        similarity.ivf_train(empty, n_clusters=4)
+
+
+def test_ivf_train_fewer_vectors_than_clusters_raises_typed(spark):
+    """A corpus smaller than the codebook fails typed, not with an
+    opaque numpy AxisError."""
+    tiny = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    )
+    with pytest.raises(ValueError, match="n_clusters=4"):
+        similarity.ivf_train(tiny, n_clusters=4)
+
+
 def test_embedding_cosine_pairs_symmetric_threshold(spark):
     rows = [
         (0, [1.0, 0.0, 0.0]),

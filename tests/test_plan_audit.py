@@ -431,6 +431,18 @@ def test_spatial_rows_run_each_prep_kernel_once(spark):
     assert counts["_st_poly_prep"] == 2
 
 
+def test_overlay_surface_reads_each_side_once(spark):
+    """intersection_percent_by_area persists neither side and builds one
+    candidate join per call: the three legs of j2_overlay_surface run
+    one prep per side each, and the dissolve leg's union needs no
+    grouped aggregate."""
+    run = all_queries()["j2_overlay_surface"].spark_fn
+    counts, plan = _python_nodes(spark, lambda: _noop(run(spark, SF_DIR)))
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+    assert counts["_st_poly_prep"] == 6
+    assert "_st_union_area_agg" not in plan
+
+
 def test_feature_layer_merge_reads_the_batch_once(spark, tmp_path):
     """The upsert into an existing layer evaluates a mapInPandas-built
     batch once: one MapInPandas node, not one per anti-join side."""

@@ -589,6 +589,58 @@ def test_es_conf_seam_option_mapping():
     assert ESConf().backend == "parquet"
 
 
+# --- CSV documents: header contract -----------------------------------------
+# An explicit ``header=`` keeps an all-empty corpus well-formed (zero
+# rows, the declared columns) and builds the plan without a driver-side
+# probe; without one, an all-empty corpus fails fast and typed instead
+# of returning a schema-less DataFrame.
+
+
+def _csv_docs(spark, contents):
+    return spark.createDataFrame([(c,) for c in contents], "content STRING")
+
+
+def test_csv_explicit_header_parses_without_probe(spark):
+    from terra_bonobo_nodes_spark.sources.csv import csv_documents_to_rows
+
+    docs = _csv_docs(spark, ["a,b\n1,2\n3,4"])
+    out = csv_documents_to_rows(docs, "content", header=["a", "b"])
+    assert out.columns == ["a", "b"]
+    rows = {(r["a"], r["b"]) for r in out.collect()}
+    assert rows == {("1", "2"), ("3", "4")}
+
+
+def test_csv_empty_corpus_with_header_keeps_declared_columns(spark):
+    """The reference contract (test_common.py:34-40): empty CSV -> no
+    rows, but the stream stays well-formed — here, the declared schema
+    survives so downstream column references resolve."""
+    from terra_bonobo_nodes_spark.sources.csv import csv_documents_to_rows
+
+    docs = _csv_docs(spark, ["", ""])
+    out = csv_documents_to_rows(docs, "content", header=["event_id", "kind"])
+    assert out.columns == ["event_id", "kind"]
+    assert out.count() == 0
+    # a column reference on the empty result must resolve
+    assert out.where(F.col("event_id").isNotNull()).count() == 0
+
+
+def test_csv_empty_corpus_without_header_fails_typed(spark):
+    from terra_bonobo_nodes_spark.sources.csv import csv_documents_to_rows
+
+    docs = _csv_docs(spark, ["", ""])
+    with pytest.raises(ValueError, match="header"):
+        csv_documents_to_rows(docs, "content")
+
+
+def test_csv_header_inference_fallback_still_works(spark):
+    from terra_bonobo_nodes_spark.sources.csv import csv_documents_to_rows
+
+    docs = _csv_docs(spark, ["", "x,y\n7,8"])  # first doc empty: probe skips it
+    out = csv_documents_to_rows(docs, "content")
+    assert out.columns == ["x", "y"]
+    assert [(r["x"], r["y"]) for r in out.collect()] == [("7", "8")]
+
+
 # --- S9: JSONL ---------------------------------------------------------------
 
 
@@ -718,6 +770,14 @@ def test_compact_parquet_dir_noop_when_already_compact(spark, tmp_path):
     tgt = str(tmp_path / "ok")
     spark.range(100).coalesce(1).write.parquet(tgt)
     assert compact_parquet_dir(spark, tgt) == -1  # single file: nothing to do
+
+
+def test_compact_parquet_dir_empty_dir_is_noop(spark, tmp_path):
+    from terra_bonobo_nodes_spark.sinks.compact import compact_parquet_dir
+
+    d = tmp_path / "empty_table"
+    d.mkdir()
+    assert compact_parquet_dir(spark, str(d)) == -1  # 0 files < min_files
 
 
 def test_compact_parquet_dir_sort_cols_restore_clustering(spark, tmp_path):

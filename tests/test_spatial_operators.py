@@ -541,14 +541,13 @@ def test_zorder_layout_partitions_are_sorted_disjoint_ranges(spark):
         assert h1 <= l2, "range partitions overlap"  # disjoint min/max stats
 
 
-# --- dissolve rect fast path (late r17) --------------------------------------
-# When the record is boxy and every layer feature is boxy, dissolve
-# zones are bbox-intersection rects built in codegen and the union
-# area is ops.rect_union_area — no WKB reaches Python on that route.
-# The routing splits the RECORD side before pair generation: a
-# post-join filter would still feed every pair through the extracted
-# st_intersects ArrowEvalPython (measured: 16s over 550k
-# pruned-to-zero pairs at sf0.1).
+# --- per-pair routing in intersection_percent_by_area -----------------------
+# A pair whose two sides are boxy gets its zone as the bbox-intersection
+# rect, built in codegen; every other pair goes through the exact
+# kernels on NULL-masked args. Under dissolve a record whose zones are
+# all rects is measured by ops.rect_union_area, so no WKB reaches Python
+# for it; a record with any kernel zone unions its rects and zones in
+# ops.union_area.
 
 
 def test_rect_union_area_matches_overlay_union():
@@ -590,13 +589,13 @@ def test_rect_union_area_matches_overlay_union():
 
 
 def test_dissolve_rect_fast_routing_parity(spark):
-    """Three routings must agree exactly: all-boxy layer (every record
-    on the rect path), a curvy layer feature (layer scalar flips — all
-    records on the kernel path), and a curvy RECORD among boxy ones
-    (record-level split, both paths live in one query). The ground
-    truth for each is the kernel path, forced through the
-    prepared-geometry contract by handing in records whose prep says
-    boxy=False."""
+    """Three layouts must agree exactly with the kernel path: an
+    all-boxy layer (every pair on the rect lane), a curvy layer feature
+    among boxy ones (a boxy record unions rects and a kernel zone), and
+    a curvy RECORD among boxy ones (its pairs all take the kernel
+    path). The ground truth for each is the kernel path, forced
+    through the prepared-geometry contract by handing in records whose
+    prep says boxy=False."""
     from terra_bonobo_nodes_spark.geo import wkb as W
     from terra_bonobo_nodes_spark.operators.spatial import (
         intersection_percent_by_area,
@@ -622,9 +621,9 @@ def test_dissolve_rect_fast_routing_parity(spark):
         return dict(out.select("identifier", "intersection_percent").collect())
 
     for rec_rows, lay_rows in [
-        (boxy_rec, lay_rects),  # pure fast path
-        (boxy_rec, lay_rects + [(tri,)]),  # curvy layer -> all slow
-        (boxy_rec + [("tri", tri)], lay_rects),  # record-level split
+        (boxy_rec, lay_rects),  # rect lane only
+        (boxy_rec, lay_rects + [(tri,)]),  # rects and zones in one union
+        (boxy_rec + [("tri", tri)], lay_rects),  # a curvy record
     ]:
         fast = vals(rec_rows, lay_rows, True)
         truth = vals(rec_rows, lay_rows, False)
@@ -633,6 +632,56 @@ def test_dissolve_rect_fast_routing_parity(spark):
             assert abs(fast[k] - truth[k]) < 1e-12, (k, fast[k], truth[k])
         # overlapping tiles: the union must never exceed 100%
         assert all(v <= 1.0 + 1e-9 for v in fast.values())
+
+
+@pytest.mark.parametrize("cell", [None, 4.0])
+@pytest.mark.parametrize("dissolve", [False, True])
+def test_per_pair_routing_matches_the_kernel_path(spark, dissolve, cell):
+    """Natural routing (boxy pairs closed-form in codegen, the rest
+    through the exact kernels) must agree with the kernel path, forced
+    by records whose prep says boxy=False. Seeded rect records meet a
+    mixed rect/L-shape layer, so most records have candidates of both
+    kinds; a curvy record would take the kernel path under either
+    routing and add nothing to the comparison."""
+    from terra_bonobo_nodes_spark.geo import ops
+    from terra_bonobo_nodes_spark.operators.spatial import (
+        intersection_percent_by_area,
+    )
+
+    rec_geoms = _random_shapes(31, 60, "rects")
+    lay_geoms = _random_shapes(32, 40, "mixed")
+    # the case per-pair routing creates: a boxy record whose envelope
+    # overlaps a boxy and a curvy layer feature
+    shapes = [W.parse_wkb(g) for g in lay_geoms]
+
+    def overlaps(a, b):
+        ba, bb = ops.bbox(a), ops.bbox(b)
+        return ba[0] <= bb[2] and bb[0] <= ba[2] and ba[1] <= bb[3] and bb[1] <= ba[3]
+
+    kinds = [
+        {ops.as_axis_rect(lg) is not None for lg in shapes if overlaps(g, lg)}
+        for g in map(W.parse_wkb, rec_geoms)
+    ]
+    assert sum(k == {True, False} for k in kinds) >= 10
+
+    rec = spark.createDataFrame(
+        [(f"r{i}", g) for i, g in enumerate(rec_geoms)],
+        "identifier string, geom binary",
+    )
+    lay = spark.createDataFrame([(g,) for g in lay_geoms], "layer_geom binary")
+
+    def vals(r):
+        out = intersection_percent_by_area(r, lay, dissolve=dissolve, cell=cell)
+        return dict(out.select("identifier", "intersection_percent").collect())
+
+    natural = vals(rec)
+    forced = vals(
+        rec.withColumn("geom", K.st_prepare("geom").withField("boxy", F.lit(False)))
+    )
+    assert natural.keys() == forced.keys() == {f"r{i}" for i in range(60)}
+    assert sum(v > 0 for v in natural.values()) >= 20
+    for k in forced:
+        assert abs(natural[k] - forced[k]) < 1e-9, (k, natural[k], forced[k])
 
 
 def test_dissolve_rect_fast_plan_carries_the_sweep_agg(spark):
