@@ -20,8 +20,9 @@ match, and the WKB convention is what ``ST_GeomFromWKB`` expects.
 
 Overlay semantics: convex and rectilinear configurations produce exact
 merged output (Sutherland-Hodgman / closed-form rect paths); general
-concave results are area-exact DISSECTIONS (adjacent pieces from
-triangulated clipping — correct region, dissected boundary). Area,
+concave results are area-exact DISSECTIONS (adjacent convex trapezoids
+from one vertical slab sweep, even-odd fill per polygon part — correct
+region, dissected boundary). Area,
 centroid, containment, and further overlay over dissections are exact;
 code needing a single merged boundary is the Sedona swap's territory.
 """

@@ -710,32 +710,39 @@ def _st_union_area_agg(g: pd.Series) -> float:
 
 
 @pandas_udf(DoubleType())
-def _st_rect_union_area_lists(
-    x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series, zones: pd.Series
+def _st_covered_area_lists(
+    record: pd.Series,
+    x0: pd.Series,
+    y0: pd.Series,
+    x1: pd.Series,
+    y1: pd.Series,
+    layers: pd.Series,
 ) -> pd.Series:
-    """SCALAR union area of one row's zones: axis-aligned rects given
-    as four ARRAY coordinate columns plus an ARRAY of zone WKBs (one
-    row per group, built by JVM ``collect_list``), one Python
-    invocation per Arrow batch rather than one per group. A row with
-    no zone WKB — every zone a rect — is the rectangle sweep over 4
-    doubles per rect, the no-WKB lane for dissolve over boxy inputs;
-    otherwise the rects, as polygons, join the parsed zones in
-    :func:`ops.union_area`. The sweep sorts its input, so the arbitrary
-    collect_list order cannot change its answer; a union that falls
-    back to the polygon dissection may move in the last bits with it,
-    as the grouped ``st_union_area_agg`` does."""
+    """SCALAR area of one record covered by its layer features: the
+    record's WKB, the exact zones of its rect pairs as four ARRAY
+    coordinate columns, and an ARRAY of the other features' WKBs (one
+    row per record, built by JVM ``collect_list``), one Python
+    invocation per Arrow batch rather than one per group. A row with no
+    feature WKB (every zone a rect; the record may then be NULL) is the
+    rectangle sweep over 4 doubles per rect, the no-WKB lane for
+    dissolve over boxy inputs; otherwise the record is measured against
+    the rects, as polygons, and the parsed features in one
+    :func:`ops.covered_area` sweep. Both sweeps sort their input, so
+    the arbitrary collect_list order cannot change the region; the
+    polygon sweep's sum may move in the last bits with it."""
 
-    def row_area(a, b, c, d, z):
+    def row_area(g, a, b, c, d, z):
         if len(z) == 0:
             return ops.rect_union_area(a, b, c, d)
         rects = [
             ("Polygon", [[(p, q), (r, q), (r, s), (p, s), (p, q)]])
             for p, q, r, s in zip(a, b, c, d)
-            if r > p and s > q
         ]
-        return ops.union_area(rects + [W.parse_wkb(w) for w in z])
+        return ops.covered_area(
+            W.parse_wkb(g), rects + [W.parse_wkb(w) for w in z]
+        )
 
-    return pd.Series([row_area(*row) for row in zip(x0, y0, x1, y1, zones)])
+    return pd.Series([row_area(*row) for row in zip(record, x0, y0, x1, y1, layers)])
 
 
 # --- public column API -------------------------------------------------------
@@ -924,12 +931,13 @@ def st_union_area_agg(g) -> Column:
     return _st_union_area_agg(_col(g))
 
 
-def st_rect_union_area_lists(x0, y0, x1, y1, zones) -> Column:
-    """Union area of one row's rects, given as 4 ARRAY coordinate
-    columns, and zone WKBs, given as an ARRAY column; one Python call
-    per Arrow batch. Pair with JVM ``collect_list``."""
-    return _st_rect_union_area_lists(
-        _col(x0), _col(y0), _col(x1), _col(y1), _col(zones)
+def st_covered_area_lists(record, x0, y0, x1, y1, layers) -> Column:
+    """Area of a record covered by its layer features: the record WKB,
+    rect zones given as 4 ARRAY coordinate columns, and feature WKBs
+    given as an ARRAY column; one Python call per Arrow batch. Pair
+    with JVM ``collect_list``."""
+    return _st_covered_area_lists(
+        _col(record), _col(x0), _col(y0), _col(x1), _col(y1), _col(layers)
     )
 
 

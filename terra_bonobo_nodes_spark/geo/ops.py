@@ -2,11 +2,14 @@
 
 Implements the scalar semantics the reference delegates to GEOS/PostGIS
 (SURVEY.md §2.4/§2.6): area, centroid, distance, intersects, a full
-polygon overlay (intersection/difference for concave×concave with
-holes via ear-clip triangulation, line×polygon clipping, true cascaded
-union), Douglas-Peucker simplify, web-mercator transform,
-snap-to-grid, subdivision. Rectilinear shapes take closed-form paths
-(rect decomposition, a rect-union sweep) that skip clipping entirely. Pure
+polygon overlay (intersection/difference/union for concave×concave with
+holes, line×polygon clipping), Douglas-Peucker simplify, web-mercator
+transform, snap-to-grid, subdivision. One exact core serves every
+general polygon area and overlay: a vertical slab sweep
+(:func:`_slab_sweep`) that sums or emits the trapezoids a predicate over
+the inputs' even-odd cover picks. Convex clips take one Sutherland-
+Hodgman pass, and rectilinear shapes take closed-form paths (rect
+decomposition, a rect-union sweep) that skip clipping entirely. Pure
 Python/stdlib — vectorization happens at the Arrow batch boundary in
 ``kernels``.
 """
@@ -341,182 +344,118 @@ def is_convex(ring) -> bool:
     return True
 
 
-# --- triangulation (ear clipping with hole bridging) -------------------------
+# --- slab sweep: the one exact area and overlay core -------------------------
 
 
-def _open_ring(ring, ccw: bool) -> list:
-    """Ring → open 2D vertex list with consecutive duplicates dropped,
-    oriented CCW (ccw=True) or CW (holes)."""
-    pts = [tuple(p[:2]) for p in ring]
-    if len(pts) > 1 and pts[0] == pts[-1]:
-        pts.pop()
-    out = []
-    for p in pts:
-        if not out or abs(p[0] - out[-1][0]) > EPS or abs(p[1] - out[-1][1]) > EPS:
-            out.append(p)
-    if len(out) > 1 and abs(out[0][0] - out[-1][0]) <= EPS and abs(out[0][1] - out[-1][1]) <= EPS:
-        out.pop()
-    if len(out) < 3:
-        return []
-    if (_ring_area2(out + [out[0]]) > 0) != ccw:
-        out.reverse()
-    return out
+def _any(c) -> bool:
+    return c[0] > 0
 
 
-def _cross(o, a, b) -> float:
-    return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
+def _both(c) -> bool:
+    return c[0] > 0 and c[1] > 0
 
 
-def _pt_in_tri(p, a, b, c) -> bool:
-    """Strictly-ish inside (boundary within EPS does not count)."""
-    d1, d2, d3 = _cross(a, b, p), _cross(b, c, p), _cross(c, a, p)
-    return d1 > EPS and d2 > EPS and d3 > EPS
+def _first_only(c) -> bool:
+    return c[0] > 0 and c[1] == 0
 
 
-def _pt_in_tri_on(p, a, b, c) -> bool:
-    """Inside-or-on-boundary (earcut's ear-blocking rule: a vertex ON
-    the candidate ear's edge blocks it — it may be a reflex corner the
-    boundary passes through)."""
-    d1, d2, d3 = _cross(a, b, p), _cross(b, c, p), _cross(c, a, p)
-    return d1 >= -EPS and d2 >= -EPS and d3 >= -EPS
+def _slab_sweep(groups, keep, emit: bool = False):
+    """Exact area or dissection of a region picked from polygon groups
+    by a vertical slab sweep (Bentley & Ottmann 1979; the sweep of
+    Klee's measure problem, with sloped edges).
 
+    ``groups`` is a list of groups, each a list of polygon parts (ring
+    lists: outer + holes, any orientation). Break points go at every
+    vertex x and at every proper crossing of two edges inside a slab,
+    so no two edges cross inside a sub-slab; there the spanning edges
+    are ordered by their height at its mid-x (two edges that meet at a
+    sub-slab's end tie there). Fill rule: each part keeps an even-odd
+    parity, and a group covers a point when any of its parts does, the
+    rule :func:`point_in_polygon` applies. ``keep`` maps the per-group
+    cover counts (parts covering, in group order) to keep or drop; a
+    maximal run of kept intervals is one trapezoid, which grows across
+    sub-slabs while the same two edges bound it. Returns the summed
+    trapezoid area, or with ``emit`` the trapezoids as convex ring-lists:
+    an area-exact dissection of the kept region."""
+    edges, xs = [], set()
+    n_parts = 0
+    for g, parts in enumerate(groups):
+        for rings in parts:
+            for r in rings:
+                for (xa, ya, *_), (xb, yb, *_) in zip(r, r[1:] + r[:1]):
+                    xs.add(xa)
+                    if xa == xb:
+                        continue  # vertical: spans no slab
+                    if xa > xb:
+                        xa, ya, xb, yb = xb, yb, xa, ya
+                    edges.append((xa, ya, xb, yb, (yb - ya) / (xb - xa), g, n_parts))
+            n_parts += 1
+    edges.sort()
+    xs = sorted(xs)
 
-def _bridge_hole(outer: list, hole: list) -> list:
-    """Splice a CW hole into a CCW outer ring via a zero-width bridge
-    (David Eberly's visibility construction, simplified: cast +x ray
-    from the hole's max-x vertex, bridge to the best visible vertex of
-    the closest intersected outer edge)."""
-    mi = max(range(len(hole)), key=lambda i: (hole[i][0], hole[i][1]))
-    mx, my = hole[mi]
-    # closest intersection of the ray y=my, x>=mx with outer edges
-    best_t, best_edge, best_pt = float("inf"), None, None
-    n = len(outer)
-    for i in range(n):
-        x1, y1 = outer[i]
-        x2, y2 = outer[(i + 1) % n]
-        if (y1 > my + EPS and y2 > my + EPS) or (y1 < my - EPS and y2 < my - EPS):
+    def y_at(e, x):
+        return e[3] if x == e[2] else e[1] + e[4] * (x - e[0])
+
+    out: list = []
+
+    def close(opened, x_end):
+        # each run spans [x_start, x_end] between the same two edges,
+        # which do not cross there: a convex trapezoid
+        for (lo, hi), xa in opened.items():
+            lo0, lo1 = y_at(lo, xa), y_at(lo, x_end)
+            hi0, hi1 = max(y_at(hi, xa), lo0), max(y_at(hi, x_end), lo1)
+            if not emit:
+                out.append((x_end - xa) * ((hi0 - lo0) + (hi1 - lo1)) / 2.0)
+            elif hi0 > lo0 or hi1 > lo1:
+                ring = [(xa, lo0), (x_end, lo1)]
+                ring += [(x_end, hi1)] if hi1 > lo1 else []
+                ring += [(xa, hi0)] if hi0 > lo0 else []
+                out.append([ring + ring[:1]])
+
+    active: list = []
+    opened: dict = {}  # (lower edge, upper edge) of a kept run -> its start x
+    nxt = 0
+    for x0, x1 in zip(xs, xs[1:]):
+        while nxt < len(edges) and edges[nxt][0] <= x0:
+            active.append(edges[nxt])
+            nxt += 1
+        # every vertex x is a break, so an edge alive at x0 spans [x0, x1]
+        active = [e for e in active if e[2] > x0]
+        if len(active) < 2:
+            close(opened, x0)
+            opened = {}
             continue
-        if abs(y2 - y1) <= EPS:
-            xi = min(x1, x2) if min(x1, x2) >= mx - EPS else max(x1, x2)
-        else:
-            t = (my - y1) / (y2 - y1)
-            if t < -EPS or t > 1 + EPS:
-                continue
-            xi = x1 + t * (x2 - x1)
-        if xi >= mx - EPS and xi - mx < best_t:
-            best_t, best_edge, best_pt = xi - mx, i, (xi, my)
-    if best_edge is None:
-        raise NotImplementedError("hole bridging failed: hole outside outer ring")
-    # candidate bridge target: the endpoint of the hit edge that lies in
-    # the +x half-plane; refine by reflex vertices inside tri(M, I, P)
-    x1, y1 = outer[best_edge]
-    x2, y2 = outer[(best_edge + 1) % n]
-    cand = best_edge if x1 >= x2 else (best_edge + 1) % n
-    m, ipt = (mx, my), best_pt
-    p = outer[cand]
-    best = cand
-    best_key = None
-    for j in range(n):
-        v = outer[j]
-        if v == p or v == m:
-            continue
-        prev, nxt = outer[j - 1], outer[(j + 1) % n]
-        reflex = _cross(prev, v, nxt) < -EPS
-        if reflex and (_pt_in_tri(v, m, ipt, p) or _pt_in_tri(v, m, p, ipt)):
-            d = math.hypot(v[0] - mx, v[1] - my)
-            ang = abs(v[1] - my) / max(d, EPS)
-            key = (ang, d)
-            if best_key is None or key < best_key:
-                best, best_key = j, key
-    # splice: outer[..best] + [outer[best]] + hole[mi..] + hole[..mi] +
-    # [hole[mi], outer[best]] continuing with outer[best+1..]
-    rotated_hole = hole[mi:] + hole[:mi]
-    return (
-        outer[: best + 1]
-        + rotated_hole
-        + [rotated_hole[0], outer[best]]
-        + outer[best + 1 :]
-    )
-
-
-def _ear_clip(poly: list) -> list:
-    """Ear-clipping triangulation of a weakly-simple CCW polygon
-    (bridge duplicates allowed). Returns closed CCW triangle rings.
-    O(n²) — polygon sizes here are operator-row sized, not dataset
-    sized."""
-    verts = list(poly)
-    tris = []
-    strict_rounds = 0
-    while len(verts) > 3:
-        n = len(verts)
-        clipped = False
-        for i in range(n):
-            a, b, c = verts[i - 1], verts[i], verts[(i + 1) % n]
-            if _cross(a, b, c) <= EPS:
-                continue
-            if any(
-                _pt_in_tri_on(v, a, b, c)
-                for v in verts
-                if v != a and v != b and v != c
-            ):
-                continue
-            tris.append([a, b, c, a])
-            del verts[i]
-            clipped = True
-            break
-        if not clipped:
-            # drop exactly-collinear ears (zero area) to break ties
-            for i in range(n):
-                a, b, c = verts[i - 1], verts[i], verts[(i + 1) % n]
-                if abs(_cross(a, b, c)) <= EPS:
-                    del verts[i]
-                    clipped = True
-                    break
-        if not clipped:
-            # last resort for degenerate boundary-touching inputs: allow
-            # ears blocked only by ON-boundary vertices (strict interior
-            # test); bounded so a truly broken ring still terminates
-            strict_rounds += 1
-            if strict_rounds > len(poly) + 3:
-                raise NotImplementedError("ear clipping failed to converge")
-            for i in range(n):
-                a, b, c = verts[i - 1], verts[i], verts[(i + 1) % n]
-                if _cross(a, b, c) <= EPS:
-                    continue
-                if any(
-                    _pt_in_tri(v, a, b, c)
-                    for v in verts
-                    if v != a and v != b and v != c
-                ):
-                    continue
-                tris.append([a, b, c, a])
-                del verts[i]
-                clipped = True
-                break
-            if not clipped:
-                raise NotImplementedError("ear clipping failed to converge")
-    if len(verts) == 3 and _cross(verts[0], verts[1], verts[2]) > EPS:
-        tris.append([verts[0], verts[1], verts[2], verts[0]])
-    return tris
-
-
-def triangulate(polys) -> list:
-    """Triangulate an iterable of polygon ring-lists (outer + holes)
-    into closed CCW triangle rings. Holes are spliced into the outer
-    ring by zero-width bridges, then ear-clipped; the triangle set is
-    an exact area dissection of the input region (components must not
-    overlap each other — run make_valid first)."""
-    tris = []
-    for rings in polys:
-        outer = _open_ring(rings[0], ccw=True)
-        if not outer:
-            continue
-        holes = [h for h in (_open_ring(r, ccw=False) for r in rings[1:]) if h]
-        # bridge holes right-to-left so earlier bridges can't block later rays
-        for hole in sorted(holes, key=lambda h: -max(p[0] for p in h)):
-            outer = _bridge_hole(outer, hole)
-        tris.extend(_ear_clip(outer))
-    return tris
+        # crossings are the pairs that swap order between the slab's two
+        # ends: insertion-sort the left-end order by right-end height
+        ends = sorted((y_at(e, x0), y_at(e, x1)) for e in active)
+        cuts = {x0, x1}
+        for i in range(1, len(ends)):
+            j = i
+            while j > 0 and ends[j - 1][1] > ends[j][1]:
+                (a0, a1), (b0, b1) = ends[j - 1], ends[j]
+                xc = x0 + (x1 - x0) * (b0 - a0) / ((b0 - a0) + (a1 - b1))
+                if x0 < xc < x1:
+                    cuts.add(xc)
+                ends[j - 1], ends[j] = ends[j], ends[j - 1]
+                j -= 1
+        cuts = sorted(cuts)
+        for s0, s1 in zip(cuts, cuts[1:]):
+            xm = 0.5 * (s0 + s1)
+            parity = [False] * n_parts
+            count = [0] * len(groups)
+            runs, lo = {}, None
+            for e in sorted(active, key=lambda e: y_at(e, xm)):
+                parity[e[6]] = odd = not parity[e[6]]
+                count[e[5]] += 1 if odd else -1
+                if keep(count):
+                    lo = lo or e
+                elif lo is not None:
+                    runs[lo, e] = opened.pop((lo, e), s0)
+                    lo = None
+            close(opened, s0)
+            opened = runs
+    close(opened, xs[-1] if xs else 0.0)
+    return out if emit else math.fsum(out)
 
 
 # --- clipping / overlay ------------------------------------------------------
@@ -641,7 +580,8 @@ def intersection_area(a: Geom | None, b: Geom | None) -> float:
     """area(intersection(a, b)) with closed-form fast paths: O(1) when
     both sides are axis rects; O(ra·rb) summed rect overlaps when both
     are rectilinear (L-shapes, grid unions, staircases). Everything
-    else goes through the clipping overlay."""
+    else is the area face of the slab sweep (:func:`_slab_sweep`, which
+    states the fill rule), with no pieces built."""
     ra, rb = as_axis_rect(a), as_axis_rect(b)
     if ra is not None and rb is not None:
         return rect_overlap_area(ra, rb)
@@ -652,7 +592,19 @@ def intersection_area(a: Geom | None, b: Geom | None) -> float:
         return sum(
             rect_overlap_area(x, y) for x in da for y in db
         )
-    return area(intersection(a, b))
+    return _slab_sweep([list(_polygons(a)), list(_polygons(b))], _both)
+
+
+def covered_area(subject: Geom | None, others) -> float:
+    """area(subject ∩ ∪others) in one slab sweep, with no pieces and no
+    union built: the overlap of a record with an overlapping layer,
+    each shared region counted once. Fill rule as in
+    :func:`_slab_sweep`: a geometry covers a point when any of its
+    parts does, by even-odd parity within a part."""
+    if subject is None:
+        return 0.0
+    layer = [p for g in others if g is not None for p in _polygons(g)]
+    return _slab_sweep([list(_polygons(subject)), layer], _both)
 
 
 def _clip_poly_by_ring(subject_rings, clip_ring) -> list | None:
@@ -667,40 +619,6 @@ def _clip_poly_by_ring(subject_rings, clip_ring) -> list | None:
         if clipped_hole and abs(_ring_area2(clipped_hole)) > EPS:
             rings.append(clipped_hole)
     return rings
-
-
-_TRI_CACHE: dict = {}
-_TRI_CACHE_MAX = 4096
-
-
-def _triangulate_cached(region_polys) -> list:
-    """Memoized triangulate: layer geometries repeat across millions of
-    join pairs (110 tiles × 15k records), so the ear-clip cost is paid
-    once per DISTINCT region, not per pair. Bounded; evicts wholesale
-    (workloads cycle through a small dictionary of layer shapes)."""
-    key = tuple(
-        tuple(tuple(p[:2]) for p in ring) for rings in region_polys for ring in rings
-    )
-    tris = _TRI_CACHE.get(key)
-    if tris is None:
-        if len(_TRI_CACHE) >= _TRI_CACHE_MAX:
-            _TRI_CACHE.clear()
-        tris = triangulate(region_polys)
-        _TRI_CACHE[key] = tris
-    return tris
-
-
-def _clip_polys_by_region(subject_polys, region_polys) -> list:
-    """subject ∩ region as a dissection: triangulate the region, clip
-    every subject polygon by every triangle (convex). Pieces are
-    disjoint (triangles are), so their summed area is exact."""
-    pieces = []
-    for tri in _triangulate_cached(region_polys):
-        for pa in subject_polys:
-            rings = _clip_poly_by_ring(pa, tri)
-            if rings:
-                pieces.append(rings)
-    return pieces
 
 
 def _seg_ring_params(p, q, ring) -> list:
@@ -780,10 +698,11 @@ def intersection(a: Geom | None, b: Geom | None) -> Geom:
     clip-to-layer workloads, ``terra.py:266-274``). Fast paths: point ×
     anything; polygon × polygon with one convex hole-free side (grid
     tiles, envelopes, subdivision cells) → a single Sutherland-Hodgman
-    clip. General concave×concave (holes allowed): triangulate the
-    smaller side and clip by each triangle — the result is an
-    area-exact DISSECTION of the true intersection (a MultiPolygon of
-    adjacent pieces, not a merged boundary)."""
+    clip. General concave×concave (holes allowed): the slab sweep
+    (:func:`_slab_sweep`: even-odd parity per part, a geometry covers
+    a point when any of its parts does) emits the trapezoids covered
+    by both — an area-exact DISSECTION of the true intersection (a
+    MultiPolygon of adjacent convex pieces, not a merged boundary)."""
     if a is None or b is None or is_empty(a) or is_empty(b):
         return POINT_EMPTY
     ka, kb = a[0], b[0]
@@ -823,11 +742,7 @@ def intersection(a: Geom | None, b: Geom | None) -> Geom:
             if rings:
                 out.append(rings)
     for pa, pb in general:
-        # triangulate the side with fewer vertices
-        na = sum(len(r) for r in pa)
-        nb = sum(len(r) for r in pb)
-        subject, region = (pa, pb) if nb <= na else (pb, pa)
-        out.extend(_clip_polys_by_region([subject], [region]))
+        out.extend(_slab_sweep([[pa], [pb]], _both, emit=True))
     if not out:
         return POINT_EMPTY
     return ("Polygon", out[0]) if len(out) == 1 else ("MultiPolygon", out)
@@ -874,10 +789,10 @@ def difference(a: Geom | None, b: Geom | None) -> Geom:
     Exact merged output when b is disjoint from a (-> a), b contains a
     (-> EMPTY), or b sits strictly inside a hole-free a (-> polygon
     with hole). Points subtract exactly. The general partial-overlap
-    case computes a ∩ complement(b): b is clipped to a frame rectangle
-    around a, the frame-with-b-as-holes region (plus b's own holes as
-    solid islands) is triangulated, and a is clipped by each triangle —
-    an area-exact dissection, like general ``intersection``."""
+    case is one slab sweep (:func:`_slab_sweep`: even-odd parity per
+    part, a geometry covers a point when any of its parts does) that
+    emits the trapezoids covered by a and not by b — an area-exact
+    dissection, like general ``intersection``."""
     if a is None or is_empty(a):
         return POINT_EMPTY
     if b is None or is_empty(b):
@@ -919,81 +834,7 @@ def difference(a: Geom | None, b: Geom | None) -> Geom:
             return ("Polygon", rings)
     if not a_polys or not b_polys:
         raise NotImplementedError(f"difference({a[0]}, {b[0]})")
-    # rectilinear b: the complement inside a frame around a is a set of
-    # axis-aligned cells (coordinate-compressed grid, row-merged) — each
-    # convex, so no triangulation and no hole bridging. This also keeps
-    # cascaded unions robust: accumulated dissection pieces TOUCH along
-    # shared edges, which the bridged-ear-clip path cannot handle.
-    rb_rects = rectilinear_rects(b)
-    if rb_rects is not None:
-        bb = bbox(a)
-        fx0, fy0, fx1, fy1 = bb[0] - 1.0, bb[1] - 1.0, bb[2] + 1.0, bb[3] + 1.0
-        clamped = []
-        for x0, y0, x1, y1 in rb_rects:
-            x0, y0 = max(x0, fx0), max(y0, fy0)
-            x1, y1 = min(x1, fx1), min(y1, fy1)
-            if x1 - x0 > EPS and y1 - y0 > EPS:
-                clamped.append((x0, y0, x1, y1))
-        xs = sorted({fx0, fx1, *(v for r in clamped for v in (r[0], r[2]))})
-        ys = sorted({fy0, fy1, *(v for r in clamped for v in (r[1], r[3]))})
-        xi = {v: i for i, v in enumerate(xs)}
-        yi = {v: i for i, v in enumerate(ys)}
-        covered = set()
-        for x0, y0, x1, y1 in clamped:
-            for i in range(xi[x0], xi[x1]):
-                for j in range(yi[y0], yi[y1]):
-                    covered.add((i, j))
-        pieces = []
-        for j in range(len(ys) - 1):
-            i = 0
-            while i < len(xs) - 1:
-                if (i, j) in covered:
-                    i += 1
-                    continue
-                i0 = i
-                while i < len(xs) - 1 and (i, j) not in covered:
-                    i += 1
-                ring = [
-                    (xs[i0], ys[j]), (xs[i], ys[j]),
-                    (xs[i], ys[j + 1]), (xs[i0], ys[j + 1]), (xs[i0], ys[j]),
-                ]
-                for pa in a_polys:
-                    rings = _clip_poly_by_ring(pa, ring)
-                    if rings:
-                        pieces.append(rings)
-        if not pieces:
-            return POINT_EMPTY
-        return (
-            ("Polygon", pieces[0]) if len(pieces) == 1 else ("MultiPolygon", pieces)
-        )
-    # general: a ∩ complement(b) within a frame box around a
-    bb = bbox(a)
-    pad = max(1.0, (bb[2] - bb[0]) + (bb[3] - bb[1]))
-    fx0, fy0, fx1, fy1 = bb[0] - pad, bb[1] - pad, bb[2] + pad, bb[3] + pad
-    frame_ring = [
-        (fx0, fy0), (fx1, fy0), (fx1, fy1), (fx0, fy1), (fx0, fy0)
-    ]
-    # clip b to a rect STRICTLY inside the frame (so punched holes never
-    # touch the frame ring — bridging stays non-degenerate); the
-    # artificial cut boundary lies outside bbox(a), where a has nothing
-    h = pad / 2.0
-    inner_ring = [
-        (bb[0] - h, bb[1] - h),
-        (bb[2] + h, bb[1] - h),
-        (bb[2] + h, bb[3] + h),
-        (bb[0] - h, bb[3] + h),
-        (bb[0] - h, bb[1] - h),
-    ]
-    comp = [frame_ring]
-    islands = []
-    for pb in b_polys:
-        clipped = _clip_poly_by_ring(pb, inner_ring)
-        if clipped is None:
-            continue
-        comp.append(clipped[0])
-        for hole in clipped[1:]:
-            islands.append([hole])
-    pieces = _clip_polys_by_region(a_polys, [comp] + islands)
+    pieces = _slab_sweep([a_polys, b_polys], _first_only, emit=True)
     if not pieces:
         return POINT_EMPTY
     return ("Polygon", pieces[0]) if len(pieces) == 1 else ("MultiPolygon", pieces)
@@ -1030,9 +871,10 @@ def union_collect(geoms) -> Geom:
 def union_dissolve(geoms) -> Geom:
     """TRUE geometric union of polygons (PostGIS ``ST_Union`` agg; the
     reference's ``UnionOnProperty`` cascaded ``|=``, ``common.py:
-    557-564``), as a disjoint-piece dissection: fold each geometry's
-    ``difference`` against the accumulated pieces, so overlaps are
-    counted once. Non-areal inputs fall back to ``union_collect``.
+    557-564``), as a disjoint-piece dissection: one slab sweep
+    (:func:`_slab_sweep`: even-odd parity per part, a point is covered
+    when any part covers it) emits the covered trapezoids, so overlaps
+    are counted once. Non-areal inputs fall back to ``union_collect``.
     Area/centroid/contains over the result are exact; the boundary is
     dissected, not merged."""
     gs = [g for g in geoms if g is not None and not is_empty(g)]
@@ -1040,27 +882,18 @@ def union_dissolve(geoms) -> Geom:
         return POINT_EMPTY
     if any(g[0] not in ("Polygon", "MultiPolygon") for g in gs):
         return union_collect(gs)
-    pieces: list = list(_polygons(gs[0]))
-    for i, g in enumerate(gs[1:], start=1):
-        # subtract each PRIOR ORIGINAL member one at a time: b is then
-        # always a clean input polygon, never the accumulated dissection
-        # (whose pieces touch along shared edges and would make the
-        # complement's hole bridging degenerate)
-        fresh = g
-        for prior in gs[:i]:
-            fresh = difference(fresh, prior)
-            if fresh is None or is_empty(fresh):
-                break
-        if fresh is not None and not is_empty(fresh):
-            pieces.extend(_polygons(fresh))
+    pieces = _slab_sweep([[p for g in gs for p in _polygons(g)]], _any, emit=True)
+    if not pieces:
+        return POINT_EMPTY
     return ("Polygon", pieces[0]) if len(pieces) == 1 else ("MultiPolygon", pieces)
 
 
 def union_area(geoms) -> float:
     """Area of the true union. Rectilinear inputs decompose into axis
     rects whose union :func:`rect_union_area` sweeps exactly (no
-    clipping at all); otherwise falls back to
-    ``area(union_dissolve(...))``."""
+    clipping at all); any other input is the area face of one slab
+    sweep (:func:`_slab_sweep`: even-odd parity per part, a point is
+    covered when any part covers it)."""
     gs = [g for g in geoms if g is not None and not is_empty(g)]
     if not gs:
         return 0.0
@@ -1068,7 +901,7 @@ def union_area(geoms) -> float:
     for g in gs:
         r = rectilinear_rects(g)
         if r is None:
-            return area(union_dissolve(gs))
+            return _slab_sweep([[p for g in gs for p in _polygons(g)]], _any)
         rects.extend(r)
     return rect_union_area(*zip(*rects)) if rects else 0.0
 

@@ -351,9 +351,9 @@ def intersection_percent_by_area(
     record's geometry covered by the layer, as a ratio; 0.0 when no
     overlap (``terra.py:272-274``). The default sums pairwise
     intersection areas — exact when layer features are DISJOINT (grid
-    tiles, the reference's workload). ``dissolve=True`` unions the
-    clipped zones per record before measuring (exact for overlapping
-    layers).
+    tiles, the reference's workload). ``dissolve=True`` measures the
+    record's area covered by the union of its features, each shared
+    region counted once (exact for overlapping layers).
 
     ``record_geom`` and ``layer_geom`` each name a WKB (binary) column
     or a prepared column of type ``K.PREPARED_T``
@@ -373,9 +373,11 @@ def intersection_percent_by_area(
     area is closed-form, and under ``dissolve`` the record's rects are
     unioned by a rectangle sweep over 4 doubles each, so no WKB of a
     boxy pair crosses into Python. Any other pair goes through the
-    exact geometry kernels (``dissolve`` keeps it only where the
-    geometries intersect). One aggregate per record sums the areas, or
-    unions the rects and zones, and carries the area denominator."""
+    exact geometry kernels: pairwise ``st_intersection_area``, or under
+    ``dissolve`` one ``ops.covered_area`` sweep per record over its
+    rects and other features. One aggregate per record sums the areas,
+    or collects the rects and features, and carries the area
+    denominator."""
     # ONE fused kernel pass prepares a WKB record side: make_valid
     # (idempotent, so the reference's per-pair repair collapses to
     # per-row), bbox, boxy flag, and the area denominator
@@ -398,35 +400,41 @@ def intersection_percent_by_area(
     x1 = "least(element_at(_rx.bbox, 3), element_at(_lx.bbox, 3))"
     y1 = "least(element_at(_rx.bbox, 4), element_at(_lx.bbox, 4))"
     if dissolve:
-        # a boxy pair with a degenerate rect adds no area and a curvy
-        # pair that does not intersect adds no zone: both are dropped
-        rect = f"{both_boxy} AND {x1} > {x0} AND {y1} > {y0}"
+        # a boxy pair with a degenerate rect adds no area and is
+        # dropped; every other pair is kept, so the filter stays in the
+        # JVM (a curvy pair that misses adds nothing to the sweep)
+        positive = f"{x1} > {x0} AND {y1} > {y0}"
         corners = ("_zx0", "_zy0", "_zx1", "_zy1")
         per_id = (
-            cand.filter(F.expr(rect) | K.st_intersects(rx, lx))
+            cand.filter(F.expr(f"NOT ({both_boxy}) OR ({positive})"))
             .select(
                 id_col,
                 *(
                     F.expr(f"CASE WHEN {both_boxy} THEN {v} END AS {c}")
                     for v, c in zip((x0, y0, x1, y1), corners)
                 ),
-                K.st_intersection(rx, lx).alias("_zone"),
+                rx.alias("_rg"),
+                lx.alias("_lg"),
                 F.expr("_rx.area AS _ra"),
             )
             .groupBy(id_col)
             # JVM collect_list (it skips the NULLs: a boxy pair adds
-            # only its corners, a curvy pair only its zone) + ONE
+            # only its corners, any other pair only its feature) + ONE
             # scalar kernel call per Arrow batch, not a GROUPED_AGG
-            # (one Python invocation PER GROUP); the area denominator
-            # is constant per id and rides through the aggregate
+            # (one Python invocation PER GROUP); the masked record geom
+            # (NULL when every pair is boxy) and the area denominator
+            # are constant per id and ride through the aggregate
             .agg(
+                F.expr("max(_rg) AS _rg"),
                 *(F.expr(f"collect_list({c}) AS {c}") for c in corners),
-                F.expr("collect_list(_zone) AS _zones"),
+                F.expr("collect_list(_lg) AS _lgs"),
                 F.expr("max(_ra) AS _ra"),
             )
             .select(
                 id_col,
-                K.st_rect_union_area_lists(*corners, "_zones").alias("_zone_area"),
+                K.st_covered_area_lists("_rg", *corners, "_lgs").alias(
+                    "_zone_area"
+                ),
                 "_ra",
             )
         )

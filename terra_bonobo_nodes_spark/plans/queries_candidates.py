@@ -2024,7 +2024,7 @@ register(
 # fixtures (plans/queries_geo.py). This surface runs all three
 # union-tagged by strategy:
 #   pairwise  axis-aligned rects x disjoint tiles (the rect fast path)
-#   concave   L-shapes both sides (the general triangulated overlay)
+#   concave   L-shapes both sides (the rectilinear rect-decomposition path)
 #   dissolve  heavily overlapping tiles with dissolve=True (clipped
 #             zones unioned before measuring)
 # Scale shape per leg is unchanged from the standalone rows: envelope
@@ -2033,7 +2033,7 @@ register(
 
 def j2_overlay_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IntersectionPercentByArea through its three physical paths
-    (rect fast path / triangulated overlay / dissolve union) at one
+    (rect fast path / rectilinear L×L overlay / dissolve union) at one
     (strategy, c_custkey) grain — the retire-and-replace for the
     three standalone j2 rows (registered late r17)."""
     from terra_bonobo_nodes_spark.geo import kernels as K

@@ -5,6 +5,7 @@ column names, order-insensitive value hash; tests/check_driver.py)."""
 from __future__ import annotations
 
 import os
+import random
 import sys
 from pathlib import Path
 
@@ -57,6 +58,32 @@ def pytest_collection_modifyitems(config, items):
             f"collected test (first: {sorted(stale)[:3]}) — prune the list",
             stacklevel=1,
         )
+
+
+def _random_shapes(seed: int, n: int, kind: str):
+    """Deterministic mixed rect/L-shape WKB geometries in [0,100)²;
+    L-shapes force the curvy kernel path, rects stay boxy. Shared by
+    the spatial-operator tests and the Spark-free area properties."""
+    from terra_bonobo_nodes_spark.geo.wkb import write_wkb
+
+    rnd = random.Random(seed)
+    rows = []
+    for i in range(n):
+        x0 = rnd.uniform(0, 90)
+        y0 = rnd.uniform(0, 90)
+        w = rnd.uniform(0.5, 15.0)
+        h = rnd.uniform(0.5, 15.0)
+        if kind == "mixed" and i % 3 == 0:
+            # L-shape: the full rect minus its top-right quadrant
+            ring = [
+                (x0, y0), (x0 + w, y0), (x0 + w, y0 + h / 2),
+                (x0 + w / 2, y0 + h / 2), (x0 + w / 2, y0 + h),
+                (x0, y0 + h), (x0, y0),
+            ]
+        else:
+            ring = [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h), (x0, y0)]
+        rows.append(write_wkb(("Polygon", [ring])))
+    return rows
 
 
 @pytest.fixture(scope="session")

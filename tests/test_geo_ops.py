@@ -173,8 +173,9 @@ class TestOverlay:
         assert W.is_empty(ops.intersection(("Point", (9.0, 9.0)), SQUARE))
 
     def test_intersection_concave_concave(self):
-        # l2 is concave and sits inside LSHAPE (slanted left edge), so
-        # the general triangulated overlay must return exactly area(l2)
+        # l2 is concave (slanted left edge) and sits inside LSHAPE, and
+        # neither side is convex, so the general slab-sweep overlay must
+        # return exactly area(l2)
         l2 = ("Polygon", [[(0.0, 0.0), (3.0, 0.0), (3.0, 1.0), (1.0, 1.0), (1.0, 3.0), (0.5, 3.0), (0.0, 0.0)]])
         assert abs(ops.area(l2) - 4.25) < 1e-12
         assert abs(ops.area(ops.intersection(LSHAPE, l2)) - 4.25) < 1e-9
@@ -313,21 +314,25 @@ def _ell(cx, cy):
     )
 
 
-class TestTriangulate:
+class TestDissection:
+    """union_dissolve of one polygon is its slab-sweep dissection:
+    convex pieces whose areas sum to the polygon's, holes subtracted."""
+
+    @staticmethod
+    def _dissected_area(rings):
+        pieces = list(ops._polygons(ops.union_dissolve([("Polygon", rings)])))
+        assert all(len(p) == 1 and ops.is_convex(p[0]) for p in pieces)
+        return sum(abs(ops._ring_area2(p[0])) / 2 for p in pieces)
+
     def test_convex(self):
-        tris = ops.triangulate([_rect(0, 0, 4, 2)[1]])
-        assert len(tris) == 2
-        assert abs(sum(abs(ops._ring_area2(t)) / 2 for t in tris) - 8.0) < 1e-9
+        assert abs(self._dissected_area(_rect(0, 0, 4, 2)[1]) - 8.0) < 1e-9
 
     def test_concave(self):
-        tris = ops.triangulate([_ell(0, 0)[1]])
-        assert abs(sum(abs(ops._ring_area2(t)) / 2 for t in tris) - 3.0) < 1e-9
+        assert abs(self._dissected_area(_ell(0, 0)[1]) - 3.0) < 1e-9
 
     def test_with_hole(self):
         rings = [_rect(0, 0, 10, 10)[1][0], _rect(3, 3, 5, 5)[1][0]]
-        tris = ops.triangulate([rings])
-        total = sum(abs(ops._ring_area2(t)) / 2 for t in tris)
-        assert abs(total - 96.0) < 1e-9
+        assert abs(self._dissected_area(rings) - 96.0) < 1e-9
 
     def test_two_holes(self):
         rings = [
@@ -335,9 +340,7 @@ class TestTriangulate:
             _rect(1, 1, 2, 2)[1][0],
             _rect(6, 4, 8, 7)[1][0],
         ]
-        tris = ops.triangulate([rings])
-        total = sum(abs(ops._ring_area2(t)) / 2 for t in tris)
-        assert abs(total - (100.0 - 1.0 - 6.0)) < 1e-9
+        assert abs(self._dissected_area(rings) - (100.0 - 1.0 - 6.0)) < 1e-9
 
 
 class TestGeneralOverlay:
@@ -535,9 +538,9 @@ class TestLineClip:
 
 
 def test_union_dissolve_many_overlapping_nonrectilinear():
-    """Regression: 3+ overlapping concave members used to punch the
-    accumulated (edge-touching) dissection as holes and fail bridging;
-    now each new member subtracts the clean ORIGINAL priors."""
+    """4 overlapping concave members (7-point stars) dissolve in one
+    slab sweep: the union lies between the largest member and the sum,
+    and above the pairwise inclusion-exclusion bound."""
     import math
 
     def star(cx, cy, n=7, r1=1.0, r2=2.0):

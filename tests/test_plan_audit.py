@@ -435,12 +435,15 @@ def test_overlay_surface_reads_each_side_once(spark):
     """intersection_percent_by_area persists neither side and builds one
     candidate join per call: the three legs of j2_overlay_surface run
     one prep per side each, and the dissolve leg's union needs no
-    grouped aggregate."""
+    grouped aggregate and no per-pair intersects or intersection
+    kernel — one covered-area call per record measures it."""
     run = all_queries()["j2_overlay_surface"].spark_fn
     counts, plan = _python_nodes(spark, lambda: _noop(run(spark, SF_DIR)))
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
     assert counts["_st_poly_prep"] == 6
     assert "_st_union_area_agg" not in plan
+    assert "_st_intersects" not in counts and "_st_intersection" not in counts
+    assert sum(counts.values()) == 9, counts
 
 
 def test_feature_layer_merge_reads_the_batch_once(spark, tmp_path):

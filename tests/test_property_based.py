@@ -1,12 +1,16 @@
-"""Property-based tests (hypothesis) for the pure-Python layers: the
-geometry codecs must round-trip arbitrary valid shapes, and the dedup
-hashing primitives must hold their algebraic invariants. These run
-without a SparkSession — they pin the kernel math the pandas UDFs wrap."""
+"""Property-based tests (hypothesis). The pure-Python layers get wide
+random sweeps: the geometry codecs must round-trip arbitrary valid
+shapes, the area and overlay core must match an independent line
+integral and hold its set identities, and the dedup hashing primitives
+must hold their algebraic invariants. These pin the kernel math the
+pandas UDFs wrap without a SparkSession; the Spark-involving properties
+run a handful of examples each (a Spark job per example)."""
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -154,10 +158,14 @@ star_poly = st.builds(
 
 @settings(max_examples=120, deadline=None)
 @given(star_poly)
-def test_triangulation_preserves_area(p):
-    tris = ops.triangulate([p[1]])
-    total = sum(abs(ops._ring_area2(t)) / 2 for t in tris)
-    assert abs(total - ops.area(p)) < 1e-6 * max(1.0, ops.area(p))
+def test_single_polygon_dissection_preserves_area(p):
+    """union_dissolve of one polygon is its slab-sweep dissection:
+    convex pieces whose areas sum to the polygon's."""
+    pieces = list(ops._polygons(ops.union_dissolve([p])))
+    assert all(len(rings) == 1 and ops.is_convex(rings[0]) for rings in pieces)
+    assert abs(ops.area(("MultiPolygon", pieces)) - ops.area(p)) < 1e-6 * max(
+        1.0, ops.area(p)
+    )
 
 
 @settings(max_examples=80, deadline=None)
@@ -211,8 +219,157 @@ def test_rectilinear_union_matches_dissolve(rect_specs):
         for x, y, w, h in rect_specs
     ]
     swept = ops.union_area(gs)          # rect sweep over the decomposition
-    dissolved = ops.area(ops.union_dissolve(gs))  # difference-fold overlay
+    dissolved = ops.area(ops.union_dissolve(gs))  # slab-sweep dissection
     assert abs(swept - dissolved) < 1e-6 * max(1.0, swept)
+
+
+# --- exact area core against an independent line integral --------------------
+# covered_area and union_area (both on the slab sweep for these inputs)
+# against an area computed with no sweep: the covered length of the
+# vertical line at x, integrated over x.
+
+
+def _covers(g, pt) -> bool:
+    return any(ops.point_in_polygon(pt, rings) for rings in ops._polygons(g))
+
+
+def _line_integral_area(covered, geoms) -> float:
+    """∫ covered length dx. x breaks at every vertex and at every
+    crossing of two edges (all pairs), so between breaks the covered
+    length is linear in x and its value at the mid-x times the width is
+    exact. An interval of the mid-x vertical line counts when
+    ``covered`` holds at its midpoint (``ops.point_in_polygon``)."""
+    segs = [
+        (p[:2], q[:2])
+        for g in geoms
+        for rings in ops._polygons(g)
+        for r in rings
+        for p, q in zip(r, r[1:])
+    ]
+    xs = {p[0] for s in segs for p in s}
+    for i, (p, q) in enumerate(segs):
+        for r, t in segs[i + 1 :]:
+            d = (q[0] - p[0]) * (t[1] - r[1]) - (q[1] - p[1]) * (t[0] - r[0])
+            if d == 0:
+                continue
+            u = ((r[0] - p[0]) * (t[1] - r[1]) - (r[1] - p[1]) * (t[0] - r[0])) / d
+            v = ((r[0] - p[0]) * (q[1] - p[1]) - (r[1] - p[1]) * (q[0] - p[0])) / d
+            if 0 < u < 1 and 0 < v < 1:
+                xs.add(p[0] + u * (q[0] - p[0]))
+    xs = sorted(xs)
+    total = 0.0
+    for x0, x1 in zip(xs, xs[1:]):
+        xm = (x0 + x1) / 2
+        ys = sorted(
+            p[1] + (q[1] - p[1]) * (xm - p[0]) / (q[0] - p[0])
+            for p, q in segs
+            if min(p[0], q[0]) < xm < max(p[0], q[0])
+        )
+        total += (x1 - x0) * sum(
+            b - a for a, b in zip(ys, ys[1:]) if covered((xm, (a + b) / 2))
+        )
+    return total
+
+
+def _holed_square(cx, cy, theta, holes):
+    """A 10×10 square with 1–2 square holes, rotated by theta."""
+    c, s_ = math.cos(theta), math.sin(theta)
+
+    def sq(x0, y0, w):
+        return ring([
+            (cx + x * c - y * s_, cy + x * s_ + y * c)
+            for x, y in ((x0, y0), (x0 + w, y0), (x0 + w, y0 + w), (x0, y0 + w))
+        ])
+
+    spots = ((-4.0, -4.0), (1.0, 0.5))
+    return ("Polygon", [sq(-5.0, -5.0, 10.0)] + [sq(x, y, w) for (x, y), w in zip(spots, holes)])
+
+
+def _vertical_edged(x0, y0, w, a, b, h):
+    """A quadrilateral whose left and right edges are vertical."""
+    return (
+        "Polygon",
+        [ring([(x0, y0), (x0 + w, y0 + a), (x0 + w, y0 + a + h), (x0, y0 + b + h)])],
+    )
+
+
+def _dense_record(rec_seed, n_rec, lay_seed, n_lay, i):
+    """Record ``i`` of the mixed rect/L fixture and the layer features
+    it intersects: the dense dissolve inputs of the spatial tests."""
+    from tests.conftest import _random_shapes
+
+    g = ops.make_valid(W.parse_wkb(_random_shapes(rec_seed, n_rec, "mixed")[i]))
+    layer = [W.parse_wkb(b) for b in _random_shapes(lay_seed, n_lay, "mixed")]
+    return g, [f for f in layer if ops.intersects(g, f)]
+
+
+_R12 = _dense_record(31, 60, 32, 40, 12)
+_R42 = _dense_record(7, 120, 99, 40, 42)
+_BOWTIE = ("Polygon", [ring([(0.0, 0.0), (4.0, 4.0), (4.0, 0.0), (0.0, 4.0)])])
+# a repeated vertex and two y values one ulp pair apart
+_NEAR_COINCIDENT = (
+    "Polygon",
+    [ring([
+        (80.0, 80.0), (95.0, 80.0), (95.0, 80.0), (95.0, 88.16012852120463),
+        (87.5, 88.16012852120461), (87.5, 96.0), (80.0, 96.0),
+    ])],
+)
+
+_small = st.floats(min_value=-3.0, max_value=3.0)
+area_geom = st.one_of(
+    st.builds(
+        _star_poly,
+        st.lists(_angle_radius, max_size=6, unique_by=lambda t: round(t[0], 3)),
+        _small,
+        _small,
+    ),
+    st.builds(
+        _holed_square,
+        _small,
+        _small,
+        st.floats(min_value=0.0, max_value=math.pi / 2),
+        st.lists(st.floats(min_value=0.5, max_value=3.0), min_size=1, max_size=2),
+    ),
+    st.builds(
+        lambda a, b: ("MultiPolygon", [a[1], b[1]]),
+        star_poly,
+        st.builds(_star_poly, st.just([]), _small, _small),
+    ),
+    st.builds(
+        _vertical_edged,
+        _small,
+        _small,
+        st.floats(min_value=0.5, max_value=8.0),
+        _small,
+        _small,
+        st.floats(min_value=0.5, max_value=8.0),
+    ),
+    st.sampled_from([_BOWTIE, _NEAR_COINCIDENT]),
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(area_geom, st.lists(area_geom, min_size=1, max_size=3))
+@example(*_R12)
+@example(*_R42)
+@example(_NEAR_COINCIDENT, [_R12[0], _BOWTIE])
+def test_covered_area_matches_line_integral(subject, others):
+    got = ops.covered_area(subject, others)
+    want = _line_integral_area(
+        lambda pt: _covers(subject, pt) and any(_covers(o, pt) for o in others),
+        [subject, *others],
+    )
+    assert abs(got - want) <= 1e-9 * max(1.0, want)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(area_geom, min_size=1, max_size=4))
+@example([ops.intersection(_R12[0], f) for f in _R12[1]])
+@example([ops.intersection(_R42[0], f) for f in _R42[1]])
+def test_union_area_matches_line_integral(gs):
+    got = ops.union_area(gs)
+    want = _line_integral_area(lambda pt: any(_covers(g, pt) for g in gs), gs)
+    assert abs(got - want) <= 1e-9 * max(1.0, want)
 
 
 # --- PII regex portability (Java ≡ RE2 ≡ Python re on the chosen subset) ----
@@ -484,3 +641,184 @@ def test_truncated_progressive_jpeg_fails_cleanly(cut):
     except (ValueError, NotImplementedError, IndexError, struct.error, KeyError):
         return
     assert (w, h) == (8, 8) and len(out) == 8 * 8 * 3
+
+
+# --- pure-Python: token hashing ----------------------------------------------
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text(max_size=80), st.integers(min_value=1, max_value=4096))
+def test_token_hash_ids_bounds_and_stability(text, dim):
+    from terra_bonobo_nodes_spark.llm.classifier import _token_hash_ids
+
+    ids = _token_hash_ids(text, dim)
+    assert ids == _token_hash_ids(text, dim)  # stable (no process salt)
+    assert all(0 <= i < dim for i in ids)
+    assert len(ids) == len(str(text).lower().split())
+
+
+@settings(max_examples=50, deadline=None)
+@given(st.integers(min_value=1, max_value=64))
+def test_token_hash_ids_null_is_empty(dim):
+    from terra_bonobo_nodes_spark.llm.classifier import _token_hash_ids
+
+    assert _token_hash_ids(None, dim) == []
+    assert _token_hash_ids(float("nan"), dim) == []
+
+
+# --- Spark: classifier parity on random data ----------------------------------
+
+
+@settings(max_examples=5, deadline=None)
+@given(data=st.data())
+def test_classifier_matches_reference_on_random_data(spark, data):
+    from terra_bonobo_nodes_spark.llm.classifier import train_quality_logreg
+
+    n = data.draw(st.integers(min_value=3, max_value=12))
+    rows = [
+        (
+            data.draw(st.floats(-5, 5, allow_nan=False)),
+            data.draw(st.floats(-5, 5, allow_nan=False)),
+            data.draw(st.integers(0, 1)),
+        )
+        for _ in range(n)
+    ]
+    df = spark.createDataFrame(rows, "x1 DOUBLE, x2 DOUBLE, label INT")
+    model = train_quality_logreg(df, ["x1", "x2"], iterations=3, lr=0.5)
+
+    X = np.array([r[:2] for r in rows], dtype=np.float64)
+    y = np.array([r[2] for r in rows], dtype=np.float64)
+    m, s = X.mean(axis=0), np.maximum(X.std(axis=0), 1e-12)
+    Xs = (X - m) / s
+    w, b = np.zeros(2), 0.0
+    for _ in range(3):
+        p = 1.0 / (1.0 + np.exp(-(Xs @ w + b)))
+        r = p - y
+        b -= 0.5 * r.mean()
+        w -= 0.5 * (Xs * r[:, None]).mean(axis=0)
+    assert np.allclose(model.weights, w, rtol=1e-8, atol=1e-10)
+    assert math.isclose(model.bias, b, rel_tol=1e-8, abs_tol=1e-10)
+
+
+# --- Spark: SemDeDup verdict invariants ---------------------------------------
+
+
+@settings(max_examples=3, deadline=None)
+@given(data=st.data())
+def test_semdedup_verdict_invariants(spark, data):
+    """Whatever the corpus: exactly one verdict row per input id,
+    exactly one survivor per component, and every component id is one
+    of its member ids."""
+    from terra_bonobo_nodes_spark.llm.semdedup import semantic_dedup
+
+    n = data.draw(st.integers(min_value=1, max_value=12))
+    dim = 3
+    rows = [
+        (
+            i,
+            [
+                data.draw(st.floats(-2, 2, allow_nan=False)) + 0.001
+                for _ in range(dim)
+            ],
+        )
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    out = semantic_dedup(df, n_clusters=4, threshold=0.98).collect()
+    assert sorted(r["vec_id"] for r in out) == list(range(n))  # one verdict each
+    by_comp: dict[int, list] = {}
+    for r in out:
+        by_comp.setdefault(r["component_id"], []).append(r)
+    for comp_id, members in by_comp.items():
+        assert sum(m["is_kept"] for m in members) == 1  # one survivor
+        assert comp_id in {m["vec_id"] for m in members}  # label is a member
+
+
+# --- from-spec codecs under random inputs -------------------------------------
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.floats(
+                min_value=-180, max_value=180, allow_nan=False, width=64
+            ),
+            st.floats(min_value=-90, max_value=90, allow_nan=False, width=64),
+            st.integers(min_value=-(10 ** 15), max_value=10 ** 15),
+            st.text(
+                alphabet=st.characters(
+                    min_codepoint=32, max_codepoint=126, exclude_characters=""
+                ),
+                max_size=20,
+            ),
+        ),
+        max_size=25,
+    )
+)
+def test_shp_codec_roundtrips_any_point_set(rows):
+    """write_point_shapefile_zip ∘ read_point_shapefile_zip is the
+    identity on any point set in the supported profile: coordinates
+    bit-exact (binary doubles), 'N'/'C' attributes back as their str()
+    text, record order preserved, archives deterministic."""
+    from terra_bonobo_nodes_spark.sources.shp_codec import (
+        read_point_shapefile_zip,
+        write_point_shapefile_zip,
+    )
+
+    xs = [r[0] for r in rows]
+    ys = [r[1] for r in rows]
+    attrs = {"k": [r[2] for r in rows], "s": [r[3].strip() for r in rows]}
+    z = write_point_shapefile_zip(xs, ys, attrs)
+    assert z == write_point_shapefile_zip(xs, ys, attrs)
+    feats = read_point_shapefile_zip(z)
+    assert [(f["x"], f["y"]) for f in feats] == list(zip(xs, ys))
+    assert [f["attrs"]["k"] for f in feats] == [str(v) for v in attrs["k"]]
+    # DBF 'C' storage is space-padded text, so values strip-roundtrip
+    assert [f["attrs"]["s"] for f in feats] == [v.strip() for v in attrs["s"]]
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=10 ** 9),
+            st.floats(min_value=-90, max_value=90, allow_nan=False),
+            st.floats(min_value=-180, max_value=180, allow_nan=False),
+            st.booleans(),  # tagged?
+        ),
+        max_size=15,
+    )
+)
+def test_osm_points_runner_on_random_node_sets(nodes):
+    """Random node soups: exactly the TAGGED nodes come back as Point
+    features (ogr2ogr's points-layer rule), coordinates exact through
+    repr -> JSON, tag text preserved."""
+    import json as _json
+
+    from terra_bonobo_nodes_spark.sources.osm import (
+        build_ogr2ogr_command,
+        osm_points_geojson_runner,
+    )
+
+    xml = "<osm>" + "".join(
+        f'<node id="{i}" lat="{lat!r}" lon="{lon!r}">'
+        + (f'<tag k="n" v="t{i}"/>' if tagged else "")
+        + "</node>"
+        for i, (nid, lat, lon, tagged) in enumerate(nodes)
+    ) + "</osm>"
+    doc = _json.loads(
+        osm_points_geojson_runner(
+            build_ogr2ogr_command("/x.osm", "points"), xml.encode()
+        )
+    )
+    want = [
+        (str(i), [lon, lat], {"n": f"t{i}"})
+        for i, (nid, lat, lon, tagged) in enumerate(nodes)
+        if tagged
+    ]
+    got = [
+        (f["id"], f["geometry"]["coordinates"], f["properties"])
+        for f in doc["features"]
+    ]
+    assert got == want

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.geo import kernels as K
 from terra_bonobo_nodes_spark.geo import wkb as W
+from tests.conftest import _random_shapes
 from terra_bonobo_nodes_spark.operators.spatial import (
     attributes_to_point_geometry,
     isochrone_subtraction,
@@ -142,31 +143,6 @@ def test_intersection_percent_dissolve_overlapping_layer(spark):
     assert naive.intersection_percent > 1.0 + 1e-9  # double-counted strip
     exact = intersection_percent_by_area(rec, lay, dissolve=True).collect()[0]
     assert abs(exact.intersection_percent - 1.0) < 1e-9
-
-
-def _random_shapes(seed: int, n: int, kind: str):
-    """Deterministic mixed rect/L-shape WKB geometries in [0,100)²;
-    L-shapes force the curvy kernel path, rects stay boxy."""
-    import random
-
-    rnd = random.Random(seed)
-    rows = []
-    for i in range(n):
-        x0 = rnd.uniform(0, 90)
-        y0 = rnd.uniform(0, 90)
-        w = rnd.uniform(0.5, 15.0)
-        h = rnd.uniform(0.5, 15.0)
-        if kind == "mixed" and i % 3 == 0:
-            # L-shape: the full rect minus its top-right quadrant
-            ring = [
-                (x0, y0), (x0 + w, y0), (x0 + w, y0 + h / 2),
-                (x0 + w / 2, y0 + h / 2), (x0 + w / 2, y0 + h),
-                (x0, y0 + h), (x0, y0),
-            ]
-        else:
-            ring = [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h), (x0, y0)]
-        rows.append(W.write_wkb(("Polygon", [ring])))
-    return rows
 
 
 @pytest.mark.parametrize("cell", [4.0, 40.0])
@@ -546,8 +522,8 @@ def test_zorder_layout_partitions_are_sorted_disjoint_ranges(spark):
 # rect, built in codegen; every other pair goes through the exact
 # kernels on NULL-masked args. Under dissolve a record whose zones are
 # all rects is measured by ops.rect_union_area, so no WKB reaches Python
-# for it; a record with any kernel zone unions its rects and zones in
-# ops.union_area.
+# for it; a record with any other pair is measured against its rects
+# and features in one ops.covered_area sweep.
 
 
 def test_rect_union_area_matches_overlay_union():
@@ -641,14 +617,16 @@ def test_per_pair_routing_matches_the_kernel_path(spark, dissolve, cell):
     through the exact kernels) must agree with the kernel path, forced
     by records whose prep says boxy=False. Seeded rect records meet a
     mixed rect/L-shape layer, so most records have candidates of both
-    kinds; a curvy record would take the kernel path under either
-    routing and add nothing to the comparison."""
+    kinds. Under dissolve the records are mixed too, a density whose
+    unioned zones once failed the whole query (records r12 here), and
+    every record must also match ops.covered_area of the whole layer,
+    computed in plain Python."""
     from terra_bonobo_nodes_spark.geo import ops
     from terra_bonobo_nodes_spark.operators.spatial import (
         intersection_percent_by_area,
     )
 
-    rec_geoms = _random_shapes(31, 60, "rects")
+    rec_geoms = _random_shapes(31, 60, "mixed" if dissolve else "rects")
     lay_geoms = _random_shapes(32, 40, "mixed")
     # the case per-pair routing creates: a boxy record whose envelope
     # overlaps a boxy and a curvy layer feature
@@ -682,13 +660,18 @@ def test_per_pair_routing_matches_the_kernel_path(spark, dissolve, cell):
     assert sum(v > 0 for v in natural.values()) >= 20
     for k in forced:
         assert abs(natural[k] - forced[k]) < 1e-9, (k, natural[k], forced[k])
+    if dissolve:
+        for i, g in enumerate(map(W.parse_wkb, rec_geoms)):
+            g = ops.make_valid(g)
+            want = ops.covered_area(g, shapes) / ops.area(g)
+            assert abs(natural[f"r{i}"] - want) < 1e-9, (i, natural[f"r{i}"], want)
 
 
 def test_dissolve_rect_fast_plan_carries_the_sweep_agg(spark):
-    """The all-boxy dissolve plan must contain the rect-sweep kernel
-    (the no-WKB lane exists as a physical path): JVM collect_list
-    feeding the batched SCALAR sweep kernel
-    (_st_rect_union_area_lists — one Python call per Arrow batch)."""
+    """The all-boxy dissolve plan must contain the covered-area kernel
+    (whose no-WKB lane is the rect sweep): JVM collect_list feeding the
+    batched SCALAR kernel (_st_covered_area_lists — one Python call per
+    Arrow batch)."""
     from terra_bonobo_nodes_spark.geo import wkb as W
     from terra_bonobo_nodes_spark.operators.spatial import (
         intersection_percent_by_area,
@@ -709,7 +692,7 @@ def test_dissolve_rect_fast_plan_carries_the_sweep_agg(spark):
         .optimizedPlan()
         .toString()
     )
-    assert "_st_rect_union_area_lists" in plan
+    assert "_st_covered_area_lists" in plan
     assert "collect_list" in plan
 
 
