@@ -248,7 +248,7 @@ def decontaminate_substring(
     # lazy localCheckpoint: the candidate posting feeds BOTH the totals
     # and the semi-join branch — without the barrier the winnow Arrow
     # kernel runs twice over the full corpus. (id, fp) longs only;
-    # plan-owned, ContextCleaner-freed (winnow_pairs convention).
+    # plan-owned, so the ContextCleaner frees it with the result.
     cand = (
         winnow_fingerprints(df, text_col, "_fps", k, window)
         .select(F.col(id_col), F.explode("_fps").alias("fp"))
@@ -265,7 +265,7 @@ def decontaminate_substring(
     # both counts — the totals/hits twin branches each re-scanned the
     # checkpointed posting and paid an id-join to recombine. The
     # checkpoint stays: it still guards the winnow kernel against
-    # filter-pushdown re-inlining (winnow_pairs convention).
+    # filter-pushdown re-inlining.
     out = (
         cand.join(bench.withColumn("_hit", F.lit(1)), "fp", "left")
         .groupBy(id_col)

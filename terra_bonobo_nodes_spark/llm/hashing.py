@@ -75,8 +75,15 @@ def hash32_sql(expr: str) -> str:
 # --- shingling --------------------------------------------------------------
 
 
-def normalize(c: Column) -> Column:
-    """Lowercase, collapse non-alphanumerics to single spaces, trim."""
+def normalize(c: Column | str) -> Column:
+    """Lowercase, collapse non-alphanumerics to single spaces, trim.
+
+    The str form is SQL text and parses as ONE expression (the
+    ``text.tokens`` rationale); both forms build the identical tree."""
+    if isinstance(c, str):
+        return F.expr(
+            f"trim(regexp_replace(regexp_replace(lower({c}), '[^a-z0-9]+', ' '), ' +', ' '))"
+        )
     return F.trim(
         F.regexp_replace(F.regexp_replace(F.lower(c), "[^a-z0-9]+", " "), " +", " ")
     )

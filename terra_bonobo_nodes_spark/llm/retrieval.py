@@ -63,7 +63,7 @@ def bm25_scores(
     # tokenize+explode pipeline into each consumer — a third full
     # corpus scan for a relation of at most |docs|·|terms| tiny rows.
     # Checkpoint (not persist) so the RDD is owned by the plan and
-    # freed by the ContextCleaner (winnow_pairs convention, llm/text.py).
+    # freed by the ContextCleaner.
     tf = (
         per_doc.groupBy(id_col, "_dl", "_t")
         .agg(F.count(F.lit(1)).alias("_tf"))

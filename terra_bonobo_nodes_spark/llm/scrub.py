@@ -15,9 +15,9 @@ Scale shapes (100 TB):
 - Boilerplate removal shuffles once on the paragraph hash to count
   document frequency, reduces the hot set (df > max_df) to a SMALL
   relation (boilerplate is by definition few distinct paragraphs), and
-  broadcasts it back as a hotness-marker join — the same df-cap shape
-  as ``winnow_pairs``/``tfidf`` (llm/text.py). The per-doc regroup is
-  the second and last shuffle.
+  broadcasts it back as a hotness-marker join — a document-frequency
+  cap like ``max_fp_df`` of ``winnow_pairs`` (llm/text.py). The per-doc
+  regroup is the second and last shuffle.
 """
 
 from __future__ import annotations
@@ -143,8 +143,7 @@ def remove_boilerplate(
     # read this relation — without the barrier the tokenize+chunk+md5
     # pipeline re-executes per consumer (measured 2x on the sf0.1
     # bench). Checkpoint ownership follows the returned plan, so it is
-    # released by the ContextCleaner, not leaked into the CacheManager
-    # (same lifetime contract as winnow_pairs, llm/text.py).
+    # released by the ContextCleaner, not leaked into the CacheManager.
     # posexplode_OUTER keeps empty/whitespace-only documents as one
     # null-paragraph row, so they survive to the output with
     # n_para = 0 and out_col = '' instead of silently vanishing; the

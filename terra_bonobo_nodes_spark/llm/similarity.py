@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.llm.text import _ident
+
 _HYPERPLANE_SEED = "tbns-hyperplane-v1"
 
 
@@ -109,6 +111,20 @@ def l2_normalize_sql(a: str) -> str:
     )
 
 
+def _top_k(scored: DataFrame, k: int, query_id_col: str) -> DataFrame:
+    """Each query's ``k`` best neighbors of ``scored`` (query id,
+    ``neighbor_id``, ``cos_sim``) with their 1-based ``rank``: cosine
+    descending, ties to the lower neighbor id. One parsed window
+    expression, so the tail costs a few py4j round trips."""
+    q = _ident(query_id_col)
+    return scored.selectExpr(
+        q,
+        "neighbor_id",
+        "cos_sim",
+        f"row_number() OVER (PARTITION BY {q} ORDER BY cos_sim DESC, neighbor_id ASC) AS `rank`",
+    ).where(f"`rank` <= {int(k)}")
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -138,9 +154,8 @@ def brute_force_topk(
     exactly the IEEE left-fold op sequence of :func:`dot_exact` /
     :func:`dot_exact_sql`. Ties break on neighbor id ascending.
     """
-    q_rows = (
-        queries.select(id_col, vec_col).limit(max_query_rows + 1).collect()
-    )
+    cols = [_ident(id_col), _ident(vec_col)]
+    q_rows = queries.selectExpr(*cols).limit(max_query_rows + 1).collect()
     if len(q_rows) > max_query_rows:
         raise ValueError(
             f"brute_force_topk: query side exceeds max_query_rows="
@@ -209,15 +224,8 @@ def brute_force_topk(
     out_schema = (
         f"{query_id_col} {id_type}, neighbor_id {id_type}, cos_sim double"
     )
-    scored = corpus.select(id_col, vec_col).mapInPandas(score_batches, out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", "rank")
-    )
+    scored = corpus.selectExpr(*cols).mapInPandas(score_batches, out_schema)
+    return _top_k(scored, k, query_id_col)
 
 
 def hyperplanes(n_planes: int, dim: int, table: int = 0) -> list[list[float]]:
@@ -419,14 +427,7 @@ def ivf_topk(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(scored, k, query_id_col)
 
 
 def lsh_topk(
@@ -484,14 +485,7 @@ def lsh_topk(
             / (F.col("_qn") * F.col("_cn"))
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(scored, k, query_id_col)
 
 
 def quantize_embeddings(

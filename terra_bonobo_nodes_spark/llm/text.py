@@ -26,6 +26,11 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 }
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def tokens(text: Column | str) -> Column:
     """Lowercased word tokens (whitespace+punct split, empties removed).
 
@@ -409,10 +414,10 @@ def _winnow_arrow_udf(k: int, window: int):
         return np.unique(mins).tolist()
 
     @F.pandas_udf("array<long>")
-    def udf(norm: pd.Series) -> pd.Series:
+    def _winnow(norm: pd.Series) -> pd.Series:
         return norm.map(one)
 
-    return udf
+    return _winnow
 
 
 def winnow_fingerprints(
@@ -452,9 +457,10 @@ def winnow_pairs(
     max_fp_df: int | None = 1000,
 ) -> DataFrame:
     """Near-duplicate pairs by shared winnowed fingerprints: explode to
-    an inverted index (fingerprint -> doc), self-join inside each
-    posting list, count shared prints per pair. The classic MOSS match
-    step as one shuffle-on-fingerprint + one shuffle-on-pair.
+    an inverted index (fingerprint -> doc), pair the documents inside
+    each posting list (:func:`_posting_pairs`), count shared prints per
+    pair. The classic MOSS match step as one shuffle-on-fingerprint +
+    one shuffle-on-pair.
 
     Scale: posting lists are the skew hazard — a boilerplate fragment
     shared by millions of docs would make one fingerprint quadratic.
@@ -462,45 +468,49 @@ def winnow_pairs(
     the cap (they carry no dedup signal anyway), exactly like
     ``max_shingle_df`` in ngram_jaccard_pairs.
 
-    The fingerprint arrays sit behind an optimizer barrier on purpose:
-    InferFiltersFromGenerate plants a ``size(fps) > 0`` predicate under
-    the Generate, and filter-pushdown-through-project *always* inlines
-    the referenced expression — without a barrier the whole staged
-    winnow computation collapses into that one interpreted predicate
-    (normalize regex re-run per lambda element, O(n^2·k) per doc;
-    measured: minutes instead of seconds at 500 docs). The barrier is a
-    lazy ``localCheckpoint`` rather than ``persist``: a persisted
-    relation lives in the session CacheManager until explicitly
-    unpersisted (every call would leak executor storage for the session
-    lifetime), while a checkpoint RDD is owned by the returned
-    DataFrame's plan and is released by Spark's ContextCleaner when the
-    result is garbage-collected. It holds (id, fps) only — ~8 bytes per
-    surviving gram, smaller than the text itself."""
-    fps_df = winnow_fingerprints(df, text_col, "_fps", k, window).select(
-        F.col(id_col).alias("doc"), F.col("_fps")
-    ).localCheckpoint(eager=False)
-    inv = fps_df.select("doc", F.explode("_fps").alias("fp"))
+    The winnow kernel is evaluated once per document: its UDF is marked
+    non-deterministic (the ``geo/kernels.py::_evaluate_once``
+    rationale), so the ``size(_fps) > 0`` filter that
+    InferFiltersFromGenerate plants under the explode stays above the
+    kernel's projection instead of copying it into a second Python
+    node. The plan starts no job while it is built."""
+    from terra_bonobo_nodes_spark.llm.hashing import normalize
+
+    kernel = _winnow_arrow_udf(k, window).asNondeterministic()
+    fps = df.select(
+        F.expr(f"{_ident(id_col)} AS doc"),
+        kernel(normalize(_ident(text_col))).alias("_fps"),
+    )
+    return _posting_pairs(fps.selectExpr("doc", "explode(_fps) AS fp"), min_shared, max_fp_df)
+
+
+def _posting_pairs(inv: DataFrame, min_shared: int, max_fp_df: int | None) -> DataFrame:
+    """(doc_a, doc_b, n_shared) over an inverted index ``inv`` of
+    (doc, fp) rows whose fp is never NULL: the pairs of the self-join
+    ``a.fp = b.fp AND a.doc < b.doc`` sharing at least ``min_shared``
+    prints, fingerprints of more than ``max_fp_df`` rows dropped first.
+
+    Each posting list is collected once and sorted; ``posexplode`` walks
+    it and ``explode(slice(docs, pos + 2, ...))`` pairs each entry with
+    every later one, in generated code, guarded by ``doc_a < doc_b``.
+    So an id listed twice pairs twice with each larger id and never
+    with itself, and NULL ids (which ``collect_list`` drops) pair with
+    nothing but count toward the document frequency, as in the
+    self-join. The cap applies after the aggregation: a hot
+    fingerprint's id list is still collected, in the task that owns
+    its key, before it is dropped."""
+    posting = inv.groupBy("fp").agg(
+        F.expr("count(1) AS fp_df"), F.expr("array_sort(collect_list(doc)) AS docs")
+    )
     if max_fp_df is not None:
-        # heavy-hitter removal as a broadcast anti-join: the hot set
-        # (df > cap) is tiny by construction, so this costs one partial
-        # agg + a broadcast instead of a full sort of the posting list
-        # (a window count over fp would sort every posting row).
-        hot = (
-            inv.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("fp_df"))
-            .where(F.col("fp_df") > F.lit(max_fp_df))
-            .select("fp")
-        )
-        inv = inv.join(F.broadcast(hot), "fp", "left_anti")
-    a = inv.alias("a")
-    b = inv.alias("b")
+        posting = posting.where(f"fp_df <= {int(max_fp_df)}")
     return (
-        a.join(
-            b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc") < F.col("b.doc"))
-        )
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= F.lit(min_shared))
+        posting.selectExpr("docs", "posexplode(docs) AS (pos, doc_a)")
+        .selectExpr("doc_a", "explode(slice(docs, pos + 2, size(docs))) AS doc_b")
+        .where("doc_a < doc_b")
+        .groupBy("doc_a", "doc_b")
+        .agg(F.expr("count(1) AS n_shared"))
+        .where(f"n_shared >= {int(min_shared)}")
     )
 
 

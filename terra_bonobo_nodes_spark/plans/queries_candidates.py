@@ -1120,17 +1120,15 @@ def llm_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, nn_id, cos_sim, is_novel) for every added vector."""
     from terra_bonobo_nodes_spark.llm.similarity import brute_force_topk
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    standing = emb.where(F.expr("pmod(vec_id, 13) != 0"))
-    added = emb.where(F.expr("pmod(vec_id, 13) = 0"))
+    emb = load_table(spark, sf_dir, "embeddings")
+    standing = emb.where("pmod(vec_id, 13) != 0")
+    added = emb.where("pmod(vec_id, 13) = 0")
     nn = brute_force_topk(standing, added, k=1)
-    return nn.select(
-        F.col("query_id").alias("vec_id"),
-        F.col("neighbor_id").alias("nn_id"),
+    return nn.selectExpr(
+        "query_id AS vec_id",
+        "neighbor_id AS nn_id",
         "cos_sim",
-        (F.col("cos_sim") < F.lit(_NOV_THRESH)).alias("is_novel"),
+        f"cos_sim < {_NOV_THRESH!r}D AS is_novel",
     )
 
 

@@ -27,21 +27,11 @@ from terra_bonobo_nodes_spark.tables import load_table
 DSUM_VALUE = "CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS sum_value"
 
 
-# stream_tumbling_window_agg + stream_sliding_window_agg MERGED round
-# 14 into ONE (kind, window, key)-grain row (the j1 broadcast+grid
-# precedent): both event-time windowers run over the same events table
-# and union tagged by kind — tumbling rows keep their event_type key,
-# sliding rows (keyless by design) carry 'ALL'. Identical per-function
-# coverage in one slot; each operator's plan is unchanged (the union
-# is above both aggregations).
-#
-# ROUND-17 (ledger item 3 funding): stream_props_json_rollup MERGED in
-# as a THIRD union leg (kind='props') — the registered name keeps its
-# (kind, window_start, event_type)-ish grain with a NULL-padded sum_k /
-# sum_value per leg, each constituent's aggregation verbatim (the
-# r16-staged stream_window_agg_surface_wide candidate, moved here at
-# registration). The narrow two-leg form and the rollup stay below as
-# unregistered components; the freed slot funds llm_novelty_scores.
+# stream_window_agg_surface covers three aggregations in one registered
+# row: tumbling windows per event_type, keyless sliding windows (event_type
+# 'ALL') and the JSON props rollup (kind 'props'), unioned on one
+# NULL-padded (kind, window_start, event_type) row shape. Each leg's
+# aggregation is the unregistered component below, unchanged.
 
 _WINDOW_SURFACE_2LEG_ORACLE = f"""
 WITH t AS (
@@ -80,19 +70,11 @@ def stream_window_agg_2leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, mirrored in SQL by the shifted-bucket UNION ALL), tagged
     by kind on one row shape."""
     ev = load_table(spark, sf_dir, "events")
-    t = tumbling_window_agg(ev, duration="1 hour").select(
-        F.lit("tumbling").alias("kind"),
-        "window_start",
-        "event_type",
-        "n_events",
-        "sum_value",
+    t = tumbling_window_agg(ev, duration="1 hour").selectExpr(
+        "'tumbling' AS kind", "window_start", "event_type", "n_events", "sum_value"
     )
-    s = sliding_window_agg(ev, duration="1 hour", slide="30 minutes").select(
-        F.lit("sliding").alias("kind"),
-        "window_start",
-        F.lit("ALL").alias("event_type"),
-        "n_events",
-        "sum_value",
+    s = sliding_window_agg(ev, duration="1 hour", slide="30 minutes").selectExpr(
+        "'sliding' AS kind", "window_start", "'ALL' AS event_type", "n_events", "sum_value"
     )
     return t.unionAll(s)
 
@@ -113,17 +95,16 @@ FROM _p
 )
 def stream_window_agg_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time window surface + the dynamic-JSON props rollup on one
-    union-tagged row shape — the r17 merged form of the two streaming
-    rows. Zero new shuffles: the union sits above the three
-    aggregations, each keyed as before."""
-    nul = F.lit(None).cast("bigint")
-    w = stream_window_agg_2leg(spark, sf_dir).withColumn("sum_k", nul)
-    p = stream_props_json_rollup(spark, sf_dir).select(
-        F.lit("props").alias("kind"),
-        nul.alias("window_start"),
+    union-tagged row shape. Zero new shuffles: the union sits above the
+    three aggregations, each keyed as before. Built from parsed SQL down
+    to the window operators."""
+    w = stream_window_agg_2leg(spark, sf_dir).selectExpr("*", "CAST(NULL AS BIGINT) AS sum_k")
+    p = stream_props_json_rollup(spark, sf_dir).selectExpr(
+        "'props' AS kind",
+        "CAST(NULL AS BIGINT) AS window_start",
         "event_type",
         "n_events",
-        F.lit(None).cast("double").alias("sum_value"),
+        "CAST(NULL AS DOUBLE) AS sum_value",
         "sum_k",
     )
     return w.unionByName(p)
@@ -204,18 +185,15 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# stream_props_json_rollup RETIRED round 17 into the widened
-# stream_window_agg_surface above (its 'props' union leg carries the
-# rollup's exact aggregation + oracle text); the component fn stays for
-# the surface to call.
+# the 'props' leg of stream_window_agg_surface
 def stream_props_json_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic JSON props bag (the reference's JSONB properties column,
     SURVEY.md §1.2) aggregated via get_json_object — schemaless k
     extraction stays JVM-side."""
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
-        F.sum(F.get_json_object("props", "$.k").cast("bigint")).alias("sum_k"),
-        F.count(F.lit(1)).alias("n_events"),
+        F.expr("sum(CAST(get_json_object(props, '$.k') AS BIGINT)) AS sum_k"),
+        F.expr("count(1) AS n_events"),
     )
 
 

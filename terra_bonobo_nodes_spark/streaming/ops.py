@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from terra_bonobo_nodes_spark.llm.text import _ident
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet: nanos→micros like
@@ -63,6 +65,21 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
+# The tumbling and sliding aggregations build from parsed SQL: about 3
+# py4j round trips per expression, against about 12 per Column op.
+# Their value sum is decimal-accumulated.
+_COUNT_SUM_VALUE = (
+    "count(1) AS n_events",
+    "CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS sum_value",
+)
+
+
+def _window_sql(ts_col: str, *lengths: str) -> str:
+    """``window(ts, 'duration'[, 'slide']) AS w`` as parsed SQL text."""
+    args = "".join(", '" + x.replace("\\", "\\\\").replace("'", "\\'") + "'" for x in lengths)
+    return f"window({_ident(ts_col)}{args}) AS w"
+
+
 def tumbling_window_agg(
     df: DataFrame,
     duration: str = "1 hour",
@@ -74,20 +91,11 @@ def tumbling_window_agg(
     stream; on a stream the watermark closes windows and evicts state."""
     if watermark and df.isStreaming:
         df = df.withWatermark(ts_col, watermark)
+    k = _ident(key)
     return (
-        df.groupBy(F.window(ts_col, duration).alias("w"), F.col(key))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(20,6)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp("w.start").alias("window_start"),
-            key,
-            "n_events",
-            "sum_value",
-        )
+        df.groupBy(F.expr(_window_sql(ts_col, duration)), F.expr(k))
+        .agg(*[F.expr(e) for e in _COUNT_SUM_VALUE])
+        .selectExpr("unix_timestamp(w.start) AS window_start", k, "n_events", "sum_value")
     )
 
 
@@ -103,18 +111,9 @@ def sliding_window_agg(
     if watermark and df.isStreaming:
         df = df.withWatermark(ts_col, watermark)
     return (
-        df.groupBy(F.window(ts_col, duration, slide).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(20,6)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp("w.start").alias("window_start"),
-            "n_events",
-            "sum_value",
-        )
+        df.groupBy(F.expr(_window_sql(ts_col, duration, slide)))
+        .agg(*[F.expr(e) for e in _COUNT_SUM_VALUE])
+        .selectExpr("unix_timestamp(w.start) AS window_start", "n_events", "sum_value")
     )
 
 

@@ -7,6 +7,8 @@ from __future__ import annotations
 import hashlib
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.llm import dedup, multimodal, similarity, text
@@ -658,6 +660,66 @@ def test_winnow_pairs_max_fp_df_drops_hot_prints(spark):
     capped = text.winnow_pairs(df, "doc_id", "text", min_shared=2, max_fp_df=4)
     assert dense.count() == 10  # all C(5,2) pairs share the boilerplate
     assert capped.count() == 0
+
+
+def _self_join_pairs(inv, min_shared, max_fp_df):
+    """The reference pair count over an inverted index (doc, fp): drop
+    fingerprints of more than ``max_fp_df`` rows, self-join on fp with
+    ``a.doc < b.doc``, keep pairs sharing ``min_shared`` prints."""
+    if max_fp_df is not None:
+        hot = (
+            inv.groupBy("fp")
+            .agg(F.count(F.lit(1)).alias("fp_df"))
+            .where(F.col("fp_df") > F.lit(max_fp_df))
+            .select("fp")
+        )
+        inv = inv.join(F.broadcast(hot), "fp", "left_anti")
+    a, b = inv.alias("a"), inv.alias("b")
+    return (
+        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc") < F.col("b.doc")))
+        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .where(F.col("n_shared") >= F.lit(min_shared))
+    )
+
+
+@st.composite
+def _postings(draw):
+    """(id type, (doc, fp) rows): ids repeat and may be NULL, fps
+    collide often, so lists hold duplicates, NULLs and ties. Up to four
+    independent indexes share one frame, each with its own fp range and
+    id tag, so one Spark job checks them all."""
+    kind = draw(st.sampled_from(["bigint", "string"]))
+    ids = st.integers(-2, 5) if kind == "bigint" else st.sampled_from(["a", "b", "B", "ab", "", "é"])
+    one = st.lists(st.tuples(st.one_of(st.none(), ids), st.integers(0, 3)), max_size=16)
+    rows = []
+    for j, index in enumerate(draw(st.lists(one, min_size=1, max_size=4))):
+        tag = (lambda d: d + 100 * j) if kind == "bigint" else (lambda d: f"{j}{d}")
+        rows += [(None if d is None else tag(d), fp + 10 * j) for d, fp in index]
+    return kind, rows
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    _postings(),
+    st.sampled_from([None, 1, 2, 3]),
+    st.integers(1, 3),
+)
+@example(("bigint", [(1, 0), (1, 0), (2, 0), (None, 0), (3, 1), (3, 1)]), None, 1)
+@example(("string", [("b", 0), ("a", 0), ("a", 0), (None, 1), ("b", 1)]), 2, 1)
+# unsorted lists, one exactly at the cap
+@example(("bigint", [(3, 0), (1, 0), (2, 0), (1, 0), (None, 0), (2, 1), (1, 1)]), 5, 1)
+@example(("string", [("b", 0), ("a", 0), ("", 0), ("B", 1), ("b", 1), ("a", 1)]), 3, 2)
+def test_posting_pairs_match_the_self_join(spark, postings, max_fp_df, min_shared):
+    kind, rows = postings
+    inv = spark.createDataFrame(rows, f"doc {kind}, fp bigint")
+    got = text._posting_pairs(inv, min_shared, max_fp_df)
+    want = _self_join_pairs(inv, min_shared, max_fp_df)
+    assert got.dtypes == want.dtypes
+    # both sides in one job
+    both = got.selectExpr("true AS new", "*").unionAll(want.selectExpr("false AS new", "*"))
+    out = both.collect()
+    assert sorted(r[1:] for r in out if r[0]) == sorted(r[1:] for r in out if not r[0])
 
 
 # --- TF-IDF + hash split ----------------------------------------------------
@@ -1934,3 +1996,131 @@ def test_decontamination_screens_union_not_intersect(spark):
     assert merged[1]["ngram_contaminated"] is not None
     assert merged[1]["substr_contaminated"] is None  # not screenable
     assert merged[2]["substr_contaminated"] is True
+
+
+def _string_id_corpus(spark):
+    rows = [(f"d{i}", [float(i), 1.0, 0.5]) for i in range(6)]
+    return spark.createDataFrame(rows, "vec_id string, embedding array<double>")
+
+
+def test_brute_force_topk_empty_query_schema_matches_nonempty(spark):
+    from terra_bonobo_nodes_spark.llm.similarity import brute_force_topk
+
+    corpus = _string_id_corpus(spark)
+    empty_q = corpus.limit(0)
+    nonempty = brute_force_topk(corpus, corpus.limit(2), k=2, query_id_col="query_id")
+    empty = brute_force_topk(corpus, empty_q, k=2, query_id_col="query_id")
+    assert empty.dtypes == nonempty.dtypes  # previously hardcoded bigint ids
+    assert empty.count() == 0
+
+
+def test_quantized_rerank_empty_query_schema_matches_nonempty(spark):
+    from terra_bonobo_nodes_spark.llm.similarity import quantized_rerank_topk
+
+    corpus = _string_id_corpus(spark)
+    nonempty = quantized_rerank_topk(corpus, corpus.limit(2), k=2, coarse_k=3)
+    empty = quantized_rerank_topk(corpus, corpus.limit(0), k=2, coarse_k=3)
+    assert empty.dtypes == nonempty.dtypes
+    assert empty.count() == 0
+
+
+def test_pii_redact_sql_escapes_single_quotes(duck):
+    from terra_bonobo_nodes_spark.llm.scrub import pii_redact_sql
+
+    # a pattern containing a single quote must stay inside the literal
+    expr = pii_redact_sql("t", patterns={"apos": r"\w+'s"})
+    got = duck.execute(f"SELECT {expr} AS r FROM (SELECT 'the cat''s hat' AS t)").fetchone()[0]
+    assert got == "the <APOS> hat"
+
+
+def test_jpeg_fill_bytes_before_markers_decode_identically():
+    import numpy as np
+
+    from terra_bonobo_nodes_spark.llm.jpeg import decode_jpeg, encode_jpeg
+
+    rng = np.random.default_rng(7)
+    img = rng.integers(0, 256, size=(16, 24, 3), dtype=np.uint8)
+    plain = encode_jpeg(24, 16, img.tobytes())
+    want = decode_jpeg(plain)
+    # T.81 B.1.1.2: pad the first header marker after SOI with fill FFs
+    padded = plain[:2] + b"\xff\xff\xff" + plain[2:]
+    assert decode_jpeg(padded) == want
+
+
+def test_minhash_lsh_match_rejects_non_array_sig_column(spark):
+    from terra_bonobo_nodes_spark.llm.dedup import minhash_lsh_match
+
+    new = spark.createDataFrame(
+        [(1, "some text here", "coincidence")], "doc_id long, text string, sig string"
+    )
+    corpus = spark.createDataFrame([(2, "some text here")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="expected array<bigint>"):
+        minhash_lsh_match(new, corpus, n_hashes=8, bands=4)
+    # a coincidental array<double> of the right LENGTH must also refuse
+    # (the post-review hardening: length alone was not enough)
+    embed = spark.createDataFrame(
+        [(1, "some text here", [float(i) for i in range(8)])],
+        "doc_id long, text string, sig array<double>",
+    )
+    with pytest.raises(ValueError, match="expected array<bigint>"):
+        minhash_lsh_match(embed, corpus, n_hashes=8, bands=4)
+
+
+def test_minhash_lsh_match_rejects_wrong_length_sig(spark):
+    from terra_bonobo_nodes_spark.llm.dedup import minhash_lsh_match
+    from terra_bonobo_nodes_spark.llm.dedup import minhash_signatures
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
+    )
+    # signatures built with DIFFERENT n_hashes: silently wrong before r7
+    presig = minhash_signatures(docs, "text", "doc_id", n_hashes=8, shingle_n=3)
+    out = minhash_lsh_match(
+        docs.join(presig.select("doc_id", "sig"), "doc_id"),
+        docs,
+        n_hashes=16,
+        bands=4,
+        shingle_n=3,
+    )
+    with pytest.raises(Exception, match="length != n_hashes"):
+        out.collect()
+
+
+def test_minhash_lsh_match_accepts_valid_presig(spark):
+    from terra_bonobo_nodes_spark.llm.dedup import minhash_lsh_match, minhash_signatures
+
+    docs = spark.createDataFrame(
+        [(i, "the quick brown fox jumps over the lazy dog") for i in range(3)],
+        "doc_id long, text string",
+    )
+    presig = minhash_signatures(docs, "text", "doc_id", n_hashes=16, shingle_n=3)
+    fast = minhash_lsh_match(
+        docs.join(presig.select("doc_id", "sig"), "doc_id"),
+        docs,
+        n_hashes=16,
+        bands=4,
+        shingle_n=3,
+    )
+    slow = minhash_lsh_match(docs, docs, n_hashes=16, bands=4, shingle_n=3)
+    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
+
+
+def test_codec_roundtrip_deterministic_and_correct(spark):
+    import numpy as np
+
+    ids = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
+    a = {r.asset_id: r for r in multimodal.codec_roundtrip_seeded(ids).collect()}
+    b = {r.asset_id: r for r in multimodal.codec_roundtrip_seeded(ids).collect()}
+    assert a.keys() == b.keys() and len(a) == 12
+    for k in a:
+        assert tuple(a[k]) == tuple(b[k])  # bit-stable across runs
+    # format round-robin and dimensions
+    assert {r.fmt for r in a.values()} == {"png", "jpeg", "jpeg_progressive"}
+    assert all((r.width, r.height) == (48, 32) for r in a.values())
+    # PNG is lossless: its means must equal the synthesized image's
+    rng = np.random.RandomState(0)
+    img = rng.randint(0, 256, size=(32, 48, 3)).astype(np.uint8)
+    assert a[0].fmt == "png"
+    assert a[0].mean_r == round(float(img[..., 0].mean()), 4)
+    # JPEG is lossy but close on noise means (DC is exact to ~q/2)
+    assert abs(a[1].mean_r - 127.5) < 30

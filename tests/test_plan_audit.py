@@ -324,6 +324,31 @@ def test_partition_skew_report_is_distributed_topk(spark):
     assert [(r.key, r.n_rows) for r in hot] == [("0", 15), ("1", 15), ("2", 14)]
 
 
+def test_partition_skew_report(spark):
+    from pyspark.sql import functions as F
+
+    from terra_bonobo_nodes_spark.operators.quality import partition_skew_report
+
+    df = (
+        spark.range(1000)
+        .withColumn(
+            "k",
+            F.when(F.col("id") < 900, "hot").otherwise(F.col("id").cast("string")),
+        )
+        .repartition(4)
+    )
+    rows = {
+        (r.facet, r.key): r.n_rows
+        for r in partition_skew_report(df, ["k"], top_n=3).collect()
+    }
+    parts = {k: v for (f, k), v in rows.items() if f == "partition"}
+    hot = {k: v for (f, k), v in rows.items() if f == "hot_key"}
+    assert sum(parts.values()) == 1000 and len(parts) == 4
+    assert hot["hot"] == 900 and len(hot) == 3
+    # physical facet alone when no keys are given
+    assert {r.facet for r in partition_skew_report(df).collect()} == {"partition"}
+
+
 def _formatted_plan(df) -> str:
     import contextlib
     import io
@@ -362,13 +387,9 @@ def test_scalar_geometry_surface_plan_shape(spark):
     assert plan.count("struct<s_suppkey:bigint,s_acctbal:double>") >= 2
 
 
-def _python_nodes(spark, run) -> tuple[dict[str, int], str]:
-    """Run ``run()`` and read the final physical plans of the SQL
-    executions it started from Spark's status store: per Python node,
-    one count for each ``_st_*`` kernel it evaluates and one for a
-    ``MapInPandas`` node. Returns the counts and the plans' text."""
-    import re
-
+def _executions(spark, run) -> tuple[object, list[str]]:
+    """Run ``run()`` and return its result and the final physical plans
+    of the SQL executions it started, read from Spark's status store."""
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
 
@@ -383,9 +404,19 @@ def _python_nodes(spark, run) -> tuple[dict[str, int], str]:
 
     bus.waitUntilEmpty()
     before = max((e.executionId() for e in last(1)), default=-1)
-    run()
+    out = run()
     bus.waitUntilEmpty()
-    plans = [e.physicalPlanDescription() for e in last(50) if e.executionId() > before]
+    return out, [e.physicalPlanDescription() for e in last(50) if e.executionId() > before]
+
+
+def _python_nodes(spark, run) -> tuple[dict[str, int], str]:
+    """Run ``run()`` and read the final physical plans of the SQL
+    executions it started: per Python node, one count for each
+    ``_st_*`` or ``_winnow`` kernel it evaluates and one for a
+    ``MapInPandas`` node. Returns the counts and the plans' text."""
+    import re
+
+    _, plans = _executions(spark, run)
     counts: dict[str, int] = {}
     for plan in plans:
         tree, _, details = plan.partition("\n\n(")
@@ -398,7 +429,7 @@ def _python_nodes(spark, run) -> tuple[dict[str, int], str]:
             m = re.match(r"\((\d+)\) (\w+)", block)
             if not m or m.group(1) not in ids:
                 continue
-            names = set(re.findall(r"\b(_st_\w+)\(", block))
+            names = set(re.findall(r"\b(_st_\w+|_winnow)\(", block))
             if m.group(2) == "MapInPandas":
                 names.add("MapInPandas")
             for name in names:
@@ -460,3 +491,36 @@ def test_feature_layer_merge_reads_the_batch_once(spark, tmp_path):
     upsert()  # creates the layer
     counts, _ = _python_nodes(spark, upsert)
     assert counts["MapInPandas"] == 1
+
+
+RELATIONAL_LLM = (
+    "tpch_q1_pricing_summary",
+    "star_join_revenue_by_region",
+    "stream_window_agg_surface",
+    "llm_winnow_pairs",
+    "llm_novelty_scores",
+)
+
+
+def test_relational_llm_rows_start_no_job_while_built(spark):
+    """Building these rows' frames starts no SQL execution, except
+    llm_novelty_scores' documented collect of its query side
+    (llm/similarity.py::brute_force_topk)."""
+    q = all_queries()
+    started = {}
+    for name in RELATIONAL_LLM:
+        _, plans = _executions(spark, lambda n=name: q[n].spark_fn(spark, SF_DIR))
+        started[name] = len(plans)
+    assert started == {n: int(n == "llm_novelty_scores") for n in RELATIONAL_LLM}
+
+
+def test_winnow_pairs_runs_one_kernel_node_and_no_checkpoint(spark):
+    """llm_winnow_pairs evaluates its winnow kernel in one Python node,
+    reads no checkpointed RDD and starts no job while it is built."""
+    run = all_queries()["llm_winnow_pairs"].spark_fn
+    df, plans = _executions(spark, lambda: run(spark, SF_DIR))
+    assert plans == []
+    counts, plan = _python_nodes(spark, lambda: _noop(df))
+    assert counts == {"_winnow": 1}
+    assert "ExistingRDD" not in plan
+

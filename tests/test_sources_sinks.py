@@ -1425,3 +1425,36 @@ def test_shp_runner_honors_prj_crs_declaration():
     lam93 = 'PROJCS["RGF93 / Lambert-93",GEOGCS["RGF93"]]'
     with pytest.raises(NotImplementedError, match="non-WGS84"):
         shapefile_points_geojson_runner(cmd, with_prj(lam93))
+
+
+def test_check_constraints_rejects_empty_dict(spark):
+    from terra_bonobo_nodes_spark.operators.quality import check_constraints
+
+    df = spark.range(3)
+    with pytest.raises(ValueError, match="checks dict is empty"):
+        check_constraints(df, {})
+
+
+def test_profile_columns_rejects_no_columns(spark):
+    from terra_bonobo_nodes_spark.operators.quality import profile_columns
+
+    df = spark.range(3)
+    with pytest.raises(ValueError, match="no columns"):
+        profile_columns(df, [], [])
+
+
+def test_jsonl_keep_cols_collision_fails_fast(spark):
+    from terra_bonobo_nodes_spark.sources.jsonl import jsonl_documents_to_rows
+
+    df = spark.createDataFrame(
+        [("a", '{"id": 1, "text": "x"}')], "id string, content string"
+    )
+    with pytest.raises(ValueError, match="collide"):
+        jsonl_documents_to_rows(df, schema="id BIGINT, text STRING", keep_cols=["id"])
+    # non-colliding keep_cols still work
+    ok = jsonl_documents_to_rows(
+        df.withColumnRenamed("id", "src"),
+        schema="id BIGINT, text STRING",
+        keep_cols=["src"],
+    )
+    assert ok.columns == ["src", "id", "text"] and ok.count() == 1

@@ -347,3 +347,18 @@ def test_streaming_upsert_then_compaction(spark, tmp_path):
     df = spark.read.parquet(tgt)
     assert df.count() == want
     assert df.select("identifier").distinct().count() == want
+
+
+def test_stream_static_enrich_requires_key_expr(spark):
+    from terra_bonobo_nodes_spark.streaming import ops
+
+    ev = spark.createDataFrame([(1, 3)], "event_id long, user_id long")
+    dim = spark.createDataFrame([(3, "x")], "k int, name string")
+    with pytest.raises(TypeError):
+        ops.stream_static_enrich(ev, dim)  # no default key any more
+    with pytest.raises(ValueError, match="key_expr is required"):
+        ops.stream_static_enrich(ev, dim, key_expr=None, dim_key="k")
+    got = ops.stream_static_enrich(
+        ev, dim, key_expr=F.col("user_id"), dim_key="k"
+    ).collect()
+    assert len(got) == 1 and got[0]["name"] == "x"
