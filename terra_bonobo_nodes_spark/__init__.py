@@ -18,6 +18,7 @@ Layout
 - ``geo``        : WKB geometry kernel + ST-style column functions (§2.4)
 - ``llm``        : large-scale training-data ops (dedup, ANN, text, multimodal)
 - ``streaming``  : Structured Streaming capability extensions (§2.7)
+- ``sqltext``    : identifier quoting for the parsed-SQL plan builders
 """
 
 __version__ = "0.1.0"

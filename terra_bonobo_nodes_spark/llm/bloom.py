@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.llm import hashing
+from terra_bonobo_nodes_spark.sqltext import ident
 
 _SEED = "tbns-bloom-v1"
 _BITS_PER_WORD = 32
@@ -212,11 +213,8 @@ def flag_bloom_contaminated(
     # Column build of the k-slice membership test alone cost ~0.6s of
     # py4j round-trips per construct; the parsed form is a handful of
     # round-trips for the identical trees.
-    tc = text_col.replace("`", "``")  # escape backticks in identifiers
-    toks_sql = (
-        "split(trim(regexp_replace(regexp_replace(lower("
-        f"coalesce(`{tc}`, '')), '[^a-z0-9]+', ' '), ' +', ' ')), ' ')"
-    )
+    text_sql = f"coalesce({ident(text_col)}, '')"
+    toks_sql = f"split({hashing.normalize_sparksql(text_sql)}, ' ')"
     grams_sql = (
         f"filter(transform(sequence(1, greatest(size(_bl_toks) - {n - 1}, 1)), "
         f"i -> array_join(slice(_bl_toks, i, {n}), ' ')), g -> g != '')"
@@ -244,7 +242,7 @@ def flag_bloom_contaminated(
         f"size(filter(transform(_bl_grams, g -> md5(concat('{_SEED}-', g))), "
         f"d -> {member_sql}))"
     )
-    cols = [f"`{c.replace('`', '``')}`" for c in corpus.columns]
+    cols = [ident(c) for c in corpus.columns]
     pfx = prefix.replace("`", "``")
     return (
         corpus.selectExpr("*", f"{toks_sql} AS _bl_toks")

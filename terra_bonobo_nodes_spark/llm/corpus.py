@@ -245,27 +245,18 @@ def decontaminate_substring(
     """
     from terra_bonobo_nodes_spark.llm.text import winnow_fingerprints
 
-    # lazy localCheckpoint: the candidate posting feeds BOTH the totals
-    # and the semi-join branch — without the barrier the winnow Arrow
-    # kernel runs twice over the full corpus. (id, fp) longs only;
-    # plan-owned, so the ContextCleaner frees it with the result.
-    cand = (
-        winnow_fingerprints(df, text_col, "_fps", k, window)
-        .select(F.col(id_col), F.explode("_fps").alias("fp"))
-        .localCheckpoint(eager=False)
+    cand = winnow_fingerprints(df, text_col, "_fps", k, window).select(
+        F.col(id_col), F.explode("_fps").alias("fp")
     )
     bench = (
         winnow_fingerprints(benchmark, text_col, "_fps", k, window)
         .select(F.explode("_fps").alias("fp"))
         .distinct()
     )
-    # ONE pass over the candidate posting (r17 optimization, the
-    # decontaminate rationale): LEFT join against the DISTINCT
-    # fingerprint set preserves cardinality, so one aggregate yields
-    # both counts — the totals/hits twin branches each re-scanned the
-    # checkpointed posting and paid an id-join to recombine. The
-    # checkpoint stays: it still guards the winnow kernel against
-    # filter-pushdown re-inlining.
+    # ONE pass over the candidate posting (the decontaminate
+    # rationale): LEFT join against the DISTINCT fingerprint set
+    # preserves cardinality, so one aggregate yields both counts, and
+    # the winnow kernel runs once per candidate document.
     out = (
         cand.join(bench.withColumn("_hit", F.lit(1)), "fp", "left")
         .groupBy(id_col)

@@ -75,25 +75,28 @@ def hash32_sql(expr: str) -> str:
 # --- shingling --------------------------------------------------------------
 
 
-def normalize(c: Column | str) -> Column:
-    """Lowercase, collapse non-alphanumerics to single spaces, trim.
+# One chain for both SQL dialects; DuckDB's regexp_replace replaces
+# every match only with the 'g' option, Spark's always does.
+_NORMALIZE = "trim(regexp_replace(regexp_replace(lower({}), '[^a-z0-9]+', ' '{g}), ' +', ' '{g}))"
 
-    The str form is SQL text and parses as ONE expression (the
-    ``text.tokens`` rationale); both forms build the identical tree."""
-    if isinstance(c, str):
-        return F.expr(
-            f"trim(regexp_replace(regexp_replace(lower({c}), '[^a-z0-9]+', ' '), ' +', ' '))"
-        )
+
+def normalize(c: Column) -> Column:
+    """Lowercase, collapse non-alphanumerics to single spaces, trim."""
     return F.trim(
         F.regexp_replace(F.regexp_replace(F.lower(c), "[^a-z0-9]+", " "), " +", " ")
     )
 
 
+def normalize_sparksql(expr: str) -> str:
+    """Spark SQL text of :func:`normalize` over the SQL expression
+    ``expr``: it parses as ONE expression (the ``text.tokens``
+    rationale) into the identical tree."""
+    return _NORMALIZE.format(expr, g="")
+
+
 def normalize_sql(expr: str) -> str:
-    return (
-        "trim(regexp_replace(regexp_replace(lower("
-        f"{expr}), '[^a-z0-9]+', ' ', 'g'), ' +', ' ', 'g'))"
-    )
+    """DuckDB fragment matching :func:`normalize`."""
+    return _NORMALIZE.format(expr, g=", 'g'")
 
 
 def char_shingles_sql(expr: str, n: int) -> str:

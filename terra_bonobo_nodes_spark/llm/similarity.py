@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from terra_bonobo_nodes_spark.llm.text import _ident
+from terra_bonobo_nodes_spark.sqltext import ident
 
 _HYPERPLANE_SEED = "tbns-hyperplane-v1"
 
@@ -111,15 +111,17 @@ def l2_normalize_sql(a: str) -> str:
     )
 
 
-def _top_k(scored: DataFrame, k: int, query_id_col: str) -> DataFrame:
+def _top_k(scored: DataFrame, k: int, query_id_col: str, *carry: str) -> DataFrame:
     """Each query's ``k`` best neighbors of ``scored`` (query id,
-    ``neighbor_id``, ``cos_sim``) with their 1-based ``rank``: cosine
-    descending, ties to the lower neighbor id. One parsed window
-    expression, so the tail costs a few py4j round trips."""
-    q = _ident(query_id_col)
+    ``neighbor_id``, the ``carry`` columns, ``cos_sim``) with their
+    1-based ``rank``: cosine descending, ties to the lower neighbor id.
+    One parsed window expression, so the tail costs a few py4j round
+    trips."""
+    q = ident(query_id_col)
     return scored.selectExpr(
         q,
         "neighbor_id",
+        *map(ident, carry),
         "cos_sim",
         f"row_number() OVER (PARTITION BY {q} ORDER BY cos_sim DESC, neighbor_id ASC) AS `rank`",
     ).where(f"`rank` <= {int(k)}")
@@ -154,7 +156,7 @@ def brute_force_topk(
     exactly the IEEE left-fold op sequence of :func:`dot_exact` /
     :func:`dot_exact_sql`. Ties break on neighbor id ascending.
     """
-    cols = [_ident(id_col), _ident(vec_col)]
+    cols = [ident(id_col), ident(vec_col)]
     q_rows = queries.selectExpr(*cols).limit(max_query_rows + 1).collect()
     if len(q_rows) > max_query_rows:
         raise ValueError(
@@ -634,12 +636,4 @@ def quantized_rerank_topk(
         .join(F.broadcast(qvec), query_id_col)
     )
     cos = dot_exact("_qv", "_nv") / (norm("_qv") * norm("_nv"))
-    wr = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.withColumn("cos_sim", cos)
-        .withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "coarse_score", "cos_sim", "rank")
-    )
+    return _top_k(joined.withColumn("cos_sim", cos), k, query_id_col, "coarse_score")

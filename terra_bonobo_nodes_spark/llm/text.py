@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from terra_bonobo_nodes_spark.sqltext import ident
+
 WORD_RE = "[a-z0-9]+"
 PUNCT_RE = r"[.,;:!?'\"()\[\]{}-]"
 
@@ -24,11 +26,6 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
     "de": ("der", "die", "das", "und", "ist", "ein", "eine", "zu", "den", "von"),
     "es": ("el", "la", "los", "de", "y", "un", "una", "es", "que", "en"),
 }
-
-
-def _ident(name: str) -> str:
-    """``name`` as a backtick-quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def tokens(text: Column | str) -> Column:
@@ -394,6 +391,14 @@ def _winnow_arrow_udf(k: int, window: int):
     Horner fold exactly (values < 2^53, no overflow), sliding-window min
     + unique reproduces array_sort(array_distinct(minima)). Short docs
     zero-pad to k, matching ascii('') = 0 on the expression/oracle side.
+
+    The UDF is marked non-deterministic so it is evaluated once per row
+    (the ``geo/kernels.py::_evaluate_once`` rationale): the
+    ``size(fps) > 0`` filter that InferFiltersFromGenerate plants under
+    an explode of its output stays above the kernel's projection
+    instead of copying the kernel into a second Python node. In turn,
+    a filter written above the kernel is not pushed below it: filter
+    the rows before winnowing them.
     """
     weights = (WINNOW_BASE ** np.arange(k - 1, -1, -1)).astype(np.int64)
 
@@ -417,7 +422,7 @@ def _winnow_arrow_udf(k: int, window: int):
     def _winnow(norm: pd.Series) -> pd.Series:
         return norm.map(one)
 
-    return _winnow
+    return _winnow.asNondeterministic()
 
 
 def winnow_fingerprints(
@@ -433,12 +438,13 @@ def winnow_fingerprints(
     JVM-side and hashes in a vectorized Arrow kernel; ``impl="expr"``
     is the pure-column-expression reference (bit-identical, ~100x
     slower — interpreted HOF evaluation)."""
-    from terra_bonobo_nodes_spark.llm.hashing import normalize
+    from terra_bonobo_nodes_spark.llm.hashing import normalize, normalize_sparksql
 
     if impl not in ("arrow", "expr"):
         raise ValueError(f"impl must be arrow|expr, got {impl!r}")
     if impl == "arrow":
-        return df.withColumn(out, _winnow_arrow_udf(k, window)(normalize(F.col(text_col))))
+        norm = F.expr(normalize_sparksql(ident(text_col)))
+        return df.withColumn(out, _winnow_arrow_udf(k, window)(norm))
     staged = df.withColumn("_wnorm", normalize(F.col(text_col))).withColumn(
         "_wgrams", _gram_hashes(F.col("_wnorm"), k)
     )
@@ -468,20 +474,13 @@ def winnow_pairs(
     the cap (they carry no dedup signal anyway), exactly like
     ``max_shingle_df`` in ngram_jaccard_pairs.
 
-    The winnow kernel is evaluated once per document: its UDF is marked
-    non-deterministic (the ``geo/kernels.py::_evaluate_once``
-    rationale), so the ``size(_fps) > 0`` filter that
-    InferFiltersFromGenerate plants under the explode stays above the
-    kernel's projection instead of copying it into a second Python
-    node. The plan starts no job while it is built."""
-    from terra_bonobo_nodes_spark.llm.hashing import normalize
-
-    kernel = _winnow_arrow_udf(k, window).asNondeterministic()
-    fps = df.select(
-        F.expr(f"{_ident(id_col)} AS doc"),
-        kernel(normalize(_ident(text_col))).alias("_fps"),
+    The winnow kernel is evaluated once per document
+    (:func:`_winnow_arrow_udf`), and the plan starts no job while it is
+    built."""
+    inv = winnow_fingerprints(df, text_col, "_fps", k, window).selectExpr(
+        f"{ident(id_col)} AS doc", "explode(_fps) AS fp"
     )
-    return _posting_pairs(fps.selectExpr("doc", "explode(_fps) AS fp"), min_shared, max_fp_df)
+    return _posting_pairs(inv, min_shared, max_fp_df)
 
 
 def _posting_pairs(inv: DataFrame, min_shared: int, max_fp_df: int | None) -> DataFrame:
@@ -490,22 +489,25 @@ def _posting_pairs(inv: DataFrame, min_shared: int, max_fp_df: int | None) -> Da
     ``a.fp = b.fp AND a.doc < b.doc`` sharing at least ``min_shared``
     prints, fingerprints of more than ``max_fp_df`` rows dropped first.
 
-    Each posting list is collected once and sorted; ``posexplode`` walks
-    it and ``explode(slice(docs, pos + 2, ...))`` pairs each entry with
-    every later one, in generated code, guarded by ``doc_a < doc_b``.
-    So an id listed twice pairs twice with each larger id and never
-    with itself, and NULL ids (which ``collect_list`` drops) pair with
-    nothing but count toward the document frequency, as in the
-    self-join. The cap applies after the aggregation: a hot
-    fingerprint's id list is still collected, in the task that owns
-    its key, before it is dropped."""
-    posting = inv.groupBy("fp").agg(
-        F.expr("count(1) AS fp_df"), F.expr("array_sort(collect_list(doc)) AS docs")
-    )
+    The cap is a window count over each fingerprint's rows, applied
+    before anything is collected, so no list grows past ``max_fp_df``;
+    the window's row buffer spills, where a collected array could not.
+    The aggregate on fp then reuses the window's partitioning (no
+    second exchange). Each kept list is collected once and sorted;
+    ``posexplode`` walks it and ``explode(slice(docs, pos + 2, ...))``
+    pairs each entry with every later one, in generated code, guarded
+    by ``doc_a < doc_b``. So an id listed twice pairs twice with each
+    larger id and never with itself, and NULL ids (which
+    ``collect_list`` drops) pair with nothing but count toward the
+    document frequency, as in the self-join."""
     if max_fp_df is not None:
-        posting = posting.where(f"fp_df <= {int(max_fp_df)}")
+        inv = inv.selectExpr("doc", "fp", "count(1) OVER (PARTITION BY fp) AS fp_df").where(
+            f"fp_df <= {int(max_fp_df)}"
+        )
     return (
-        posting.selectExpr("docs", "posexplode(docs) AS (pos, doc_a)")
+        inv.groupBy("fp")
+        .agg(F.expr("array_sort(collect_list(doc)) AS docs"))
+        .selectExpr("docs", "posexplode(docs) AS (pos, doc_a)")
         .selectExpr("doc_a", "explode(slice(docs, pos + 2, size(docs))) AS doc_b")
         .where("doc_a < doc_b")
         .groupBy("doc_a", "doc_b")

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
 from terra_bonobo_nodes_spark.geo import kernels as K
+from terra_bonobo_nodes_spark.sqltext import ident
 
 IDENTIFIER = "identifier"
 
@@ -266,7 +267,7 @@ def _prepared(
         return default(F.col(name)).alias(alias)
     if dt is not None and dt.simpleString() == K.PREPARED_T.simpleString():
         # parsed SQL text (the _bbox_overlap rationale)
-        return F.expr(f"`{name.replace('`', '``')}` AS {alias}")
+        return F.expr(f"{ident(name)} AS {alias}")
     got = "no such column" if dt is None else dt.simpleString()
     raise ValueError(
         f"spatial join geometry column {name!r} must be binary (WKB) or "
@@ -325,7 +326,7 @@ def boolean_intersect(
         F.expr(f"CASE WHEN NOT ({both_boxy}) THEN _rx.geom END"),
         F.expr(f"CASE WHEN NOT ({both_boxy}) THEN _lx.geom END"),
     )
-    flag = f"`{out.replace('`', '``')}`"
+    flag = ident(out)
     hits = (
         _candidates(rec, lay, cell)
         .filter(hit)

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from terra_bonobo_nodes_spark.llm.text import _ident
+from terra_bonobo_nodes_spark.sqltext import ident
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,7 +77,7 @@ _COUNT_SUM_VALUE = (
 def _window_sql(ts_col: str, *lengths: str) -> str:
     """``window(ts, 'duration'[, 'slide']) AS w`` as parsed SQL text."""
     args = "".join(", '" + x.replace("\\", "\\\\").replace("'", "\\'") + "'" for x in lengths)
-    return f"window({_ident(ts_col)}{args}) AS w"
+    return f"window({ident(ts_col)}{args}) AS w"
 
 
 def tumbling_window_agg(
@@ -91,7 +91,7 @@ def tumbling_window_agg(
     stream; on a stream the watermark closes windows and evicts state."""
     if watermark and df.isStreaming:
         df = df.withWatermark(ts_col, watermark)
-    k = _ident(key)
+    k = ident(key)
     return (
         df.groupBy(F.expr(_window_sql(ts_col, duration)), F.expr(k))
         .agg(*[F.expr(e) for e in _COUNT_SUM_VALUE])

@@ -524,3 +524,13 @@ def test_winnow_pairs_runs_one_kernel_node_and_no_checkpoint(spark):
     assert counts == {"_winnow": 1}
     assert "ExistingRDD" not in plan
 
+
+def test_decontaminate_substring_runs_one_kernel_node_per_side(spark):
+    """llm_decontamination_surface's substring screen winnows the
+    candidate and the benchmark side in one Python node each and reads
+    no checkpointed RDD."""
+    df = all_queries()["llm_decontamination_surface"].spark_fn(spark, SF_DIR)
+    counts, plan = _python_nodes(spark, lambda: _noop(df))
+    assert counts == {"_winnow": 2}
+    assert "ExistingRDD" not in plan
+

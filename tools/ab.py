@@ -4,20 +4,21 @@ Each revision's tree is exported with ``git archive`` into a fresh
 directory under ``/tmp`` (the benchmark builds what it runs from its own
 checkout). Then ``--pairs`` pairs of runs follow, one run per tree, both
 on the same seed; the side that runs first alternates from pair to pair,
-so a drift of the host's load falls on both sides alike. Per metric the
-report gives each side's median and quartiles, and how many pairs NEW
+so a drift of the host's load falls on both sides alike. Every run is
+untraced and lasts ``run_seconds`` of NEW's ``BENCHMARK.json``. A pair
+counts only if both of its runs finish and report every operation
+correct. Per metric the report gives each side's median and quartiles, and how many pairs NEW
 won by the metric's ``better`` direction in ``BENCHMARK.json`` (lower
 unless it says higher). ``clear`` marks a metric whose medians differ
 by more than BASE's interquartile range.
 
 Usage::
 
-    python tools/ab.py BASE NEW [--workload relational_llm] [--pairs 10]
-        [--seconds 20] [--trace 0] [--seed 1] [--out FILE]
+    python tools/ab.py BASE NEW [--workload relational_llm] [--pairs 10] [--seed 1]
 
-BASE and NEW are git revisions of this repository. ``--out`` appends
-every run's metrics as one JSON line. The exported trees are removed at
-exit. Runs are sequential: one benchmark process at a time.
+BASE and NEW are git revisions of this repository. The exported trees
+are removed at exit. Runs are sequential: one benchmark process at a
+time.
 """
 
 from __future__ import annotations
@@ -46,15 +47,11 @@ def export(rev: str) -> Path:
     return out
 
 
-def directions(tree: Path) -> dict[str, str]:
-    spec = json.loads((tree / "BENCHMARK.json").read_text())
-    return {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
-
-
-def run(tree: Path, args: argparse.Namespace, seed: int) -> dict[str, float] | None:
-    """One benchmark run's metrics, or None if it failed."""
-    cmd = [sys.executable, "perfbench/run.py", "--workload", args.workload,
-           "--seed", str(seed), "--seconds", str(args.seconds), "--trace", str(args.trace)]
+def run(tree: Path, workload: str, seconds: float, seed: int) -> dict[str, float] | None:
+    """One benchmark run's metrics, or None if it failed or was not
+    correct."""
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
@@ -63,6 +60,7 @@ def run(tree: Path, args: argparse.Namespace, seed: int) -> dict[str, float] | N
     result = json.loads(lines[-1])
     if not result.get("correct"):
         print(f"  run not correct: failed={result.get('failed')}", file=sys.stderr)
+        return None
     return {k: v["value"] for k, v in result["metrics"].items()}
 
 
@@ -93,29 +91,22 @@ def main(argv: list[str]) -> int:
     ap.add_argument("new")
     ap.add_argument("--workload", default="relational_llm")
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=float, default=20)
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
-    ap.add_argument("--out", type=Path, default=None)
     args = ap.parse_args(argv)
 
     trees = {"base": export(args.base), "new": export(args.new)}
     try:
-        better = directions(trees["new"])
+        spec = json.loads((trees["new"] / "BENCHMARK.json").read_text())
+        better = {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
         pairs = []
         for i in range(args.pairs):
             seed = args.seed + i
             order = ("base", "new") if i % 2 == 0 else ("new", "base")
-            got = {}
-            for side in order:
-                got[side] = run(trees[side], args, seed)
-                if args.out is not None and got[side] is not None:
-                    with args.out.open("a") as f:
-                        f.write(json.dumps({"side": side, "rev": getattr(args, side),
-                                            "pair": i, "seed": seed,
-                                            "metrics": got[side]}) + "\n")
+            got = {side: run(trees[side], args.workload, spec["run_seconds"], seed)
+                   for side in order}
             print(f"pair {i + 1}/{args.pairs} seed {seed} first {order[0]}: "
-                  + ("ok" if None not in got.values() else "a run failed"), file=sys.stderr)
+                  + ("ok" if None not in got.values() else "a run failed or was not correct"),
+                  file=sys.stderr)
             if None not in got.values():
                 pairs.append((got["base"], got["new"]))
         if not pairs:
