@@ -471,8 +471,11 @@ def winnow_pairs(
     Scale: posting lists are the skew hazard — a boilerplate fragment
     shared by millions of docs would make one fingerprint quadratic.
     ``max_fp_df`` drops fingerprints whose document frequency exceeds
-    the cap (they carry no dedup signal anyway), exactly like
-    ``max_shingle_df`` in ngram_jaccard_pairs.
+    the cap (they carry no dedup signal anyway) before any pair is
+    made, like ``max_shingle_df`` in ngram_jaccard_pairs. It bounds the
+    pairs, not the posting lists: a hot print's id list is still
+    collected in full, in the one task that owns its key, before it is
+    dropped, so its memory grows with the print's document frequency.
 
     The winnow kernel is evaluated once per document
     (:func:`_winnow_arrow_udf`), and the plan starts no job while it is
@@ -489,25 +492,21 @@ def _posting_pairs(inv: DataFrame, min_shared: int, max_fp_df: int | None) -> Da
     ``a.fp = b.fp AND a.doc < b.doc`` sharing at least ``min_shared``
     prints, fingerprints of more than ``max_fp_df`` rows dropped first.
 
-    The cap is a window count over each fingerprint's rows, applied
-    before anything is collected, so no list grows past ``max_fp_df``;
-    the window's row buffer spills, where a collected array could not.
-    The aggregate on fp then reuses the window's partitioning (no
-    second exchange). Each kept list is collected once and sorted;
-    ``posexplode`` walks it and ``explode(slice(docs, pos + 2, ...))``
-    pairs each entry with every later one, in generated code, guarded
-    by ``doc_a < doc_b``. So an id listed twice pairs twice with each
-    larger id and never with itself, and NULL ids (which
-    ``collect_list`` drops) pair with nothing but count toward the
-    document frequency, as in the self-join."""
+    Each posting list is collected once and sorted; ``posexplode`` walks
+    it and ``explode(slice(docs, pos + 2, ...))`` pairs each entry with
+    every later one, in generated code, guarded by ``doc_a < doc_b``.
+    So an id listed twice pairs twice with each larger id and never
+    with itself, and NULL ids (which ``collect_list`` drops) pair with
+    nothing but count toward the document frequency, as in the
+    self-join. The cap applies after the aggregation (see
+    :func:`winnow_pairs` on what that costs)."""
+    posting = inv.groupBy("fp").agg(
+        F.expr("count(1) AS fp_df"), F.expr("array_sort(collect_list(doc)) AS docs")
+    )
     if max_fp_df is not None:
-        inv = inv.selectExpr("doc", "fp", "count(1) OVER (PARTITION BY fp) AS fp_df").where(
-            f"fp_df <= {int(max_fp_df)}"
-        )
+        posting = posting.where(f"fp_df <= {int(max_fp_df)}")
     return (
-        inv.groupBy("fp")
-        .agg(F.expr("array_sort(collect_list(doc)) AS docs"))
-        .selectExpr("docs", "posexplode(docs) AS (pos, doc_a)")
+        posting.selectExpr("docs", "posexplode(docs) AS (pos, doc_a)")
         .selectExpr("doc_a", "explode(slice(docs, pos + 2, size(docs))) AS doc_b")
         .where("doc_a < doc_b")
         .groupBy("doc_a", "doc_b")
