@@ -527,9 +527,13 @@ def test_winnow_pairs_runs_one_kernel_node_and_no_checkpoint(spark):
 
 def test_decontaminate_substring_runs_one_kernel_node_per_side(spark):
     """llm_decontamination_surface's substring screen winnows the
-    candidate and the benchmark side in one Python node each and reads
-    no checkpointed RDD."""
-    df = all_queries()["llm_decontamination_surface"].spark_fn(spark, SF_DIR)
+    candidate and the benchmark side in one Python node each, reads no
+    checkpointed RDD, and the row starts no job while it is built once
+    its Bloom filter is memoized."""
+    run = all_queries()["llm_decontamination_surface"].spark_fn
+    run(spark, SF_DIR)  # builds and memoizes the Bloom filter
+    df, plans = _executions(spark, lambda: run(spark, SF_DIR))
+    assert plans == []
     counts, plan = _python_nodes(spark, lambda: _noop(df))
     assert counts == {"_winnow": 2}
     assert "ExistingRDD" not in plan
