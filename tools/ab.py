@@ -7,9 +7,9 @@ on the same seed; the side that runs first alternates from pair to pair,
 so a drift of the host's load falls on both sides alike. Every run is
 untraced and lasts ``run_seconds`` of NEW's ``BENCHMARK.json``. A pair
 counts only if both of its runs finish and report every operation
-correct. Per metric the report gives each side's median and quartiles, and how many pairs NEW
-won by the metric's ``better`` direction in ``BENCHMARK.json`` (lower
-unless it says higher). ``clear`` marks a metric whose medians differ
+correct. Per metric the report gives each side's median and quartiles,
+and how many pairs NEW won by the metric's ``better`` direction in
+``BENCHMARK.json`` (lower unless it says higher). ``clear`` marks a metric whose medians differ
 by more than BASE's interquartile range.
 
 Usage::
