@@ -179,21 +179,23 @@ def _st_asgeojson(g: pd.Series) -> pd.Series:
     return pd.Series(_map1(g, f))
 
 
+def _repaired_wkb(g):
+    """WKB of a parsed geometry with the reference's auto-repair on
+    parse, mirroring AttributeToGeometry (common.py:306-312):
+    make_valid polygons, simplify(0) lines. NULL stays NULL."""
+    if g is None:
+        return None
+    if g[0] in ("Polygon", "MultiPolygon"):
+        g = ops.make_valid(g)
+    elif g[0] in ("LineString", "MultiLineString"):
+        g = ops.simplify(g, 0.0)
+    return W.write_wkb(g)
+
+
 @pandas_udf(BinaryType())
 def _st_geomfromgeojson(t: pd.Series) -> pd.Series:
     def f(s):
-        if s is None:
-            return None
-        # auto-repair on parse, mirroring AttributeToGeometry
-        # (common.py:306-312): make_valid polygons, simplify(0) lines
-        g = W.from_geojson(s)
-        if g is None:
-            return None
-        if g[0] in ("Polygon", "MultiPolygon"):
-            g = ops.make_valid(g)
-        elif g[0] in ("LineString", "MultiLineString"):
-            g = ops.simplify(g, 0.0)
-        return W.write_wkb(g)
+        return None if s is None else _repaired_wkb(W.from_geojson(s))
 
     return pd.Series(_map1(t, f))
 
@@ -209,13 +211,7 @@ def _st_geomfromany(t: pd.Series) -> pd.Series:
         if s is None:
             return None
         g = W.from_geojson(s) if s.lstrip().startswith("{") else W.parse_wkt(s)
-        if g is None:
-            return None
-        if g[0] in ("Polygon", "MultiPolygon"):
-            g = ops.make_valid(g)
-        elif g[0] in ("LineString", "MultiLineString"):
-            g = ops.simplify(g, 0.0)
-        return W.write_wkb(g)
+        return _repaired_wkb(g)
 
     return pd.Series(_map1(t, f))
 

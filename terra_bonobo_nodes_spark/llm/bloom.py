@@ -46,24 +46,8 @@ from terra_bonobo_nodes_spark.sqltext import ident
 _SEED = "tbns-bloom-v1"
 _BITS_PER_WORD = 32
 # k bit positions = the k 32-bit slices of ONE md5 digest per shingle
-# (hashing.seeded_digest/digest_slice — shared with llm/sketch.py so
-# the cross-engine slice math exists once); md5-per-shingle is the
-# dominant probe cost, so one digest instead of k is the 3x lever.
+# (hashing.digest_slice): one digest instead of k is the 3x lever.
 _MAX_K = hashing.DIGEST_SLICES
-
-
-def _digest(shingle: Column) -> Column:
-    return hashing.seeded_digest(shingle, _SEED)
-
-
-def _position_from(digest: Column, i: int, m_bits: int) -> Column:
-    """Slice ``i`` of the shared digest -> bit position in [0, m_bits)."""
-    return hashing.digest_slice(digest, i, m_bits)
-
-
-def position_sql(expr: str, i: int, m_bits: int) -> str:
-    """DuckDB fragment matching the position derivation."""
-    return hashing.digest_slice_sql(expr, _SEED, i, m_bits)
 
 
 def _probe_grams(text: Column, n: int) -> Column:
@@ -135,12 +119,16 @@ def build_bloom_bits(
     # packing loop with a NULL position. No .distinct(): bit_or packing is
     # idempotent, so deduplicating positions first would only add a
     # second shuffle for the identical filter.
-    digests = grams.select(_digest(F.col("_s")).alias("_dg")).where(
+    digests = grams.select(
+        hashing.seeded_digest(F.col("_s"), _SEED).alias("_dg")
+    ).where(
         F.col("_dg").isNotNull()
     )
     pos = digests.select(
         F.explode(
-            F.array(*[_position_from(F.col("_dg"), i, m_bits) for i in range(k)])
+            F.array(
+                *[hashing.digest_slice(F.col("_dg"), i, m_bits) for i in range(k)]
+            )
         ).alias("_p")
     )
     packed = (
@@ -220,26 +208,21 @@ def flag_bloom_contaminated(
         f"i -> array_join(slice(_bl_toks, i, {n}), ' ')), g -> g != '')"
     )
 
-    def _p(i: int) -> str:
-        # digest_slice(seeded_digest) over the lambda variable d
-        return (
-            f"pmod(cast(conv(substring(d, {1 + 8 * i}, 8), 16, 10) "
-            f"as bigint), {m_bits})"
-        )
-
     hits = []
     for i in range(k):
-        p = _p(i)
+        # digest_slice over the lambda variable d, a seeded digest
+        p = hashing.digest_slice_sparksql("d", i, m_bits)
         word = f"element_at({bits_sql}, cast(floor({p} / {_BITS_PER_WORD}) as int) + 1)"
         mask = f"cast(pow(2.0D, {p} % {_BITS_PER_WORD}) as bigint)"
         hits.append(f"(({word} & {mask}) != 0)")
     # explicit NULL guard (defense in depth — _probe_grams yields no
     # NULL grams, but a caller-supplied gram column might): element_at
     # with a NULL index does NOT reliably return NULL, so a NULL digest
-    # must fail membership outright (the _member_from_digest contract)
+    # must fail membership outright
     member_sql = "(d IS NOT NULL) AND " + " AND ".join(hits)
     n_hits_sql = (
-        f"size(filter(transform(_bl_grams, g -> md5(concat('{_SEED}-', g))), "
+        "size(filter(transform(_bl_grams, "
+        f"g -> {hashing.seeded_digest_sparksql('g', _SEED)}), "
         f"d -> {member_sql}))"
     )
     cols = [ident(c) for c in corpus.columns]

@@ -13,7 +13,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from terra_bonobo_nodes_spark.llm.hashing import hash32, hash32_sql
+from terra_bonobo_nodes_spark.llm.hashing import (
+    hash32,
+    row_hash,
+    row_hash_sql,
+    shard_key,
+    shard_key_sql,
+    unit32,
+)
 
 
 def chunk_assignments(
@@ -41,7 +48,7 @@ def chunk_assignments(
     shard = (
         F.col(shard_col)
         if shard_col is not None
-        else F.pmod(hash32(F.col(id_col).cast("string")), F.lit(n_shards))
+        else shard_key(id_col, n_shards)
     ).alias("shard")
     w = (
         Window.partitionBy("shard")
@@ -82,9 +89,7 @@ def stratified_sample(
     and uncorrelated with hash_split's assignment as long as the seeds
     differ. No shuffle; the filter pushes down to the scan column set.
     """
-    u = hash32(F.concat(F.lit(seed), F.col(id_col).cast("string"))) / F.lit(
-        4294967296.0
-    )
+    u = unit32(row_hash(id_col, seed))
     rate = None
     for name, r in sorted(rates.items()):
         cond = F.col(stratum_col) == F.lit(name)
@@ -202,7 +207,7 @@ def reservoir_sample(
     stable under appends (new rows displace old ones only by hash
     order, never by arrival order). One shuffle on the group key; the
     window's per-group state is the running rank, not the group."""
-    order = hash32(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+    order = row_hash(id_col, seed)
     w = Window.partitionBy(*group_cols).orderBy(order.asc(), F.col(id_col).asc())
     return (
         df.withColumn(rank_col, F.row_number().over(w))
@@ -293,16 +298,11 @@ def source_quota_sample(
     partition — the window still computes (rank is a streaming window
     function, no buffering past the frame), and AQE's skew handling
     splits the sort; for pathological single-source corpora pre-salt by
-    ``hash(id) % k`` and take per-salt caps of ``cap/k``.
+    ``hash(id) % k`` and take per-salt caps of ``cap/k``. This is
+    :func:`reservoir_sample` on the source key, rank column dropped.
     """
-    from pyspark.sql import Window
-
-    u = hash32(F.concat(F.lit(seed), F.col(id_col).cast("string")))
-    w = Window.partitionBy(source_col).orderBy(u.asc(), F.col(id_col).asc())
-    return (
-        df.withColumn("_qrank", F.row_number().over(w))
-        .where(F.col("_qrank") <= cap)
-        .drop("_qrank")
+    return reservoir_sample(df, [source_col], cap, id_col, seed, "_qrank").drop(
+        "_qrank"
     )
 
 
@@ -480,7 +480,7 @@ def token_budget_sample(
         budget = F.when(F.col(source_col) == k, F.lit(int(v))).otherwise(budget)
     if default_budget is not None:
         budget = F.coalesce(budget, F.lit(int(default_budget)))
-    u = hash32(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+    u = row_hash(id_col, seed)
     # materialize the token count ONCE below the window — feeding the
     # tokenization expression to both the projection and the window sum
     # would normalize+tokenize every document twice in the same stage
@@ -551,7 +551,7 @@ def stride_interleave(
     wexpr = F.lit(None).cast("long")
     for s, w in sorted(weights.items()):
         wexpr = F.when(F.col(source_col) == s, F.lit(int(w))).otherwise(wexpr)
-    u = hash32(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+    u = row_hash(id_col, seed)
     w_rank = Window.partitionBy(source_col).orderBy(
         u.asc(), F.col(id_col).asc()
     )
@@ -591,7 +591,7 @@ def stride_interleave_sql(
         f"WHEN {source_expr} = '{s}' THEN {int(w)}"
         for s, w in sorted(weights.items())
     )
-    u = hash32_sql(f"'{seed}' || CAST({id_expr} AS VARCHAR)")
+    u = row_hash_sql(id_expr, seed)
     return f"""
 WITH _si_src AS ({src_sql}),
 _si_w AS (
@@ -640,9 +640,7 @@ def packing_efficiency(
     ntok = F.coalesce(F.col(n_tokens_col).cast("long"), F.lit(0))
     rows = df.select(
         F.col(source_col).alias("source"),
-        F.pmod(hash32(F.col(id_col).cast("string")), F.lit(n_shards)).alias(
-            "_shard"
-        ),
+        shard_key(id_col, n_shards).alias("_shard"),
         ntok.alias("_ntok"),
         F.expr(
             f"(coalesce(CAST({n_tokens_col} AS BIGINT), 0) + {int(budget) - 1})"
@@ -696,12 +694,11 @@ def packing_efficiency_sql(
     n_tokens_expr: str = "n_tokens",
 ) -> str:
     """DuckDB replay of :func:`packing_efficiency`."""
-    h = hash32_sql(f"CAST({id_expr} AS VARCHAR)")
     b = int(budget)
     return f"""
 WITH _pe_rows AS (
   SELECT {source_expr} AS source,
-         {h} % {int(n_shards)} AS shard,
+         {shard_key_sql(id_expr, int(n_shards))} AS shard,
          coalesce(CAST({n_tokens_expr} AS BIGINT), 0) AS ntok,
          (coalesce(CAST({n_tokens_expr} AS BIGINT), 0) + {b - 1}) // {b}
            AS naive_seqs

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from terra_bonobo_nodes_spark.llm.hashing import (
     band_hash_sparksql,
     hash32,
+    hex_window,
     normalize,
 )
 
@@ -307,9 +308,7 @@ def simhash_col(
     toks = F.split(normalize(F.col(text_col)), " ")
     posting = df.select(F.col(id_col), F.explode(toks).alias("_t")).select(
         id_col,
-        F.conv(F.substring(F.md5(F.col("_t")), 1, nhex), 16, 10)
-        .cast("bigint")
-        .alias("_h"),
+        hex_window(F.md5(F.col("_t")), 1, nhex).alias("_h"),
     )
     # SQL-string expressions, not per-op Column building: the bits×
     # (sum/shiftright/&) aggregates plus the bits-term majority sum cost

@@ -78,20 +78,6 @@ _RANK_MAX = _RANK_BITS + 1
 _POW2 = [1 << (_RANK_MAX - rho) for rho in range(1, _RANK_MAX + 1)]
 
 
-def distinct_hash(c: Column) -> Column:
-    """60-bit uniform hash of a value (NULL in -> NULL out)."""
-    return (
-        F.conv(
-            F.substring(hashing.seeded_digest(c, _SEED), 1, _HASH_HEX), 16, 10
-        ).cast("bigint")
-    )
-
-
-def distinct_hash_sql(expr: str) -> str:
-    """DuckDB fragment matching :func:`distinct_hash`."""
-    return f"('0x' || substr(md5('{_SEED}-' || {expr}), 1, {_HASH_HEX}))::BIGINT"
-
-
 # --- KMV --------------------------------------------------------------------
 
 
@@ -116,7 +102,7 @@ def kmv_sketch(
     hashed = (
         df.select(
             F.col(group_col).alias("group"),
-            distinct_hash(F.col(value_col)).alias("h"),
+            hashing.seeded_hash(F.col(value_col), _SEED, _HASH_HEX).alias("h"),
         )
         .where(F.col("h").isNotNull())
         .distinct()
@@ -172,7 +158,7 @@ def kmv_report_sql(
 WITH _kmv_src AS ({src_sql}),
 _kmv_h AS (
   SELECT DISTINCT {group_expr} AS "group",
-         {distinct_hash_sql(value_expr)} AS h
+         {hashing.seeded_hash_sql(value_expr, _SEED, _HASH_HEX)} AS h
   FROM _kmv_src WHERE {value_expr} IS NOT NULL
 ),
 _kmv_rk AS (
@@ -234,7 +220,7 @@ def hll_registers(
     m = 1 << p
     dg = hashing.seeded_digest(F.col(value_col), _SEED)
     reg = hashing.digest_slice(dg, 0, m)
-    suffix = F.conv(F.substring(dg, 9, _RANK_HEX), 16, 10).cast("bigint")
+    suffix = hashing.hex_window(dg, 9, _RANK_HEX)
     rows = df.select(
         F.col(group_col).alias("group"),
         reg.alias("register"),
@@ -306,9 +292,10 @@ def hll_report_sql(
     raw_num = a_num * m * m * (1 << _RANK_MAX)
     pow2_lit = "[" + ", ".join(str(v) for v in _POW2) + "]"
     lc_lit = "[" + ", ".join(str(v) for v in _lc_table(m)) + "]"
-    digest = f"md5('{_SEED}-' || {value_expr})"
-    reg = f"(('0x' || substr({digest}, 1, 8))::BIGINT % {m})"
-    suffix = f"('0x' || substr({digest}, 9, {_RANK_HEX}))::BIGINT"
+    reg = hashing.digest_slice_sql(value_expr, _SEED, 0, m)
+    suffix = hashing.hex_window_sql(
+        hashing.seeded_digest_sql(value_expr, _SEED), 9, _RANK_HEX
+    )
     rho = (
         f"CASE WHEN {suffix} = 0 THEN {_RANK_MAX} "
         f"ELSE {_RANK_BITS + 1} - length(printf('%b', {suffix})) END"
@@ -444,7 +431,7 @@ def kmv_set_ops_sql(
 WITH _so_src AS ({src_sql}),
 _so_h AS (
   SELECT DISTINCT {group_expr} AS "group",
-         {distinct_hash_sql(value_expr)} AS h
+         {hashing.seeded_hash_sql(value_expr, _SEED, _HASH_HEX)} AS h
   FROM _so_src WHERE {value_expr} IS NOT NULL
 ),
 _so_sk AS (

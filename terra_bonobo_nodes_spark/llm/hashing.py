@@ -1,4 +1,5 @@
-"""Deterministic cross-engine hashing primitives for dedup operators.
+"""Deterministic cross-engine hashing primitives: every md5-derived key
+of the dedup, sampling and sketch operators, and the shingling.
 
 Every primitive here exists in TWO forms that produce bit-identical
 results: a Spark builder (a Column, or Spark-SQL text such as
@@ -48,12 +49,59 @@ def perm_params(n_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-# --- 32-bit md5 hash --------------------------------------------------------
+# --- md5 hex windows ---------------------------------------------------------
+# Every md5-derived key in the package is a window of an md5 hex digest
+# read as an unsigned int (<= 15 hex chars fits signed 64-bit).
+
+
+def hex_window(digest: Column, start: int, width: int) -> Column:
+    """Unsigned int of ``digest[start:start+width]`` (1-based)."""
+    return F.conv(F.substring(digest, start, width), 16, 10).cast("bigint")
+
+
+def hex_window_sql(digest: str, start: int, width: int) -> str:
+    """DuckDB fragment matching :func:`hex_window`."""
+    return f"('0x' || substr({digest}, {start}, {width}))::BIGINT"
 
 
 def hash32(c: Column) -> Column:
     """Unsigned 32-bit int from the first 8 md5 hex chars (Column)."""
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
+    return hex_window(F.md5(c), 1, 8)
+
+
+def hash32_sql(expr: str) -> str:
+    """DuckDB fragment matching :func:`hash32`."""
+    return hex_window_sql(f"md5({expr})", 1, 8)
+
+
+def unit32(h: Column) -> Column:
+    """A :func:`hash32` value mapped onto [0, 1)."""
+    return h / F.lit(4294967296.0)
+
+
+def unit32_sql(h: str) -> str:
+    """DuckDB fragment matching :func:`unit32`."""
+    return f"{h} / 4294967296.0"
+
+
+def row_hash(id_col: str, seed: str) -> Column:
+    """The samplers' seeded row key: hash32(seed || CAST(id AS STRING))."""
+    return hash32(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+
+
+def row_hash_sql(id_expr: str, seed: str) -> str:
+    """DuckDB fragment matching :func:`row_hash`."""
+    return hash32_sql(f"'{seed}' || CAST({id_expr} AS VARCHAR)")
+
+
+def shard_key(id_col: str, n_shards: int) -> Column:
+    """The packing shard of a row: hash32(CAST(id AS STRING)) mod n."""
+    return F.pmod(hash32(F.col(id_col).cast("string")), F.lit(n_shards))
+
+
+def shard_key_sql(id_expr: str, n_shards: int) -> str:
+    """DuckDB fragment matching :func:`shard_key`."""
+    return f"{hash32_sql(f'CAST({id_expr} AS VARCHAR)')} % {n_shards}"
 
 
 def shingle_hash_fast(c: Column) -> Column:
@@ -65,11 +113,6 @@ def shingle_hash_fast(c: Column) -> Column:
     (DuckDB has no xxhash64), which is the only reason md5 stays the
     default."""
     return F.pmod(F.xxhash64(c), F.lit(MINHASH_P))
-
-
-def hash32_sql(expr: str) -> str:
-    """DuckDB fragment matching :func:`hash32`."""
-    return f"('0x' || substr(md5({expr}), 1, 8))::BIGINT"
 
 
 # --- shingling --------------------------------------------------------------
@@ -175,13 +218,11 @@ def word_shingles_sql(expr: str, n: int) -> str:
 # inverted explode + groupBy-aggregate formulation instead.
 
 
-# --- multi-position digest slicing (Bloom / Count-Min) ----------------------
-# One md5 digest per key, its four 8-hex-char windows used as up to 4
-# independent 32-bit hashes (Kirsch-Mitzenmacher-style derivation):
-# the sketch operators pay ONE digest per key instead of k/d. Shared
-# here so the cross-engine-critical slice-and-mod arithmetic and its
-# DuckDB mirror exist exactly once (llm/bloom.py and llm/sketch.py
-# both consume these with their own seeds).
+# --- seeded digests: wide keys and multi-position slicing ------------------
+# md5 of ``seed + '-' + value``. The distinct/priority samplers read one
+# 60-bit window (seeded_hash); the sketches read its four 8-hex windows
+# as up to 4 independent 32-bit hashes (Kirsch-Mitzenmacher), ONE
+# digest per key instead of k/d.
 
 DIGEST_SLICES = 4  # md5 = 32 hex chars = 4 x 8-hex 32-bit windows
 
@@ -191,18 +232,42 @@ def seeded_digest(c: Column, seed: str) -> Column:
     return F.md5(F.concat(F.lit(f"{seed}-"), c))
 
 
+def seeded_digest_sql(expr: str, seed: str) -> str:
+    """DuckDB fragment matching :func:`seeded_digest`."""
+    return f"md5('{seed}-' || {expr})"
+
+
+def seeded_digest_sparksql(expr: str, seed: str) -> str:
+    """Spark SQL text of :func:`seeded_digest` over ``expr``."""
+    return f"md5(concat('{seed}-', {expr}))"
+
+
+def seeded_hash(c: Column, seed: str, width: int) -> Column:
+    """The first ``width`` hex chars of the seeded digest, as an int."""
+    return hex_window(seeded_digest(c, seed), 1, width)
+
+
+def seeded_hash_sql(expr: str, seed: str, width: int) -> str:
+    """DuckDB fragment matching :func:`seeded_hash`."""
+    return hex_window_sql(seeded_digest_sql(expr, seed), 1, width)
+
+
 def digest_slice(digest: Column, i: int, mod: int) -> Column:
     """32-bit slice ``i`` (0..3) of an md5 hex digest, mod ``mod``."""
-    return F.pmod(
-        F.conv(F.substring(digest, 1 + 8 * i, 8), 16, 10).cast("bigint"),
-        F.lit(mod),
+    return F.pmod(hex_window(digest, 1 + 8 * i, 8), F.lit(mod))
+
+
+def digest_slice_sparksql(digest: str, i: int, mod: int) -> str:
+    """Spark SQL text of :func:`digest_slice` over the digest ``digest``."""
+    return (
+        f"pmod(cast(conv(substring({digest}, {1 + 8 * i}, 8), 16, 10) "
+        f"as bigint), {mod})"
     )
 
 
 def digest_slice_sql(expr: str, seed: str, i: int, mod: int) -> str:
     """DuckDB fragment matching ``digest_slice(seeded_digest(expr))``."""
-    digest = f"md5('{seed}-' || {expr})"
-    return f"(('0x' || substr({digest}, {1 + 8 * i}, 8))::BIGINT % {mod})"
+    return f"({hex_window_sql(seeded_digest_sql(expr, seed), 1 + 8 * i, 8)} % {mod})"
 
 
 def band_hash_sql(sig_expr: str, band: int, rows_per_band: int) -> str:

@@ -35,23 +35,8 @@ from terra_bonobo_nodes_spark.llm import hashing
 
 _SEED = "tbns-cms-v1"
 # the d rows address via the d 32-bit slices of ONE md5 digest per
-# token (hashing.seeded_digest/digest_slice — shared with llm/bloom.py
-# so the cross-engine slice math exists once)
+# token (hashing.digest_slice)
 _MAX_D = hashing.DIGEST_SLICES
-
-
-def _digest(token: Column) -> Column:
-    return hashing.seeded_digest(token, _SEED)
-
-
-def _position_from(digest: Column, i: int, w: int) -> Column:
-    return hashing.digest_slice(digest, i, w)
-
-
-def position_sql(expr: str, i: int, w: int) -> str:
-    """DuckDB fragment matching :func:`_position_from` over the shared
-    per-token digest."""
-    return hashing.digest_slice_sql(expr, _SEED, i, w)
 
 
 def cms_cells(
@@ -70,7 +55,9 @@ def cms_cells(
     (a NULL can never be estimated — cms_estimate(NULL) is NULL)."""
     if not 1 <= d <= _MAX_D:
         raise ValueError(f"d must be in [1, {_MAX_D}] (one md5 digest)")
-    digests = tokens.select(_digest(F.col(token_col)).alias("_dg")).where(
+    digests = tokens.select(
+        hashing.seeded_digest(F.col(token_col), _SEED).alias("_dg")
+    ).where(
         F.col("_dg").isNotNull()
     )
     cells = digests.select(
@@ -79,7 +66,7 @@ def cms_cells(
                 *[
                     F.struct(
                         F.lit(i).alias("i"),
-                        _position_from(F.col("_dg"), i, w).alias("p"),
+                        hashing.digest_slice(F.col("_dg"), i, w).alias("p"),
                     )
                     for i in range(d)
                 ]
@@ -124,10 +111,10 @@ def cms_estimate(
             "counter rows; estimates beyond the digest's slices would "
             "silently use only the first 4"
         )
-    dg = _digest(c)
+    dg = hashing.seeded_digest(c, _SEED)
     ests = [
         F.element_at(
-            F.lit(counters[i]), _position_from(dg, i, w).cast("int") + 1
+            F.lit(counters[i]), hashing.digest_slice(dg, i, w).cast("int") + 1
         )
         for i in range(d)
     ]
@@ -192,7 +179,7 @@ def cms_inner_product_sql(
 
     def cells(src: str, key: str, tag: str) -> str:
         union = "\nUNION ALL ".join(
-            f"SELECT {i} AS i, {position_sql(key, i, w)} AS p"
+            f"SELECT {i} AS i, {hashing.digest_slice_sql(key, _SEED, i, w)} AS p"
             f" FROM ({src}) WHERE {key} IS NOT NULL"
             for i in range(d)
         )

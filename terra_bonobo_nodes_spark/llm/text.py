@@ -315,16 +315,6 @@ def lang_id(
     return df.withColumn(out, pred)
 
 
-def fingerprint(
-    df: DataFrame, text_col: str = "text", out: str = "fingerprint"
-) -> DataFrame:
-    """Document fingerprint: md5 of the punctuation/whitespace/case
-    normalized text — stable under reflow, the exact-dedup key."""
-    c = F.col(text_col)
-    norm = F.trim(F.regexp_replace(F.regexp_replace(F.lower(c), "[^a-z0-9]+", " "), r"\s+", " "))
-    return df.withColumn(out, F.md5(F.encode(norm, "UTF-8")))
-
-
 # Winnowing (Schleimer, Wilkerson & Aiken, SIGMOD 2003 — the MOSS
 # fingerprinter, public): polynomial hash over character k-grams, then
 # keep the minimum hash of every `window` consecutive grams. A shared
@@ -578,13 +568,11 @@ def hash_split(
     cluster sizes — the property a training pipeline needs so that
     re-runs and incremental appends never migrate a document between
     splits. Pure column expressions, no shuffle, no RNG state."""
-    from terra_bonobo_nodes_spark.llm.hashing import hash32
+    from terra_bonobo_nodes_spark.llm.hashing import row_hash, unit32
 
     weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
     total = sum(weights.values())
-    u = hash32(F.concat(F.lit(seed), F.col(id_col).cast("string"))) / F.lit(
-        4294967296.0
-    )
+    u = unit32(row_hash(id_col, seed))
     expr = None
     cum = 0.0
     items = sorted(weights.items())  # deterministic threshold order

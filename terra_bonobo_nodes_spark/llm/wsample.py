@@ -48,22 +48,6 @@ _HASH_HEX = 15
 _HASH_SPACE = 1 << 60
 
 
-def _h_plus_one(c) -> "F.Column":
-    return (
-        F.conv(
-            F.substring(hashing.seeded_digest(c, _SEED), 1, _HASH_HEX), 16, 10
-        ).cast("bigint")
-        + 1
-    )
-
-
-def _h_plus_one_sql(expr: str) -> str:
-    return (
-        f"(('0x' || substr(md5('{_SEED}-' || {expr}), 1, {_HASH_HEX}))"
-        "::BIGINT + 1)"
-    )
-
-
 def priority_sample(
     df: DataFrame,
     weight_col: str = "weight",
@@ -84,7 +68,9 @@ def priority_sample(
             F.col(group_col).alias("group"),
             F.col(id_col).alias("id"),
             F.col(weight_col).cast("bigint").alias("weight"),
-            _h_plus_one(F.col(id_col)).alias("_h"),
+            (hashing.seeded_hash(F.col(id_col), _SEED, _HASH_HEX) + 1).alias(
+                "_h"
+            ),
         )
         .where(F.col("id").isNotNull() & (F.col("weight") > 0))
         .select(
@@ -178,7 +164,7 @@ _ps_staged AS (
   SELECT {group_expr} AS "group", {id_expr} AS id,
          CAST({weight_expr} AS BIGINT) AS weight,
          (CAST({weight_expr} AS BIGINT)::HUGEINT * {_HASH_SPACE})
-           // {_h_plus_one_sql(id_expr)} AS q
+           // ({hashing.seeded_hash_sql(id_expr, _SEED, _HASH_HEX)} + 1) AS q
   FROM _ps_src
   WHERE {id_expr} IS NOT NULL AND CAST({weight_expr} AS BIGINT) > 0
 ),

@@ -736,16 +736,20 @@ def llm_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- multimodal plumbing ----------------------------------------------------
 
 
+# multimodal.fake_feature_vector: feature i = md5(payload || i) on [0, 1)
+_FEATURES_SQL = ",\n       ".join(
+    hashing.unit32_sql(hashing.hash32_sql(f"text || '{i}'")) + f" AS f{i}"
+    for i in range(4)
+)
+
+
 @register(
     "llm_multimodal_decode",
     oracle=f"""
 SELECT doc_id AS asset_id,
        CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
        md5(text) AS payload_md5,
-       ('0x' || substr(md5(text || '0'), 1, 8))::BIGINT / 4294967296.0 AS f0,
-       ('0x' || substr(md5(text || '1'), 1, 8))::BIGINT / 4294967296.0 AS f1,
-       ('0x' || substr(md5(text || '2'), 1, 8))::BIGINT / 4294967296.0 AS f2,
-       ('0x' || substr(md5(text || '3'), 1, 8))::BIGINT / 4294967296.0 AS f3
+       {_FEATURES_SQL}
 FROM documents
 """,
     tags=("llm", "multimodal"),
@@ -904,8 +908,7 @@ _SPLIT_SEED = "tbns-split-v1"
     oracle=f"""
 WITH u AS (
   SELECT doc_id,
-         {hashing.hash32_sql(f"'{_SPLIT_SEED}' || CAST(doc_id AS VARCHAR)")}
-           / 4294967296.0 AS u
+         {hashing.unit32_sql(hashing.row_hash_sql("doc_id", _SPLIT_SEED))} AS u
   FROM documents
 ),
 s AS (SELECT doc_id,
@@ -943,7 +946,7 @@ _MIX_RATES = {"en": 0.8, "fr": 0.5, "de": 0.25, "es": 0.1}  # zh -> default 0
 WITH t AS (
   SELECT doc_id,
          CAST(len({TOKS_SQL}) AS BIGINT) AS n_tokens,
-         {hashing.hash32_sql("CAST(doc_id AS VARCHAR)")} % {_PACK_SHARDS} AS shard
+         {hashing.shard_key_sql("doc_id", _PACK_SHARDS)} AS shard
   FROM documents
 ),
 s AS (
@@ -987,8 +990,7 @@ def _mix_rate_sql() -> str:
     oracle=f"""
 WITH u AS (
   SELECT doc_id, lang,
-         {hashing.hash32_sql("'tbns-sample-v1' || CAST(doc_id AS VARCHAR)")}
-           / 4294967296.0 AS u
+         {hashing.unit32_sql(hashing.row_hash_sql("doc_id", "tbns-sample-v1"))} AS u
   FROM documents
 )
 SELECT lang, count(*) AS n_kept, CAST(sum(doc_id) AS BIGINT) AS sum_ids
@@ -1269,7 +1271,7 @@ _BLOOM_M, _BLOOM_K, _BLOOM_N = 1 << 16, 3, 3
 
 def _bloom_leg_oracle() -> str:
     from terra_bonobo_nodes_spark.llm import hashing as _h
-    from terra_bonobo_nodes_spark.llm.bloom import position_sql
+    from terra_bonobo_nodes_spark.llm.bloom import _SEED
 
     # mirror llm/bloom._probe_grams: NULL-as-empty text, '' gram (the
     # empty-document degenerate) excluded — NULL/empty docs probe 0.
@@ -1284,11 +1286,11 @@ def _bloom_leg_oracle() -> str:
         + ", s -> s <> '')"
     )
     pos_union = "\nUNION ALL ".join(
-        f"SELECT {position_sql('s', i, _BLOOM_M)} AS p FROM bg"
+        f"SELECT {_h.digest_slice_sql('s', _SEED, i, _BLOOM_M)} AS p FROM bg"
         for i in range(_BLOOM_K)
     )
     probes = "\n    AND ".join(
-        f"EXISTS (SELECT 1 FROM pos WHERE pos.p = {position_sql('cg.s', i, _BLOOM_M)})"
+        f"EXISTS (SELECT 1 FROM pos WHERE pos.p = {_h.digest_slice_sql('cg.s', _SEED, i, _BLOOM_M)})"
         for i in range(_BLOOM_K)
     )
     return f"""
@@ -1706,7 +1708,7 @@ _PSW_K = 32
 _SAMPLE_SURFACE_BASE_ORACLE = f"""
 WITH h AS (
   SELECT doc_id,
-         {hashing.hash32_sql(f"'{_RSV_SEED}' || CAST(doc_id AS VARCHAR)")} AS u
+         {hashing.row_hash_sql("doc_id", _RSV_SEED)} AS u
   FROM documents),
 r AS (
   SELECT doc_id,
@@ -1719,7 +1721,7 @@ qr AS (
   SELECT doc_id,
          row_number() OVER (
            PARTITION BY source
-           ORDER BY {hashing.hash32_sql("'tbns-quota-v1' || CAST(doc_id AS VARCHAR)")} ASC,
+           ORDER BY {hashing.row_hash_sql("doc_id", "tbns-quota-v1")} ASC,
                     doc_id ASC
          ) AS rnk
   FROM documents),

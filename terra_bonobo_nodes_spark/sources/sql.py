@@ -39,11 +39,11 @@ def sql_extract(
 
 @dataclass(frozen=True)
 class JDBCConf:
-    """Connector seam for S3/S4 (the ES-seam pattern, ``sinks/es.py``):
-    the SAME extract calls run against a live database by passing a
-    conf with ``backend="jdbc"`` — a config change, not a code change.
-    The parquet stand-in (default) keeps the identical DataFrame
-    contract, so tests and oracle queries are backend-agnostic.
+    """Live-database scan for S3/S4: :meth:`read` is the only path that
+    reaches a database. ``sql_extract`` takes no conf and always runs
+    on the engine itself (the registered queries read parquet
+    stand-ins through it); :meth:`read` returns the same coerced
+    DataFrame contract from a JDBC source.
 
     Option mapping onto ``spark.read.format("jdbc")``, mirroring the
     reference's paginated ``ExtractFeatures`` scan
@@ -59,7 +59,6 @@ class JDBCConf:
     through verbatim (driver, user, sessionInitStatement, ...).
     """
 
-    backend: str = "parquet"  # "parquet" (stand-in) | "jdbc" (live DB)
     url: str = "jdbc:postgresql://localhost:5432/terra"
     partition_column: str | None = "id"
     num_partitions: int = 8

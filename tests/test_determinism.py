@@ -92,3 +92,20 @@ def test_golden_record_zero_pairs_all_singletons(spark):
     out = golden_record(df, "rec_id", "name", max_distance=1)
     got = {(r["entity_id"], r["n_members"], r["canonical_name"]) for r in out.collect()}
     assert got == {(1, 1, "alpha"), (2, 1, "zebra"), (3, 1, "quux")}
+
+
+def test_golden_record_transitive_merge_and_singletons(spark):
+    from terra_bonobo_nodes_spark.operators.linkage import golden_record
+
+    rows = [
+        (1, "acme corp"),
+        (2, "acme corp."),      # ~1 edit from 1
+        (3, "acme corpse"),     # ~1-2 edits from 2 -> same entity transitively
+        (9, "zzz unrelated"),   # singleton
+    ]
+    df = spark.createDataFrame(rows, "pid long, name string")
+    out = {r.entity_id: r for r in golden_record(df, "pid", "name").collect()}
+    assert set(out) == {1, 9}
+    assert out[1].n_members == 3
+    assert out[1].canonical_name == "acme corpse"  # longest wins
+    assert out[9].n_members == 1 and out[9].canonical_name == "zzz unrelated"

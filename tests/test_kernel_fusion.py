@@ -13,6 +13,7 @@ each vectorized fast path against its exact per-row fallback.
 
 from __future__ import annotations
 
+import json
 import math
 
 import numpy as np
@@ -23,6 +24,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.geo import kernels as K
+from terra_bonobo_nodes_spark.geo import ops
 from terra_bonobo_nodes_spark.geo import wkb as W
 
 
@@ -283,3 +285,30 @@ def test_st_xy_uniform_batch_matches_per_row(pts):
     # the SQL faces ST_X / ST_Y read the same core
     assert _canon(list(K._st_x.func(pd.Series(wkbs)))) == [r[0] for r in _rows(uniform)]
     assert _canon(list(K._st_y.func(pd.Series(wkbs)))) == [r[1] for r in _rows(uniform)]
+
+
+def test_geometry_parsers_share_the_auto_repair():
+    """ST_GeomFromGeoJSON and ST_GeomFromAny repair on parse the same
+    way: make_valid on polygons, simplify(0) on lines, other types
+    untouched, NULL and unparseable input to NULL. The GeoJSON and WKT
+    spellings of one geometry give the same WKB."""
+    # a repeated vertex that make_valid drops, a collinear one that
+    # simplify(0) drops
+    poly = ("Polygon", [[(0.0, 0.0), (0.0, 0.0), (4.0, 0.0), (4.0, 3.0),
+                         (0.0, 3.0), (0.0, 0.0)]])
+    line = ("LineString", [(0.0, 0.0), (1.0, 0.0), (2.0, 0.0), (2.0, 1.0)])
+    point = ("Point", (1.5, -2.0))
+    geoms = [poly, line, point]
+    want = [
+        W.write_wkb(ops.make_valid(poly)),
+        W.write_wkb(ops.simplify(line, 0.0)),
+        W.write_wkb(point),
+    ]
+    assert want[0] != W.write_wkb(poly) and want[1] != W.write_wkb(line)
+    geojson = [json.dumps(W.to_geojson(g)) for g in geoms]
+    wkt = ["POLYGON ((0 0, 0 0, 4 0, 4 3, 0 3, 0 0))",
+           "LINESTRING (0 0, 1 0, 2 0, 2 1)", "POINT (1.5 -2)"]
+    assert list(K._st_geomfromgeojson.func(pd.Series(geojson + [None]))) == want + [None]
+    assert list(K._st_geomfromany.func(pd.Series(geojson + wkt + [None]))) == (
+        want + want + [None]
+    )

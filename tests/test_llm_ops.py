@@ -5,6 +5,7 @@ recall against the exact answer, multimodal mapInPandas plumbing."""
 from __future__ import annotations
 
 import hashlib
+import math
 
 import pytest
 from hypothesis import HealthCheck, example, given, settings
@@ -2124,3 +2125,59 @@ def test_codec_roundtrip_deterministic_and_correct(spark):
     assert a[0].mean_r == round(float(img[..., 0].mean()), 4)
     # JPEG is lossy but close on noise means (DC is exact to ~q/2)
     assert abs(a[1].mean_r - 127.5) < 30
+
+
+# --- BM25 (llm/retrieval.py) -------------------------------------------------
+
+
+def test_bm25_matches_reference_formula(spark):
+    from terra_bonobo_nodes_spark.llm.retrieval import bm25_scores
+
+    corpus = {
+        1: "spark shuffle join spark spark",
+        2: "window functions in spark",
+        3: "entirely unrelated prose about gardens",
+        4: "window window window",
+    }
+    df = spark.createDataFrame(list(corpus.items()), "doc_id long, text string")
+    out = {r.doc_id: r for r in bm25_scores(df, ["spark", "window"]).collect()}
+
+    # reference computation (same formula, plain Python)
+    toks = {d: t.split() for d, t in corpus.items()}
+    n = len(corpus)
+    avgdl = sum(len(t) for t in toks.values()) / n
+    dfreq = {
+        term: sum(1 for t in toks.values() if term in t)
+        for term in ("spark", "window")
+    }
+    k1, b = 1.2, 0.75
+    for d in corpus:
+        comps = []
+        for term in ("spark", "window"):
+            tf = toks[d].count(term)
+            if tf == 0:
+                continue
+            idf = math.log(1.0 + (n - dfreq[term] + 0.5) / (dfreq[term] + 0.5))
+            comps.append(
+                round(
+                    idf * (tf * (k1 + 1.0))
+                    / (tf + k1 * (1.0 - b + b * len(toks[d]) / avgdl)),
+                    9,
+                )
+            )
+        if not comps:
+            assert d not in out  # doc 3 hits no term
+            continue
+        assert out[d].n_terms_hit == len(comps)
+        assert out[d].score == pytest.approx(round(sum(comps), 6), abs=1e-6)
+    # a two-term hit outranks a single-term hit (tf saturation caps
+    # doc 1's repeated 'spark'), and the no-hit doc is absent entirely
+    assert out[2].score > out[1].score and 3 not in out
+
+
+def test_bm25_requires_terms(spark):
+    from terra_bonobo_nodes_spark.llm.retrieval import bm25_scores
+
+    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="non-empty"):
+        bm25_scores(df, [])

@@ -1251,7 +1251,6 @@ def test_jdbc_conf_seam_option_mapping():
     from terra_bonobo_nodes_spark.sources.sql import JDBCConf
 
     conf = JDBCConf(
-        backend="jdbc",
         url="jdbc:postgresql://db:5432/terra",
         partition_column="id",
         num_partitions=16,
@@ -1272,8 +1271,6 @@ def test_jdbc_conf_seam_option_mapping():
     flat = JDBCConf(partition_column=None).reader_options("SELECT 1")
     assert flat["query"] == "SELECT 1"
     assert "partitionColumn" not in flat and "dbtable" not in flat
-    # default conf stays on the parquet stand-in
-    assert JDBCConf().backend == "parquet"
 
 
 def test_jdbc_conf_live_partitioned_read_via_derby(spark):
@@ -1283,7 +1280,6 @@ def test_jdbc_conf_live_partitioned_read_via_derby(spark):
     from terra_bonobo_nodes_spark.sources.sql import JDBCConf
 
     conf = JDBCConf(
-        backend="jdbc",
         url="jdbc:derby:memory:tbns_seam;create=true",
         partition_column="id",
         num_partitions=2,
