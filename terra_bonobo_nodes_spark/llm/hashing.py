@@ -55,7 +55,8 @@ def perm_params(n_hashes: int) -> list[tuple[int, int]]:
 
 
 def hex_window(digest: Column, start: int, width: int) -> Column:
-    """Unsigned int of ``digest[start:start+width]`` (1-based)."""
+    """Unsigned int of the ``width`` hex chars of ``digest`` from 1-based
+    ``start`` (NULL in -> NULL out)."""
     return F.conv(F.substring(digest, start, width), 16, 10).cast("bigint")
 
 
