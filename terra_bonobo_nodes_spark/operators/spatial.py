@@ -172,18 +172,17 @@ def layer_clusters_geo(
 # --- J1-J3: spatial joins ----------------------------------------------------
 
 
-def _bbox_overlap(a: str, b: str) -> Column:
+def _bbox_overlap_sql(a: str, b: str) -> str:
     """JVM-evaluated envelope-overlap predicate over st_bbox arrays —
     the GiST-index-scan analogue: the cross join's pairs are culled in
     whole-stage codegen and only envelope-overlapping candidates reach
     the Python geometry kernel. Null bboxes (empty/bad geometry) fail
     the predicate, matching intersects()=False for empties.
 
-    The args are SQL references ("_rx.bbox") and parse as ONE
-    expression — op-by-op Column building pays a py4j round-trip per
-    operator (~0.3-5 ms each), and the spatial joins build this
-    predicate several times per operator call."""
-    return F.expr(
+    The args are SQL references ("_rx.bbox"), and the predicate is SQL
+    text that parses as ONE expression: op-by-op Column building pays
+    about 12 py4j round trips per operator, ``F.expr`` about 3."""
+    return (
         f"element_at({a}, 1) <= element_at({b}, 3) AND "
         f"element_at({b}, 1) <= element_at({a}, 3) AND "
         f"element_at({a}, 2) <= element_at({b}, 4) AND "
@@ -211,17 +210,17 @@ def _candidates(rec: DataFrame, lay: DataFrame, cell: float | None) -> DataFrame
       out the tail).
 
     Any other ``cell`` (zero, negative, NaN, infinite) raises ValueError.
+    The grid plan's pairs also carry its working columns ``_gx`` and
+    ``_gy``; every caller projects its own columns from the pairs.
     """
     rec_bbox, lay_bbox = "_rx.bbox", "_lx.bbox"
     if cell is None:
-        return rec.join(F.broadcast(lay), _bbox_overlap(rec_bbox, lay_bbox))
+        return rec.join(F.broadcast(lay), F.expr(_bbox_overlap_sql(rec_bbox, lay_bbox)))
     if not (math.isfinite(cell) and cell > 0):
         raise ValueError(f"cell must be a finite number > 0, got {cell!r}")
     c = float(cell)
 
-    # parsed SQL text throughout (the _bbox_overlap rationale): the
-    # grid expressions below are built once per operator call and the
-    # op-by-op form cost ~0.2s of py4j latency each
+    # parsed SQL text throughout (the _bbox_overlap_sql rationale)
     def tiled(df: DataFrame, bbox: str) -> DataFrame:
         gx = (
             f"explode(sequence(cast(floor(element_at({bbox}, 1) / {c!r}D) as long), "
@@ -232,42 +231,49 @@ def _candidates(rec: DataFrame, lay: DataFrame, cell: float | None) -> DataFrame
             f"cast(floor(element_at({bbox}, 4) / {c!r}D) as long)))"
         )
         return (
-            df.filter(F.expr(f"{bbox} IS NOT NULL"))
+            df.filter(f"{bbox} IS NOT NULL")
             .withColumn("_gx", F.expr(gx))
             .withColumn("_gy", F.expr(gy))
         )
 
     joined = tiled(rec, rec_bbox).join(tiled(lay, lay_bbox), on=["_gx", "_gy"])
-    rep = F.expr(
+    # one filter, and the grid columns left for the callers' own
+    # projections to prune: every transform is one more analysis of the
+    # whole plan, and the optimized plan is the same without them
+    return joined.filter(
         f"_gx = cast(floor(greatest(element_at({rec_bbox}, 1), "
         f"element_at({lay_bbox}, 1)) / {c!r}D) as long) AND "
         f"_gy = cast(floor(greatest(element_at({rec_bbox}, 2), "
-        f"element_at({lay_bbox}, 2)) / {c!r}D) as long)"
-    )
-    return (
-        joined.filter(_bbox_overlap(rec_bbox, lay_bbox))
-        .filter(rep)
-        .drop("_gx", "_gy")
+        f"element_at({lay_bbox}, 2)) / {c!r}D) as long) AND "
+        + _bbox_overlap_sql(rec_bbox, lay_bbox)
     )
 
 
 def _prepared(
-    df: DataFrame, name: str, alias: str, default: Callable[[Column], Column]
-) -> Column:
-    """One side's prep under the prepared-geometry contract, aliased to
-    ``alias`` — a struct with at least ``geom`` (the exact kernels'
-    input) and ``bbox`` fields. ``name`` must be a WKB (binary) column,
-    prepared here by ``default``, or a :data:`K.PREPARED_T` column
-    (nullability ignored), used as-is; anything else raises."""
+    df: DataFrame,
+    name: str,
+    alias: str,
+    default: Callable[[Column], Column],
+    *keep: str,
+) -> DataFrame:
+    """``df``'s ``keep`` columns and one side's prep under the
+    prepared-geometry contract, aliased to ``alias`` — a struct with at
+    least ``geom`` (the exact kernels' input) and ``bbox`` fields.
+    ``name`` must be a WKB (binary) column, prepared here by
+    ``default``, or a :data:`K.PREPARED_T` column (nullability
+    ignored), used as-is; anything else raises. One projection, in
+    parsed SQL text (the ``_bbox_overlap_sql`` rationale) except for
+    the Python kernel's call."""
     try:
         dt = df.schema[name].dataType
     except KeyError:
         dt = None
+    kept = [ident(k) for k in keep]
     if isinstance(dt, BinaryType):
-        return default(F.col(name)).alias(alias)
+        prep = default(F.expr(ident(name))).alias(alias)
+        return df.select(*map(F.expr, kept), prep)
     if dt is not None and dt.simpleString() == K.PREPARED_T.simpleString():
-        # parsed SQL text (the _bbox_overlap rationale)
-        return F.expr(f"{ident(name)} AS {alias}")
+        return df.selectExpr(*kept, f"{ident(name)} AS {alias}")
     got = "no such column" if dt is None else dt.simpleString()
     raise ValueError(
         f"spatial join geometry column {name!r} must be binary (WKB) or "
@@ -312,8 +318,8 @@ def boolean_intersect(
     side is read once, with no cache. Rows with no layer match keep
     flag=False via left join + coalesce."""
     prep = _with_geom(K.st_bbox_boxy)
-    rec = records.select(id_col, _prepared(records, record_geom, "_rx", prep))
-    lay = layer.select(_prepared(layer, layer_geom, "_lx", prep))
+    rec = _prepared(records, record_geom, "_rx", prep, id_col)
+    lay = _prepared(layer, layer_geom, "_lx", prep)
     both_boxy = "_rx.boxy AND _lx.boxy"
     # NULL-mask the kernel args on the boxy pairs: Catalyst extracts the
     # pandas UDF out of the Filter into an ArrowEvalPython node that
@@ -321,7 +327,7 @@ def boolean_intersect(
     # ships its WKB to Python for an answer the bbox join already gave.
     # Masked args make those rows a NULL-in/False-out no-op in the
     # kernel (no parse, no bytes); the OR keeps them on both_boxy.
-    # Parsed SQL text (the _bbox_overlap rationale).
+    # Parsed SQL text (the _bbox_overlap_sql rationale).
     hit = F.expr(both_boxy) | K.st_intersects(
         F.expr(f"CASE WHEN NOT ({both_boxy}) THEN _rx.geom END"),
         F.expr(f"CASE WHEN NOT ({both_boxy}) THEN _lx.geom END"),
@@ -382,19 +388,17 @@ def intersection_percent_by_area(
     # ONE fused kernel pass prepares a WKB record side: make_valid
     # (idempotent, so the reference's per-pair repair collapses to
     # per-row), bbox, boxy flag, and the area denominator
-    rec = records.select(id_col, _prepared(records, record_geom, "_rx", K.st_prepare))
-    lay = layer.select(
-        _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy))
-    )
+    rec = _prepared(records, record_geom, "_rx", K.st_prepare, id_col)
+    lay = _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy))
     cand = _candidates(rec, lay, cell)
-    # parsed SQL text throughout (the _bbox_overlap rationale)
+    # parsed SQL text throughout (the _bbox_overlap_sql rationale)
+    key = ident(id_col)
     both_boxy = "_rx.boxy AND _lx.boxy"
     # the kernel args are NULL-masked on boxy pairs, as in
     # boolean_intersect: the extracted Python node runs on EVERY
     # candidate row, and a NULL arg ships no WKB and skips the parse
     rx, lx = (
-        F.expr(f"CASE WHEN NOT ({both_boxy}) THEN {side}.geom END")
-        for side in ("_rx", "_lx")
+        f"CASE WHEN NOT ({both_boxy}) THEN {side}.geom END" for side in ("_rx", "_lx")
     )
     x0 = "greatest(element_at(_rx.bbox, 1), element_at(_lx.bbox, 1))"
     y0 = "greatest(element_at(_rx.bbox, 2), element_at(_lx.bbox, 2))"
@@ -407,16 +411,16 @@ def intersection_percent_by_area(
         positive = f"{x1} > {x0} AND {y1} > {y0}"
         corners = ("_zx0", "_zy0", "_zx1", "_zy1")
         per_id = (
-            cand.filter(F.expr(f"NOT ({both_boxy}) OR ({positive})"))
-            .select(
-                id_col,
+            cand.filter(f"NOT ({both_boxy}) OR ({positive})")
+            .selectExpr(
+                key,
                 *(
-                    F.expr(f"CASE WHEN {both_boxy} THEN {v} END AS {c}")
+                    f"CASE WHEN {both_boxy} THEN {v} END AS {c}"
                     for v, c in zip((x0, y0, x1, y1), corners)
                 ),
-                rx.alias("_rg"),
-                lx.alias("_lg"),
-                F.expr("_rx.area AS _ra"),
+                f"{rx} AS _rg",
+                f"{lx} AS _lg",
+                "_rx.area AS _ra",
             )
             .groupBy(id_col)
             # JVM collect_list (it skips the NULLs: a boxy pair adds
@@ -432,32 +436,48 @@ def intersection_percent_by_area(
                 F.expr("max(_ra) AS _ra"),
             )
             .select(
-                id_col,
-                K.st_covered_area_lists("_rg", *corners, "_lgs").alias(
-                    "_zone_area"
-                ),
-                "_ra",
+                F.expr(key),
+                K.st_covered_area_lists(
+                    *map(F.expr, ("_rg", *corners, "_lgs"))
+                ).alias("_zone_area"),
+                F.expr("_ra"),
             )
         )
     else:
         # no exact intersects prefilter here: an empty intersection
-        # adds 0 to the sum
+        # adds 0 to the sum. The kernel's call is a Column (a session
+        # need not know it by a SQL name), so one Column operator joins
+        # it to the SQL text of the boxy branch.
         w, h = f"({x1} - {x0})", f"({y1} - {y0})"
         rect_area = f"CASE WHEN {w} > 0 AND {h} > 0 THEN {w} * {h} ELSE 0.0D END"
         per_id = (
             cand.select(
-                id_col,
+                F.expr(key),
                 F.when(F.expr(both_boxy), F.expr(rect_area))
-                .otherwise(K.st_intersection_area(rx, lx))
+                .otherwise(K.st_intersection_area(F.expr(rx), F.expr(lx)))
                 .alias("_ia"),
                 F.expr("_rx.area AS _ra"),
             )
             .groupBy(id_col)
             .agg(F.expr("sum(_ia) AS _zone_area"), F.expr("max(_ra) AS _ra"))
         )
-    joined = records.join(per_id, on=id_col, how="left")
-    ratio = F.expr("coalesce(_zone_area / _ra, 0.0D)")
-    return joined.withColumn(out, ratio).drop("_zone_area", "_ra")
+    return _joined_back(records, per_id, id_col, out, "coalesce(_zone_area / _ra, 0.0D)")
+
+
+def _joined_back(
+    records: DataFrame, per_id: DataFrame, id_col: str, out: str, value: str
+) -> DataFrame:
+    """``records`` left-joined to the per-record result ``per_id`` on
+    ``id_col``, with column ``out`` set to the SQL ``value`` (in place
+    if ``records`` has an ``out`` column, else last) and ``per_id``'s
+    own columns dropped: one projection over the join, where
+    ``withColumn`` and ``drop`` were one analysis of the whole plan
+    each."""
+    cols = [id_col] + [c for c in records.columns if c != id_col]
+    exprs = [f"{value} AS {ident(out)}" if c == out else ident(c) for c in cols]
+    if out not in cols:
+        exprs.append(f"{value} AS {ident(out)}")
+    return records.join(per_id, on=id_col, how="left").selectExpr(*exprs)
 
 
 def intersection_geom(
@@ -490,23 +510,18 @@ def intersection_geom(
     ``None`` broadcasts the layer, a positive cell size runs the grid
     equi-join."""
     agg = K.st_union_agg if dissolve else K.st_collect_agg
-    rec = records.select(id_col, _prepared(records, record_geom, "_rx", K.st_prepare))
-    lay = layer.select(
-        _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy))
-    )
-    # parsed SQL text (the _bbox_overlap rationale)
+    rec = _prepared(records, record_geom, "_rx", K.st_prepare, id_col)
+    lay = _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy))
+    # parsed SQL text (the _bbox_overlap_sql rationale)
     rg, lg = F.expr("_rx.geom"), F.expr("_lx.geom")
     zones = (
         _candidates(rec, lay, cell)
         .filter(K.st_intersects(rg, lg))
-        .select(id_col, K.st_intersection(rg, lg).alias("_zone"))
+        .select(F.expr(ident(id_col)), K.st_intersection(rg, lg).alias("_zone"))
         .groupBy(id_col)
         .agg(agg(F.expr("_zone")).alias("_zone"))
     )
-    dest = geom_dest or record_geom
-    return records.join(zones, on=id_col, how="left").withColumn(
-        dest, F.expr("_zone")
-    ).drop("_zone")
+    return _joined_back(records, zones, id_col, geom_dest or record_geom, "_zone")
 
 
 # --- T1: geometric running difference ---------------------------------------

@@ -431,8 +431,8 @@ def s12_warc_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from terra_bonobo_nodes_spark.sources.warc import warc_reader
     from terra_bonobo_nodes_spark.sources.warc_codec import write_warc_records
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.coalesce("text", F.lit("")).alias("text")
+    docs = load_table(spark, sf_dir, "documents").selectExpr(
+        "doc_id", "coalesce(text, '') AS text"
     )
 
     def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -457,9 +457,11 @@ def s12_warc_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     packed = docs.mapInPandas(pack, "content binary")
     records = warc_reader(packed)
-    return records.select(
-        F.regexp_extract("target_uri", r"/doc/(\d+)$", 1).cast("long").alias("doc_id"),
-        F.decode("payload", "UTF-8").alias("text"),
+    # parsed SQL text (see queries_geo._j1_inputs); the SQL literal
+    # '\\d' is the regex \d
+    return records.selectExpr(
+        r"CAST(regexp_extract(target_uri, '/doc/(\\d+)$', 1) AS BIGINT) AS doc_id",
+        "decode(payload, 'UTF-8') AS text",
     )
 
 

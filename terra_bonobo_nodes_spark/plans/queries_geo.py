@@ -387,43 +387,43 @@ GROUP BY p.event_id
 
 def _j1_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Point-events vs nation rectangles, shared by the broadcast and
-    grid J1 registrations (one oracle, two physical strategies)."""
-    # NOT spread (guide §2.5 measured both ways, r17 second session):
-    # spreading the 100k-event scan before the point build read
-    # 2.22s min / 2.63s med vs 1.83/1.92 unspread — the extra exchange
-    # plus 32-task downstream stages across both strategies cost more
-    # than the single-task st_point+bbox prep saves (points are cheap
-    # to prepare; contrast the md5/HOF chains that do win from spread)
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("event_id").alias("identifier"),
-        ((F.col("value") % 360) - 180).alias("x"),
-        ((F.col("value") % 170) - 85).alias("y"),
+    grid J1 registrations (one oracle, two physical strategies). Parsed
+    SQL text throughout, with only the kernels' calls as Columns: a
+    Column operator costs about 12 py4j round trips, ``F.expr`` or
+    ``selectExpr`` text about 3."""
+    # NOT spread: spreading the events scan before the point build was
+    # measured slower (1.83 s unspread against 2.22 s, min of a bench
+    # run) — the extra exchange plus 32-task downstream stages across
+    # both strategies cost more than the single-task st_point+bbox prep
+    # saves (points are cheap to prepare; contrast the md5/HOF chains
+    # that do win from spread)
+    ev = load_table(spark, sf_dir, "events").selectExpr(
+        "event_id AS identifier", "(value % 360) - 180 AS x", "(value % 170) - 85 AS y"
     )
     # a point's prep is closed-form — bbox [x, y, x, y], always boxy,
     # area 0 — so the prepared struct builds in whole-stage codegen
     # around the vectorized st_point and NO WKB parse happens for it;
     # the joins take it as record_geom="prep" and skip their per-row
     # st_bbox_boxy pass
-    missing = F.expr("x IS NULL OR y IS NULL OR isnan(x) OR isnan(y)")
+    ok = "NOT (x IS NULL OR y IS NULL OR isnan(x) OR isnan(y))"
     pts = ev.withColumn(
         "prep",
         F.struct(
-            K.st_point("x", "y").alias("geom"),
-            F.when(~missing, F.expr("array(x, y, x, y)")).alias("bbox"),
-            (~missing).alias("boxy"),
-            F.lit(0.0).alias("area"),
+            K.st_point(F.expr("x"), F.expr("y")).alias("geom"),
+            F.expr(f"CASE WHEN {ok} THEN array(x, y, x, y) END AS bbox"),
+            F.expr(f"{ok} AS boxy"),
+            F.expr("0.0D AS area"),
         ),
     )
-    nation = load_table(spark, sf_dir, "nation").select(
-        ((F.col("n_nationkey") * 12).cast("double") - 160).alias("x0"),
-        (((F.col("n_nationkey") % 5) * 30).cast("double") - 75).alias("y0"),
+    nation = load_table(spark, sf_dir, "nation").selectExpr(
+        "CAST(n_nationkey * 12 AS DOUBLE) - 160 AS x0",
+        "CAST((n_nationkey % 5) * 30 AS DOUBLE) - 75 AS y0",
     )
     # same rectangle ring the WKT text built (float->string->float
     # round-trips are exact), one fused vectorized crossing
-    x0, y0 = F.col("x0"), F.col("y0")
     pp = K.st_poly_prep(
-        F.array(x0, x0 + 10, x0 + 10, x0),
-        F.array(y0, y0, y0 + 20, y0 + 20),
+        F.expr("array(x0, x0 + 10, x0 + 10, x0)"),
+        F.expr("array(y0, y0, y0 + 20, y0 + 20)"),
     )
     layer = nation.select(pp.alias("layer_prep"))
     return pts, layer
@@ -457,9 +457,7 @@ def j1_boolean_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = boolean_intersect(
         flagged, layer, out="in_zone_grid", cell=20.0, **prep
     )
-    return both.select(
-        F.col("identifier").alias("event_id"), "in_zone", "in_zone_grid"
-    )
+    return both.selectExpr("identifier AS event_id", "in_zone", "in_zone_grid")
 
 
 # --- J2: intersection percent by area ---------------------------------------

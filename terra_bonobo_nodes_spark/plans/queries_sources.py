@@ -79,41 +79,36 @@ FROM events
 )
 def s2_geojson_reader_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events -> FeatureCollection documents (one per event_type) ->
-    geojson_reader explode -> recover ids, properties, coordinates."""
-    ev = load_table(spark, sf_dir, "events").select(
+    geojson_reader explode -> recover ids, properties, coordinates.
+    Parsed SQL text, with only the kernel's call as a Column (see
+    queries_geo._j1_inputs)."""
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "event_id",
         "event_type",
-        ((F.col("value") % 360) - 180).alias("x"),
-        ((F.col("value") % 170) - 85).alias("y"),
+        "(value % 360) - 180 AS x",
+        "(value % 170) - 85 AS y",
     )
-    feature = F.concat(
-        F.lit('{"type":"Feature","id":"'),
-        F.col("event_id").cast("string"),
-        F.lit('","geometry":{"type":"Point","coordinates":['),
-        F.col("x").cast("string"),
-        F.lit(","),
-        F.col("y").cast("string"),
-        F.lit(']},"properties":{"event_type":"'),
-        F.col("event_type"),
-        F.lit('"}}'),
+    feature = (
+        """concat('{"type":"Feature","id":"', CAST(event_id AS STRING), """
+        """'","geometry":{"type":"Point","coordinates":[', CAST(x AS STRING), """
+        """',', CAST(y AS STRING), ']},"properties":{"event_type":"', """
+        """event_type, '"}}')"""
+    )
+    collection = (
+        """concat('{"type":"FeatureCollection","crs":{"type":"name",'"""
+        """ '"properties":{"name":"EPSG:4326"}},"features":[', """
+        """concat_ws(',', collect_list(_f)), ']}') AS content"""
     )
     docs = (
-        ev.withColumn("_f", feature)
+        ev.withColumn("_f", F.expr(feature))
         .groupBy("event_type")
-        .agg(
-            F.concat(
-                F.lit('{"type":"FeatureCollection","crs":{"type":"name",'
-                      '"properties":{"name":"EPSG:4326"}},"features":['),
-                F.concat_ws(",", F.collect_list("_f")),
-                F.lit("]}"),
-            ).alias("content")
-        )
+        .agg(F.expr(collection))
     )
     feats = geojson_reader(docs, "content")
-    xy = K.st_xy("geom")
+    xy = K.st_xy(F.expr("geom"))
     return feats.select(
-        "feature_id",
-        F.col("properties").getItem("event_type").alias("event_type"),
+        F.expr("feature_id"),
+        F.expr("properties['event_type'] AS event_type"),
         xy["x"].alias("gx"),
         xy["y"].alias("gy"),
     )

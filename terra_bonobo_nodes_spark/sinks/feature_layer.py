@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.geo import wkb as W
@@ -33,6 +33,7 @@ from terra_bonobo_nodes_spark.sinks.atomic import (
     read_parquet_or_none,
     staged_overwrite,
 )
+from terra_bonobo_nodes_spark.sqltext import ident
 
 EMPTY_POINT_WKB = W.write_wkb(W.POINT_EMPTY)
 
@@ -66,27 +67,30 @@ def _merged(
                 f"{side} already has reserved working column(s) "
                 f"{sorted(clash)}; rename them before load_feature_in_layer"
             )
-    geom = F.col(geom_col) if geom_col in df.columns else F.lit(None)
+    # parsed SQL text: a Column operator costs about 12 py4j round trips,
+    # ``F.expr`` about 3
+    geom = ident(geom_col) if geom_col in df.columns else "NULL"
     rows = df.withColumns(
         {
-            geom_col: F.coalesce(geom, F.lit(EMPTY_POINT_WKB)),
-            "updated_at": F.current_timestamp(),
-            _TAG: F.lit(1),
+            geom_col: F.expr(f"coalesce({geom}, X'{EMPTY_POINT_WKB.hex()}')"),
+            "updated_at": F.expr("current_timestamp()"),
+            _TAG: F.expr("1"),
         }
     )
     if existing is not None:
-        rows = existing.withColumn(_TAG, F.lit(0)).unionByName(
+        rows = existing.withColumn(_TAG, F.expr("0")).unionByName(
             rows, allowMissingColumns=True
         )
-    order = [F.col(order_col).desc()] if order_col else []
-    w = Window.partitionBy(identifier_col).orderBy(F.col(_TAG).desc(), *order)
+    key = ident(identifier_col)
+    order = f", {ident(order_col)} DESC" if order_col else ""
+    w = f"OVER (PARTITION BY {key} ORDER BY {_TAG} DESC{order})"
     # batch rows rank first, so the identifier's first row tells whether
     # the batch touches it
-    touched = F.first(_TAG).over(w) == 1
-    keep = F.when(F.col(_TAG) == 1, F.row_number().over(w) == 1).otherwise(
-        F.col(identifier_col).isNull() | ~touched
+    keep = (
+        f"CASE WHEN {_TAG} = 1 THEN row_number() {w} = 1 "
+        f"ELSE {key} IS NULL OR NOT (first({_TAG}) {w} = 1) END"
     )
-    return rows.withColumn(_KEEP, keep).filter(F.col(_KEEP)).drop(_TAG, _KEEP)
+    return rows.withColumn(_KEEP, F.expr(keep)).filter(_KEEP).drop(_TAG, _KEEP)
 
 
 def load_feature_in_layer(

@@ -290,15 +290,23 @@ def upsert_foreach_batch(
     """foreachBatch sink: last-writer-wins upsert into a parquet
     directory hash-partitioned by identifier bucket.
 
-    Per micro-batch: dedupe batch rows by id (epoch-max wins), read the
-    current target, anti-join out replaced ids, write the union back via
-    the staged-swap protocol (write ``__next__``, rename over target —
-    crash-safe, see ``sinks/atomic.py``). Idempotent per epoch id — a
-    retried batch rewrites the same rows. A *missing* target means an
-    empty store; any other read failure propagates rather than silently
-    discarding previously stored rows. (With Delta available this is
-    MERGE, mirroring the reference's transactional window flush at
-    terra.py:155-161.)"""
+    Per micro-batch: keep one batch row per id (``dropDuplicates``,
+    which keeps an arbitrary one of the id's rows), read the current
+    target, anti-join out replaced ids, write the union back via the
+    staged-swap protocol (write ``__next__``, rename over target —
+    crash-safe, see ``sinks/atomic.py``). A later batch's row replaces
+    an earlier batch's row for the same id.
+
+    Idempotent per epoch id only if rows that share an id within one
+    batch carry identical payloads: then a retried batch rewrites the
+    same rows. When one batch holds two different rows for an id, the
+    one kept is arbitrary, and a retry may keep the other.
+    ``stream_upsert_compaction_roundtrip`` relies on this condition: its
+    duplicate deliveries are copies of one event. A *missing* target
+    means an empty store; any other read failure propagates rather than
+    silently discarding previously stored rows. (With Delta available
+    this is MERGE, mirroring the reference's transactional window flush
+    at terra.py:155-161.)"""
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         from terra_bonobo_nodes_spark.sinks.atomic import (

@@ -10,6 +10,8 @@ first, not on a 100 TB cluster.
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from terra_bonobo_nodes_spark.plans.registry import all_queries
@@ -538,3 +540,51 @@ def test_decontaminate_substring_runs_one_kernel_node_per_side(spark):
     assert counts == {"_winnow": 2}
     assert "ExistingRDD" not in plan
 
+
+
+# py4j commands each geo_ingest row sends while it is built a second
+# time at sf0.001, plus 10%. Built from parsed SQL text they send 281,
+# 134 and 80; built op by op from Column chains they sent 758, 435 and
+# 154. A Column operator costs about 12 round trips, and each round trip
+# adds to the row's construction time.
+GEO_INGEST_PY4J_BUDGET = {
+    "j1_boolean_intersect": 309,
+    "s2_geojson_reader_roundtrip": 147,
+    "s12_warc_wet_roundtrip": 88,
+}
+
+
+def _py4j_commands(spark, run) -> int:
+    """py4j commands this thread sends while ``run()`` runs, counted as
+    perfbench/spans.py::count_py4j counts them: other threads' commands
+    and memory commands (the object releases py4j's finalizer thread
+    sends whenever Python's garbage collector runs) are left out."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    owner = threading.get_ident()
+    sent = 0
+
+    def counted(command, *args, **kwargs):
+        nonlocal sent
+        if threading.get_ident() == owner and not command.startswith("m\n"):
+            sent += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        run()
+    finally:
+        client.send_command = send
+    return sent
+
+
+def test_geo_ingest_rows_build_within_their_py4j_budget(spark):
+    """Building j1, s2 and s12 a second time sends no more py4j commands
+    than their budgets allow."""
+    q = all_queries()
+    sent = {}
+    for name in GEO_INGEST_PY4J_BUDGET:
+        q[name].spark_fn(spark, SF_DIR)  # first build: table memos, UDFs
+        sent[name] = _py4j_commands(spark, lambda n=name: q[n].spark_fn(spark, SF_DIR))
+    over = {n: c for n, c in sent.items() if c > GEO_INGEST_PY4J_BUDGET[n]}
+    assert not over, f"py4j commands {sent}, budgets {GEO_INGEST_PY4J_BUDGET}"

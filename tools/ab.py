@@ -12,6 +12,13 @@ and how many pairs NEW won by the metric's ``better`` direction in
 ``BENCHMARK.json`` (lower unless it says higher). ``clear`` marks a metric whose medians differ
 by more than BASE's interquartile range.
 
+A second table names the rows that moved: per query, each side's
+median over the pairs of the run's median construct and exec time per
+probe. Each sample is divided by the probe timed just before its pass
+(``query_samples_s`` and ``probe_s`` of the run-context line); a run
+whose sample count for a query differs from its probe count adds no
+figure for that query.
+
 Usage::
 
     python tools/ab.py BASE NEW [--workload relational_llm] [--pairs 10] [--seed 1]
@@ -47,9 +54,28 @@ def export(rev: str) -> Path:
     return out
 
 
-def run(tree: Path, workload: str, seconds: float, seed: int) -> dict[str, float] | None:
-    """One benchmark run's metrics, or None if it failed or was not
-    correct."""
+Run = tuple[dict[str, float], dict[str, tuple[float, float]]]
+
+
+def per_query(context: dict) -> dict[str, tuple[float, float]]:
+    """Per query, the median construct and exec time per probe of one
+    run, from its run-context line; a query whose sample count differs
+    from the run's probe count is left out."""
+    probes = context["probe_s"]
+    out = {}
+    for name, samples in context["query_samples_s"].items():
+        if len(samples) != len(probes):
+            print(f"  {name}: {len(samples)} samples for {len(probes)} probes, skipped",
+                  file=sys.stderr)
+            continue
+        out[name] = (statistics.median(c / p for (c, _), p in zip(samples, probes)),
+                     statistics.median(e / p for (_, e), p in zip(samples, probes)))
+    return out
+
+
+def run(tree: Path, workload: str, seconds: float, seed: int) -> Run | None:
+    """One benchmark run's metrics and per-query figures, or None if it
+    failed or was not correct."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
@@ -61,7 +87,10 @@ def run(tree: Path, workload: str, seconds: float, seed: int) -> dict[str, float
     if not result.get("correct"):
         print(f"  run not correct: failed={result.get('failed')}", file=sys.stderr)
         return None
-    return {k: v["value"] for k, v in result["metrics"].items()}
+    contexts = [json.loads(line) for line in lines[:-1]
+                if line.startswith("{") and '"query_samples_s"' in line]
+    return ({k: v["value"] for k, v in result["metrics"].items()},
+            per_query(contexts[-1]) if contexts else {})
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -83,6 +112,24 @@ def report(pairs: list[tuple[dict, dict]], better: dict[str, str]) -> None:
         clear = abs(bm - am) > a3 - a1
         base, new = f"{am:.4g} [{a1:.4g}, {a3:.4g}]", f"{bm:.4g} [{b1:.4g}, {b3:.4g}]"
         print(f"{name:34} {base:>30} {new:>30}  {won:>2}/{len(pairs)}  {'yes' if clear else 'no'}")
+
+
+def report_queries(pairs: list[tuple[dict, dict]]) -> None:
+    """Per query, each side's median construct and exec per probe, and
+    the pairs NEW won (lower), over the pairs with figures on both
+    sides."""
+    print(f"{'query':34} {'construct base':>14} {'new':>10} {'won':>5}"
+          f" {'exec base':>14} {'new':>10} {'won':>5}")
+    for name in sorted(set().union(*(set(a) & set(b) for a, b in pairs))):
+        both = [(a[name], b[name]) for a, b in pairs if name in a and name in b]
+        cells = ""
+        for i in (0, 1):
+            x = [a[i] for a, _ in both]
+            y = [b[i] for _, b in both]
+            won = sum(v < u for u, v in zip(x, y))
+            cells += (f" {statistics.median(x):>14.4g} {statistics.median(y):>10.4g}"
+                      f" {f'{won}/{len(both)}':>5}")
+        print(f"{name:34}{cells}")
 
 
 def main(argv: list[str]) -> int:
@@ -113,7 +160,9 @@ def main(argv: list[str]) -> int:
             print("no pair completed", file=sys.stderr)
             return 1
         print(f"{args.workload}: {args.base} -> {args.new}, {len(pairs)} pairs")
-        report(pairs, better)
+        report([(a[0], b[0]) for a, b in pairs], better)
+        print()
+        report_queries([(a[1], b[1]) for a, b in pairs])
         return 0 if len(pairs) == args.pairs else 1
     finally:
         for tree in trees.values():
