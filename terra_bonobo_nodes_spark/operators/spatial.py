@@ -470,9 +470,8 @@ def _joined_back(
     """``records`` left-joined to the per-record result ``per_id`` on
     ``id_col``, with column ``out`` set to the SQL ``value`` (in place
     if ``records`` has an ``out`` column, else last) and ``per_id``'s
-    own columns dropped: one projection over the join, where
-    ``withColumn`` and ``drop`` were one analysis of the whole plan
-    each."""
+    own columns dropped, in one projection over the join: each
+    transform is one more analysis of the whole plan."""
     cols = [id_col] + [c for c in records.columns if c != id_col]
     exprs = [f"{value} AS {ident(out)}" if c == out else ident(c) for c in cols]
     if out not in cols:

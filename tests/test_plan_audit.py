@@ -543,10 +543,10 @@ def test_decontaminate_substring_runs_one_kernel_node_per_side(spark):
 
 
 # py4j commands each geo_ingest row sends while it is built a second
-# time at sf0.001, plus 10%. Built from parsed SQL text they send 281,
-# 134 and 80; built op by op from Column chains they sent 758, 435 and
-# 154. A Column operator costs about 12 round trips, and each round trip
-# adds to the row's construction time.
+# time at sf0.001 (281, 134 and 80), plus 10%. A Column operator costs
+# about 12 round trips and parsed SQL text about 3, so a row that goes
+# back to op-by-op Column chains fails here (j1 built that way sends
+# 758).
 GEO_INGEST_PY4J_BUDGET = {
     "j1_boolean_intersect": 309,
     "s2_geojson_reader_roundtrip": 147,
