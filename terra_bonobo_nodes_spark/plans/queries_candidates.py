@@ -457,8 +457,8 @@ def s12_warc_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     packed = docs.mapInPandas(pack, "content binary")
     records = warc_reader(packed)
-    # parsed SQL text (see queries_geo._j1_inputs); the SQL literal
-    # '\\d' is the regex \d
+    # parsed SQL text (``sqltext`` says why); the SQL literal '\\d' is
+    # the regex \d
     return records.selectExpr(
         r"CAST(regexp_extract(target_uri, '/doc/(\\d+)$', 1) AS BIGINT) AS doc_id",
         "decode(payload, 'UTF-8') AS text",

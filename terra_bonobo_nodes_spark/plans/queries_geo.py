@@ -388,9 +388,8 @@ GROUP BY p.event_id
 def _j1_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Point-events vs nation rectangles, shared by the broadcast and
     grid J1 registrations (one oracle, two physical strategies). Parsed
-    SQL text throughout, with only the kernels' calls as Columns: a
-    Column operator costs about 12 py4j round trips, ``F.expr`` or
-    ``selectExpr`` text about 3."""
+    SQL text throughout (``sqltext`` says why), with only the kernels'
+    calls as Columns."""
     # NOT spread: spreading the events scan before the point build was
     # measured slower (1.83 s unspread against 2.22 s, min of a bench
     # run) — the extra exchange plus 32-task downstream stages across

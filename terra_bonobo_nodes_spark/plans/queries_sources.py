@@ -80,8 +80,8 @@ FROM events
 def s2_geojson_reader_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events -> FeatureCollection documents (one per event_type) ->
     geojson_reader explode -> recover ids, properties, coordinates.
-    Parsed SQL text, with only the kernel's call as a Column (see
-    queries_geo._j1_inputs)."""
+    Parsed SQL text (``sqltext`` says why), with only the kernel's call
+    as a Column."""
     ev = load_table(spark, sf_dir, "events").selectExpr(
         "event_id",
         "event_type",

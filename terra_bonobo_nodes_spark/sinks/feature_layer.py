@@ -67,8 +67,7 @@ def _merged(
                 f"{side} already has reserved working column(s) "
                 f"{sorted(clash)}; rename them before load_feature_in_layer"
             )
-    # parsed SQL text: a Column operator costs about 12 py4j round trips,
-    # ``F.expr`` about 3
+    # parsed SQL text, not Column operators (``sqltext`` says why)
     geom = ident(geom_col) if geom_col in df.columns else "NULL"
     rows = df.withColumns(
         {
