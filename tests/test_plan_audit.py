@@ -541,7 +541,6 @@ def test_decontaminate_substring_runs_one_kernel_node_per_side(spark):
     assert "ExistingRDD" not in plan
 
 
-
 # py4j commands each geo_ingest row sends while it is built a second
 # time at sf0.001 (281, 134 and 80), plus 10%. A Column operator costs
 # about 12 round trips and parsed SQL text about 3, so a row that goes
