@@ -388,13 +388,20 @@ def _slab_sweep(groups, keep, emit: bool = False):
                         continue  # vertical: spans no slab
                     if xa > xb:
                         xa, ya, xb, yb = xb, yb, xa, ya
-                    edges.append((xa, ya, xb, yb, (yb - ya) / (xb - xa), g, n_parts))
+                    slope = (yb - ya) / (xb - xa)
+                    if math.isinf(slope):
+                        slope = None  # subnormal x-extent: interpolate in y_at
+                    edges.append((xa, ya, xb, yb, slope, g, n_parts))
             n_parts += 1
     edges.sort()
     xs = sorted(xs)
 
     def y_at(e, x):
-        return e[3] if x == e[2] else e[1] + e[4] * (x - e[0])
+        if x == e[2]:
+            return e[3]
+        if e[4] is None:
+            return e[1] + (e[3] - e[1]) * ((x - e[0]) / (e[2] - e[0]))
+        return e[1] + e[4] * (x - e[0])
 
     out: list = []
 

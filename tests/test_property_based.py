@@ -315,6 +315,15 @@ _NEAR_COINCIDENT = (
     ])],
 )
 
+# a hole whose left edge spans a subnormal x-extent: its slope overflows
+_SUBNORMAL_EDGE = (
+    "Polygon",
+    [
+        ring([(-2.0, -5.0), (8.0, -5.0), (8.0, 5.0), (-2.0, 5.0)]),
+        ring([(-1.0, -4.0), (8.9002954341e-313, -4.0), (6.67522157557e-313, -3.0), (-1.0, -3.0)]),
+    ],
+)
+
 _small = st.floats(min_value=-3.0, max_value=3.0)
 area_geom = st.one_of(
     st.builds(
@@ -366,6 +375,7 @@ def test_covered_area_matches_line_integral(subject, others):
 @given(st.lists(area_geom, min_size=1, max_size=4))
 @example([ops.intersection(_R12[0], f) for f in _R12[1]])
 @example([ops.intersection(_R42[0], f) for f in _R42[1]])
+@example([_SUBNORMAL_EDGE, _BOWTIE])
 def test_union_area_matches_line_integral(gs):
     got = ops.union_area(gs)
     want = _line_integral_area(lambda pt: any(_covers(g, pt) for g in gs), gs)
