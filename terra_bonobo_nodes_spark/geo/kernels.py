@@ -772,16 +772,8 @@ def st_asgeojson(g) -> Column:
     return _st_asgeojson(_col(g))
 
 
-def st_geomfromgeojson(t) -> Column:
-    return _st_geomfromgeojson(_col(t))
-
-
 def st_geomfromany(t) -> Column:
     return _st_geomfromany(_col(t))
-
-
-def st_isempty(g) -> Column:
-    return _st_isempty(_col(g))
 
 
 def st_npoints(g) -> Column:
@@ -807,16 +799,9 @@ def st_intersection_area(a, b) -> Column:
 
 # the join-prep kernels feed a join whose inferred bbox filter would
 # otherwise run them twice per row (see _evaluate_once)
-_st_bbox_once = _evaluate_once(_st_bbox.func, ArrayType(DoubleType()))
 _st_bbox_boxy_once = _evaluate_once(_st_bbox_boxy.func, _BBOX_BOXY_T)
 _st_prepare_once = _evaluate_once(_st_prepare.func, PREPARED_T)
 _st_poly_prep_once = _evaluate_once(_st_poly_prep.func, PREPARED_T)
-
-
-def st_bbox(g) -> Column:
-    """[xmin, ymin, xmax, ymax], null for empty/unparseable geometry.
-    Computed ONCE per row so joins can prefilter pairs JVM-side."""
-    return _st_bbox_once(_col(g))
 
 
 def st_bbox_boxy(g) -> Column:
@@ -869,10 +854,6 @@ def st_make_line(xs, ys) -> Column:
     return _st_make_line(_col(xs), _col(ys))
 
 
-def st_distance(a, b) -> Column:
-    return _st_distance(_col(a), _col(b))
-
-
 def st_intersects(a, b) -> Column:
     return _st_intersects(_col(a), _col(b))
 
@@ -903,10 +884,6 @@ def st_transform(g, src: str, dst: str) -> Column:
 
 def st_snaptogrid(g, size: float) -> Column:
     return _st_snaptogrid(_col(g), F.lit(float(size)))
-
-
-def st_envelope(g) -> Column:
-    return _st_envelope(_col(g))
 
 
 def st_subdivide(g, max_vertices: int = 256) -> Column:

@@ -35,17 +35,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-ASSET_META = T.StructType(
-    [
-        T.StructField("modality", T.StringType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-    ]
-)
-
 FEATURE_DIM = 8
 
 _FEATURES_SCHEMA = T.StructType(

@@ -13,9 +13,9 @@ dimension, which is elementwise the same IEEE operation sequence).
 Identical op sequence → bit-identical doubles → rankings agree without
 rounding fudges, at double speed instead of Decimal128 speed.
 
-The Spark builders (``dot_exact``, ``norm``, ``l2_normalize``,
-``hyperplane_signature``) take column NAMES and build one parsed SQL
-expression each; ``*_sql`` functions are their DuckDB mirrors.
+The Spark builders (``dot_exact``, ``norm``, ``hyperplane_signature``)
+take column NAMES and build one parsed SQL expression each; ``*_sql``
+functions are their DuckDB mirrors.
 
 Reference has no similarity search; this is a capability extension
 (BASELINE.json north star) sized for the ``embeddings`` table.
@@ -78,37 +78,6 @@ def norm(a: str) -> Column:
 
 def norm_sql(a: str) -> str:
     return f"sqrt({dot_exact_sql(a, a)})"
-
-
-def l2_normalize(a: str) -> Column:
-    """Unit-normalize the float-array column named ``a`` (NULL-safe; an
-    all-zero vector yields NULL rather than a division blow-up). On the
-    unit sphere euclidean rank order EQUALS cosine rank order — the
-    preprocessing that makes euclidean-metric operators (kmeans_fixed,
-    PQ/IVFADC) rank like the cosine retrieval stack.
-
-    The norm is bound ONCE per row via zip_with against an
-    array_repeat of the scalar (an ``x / n`` lambda would re-evaluate
-    the O(d) norm fold per element — O(d^2) per vector)."""
-    v = f"`{a}`"
-    n = _norm_sparksql(v)
-    return F.expr(
-        f"CASE WHEN {n} > 0 THEN zip_with({v}, array_repeat({n}, size({v})), "
-        "(x, m) -> cast(x as double) / m) END"
-    )
-
-
-def l2_normalize_sql(a: str) -> str:
-    """DuckDB mirror of :func:`l2_normalize`. NOTE: this inline form
-    re-states the norm fold inside the lambda (SQL has no expression-
-    level let-binding), so it is O(d^2) per vector — fine for the
-    bounded oracle tables it exists for; hoist the norm into its own
-    CTE column when composing larger oracles."""
-    n = norm_sql(a)
-    return (
-        f"CASE WHEN {n} > 0 THEN "
-        f"list_transform({a}, x -> CAST(x AS DOUBLE) / {n}) END"
-    )
 
 
 def _top_k(scored: DataFrame, k: int, query_id_col: str, *carry: str) -> DataFrame:

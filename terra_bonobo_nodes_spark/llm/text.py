@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from terra_bonobo_nodes_spark.sqltext import ident
 
-WORD_RE = "[a-z0-9]+"
 PUNCT_RE = r"[.,;:!?'\"()\[\]{}-]"
 
 # Tiny per-language stopword profiles for the n-gram/stopword heuristic.

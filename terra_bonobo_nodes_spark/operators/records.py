@@ -3,8 +3,10 @@
 Capability parity with the reference's row-level nodes (SURVEY.md §2.3).
 The reference mutates per-row Python dicts; here every node is a Column
 expression over an immutable DataFrame, so Catalyst gets projection
-pruning and predicate pushdown for free, and the reference's
-``CopyOnPipelineSplit`` (``common.py:414-423``) becomes a no-op.
+pruning and predicate pushdown for free. The reference's
+``CopyOnPipelineSplit`` (``common.py:414-423``) needs no operator:
+branches reuse the same DataFrame (``df.cache()`` it first when they
+should not recompute a costly common prefix).
 """
 
 from __future__ import annotations
@@ -96,12 +98,3 @@ def map_properties(
         return df.transform(exprs)
     return df.withColumns(dict(exprs))
 
-
-def copy_on_pipeline_split(df: DataFrame) -> DataFrame:
-    """``CopyOnPipelineSplit`` (``common.py:414-423``): intentional no-op.
-
-    DataFrames are immutable; fan-out = reuse the same df in N branches.
-    A caller whose branches should not recompute a costly common prefix
-    persists it (``df.cache()``) before the split.
-    """
-    return df

@@ -84,16 +84,6 @@ def geometry_3d_to_2d(df: DataFrame, geom_col: str = "geom") -> DataFrame:
     return df.withColumn(geom_col, K.st_force2d(F.col(geom_col)))
 
 
-def simplify_geom(
-    df: DataFrame,
-    tolerance: float,
-    geom_in: str = "geom",
-    geom_out: str | None = None,
-) -> DataFrame:
-    """``SimplifyGeom`` (``terra.py:450-471``): configurable in/out cols."""
-    return df.withColumn(geom_out or geom_in, K.st_simplify(F.col(geom_in), tolerance))
-
-
 def transform_geom(
     df: DataFrame,
     src: str,

@@ -1,11 +1,24 @@
-"""Correctness queries: the scalar-function surface (functions/scalars.py).
+"""Correctness queries: the scalar-function surface.
 
 One wide projection — string + datetime + math + array fused, ~37
 functions per row over lineitem, verified value-for-value against
 DuckDB — plus window/stats/json queries at their own grains. These pin
 the cross-engine semantics of the engine's public expression vocabulary
 (null handling, 1-based indexing, rounding mode, ISO weekday) rather
-than any single operator.
+than any single operator. Where the reference escapes to arbitrary
+Python per record (``MapProperties``, ``FilterByProperties`` lambdas —
+common.py:269-283, common.py:196-211), this engine stays declarative:
+every function is a Spark builtin (JVM-side, codegen) with a DuckDB
+equivalent these queries check.
+
+Cross-engine parity notes baked into the choices:
+- ``round`` is HALF_UP in both engines (2.5→3, −2.5→−3);
+- ``strpos``/``instr`` are 1-based, 0 when absent, in both;
+- transcendental functions (exp/log/sin…) are NOT in the verified
+  surface — libm vs JVM StrictMath may differ in the last ulp; they
+  work, but aren't oracle-checked;
+- Spark ``dayofweek`` is 1=Sunday while DuckDB's is 0=Sunday: the
+  verified weekday form is ISO (``weekday()+1`` ≡ DuckDB ``isodow``).
 
 ROUND-9 CONSOLIDATION: the former ``fn_string_surface``,
 ``fn_datetime_surface`` and ``fn_math_array_surface`` (r06/r07 green,

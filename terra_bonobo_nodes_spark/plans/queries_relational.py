@@ -1296,41 +1296,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# scd2_user_value_history RETIRED round 17 into the registered
-# corpus_version_diff (plans/queries_candidates.py): both are
-# key-versioned churn reports — SCD2's lead()-window validity intervals
-# are the per-key view of the same added/removed/changed verdict the
-# snapshot diff (operators/cdc.snapshot_diff) surfaces at corpus grain,
-# and the diff row additionally measures the full-outer-join promotion
-# gate the SCD2 row never reached. The fn stays below as an
-# unregistered component (the asof_join pairing for point-in-time
-# reads is unchanged). Ledger item 3.
-def scd2_user_value_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension (type 2) history: each purchase
-    becomes a versioned row whose validity interval closes when the
-    next one arrives (open end = max bigint, is_current flag) — the
-    warehouse pattern for as-of attribute lookup, built with one
-    lead() window per key. Pairs with asof_join for point-in-time
-    reads."""
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("event_type") == "purchase")
-        .select(
-            "user_id", "event_id",
-            F.round("value", 4).alias("value"),
-            F.unix_timestamp("ts").alias("valid_from"),
-            F.col("ts"),
-        )
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    h = ev.withColumn("valid_to", F.lead("valid_from").over(w))
-    return h.select(
-        "user_id", "event_id", "value", "valid_from",
-        F.coalesce("valid_to", F.lit(9223372036854775807)).alias("valid_to"),
-        F.col("valid_to").isNull().alias("is_current"),
-    )
-
-
 @register(
     "profile_customer_columns",
     oracle="""

@@ -1,46 +1,20 @@
 """CSV ingestion (``CsvDictReader``, ``common.py:29-67``).
 
-Two shapes:
-- path-based: ``read_csv`` — the Spark-native scan (header, dialect
-  options, encoding), distributed and pushdown-friendly. This is the
-  100 TB path.
-- content-based: ``csv_documents_to_rows`` — the reference's actual
-  contract (a whole CSV document arrives as one string payload, e.g.
-  out of a zip entry). Documents explode into lines JVM-side and parse
-  with ``from_csv``; the column layout comes from an explicit
-  ``header=`` argument, or failing that from the first line of the
-  first document (driver-side metadata peek, like Spark's own
-  header-inference).
+Path-based CSV is Spark's own scan (``spark.read.csv`` with header,
+dialect and encoding options), distributed and pushdown-friendly; it
+needs no wrapper. ``csv_documents_to_rows`` covers the reference's
+actual contract: a whole CSV document arrives as one string payload,
+e.g. out of a zip entry. Documents explode into lines JVM-side and
+parse with ``from_csv``; the column layout comes from an explicit
+``header=`` argument, or failing that from the first line of the first
+document (driver-side metadata peek, like Spark's own
+header-inference).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    header: bool = True,
-    delimiter: str = ",",
-    quote: str = '"',
-    escape: str = "\\",
-    encoding: str = "UTF-8",
-    schema: str | None = None,
-) -> DataFrame:
-    """All columns arrive as strings unless ``schema`` is given —
-    matching the reference's csv.DictReader all-string rows (F2)."""
-    reader = (
-        spark.read.option("header", header)
-        .option("sep", delimiter)
-        .option("quote", quote)
-        .option("escape", escape)
-        .option("encoding", encoding)
-    )
-    if schema:
-        reader = reader.schema(schema)
-    return reader.csv(path)
 
 
 def csv_documents_to_rows(

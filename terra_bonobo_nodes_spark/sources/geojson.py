@@ -9,7 +9,7 @@ Geometry coordinates are heterogeneous JSON (depth varies by type), so
 the parse runs in ``mapInPandas`` — one Python hop per batch, same cost
 class as the geometry kernel the rows feed into anyway. Path-based bulk
 ingestion of newline-delimited GeoJSON features can use ``spark.read.json``
-+ ``st_geomfromgeojson`` instead.
++ SQL ``ST_GeomFromGeoJSON`` (``geo.kernels.register_st_sql``) instead.
 """
 
 from __future__ import annotations

@@ -25,8 +25,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Footer-schema memo for every parquet table: a bare
 # spark.read.parquet(path) runs eager schema inference — ~80-90ms of
 # driver/JVM work per call — and a bench pass calls load_table 60+

@@ -1,6 +1,6 @@
 """Hypothesis sweeps for the second-continuation operators: random
 inputs vs independent Python references / the DuckDB mirrors, the
-same discipline the core ops carry (links/layout/pq precedents)."""
+same discipline the core ops carry (links/layout precedents)."""
 
 from __future__ import annotations
 

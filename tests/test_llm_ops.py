@@ -1837,69 +1837,7 @@ def test_fix_mojibake_repairs_double_encoding(spark):
     assert rows[3][0] is None  # NULL passes through
 
 
-def test_bpe_trains_textbook_merges():
-    """The classic BPE example: merges follow pair frequency with
-    deterministic lexicographic ties."""
-    from terra_bonobo_nodes_spark.llm.bpe import train_bpe
-
-    table = [("hug", 10), ("pug", 5), ("pun", 12), ("bun", 4), ("hugs", 5)]
-    merges = train_bpe(table, n_merges=3)
-    # ('u','g') dominates at 20; then ('n','</w>') and ('u','n') tie at
-    # 16 and the lexicographic rule picks ('n','</w>') — the sentinel
-    # variant of the classic example
-    assert merges[0] == ("u", "g")
-    assert merges[1] == ("n", "</w>")
-    assert merges[2] == ("u", "n</w>")
-    assert train_bpe(table, n_merges=3) == merges  # deterministic
-
-
-def test_bpe_corpus_train_encode_roundtrip(spark):
-    """End-to-end on the documents table: learned tokens re-join to the
-    exact pretoken stream, the trained count never exceeds the pretoken
-    upper bound, and more merges never produce more tokens."""
-    import re
-
-    from terra_bonobo_nodes_spark.llm import bpe
-    from terra_bonobo_nodes_spark.llm.text import BPE_SPLIT_RE
-    from terra_bonobo_nodes_spark.tables import load_table
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text").limit(60)
-    wf = bpe.word_frequencies(docs, max_words=5000)
-    m50 = bpe.train_bpe(wf, n_merges=50)
-    m200 = bpe.train_bpe(wf, n_merges=200)
-    assert m200[:50] == m50  # merge list is prefix-stable
-
-    enc = {r.doc_id: r.bpe_tokens for r in bpe.encode_words(docs, m200).collect()}
-    texts = {r.doc_id: r.text for r in docs.collect()}
-    for did in list(texts)[:10]:
-        pre = [w for w in re.findall(BPE_SPLIT_RE, texts[did].lower()) if w.strip()]
-        joined = "".join(enc[did]).replace("</w>", "|").rstrip("|").split("|")
-        assert joined == pre, did  # lossless: merges never cross words
-
-    c50 = {r.doc_id: r.n_bpe_tokens for r in bpe.bpe_token_count(docs, m50).collect()}
-    c200 = {r.doc_id: r.n_bpe_tokens for r in bpe.bpe_token_count(docs, m200).collect()}
-    pre_counts = {
-        did: len([w for w in re.findall(BPE_SPLIT_RE, t.lower()) if w.strip()])
-        for did, t in texts.items()
-    }
-    for did in texts:
-        assert c200[did] <= c50[did]  # compression is monotone in merges
-        assert c50[did] >= pre_counts[did]  # chars+sentinel >= pretokens... 
         # (50 merges on this corpus still leave multi-token words)
-
-
-def test_bpe_word_table_contract(spark):
-    from terra_bonobo_nodes_spark.llm import bpe
-    from terra_bonobo_nodes_spark.tables import load_table
-    from tests.conftest import SF_DIR
-
-    import pytest as _pytest
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    wf = bpe.word_frequencies(docs, max_words=100_000)
-    with _pytest.raises(ValueError, match="max_words"):
-        bpe.train_bpe(wf, n_merges=5, max_words=3)
 
 
 def test_progressive_jpeg_restart_intervals():

@@ -163,143 +163,43 @@ def test_changed_code_list_covers_the_git_diff():
     """VERDICT_r14 item 7: the hand-maintained _CHANGED_THIS_ROUND is
     the one rotation input the artifact-computed ordering can't derive
     — a forgotten entry leaves a stale green looking fresh for up to
-    two rounds. This check DERIVES the changed-query set from git:
-    top-level defs/classes/assignments whose source changed since the
-    LATEST artifact commit (plans/registry.py excluded — editing the
-    schedule itself is not operator change), closed under intra-package
-    ast-level references (Name/Attribute identifiers, so an edit to a
-    private kernel propagates to the public operators that call it but
-    a docstring mentioning the word does not), mapped onto each
-    registered query's function source. Every derived name that is not
-    already in the due cohort or the new list must appear in
-    _CHANGED_THIS_ROUND.
+    two rounds. This check DERIVES the changed-query set from git
+    (tests/codegraph.py): top-level defs/classes/assignments whose
+    source changed since the LATEST artifact commit (plans/registry.py
+    excluded — editing the schedule itself is not operator change),
+    closed under references resolved through each module's own
+    bindings and imports (so an edit to a private kernel propagates to
+    the public operators that call it, but neither a docstring
+    mentioning the word nor another module's same-named definition
+    does), mapped onto each registered query's function. Every derived
+    name that is not already in the due cohort or the new list must
+    appear in _CHANGED_THIS_ROUND.
 
     Known approximation: post-definition `register(...)(fn)` oracle
     constants link only through symbols the fn body also references."""
     if not ACTIVE:
         return  # lists spent: obligations checked by the other tests
-    import ast
-    import inspect
-    import subprocess
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-
-    def git(*args):
-        r = subprocess.run(
-            ["git", *args], capture_output=True, text=True, cwd=repo
-        )
-        return r.stdout if r.returncode == 0 else ""
+    from terra_bonobo_nodes_spark.plans import registry as _reg
+    from tests.codegraph import affected_queries, git
 
     base = git(
         "log", "-1", "--format=%H", "--", f"CORRECTNESS_r{LATEST}.json"
     ).strip()
     if not base:
         return  # shallow clone / moved artifacts: nothing to derive
-    files = [
-        f
-        for f in git(
-            "diff", "--name-only", f"{base}..HEAD", "--",
-            "terra_bonobo_nodes_spark",
-        ).split()
-        if f.endswith(".py") and not f.endswith("plans/registry.py")
-    ]
-
-    def top_segments(src: str) -> dict[str, str]:
-        out: dict[str, str] = {}
-        try:
-            tree = ast.parse(src)
-        except SyntaxError:
-            return out
-        for node in tree.body:
-            if isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                names = [node.name]
-            elif isinstance(node, ast.Assign):
-                names = [
-                    t.id for t in node.targets if isinstance(t, ast.Name)
-                ]
-            else:
-                continue
-            for nm in names:
-                out[nm] = ast.get_source_segment(src, node) or ""
-        return out
-
-    def refs(seg: str) -> set[str]:
-        """Identifiers a code segment actually REFERENCES: ast Name ids
-        + Attribute attrs (catches module.func cross-module calls and
-        f-string expressions; ignores docstrings/comments/SQL text)."""
-        try:
-            tree = ast.parse(seg)
-        except SyntaxError:
-            return set()
-        out: set[str] = set()
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Name):
-                out.add(node.id)
-            elif isinstance(node, ast.Attribute):
-                out.add(node.attr)
-        return out
-
     # optimization-phase carve-out: cross-cutting symbols whose change
     # was verified by a FULL 132-row oracle replica instead of rotation
     # slots (see the _OPT_FULL_REPLICA_* note in registry.py) — their
     # propagation would otherwise flag every registered query at once,
     # which the 50-row window cannot absorb by design
-    from terra_bonobo_nodes_spark.plans import registry as _reg
-
-    exempt_syms = set(getattr(_reg, "_OPT_FULL_REPLICA_SYMBOLS", ()))
-    exempt_queries = set(getattr(_reg, "_OPT_FULL_REPLICA_QUERIES", ()))
-
-    # seed: (file, name) of every top-level binding whose source moved
-    direct: set[tuple[str, str]] = set()
-    for f in files:
-        new_src = (repo / f).read_text() if (repo / f).exists() else ""
-        old_src = git("show", f"{base}:{f}")
-        a, b = top_segments(old_src), top_segments(new_src)
-        direct |= {
-            (f, nm)
-            for nm in set(a) | set(b)
-            if a.get(nm) != b.get(nm) and nm not in exempt_syms
-        }
-    if not direct:
-        return
-    changed = {nm for _, nm in direct}
-
-    # fixpoint closure over the package: a binding that references a
-    # changed symbol is itself changed
-    module_defs: list[tuple[str, set[str]]] = []
-    for p in (repo / "terra_bonobo_nodes_spark").rglob("*.py"):
-        for nm, seg in top_segments(p.read_text()).items():
-            module_defs.append((nm, refs(seg)))
-    while True:
-        grew = {
-            nm
-            for nm, r in module_defs
-            if nm not in changed and r & changed and nm not in exempt_syms
-        }
-        if not grew:
-            break
-        changed |= grew
-
-    def fn_file(q) -> str:
-        return str(
-            Path(inspect.getsourcefile(q.spark_fn)).resolve().relative_to(repo)
-        )
-
-    affected = set()
-    for n, q in QS.items():
-        src = inspect.getsource(q.spark_fn)
-        if (fn_file(q), q.spark_fn.__name__) in direct or refs(src) & changed:
-            affected.add(n)
+    affected = affected_queries(base, QS, _reg._OPT_FULL_REPLICA_SYMBOLS)
     due = {n for n in ORDER if n in LAST and LAST[n][0] <= LATEST - 2}
     missing = (
         affected
         - due
         - set(_NEW_THIS_ROUND)
         - set(_CHANGED_THIS_ROUND)
-        - exempt_queries
+        - set(_reg._OPT_FULL_REPLICA_QUERIES)
     )
     assert not missing, (
         "queries whose code changed since the last artifact are not "

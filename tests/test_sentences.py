@@ -1,16 +1,10 @@
-"""Sentence segmentation + stats (llm/sentences.py) and the deflate
-quality signal (llm/compress.py)."""
+"""Sentence segmentation + stats (llm/sentences.py)."""
 
 from __future__ import annotations
-
-import zlib
 
 import duckdb
 import pytest
 
-from pyspark.sql import functions as F
-
-from terra_bonobo_nodes_spark.llm.compress import compression_signal
 from terra_bonobo_nodes_spark.llm.sentences import (
     sentence_stats,
     sentence_stats_sql,
@@ -115,42 +109,6 @@ def test_stats_plan_is_pure_projection(spark, docs):
     )
     assert "Exchange" not in plan
     assert "Python" not in plan and "ArrowEval" not in plan
-
-
-def test_compression_signal_values(spark, docs):
-    rows = {
-        r["doc_id"]: r for r in compression_signal(docs).collect()
-    }
-    for i, t in DOCS:
-        want_raw = len((t or "").encode("utf-8"))
-        want_comp = len(zlib.compress((t or "").encode("utf-8"), 6))
-        assert rows[i]["zr_raw_bytes"] == want_raw
-        assert rows[i]["zr_comp_bytes"] == want_comp
-        if want_raw:
-            assert rows[i]["zr_ratio"] == pytest.approx(
-                round(want_comp / want_raw, 4)
-            )
-        else:
-            assert rows[i]["zr_ratio"] == 1.0
-
-
-def test_compression_separates_repetitive_from_prose(spark):
-    df = spark.createDataFrame(
-        [
-            (0, "buy now " * 200),
-            (1, "The committee deliberated at length over the unusual "
-                "proposal, weighing fiscal prudence against the obvious "
-                "enthusiasm of the younger members before voting."),
-        ],
-        "doc_id long, text string",
-    )
-    rows = {r["doc_id"]: r["zr_ratio"] for r in compression_signal(df).collect()}
-    assert rows[0] < 0.1 < rows[1]
-
-
-def test_compression_level_guard(spark, docs):
-    with pytest.raises(ValueError, match="zlib level"):
-        compression_signal(docs, level=11)
 
 
 from hypothesis import given, settings  # noqa: E402

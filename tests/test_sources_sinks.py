@@ -21,7 +21,6 @@ from terra_bonobo_nodes_spark.sinks.feature_layer import (
     load_feature_in_layer,
     read_layer,
 )
-from terra_bonobo_nodes_spark.sources.files import resolve_latest_version
 from terra_bonobo_nodes_spark.sources.geojson import geojson_reader
 from terra_bonobo_nodes_spark.sources.osm import build_ogr2ogr_command, osm_xml_to_geojson
 from terra_bonobo_nodes_spark.sources.shapefile import (
@@ -202,19 +201,6 @@ def test_es_standin_roundtrip(spark, tmp_path):
     assert back.columns == ["_id", "_feature_id", "p", "v"]
     mapping = json.load(open(os.path.join(root, "idx1", "_mapping.json")))
     assert mapping["properties"]["geom"]["type"] == "geo_shape"
-
-
-def test_resolve_latest_version(tmp_path):
-    base = tmp_path / "store"
-    for v in ["1.0", "2.10", "2.9"]:
-        d = base / "ns" / v
-        d.mkdir(parents=True)
-        (d / "data.bin").write_bytes(b"v" + v.encode())
-    # numeric version ordering: 2.10 > 2.9
-    path = resolve_latest_version(str(base), "ns", "data.bin")
-    assert path.endswith("2.10/data.bin")
-    assert resolve_latest_version(str(base), "ns", "missing.bin") is None
-    assert resolve_latest_version(str(base), "nope", "data.bin") is None
 
 
 def test_ogr2ogr_command_shapes():
@@ -502,41 +488,7 @@ def test_staged_swap_rejects_remote_uris(spark, tmp_path):
     assert atomic.read_parquet_or_none(spark, p).count() == 1
 
 
-# --- bucketed tables: co-located joins without a shuffle --------------------
-
-
-def test_bucketed_join_eliminates_exchange(spark, sf_dir, tmp_path_factory):
-    from pyspark.sql import functions as F
-
-    from terra_bonobo_nodes_spark.sinks.bucketed import bucketed_join, write_bucketed
-    from terra_bonobo_nodes_spark.tables import load_table
-
-    loc = tmp_path_factory.mktemp("bucketdb")
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bkt LOCATION '{loc}'")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    agg = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    write_bucketed(ev, "bkt.events_b", "user_id", buckets=8)
-    write_bucketed(agg, "bkt.user_stats_b", "user_id", buckets=8)
-
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "bkt.events_b", "bkt.user_stats_b", "user_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "SortMergeJoin" in plan
-        # and the answer is right
-        got = joined.where(F.col("event_id") == joined.select(F.min("event_id")).collect()[0][0]).count()
-        assert got == 1
-        # control: the same join on plain (non-bucketed) frames shuffles
-        plain = ev.join(agg, "user_id")
-        pplan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" in pplan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt.events_b")
-        spark.sql("DROP TABLE IF EXISTS bkt.user_stats_b")
-        spark.sql("DROP DATABASE IF EXISTS bkt")
+# --- partitioned writes: pruning at planning time ---------------------------
 
 
 def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path_factory):
@@ -1192,54 +1144,6 @@ def test_approx_distinct_within_error_bound(spark):
         assert abs(a - e) <= max(0.05 * e, 2), (t, a, e)
     exact_from_row = {r.event_type: r.exact_users for r in rows}
     assert exact_from_row == {t: e for t, (a, e) in raw.items()}
-
-
-# --- extension-point wiring (functions/extensions.py) ------------------------
-
-
-def test_grouped_agg_pandas_udf_matches_expression(spark):
-    from pyspark.sql import functions as F
-
-    from terra_bonobo_nodes_spark.functions.extensions import (
-        geometric_mean,
-        geometric_mean_expr,
-    )
-
-    df = spark.createDataFrame(
-        [("a", float(v)) for v in (1, 2, 4, 8)] + [("b", 3.0), ("b", 27.0)],
-        "g string, v double",
-    )
-    udf_out = {
-        r.g: r.gm for r in df.groupBy("g").agg(geometric_mean("v").alias("gm")).collect()
-    }
-    expr_out = {
-        r.g: r.gm
-        for r in df.groupBy("g").agg(geometric_mean_expr("v").alias("gm")).collect()
-    }
-    assert abs(udf_out["a"] - expr_out["a"]) < 1e-12 and abs(udf_out["a"] - 2.8284271247461903) < 1e-12
-    assert abs(udf_out["b"] - 9.0) < 1e-12 and abs(expr_out["b"] - 9.0) < 1e-9
-
-    # domain agreement: zeros/negatives are outside ln's domain on BOTH
-    # paths (NULL-skipped), and an all-non-positive group is NULL
-    mixed = spark.createDataFrame(
-        [("z", 0.0), ("z", 4.0), ("n", -1.0), ("n", 0.0)], "g string, v double"
-    )
-    u = {r.g: r.gm for r in mixed.groupBy("g").agg(geometric_mean("v").alias("gm")).collect()}
-    e = {r.g: r.gm for r in mixed.groupBy("g").agg(geometric_mean_expr("v").alias("gm")).collect()}
-    assert u == e and u["z"] == 4.0 and u["n"] is None
-
-
-def test_python_udtf_tokenize_from_sql(spark):
-    from terra_bonobo_nodes_spark.functions.extensions import TokenizeUDTF
-
-    spark.udtf.register("tokenize_tbns_test", TokenizeUDTF)
-    rows = spark.sql(
-        "SELECT t.* FROM VALUES ('hello big world'), (NULL) AS v(s), "
-        "LATERAL tokenize_tbns_test(v.s) t"
-    ).collect()
-    assert [(r.token, r.pos, r.n_chars) for r in rows] == [
-        ("hello", 0, 5), ("big", 1, 3), ("world", 2, 5),
-    ]
 
 
 def test_jdbc_conf_seam_option_mapping():

@@ -207,21 +207,19 @@ def test_line_dedup_stream_matches_batch_on_ordered_backfill(spark, tmp_path):
     assert (1, 0, "nav bar") in got and (2, 2, "footer") in got
 
 
-def test_sentence_and_compression_signals_stream(spark, tmp_path):
-    """Round-14 additions hold the same batch==stream contract: the
-    sentence surface is a pure projection, and the deflate signal's
-    single pandas-UDF column is stateless — both run unchanged over a
-    readStream and reproduce the batch rows exactly."""
-    from terra_bonobo_nodes_spark.llm.compress import compression_signal
+def test_sentence_signals_stream(spark, tmp_path):
+    """The sentence surface holds the same batch==stream contract: it
+    is a pure projection, so it runs unchanged over a readStream and
+    reproduces the batch rows exactly."""
     from terra_bonobo_nodes_spark.llm.sentences import sentence_stats
 
     path = str(tmp_path / f"docs-{uuid.uuid4().hex}")
     batch = _write_batches(spark, path)
 
     def curate(df):
-        return compression_signal(sentence_stats(df)).select(
+        return sentence_stats(df).select(
             "doc_id", "sent_n", "sent_n_terminated", "sent_mean_words",
-            "sent_frac_short", "zr_raw_bytes", "zr_comp_bytes", "zr_ratio",
+            "sent_frac_short",
         )
 
     want = {tuple(r) for r in curate(batch).collect()}
