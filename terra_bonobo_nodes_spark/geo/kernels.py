@@ -251,7 +251,8 @@ def _st_centroid(g: pd.Series) -> pd.Series:
 
 
 # The prepared-geometry type: what st_prepare and st_poly_prep return,
-# and what the spatial joins accept in place of a WKB column.
+# and what the spatial joins accept in place of a WKB column (next to
+# BOX_T below; operators/spatial.py::_prepared states the contract).
 PREPARED_T = StructType(
     [
         StructField("geom", BinaryType()),
@@ -422,6 +423,86 @@ def _st_poly_prep(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
                 float(ar[t]),
             )
     return pd.DataFrame(rows, columns=PREPARED_T.names)
+
+
+# The box type: a geometry that IS its envelope, carried as the bbox
+# alone — a point when x0 = x1 and y0 = y1, else an axis rectangle. A
+# NULL bbox (what invalid or degenerate input gives) never joins. Built
+# in SQL by st_point_box / st_rect_box, so no Python runs for it; the
+# spatial joins accept it in place of WKB or PREPARED_T.
+BOX_T = StructType([StructField("bbox", ArrayType(DoubleType()))])
+
+_RECT_HEAD = _POLY_HEAD + struct.pack("<I", 5)
+_EMPTY_WKB = W.write_wkb(W.POINT_EMPTY)
+
+
+def _finite_sql(*vs: str) -> str:
+    # NaN sorts above every double in Spark SQL, and NULL fails a CASE
+    return " AND ".join(f"abs({v}) <= 1.7976931348623157E308D" for v in vs)
+
+
+def st_point_box(x: str, y: str) -> Column:
+    """:data:`BOX_T` of the point (x, y), from SQL expressions ``x`` and
+    ``y``: bbox ``[x, y, x, y]``, NULL unless both are finite."""
+    x, y = f"double({x})", f"double({y})"
+    return F.expr(
+        f"named_struct('bbox', CASE WHEN {_finite_sql(x, y)} "
+        f"THEN array({x}, {y}, {x}, {y}) END)"
+    )
+
+
+def st_rect_box(x0: str, y0: str, x1: str, y1: str) -> Column:
+    """:data:`BOX_T` of the axis rectangle with opposite corners (x0, y0)
+    and (x1, y1), from SQL expressions: bbox ``[min x, min y, max x, max
+    y]``. NULL unless every corner coordinate is finite and each side is
+    longer than ``ops.EPS`` — the rectangles whose ring ``st_poly_prep``
+    keeps (a shorter side is a duplicate vertex to ``make_valid``)."""
+    x0, y0, x1, y1 = (f"double({v})" for v in (x0, y0, x1, y1))
+    return F.expr(
+        f"named_struct('bbox', CASE WHEN {_finite_sql(x0, y0, x1, y1)} "
+        f"AND abs({x1} - {x0}) > {ops.EPS!r}D AND abs({y1} - {y0}) > {ops.EPS!r}D "
+        f"THEN array(least({x0}, {x1}), least({y0}, {y1}), "
+        f"greatest({x0}, {x1}), greatest({y0}, {y1})) END)"
+    )
+
+
+def box_area_sql(bbox: str) -> str:
+    """SQL area of the :data:`BOX_T` bbox ``bbox``: 0 for a point, else
+    the shoelace over the ring (x0,y0) (x1,y0) (x1,y1) (x0,y1) in
+    ``st_poly_prep``'s term order, so the two agree bit for bit."""
+    x0, y0, x1, y1 = (f"element_at({bbox}, {i})" for i in range(1, 5))
+    terms = (
+        f"{x0} * {y0} - {x1} * {y0}",
+        f"{x1} * {y1} - {x1} * {y0}",
+        f"{x1} * {y1} - {x0} * {y1}",
+        f"{x0} * {y0} - {x0} * {y1}",
+    )
+    s = f"({terms[0]})"
+    for t in terms[1:]:
+        s = f"({s} + ({t}))"
+    return f"CASE WHEN {x0} = {x1} AND {y0} = {y1} THEN 0.0D ELSE abs({s}) / 2.0D END"
+
+
+@pandas_udf(BinaryType())
+def _st_box_wkb(bbox: pd.Series) -> pd.Series:
+    """WKB of :data:`BOX_T` bboxes, batch-vectorized: point WKB when x0 =
+    x1 and y0 = y1, else the rectangle ring from (x0, y0)
+    counter-clockwise — byte-identical to st_point's and st_poly_prep's
+    geom for the same input. A NULL bbox gives POINT EMPTY."""
+    out = [_EMPTY_WKB] * len(bbox)
+    idx = [i for i, b in enumerate(bbox) if b is not None]
+    if idx:
+        B = np.stack([np.asarray(bbox.iat[i], dtype="<f8") for i in idx])
+        point = (B[:, 0] == B[:, 2]) & (B[:, 1] == B[:, 3])
+        pts = B[:, :2].tobytes()
+        ring = B[:, [0, 1, 2, 1, 2, 3, 0, 3, 0, 1]].tobytes()
+        for t, i in enumerate(idx):
+            out[i] = (
+                _PT_HEAD + pts[16 * t : 16 * t + 16]
+                if point[t]
+                else _RECT_HEAD + ring[80 * t : 80 * t + 80]
+            )
+    return pd.Series(out)
 
 
 def _polygon_wkb(xv, yv) -> bytes:
@@ -821,6 +902,12 @@ def st_poly_prep(xs, ys) -> Column:
     NumPy-vectorized crossing — the fast lane for synthesized
     single-ring polygon columns feeding the spatial joins."""
     return _st_poly_prep_once(_col(xs), _col(ys))
+
+
+def st_box_wkb(bbox) -> Column:
+    """WKB of a :data:`BOX_T` bbox column: what an exact kernel reads
+    for a box."""
+    return _st_box_wkb(_col(bbox))
 
 
 def st_xy(g) -> Column:

@@ -163,11 +163,12 @@ def layer_clusters_geo(
 
 
 def _bbox_overlap_sql(a: str, b: str) -> str:
-    """JVM-evaluated envelope-overlap predicate over st_bbox arrays —
-    the GiST-index-scan analogue: the cross join's pairs are culled in
-    whole-stage codegen and only envelope-overlapping candidates reach
-    the Python geometry kernel. Null bboxes (empty/bad geometry) fail
-    the predicate, matching intersects()=False for empties.
+    """JVM-evaluated envelope-overlap predicate over the prepared sides'
+    ``[x0, y0, x1, y1]`` bbox arrays — the GiST-index-scan analogue: the
+    cross join's pairs are culled in whole-stage codegen and only
+    envelope-overlapping candidates reach the Python geometry kernel.
+    Null bboxes (empty/bad geometry) fail the predicate, matching
+    intersects()=False for empties.
 
     The args are SQL references ("_rx.bbox"), and the predicate is SQL
     text that parses as ONE expression: op-by-op Column building pays
@@ -245,15 +246,38 @@ def _prepared(
     alias: str,
     default: Callable[[Column], Column],
     *keep: str,
+    geom: bool = True,
 ) -> DataFrame:
-    """``df``'s ``keep`` columns and one side's prep under the
-    prepared-geometry contract, aliased to ``alias`` — a struct with at
-    least ``geom`` (the exact kernels' input) and ``bbox`` fields.
-    ``name`` must be a WKB (binary) column, prepared here by
-    ``default``, or a :data:`K.PREPARED_T` column (nullability
-    ignored), used as-is; anything else raises. One projection, in
-    parsed SQL text (the ``_bbox_overlap_sql`` rationale) except for
-    the Python kernel's call."""
+    """``df``'s ``keep`` columns and one side of a spatial join, aliased
+    to ``alias``: a struct with ``bbox`` (``[x0, y0, x1, y1]``, what the
+    candidate join reads), ``boxy``, ``area`` and ``geom`` (WKB, what
+    the exact kernels read; a box side leaves it out when ``geom`` is
+    False).
+
+    This is the prepared-geometry contract of the three joins: their
+    ``record_geom`` and ``layer_geom`` each name a column of one of
+    three types (nullability ignored). A missing column or any other
+    type raises ValueError.
+
+    - WKB (binary): prepared here by ``default`` (``st_bbox_boxy`` or
+      ``st_prepare``), one Python pass and one parse per row.
+    - :data:`K.PREPARED_T`
+      (``struct<geom:binary,bbox:array<double>,boxy:boolean,area:double>``,
+      what ``st_prepare`` and ``st_poly_prep`` return): used as-is. Its
+      producer paid the Python pass; the join pays none.
+    - :data:`K.BOX_T` (``struct<bbox:array<double>>``, what
+      ``st_point_box`` and ``st_rect_box`` return): a geometry that is
+      its envelope, built in SQL. It is boxy and its area is SQL
+      arithmetic, so it costs no Python, unless the join reads its WKB:
+      then one vectorized ``st_box_wkb`` pass builds ``geom``.
+
+    A boxy pair (points, axis rects: see ``st_bbox_boxy``) needs no
+    exact kernel: its bbox overlap is the intersects answer and its
+    overlap rect the intersection. So each join asks ``_is_box`` at plan
+    time whether both sides are boxes, and then plans no exact kernel
+    and builds no WKB where its output is not geometry. One projection,
+    in parsed SQL text (the ``_bbox_overlap_sql`` rationale) except for
+    the Python kernels' calls."""
     try:
         dt = df.schema[name].dataType
     except KeyError:
@@ -264,10 +288,26 @@ def _prepared(
         return df.select(*map(F.expr, kept), prep)
     if dt is not None and dt.simpleString() == K.PREPARED_T.simpleString():
         return df.selectExpr(*kept, f"{ident(name)} AS {alias}")
+    if dt is not None and dt.simpleString() == K.BOX_T.simpleString():
+        bbox = f"{ident(name)}.bbox"
+        area = K.box_area_sql(bbox)
+        box = f"named_struct('bbox', {bbox}, 'boxy', true, 'area', {area})"
+        if not geom:
+            return df.selectExpr(*kept, f"{box} AS {alias}")
+        prep = F.expr(box).withField("geom", K.st_box_wkb(F.expr(bbox))).alias(alias)
+        return df.select(*map(F.expr, kept), prep)
     got = "no such column" if dt is None else dt.simpleString()
     raise ValueError(
-        f"spatial join geometry column {name!r} must be binary (WKB) or "
-        f"{K.PREPARED_T.simpleString()}; got {got}"
+        f"spatial join geometry column {name!r} must be binary (WKB), "
+        f"{K.PREPARED_T.simpleString()} or {K.BOX_T.simpleString()}; got {got}"
+    )
+
+
+def _is_box(df: DataFrame, name: str) -> bool:
+    """Whether ``df``'s column ``name`` is a :data:`K.BOX_T` (see
+    ``_prepared``)."""
+    return name in df.columns and (
+        df.schema[name].dataType.simpleString() == K.BOX_T.simpleString()
     )
 
 
@@ -291,44 +331,42 @@ def boolean_intersect(
     reference's swallow-and-log contract (``terra.py:238-240``; encoded
     in the ``st_intersects`` kernel).
 
-    ``record_geom`` and ``layer_geom`` each name a WKB (binary) column
-    or a prepared column of type ``K.PREPARED_T``
-    (``struct<geom:binary,bbox:array<double>,boxy:boolean,area:double>``,
-    what ``st_prepare`` and ``st_poly_prep`` return). A prepared column
-    is used as-is, its ``geom`` field feeding the exact kernel; a WKB
-    column is prepared here by ``st_bbox_boxy``. Any other type raises
-    ValueError.
+    ``record_geom`` and ``layer_geom`` name WKB, ``K.PREPARED_T`` or
+    ``K.BOX_T`` columns (see ``_prepared``); a WKB side is prepared here
+    by ``st_bbox_boxy``.
 
     Plan: ONE candidate join from the bbox predicate (``cell=None``:
     broadcast the dimension-sized layer; a positive ``cell``: the
     big-big grid equi-join, for a layer too large to broadcast — see
-    ``_candidates``) keeps a pair when both sides are boxy (points,
-    grid tiles — see ``st_bbox_boxy``), where the bbox overlap IS the
-    exact answer, or when the Python intersects kernel says so. Each
-    side is read once, with no cache. Rows with no layer match keep
-    flag=False via left join + coalesce."""
+    ``_candidates``) keeps a pair when both sides are boxy, where the
+    bbox overlap IS the exact answer, or when the Python intersects
+    kernel says so. When both sides are boxes the candidate join is the
+    answer and no kernel is planned. Each side is read once, with no
+    cache. Rows with no layer match keep flag=False via left join +
+    coalesce."""
+    exact = not (_is_box(records, record_geom) and _is_box(layer, layer_geom))
     prep = _with_geom(K.st_bbox_boxy)
-    rec = _prepared(records, record_geom, "_rx", prep, id_col)
-    lay = _prepared(layer, layer_geom, "_lx", prep)
-    both_boxy = "_rx.boxy AND _lx.boxy"
-    # NULL-mask the kernel args on the boxy pairs: Catalyst extracts the
-    # pandas UDF out of the Filter into an ArrowEvalPython node that
-    # runs on EVERY candidate row, so without the mask each boxy pair
-    # ships its WKB to Python for an answer the bbox join already gave.
-    # Masked args make those rows a NULL-in/False-out no-op in the
-    # kernel (no parse, no bytes); the OR keeps them on both_boxy.
-    # Parsed SQL text (the _bbox_overlap_sql rationale).
-    hit = F.expr(both_boxy) | K.st_intersects(
-        F.expr(f"CASE WHEN NOT ({both_boxy}) THEN _rx.geom END"),
-        F.expr(f"CASE WHEN NOT ({both_boxy}) THEN _lx.geom END"),
-    )
+    rec = _prepared(records, record_geom, "_rx", prep, id_col, geom=exact)
+    lay = _prepared(layer, layer_geom, "_lx", prep, geom=exact)
+    hits = _candidates(rec, lay, cell)
+    if exact:
+        both_boxy = "_rx.boxy AND _lx.boxy"
+        # NULL-mask the kernel args on the boxy pairs: Catalyst extracts
+        # the pandas UDF out of the Filter into an ArrowEvalPython node
+        # that runs on EVERY candidate row, so without the mask each
+        # boxy pair ships its WKB to Python for an answer the bbox join
+        # already gave. Masked args make those rows a NULL-in/False-out
+        # no-op in the kernel (no parse, no bytes); the OR keeps them on
+        # both_boxy. Parsed SQL text (the _bbox_overlap_sql rationale).
+        hits = hits.filter(
+            F.expr(both_boxy)
+            | K.st_intersects(
+                F.expr(f"CASE WHEN NOT ({both_boxy}) THEN _rx.geom END"),
+                F.expr(f"CASE WHEN NOT ({both_boxy}) THEN _lx.geom END"),
+            )
+        )
     flag = ident(out)
-    hits = (
-        _candidates(rec, lay, cell)
-        .filter(hit)
-        .groupBy(id_col)
-        .agg(F.expr(f"true AS {flag}"))
-    )
+    hits = hits.groupBy(id_col).agg(F.expr(f"true AS {flag}"))
     return records.join(hits, on=id_col, how="left").withColumn(
         out, F.expr(f"coalesce({flag}, false)")
     )
@@ -352,13 +390,9 @@ def intersection_percent_by_area(
     record's area covered by the union of its features, each shared
     region counted once (exact for overlapping layers).
 
-    ``record_geom`` and ``layer_geom`` each name a WKB (binary) column
-    or a prepared column of type ``K.PREPARED_T``
-    (``struct<geom:binary,bbox:array<double>,boxy:boolean,area:double>``,
-    what ``st_prepare`` and ``st_poly_prep`` return). A prepared column
-    is used as-is, its ``geom`` field feeding the exact kernels; a WKB
-    column is prepared here by ``st_prepare`` (records) or
-    ``st_bbox_boxy`` (layer). Any other type raises ValueError.
+    ``record_geom`` and ``layer_geom`` name WKB, ``K.PREPARED_T`` or
+    ``K.BOX_T`` columns (see ``_prepared``); a WKB side is prepared here
+    by ``st_prepare`` (records) or ``st_bbox_boxy`` (layer).
 
     ``cell`` picks the candidate-pair plan as in ``boolean_intersect``:
     ``None`` broadcasts the layer, a positive cell size runs the grid
@@ -374,22 +408,31 @@ def intersection_percent_by_area(
     ``dissolve`` one ``ops.covered_area`` sweep per record over its
     rects and other features. One aggregate per record sums the areas,
     or collects the rects and features, and carries the area
-    denominator."""
+    denominator. When both sides are boxes every pair is boxy, and only
+    the closed-form and rect-corner branches are planned."""
+    boxes = _is_box(records, record_geom) and _is_box(layer, layer_geom)
     # ONE fused kernel pass prepares a WKB record side: make_valid
     # (idempotent, so the reference's per-pair repair collapses to
     # per-row), bbox, boxy flag, and the area denominator
-    rec = _prepared(records, record_geom, "_rx", K.st_prepare, id_col)
-    lay = _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy))
+    geom = not boxes
+    rec = _prepared(records, record_geom, "_rx", K.st_prepare, id_col, geom=geom)
+    lay = _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy), geom=geom)
     cand = _candidates(rec, lay, cell)
     # parsed SQL text throughout (the _bbox_overlap_sql rationale)
     key = ident(id_col)
-    both_boxy = "_rx.boxy AND _lx.boxy"
-    # the kernel args are NULL-masked on boxy pairs, as in
-    # boolean_intersect: the extracted Python node runs on EVERY
-    # candidate row, and a NULL arg ships no WKB and skips the parse
-    rx, lx = (
-        f"CASE WHEN NOT ({both_boxy}) THEN {side}.geom END" for side in ("_rx", "_lx")
-    )
+    if boxes:
+        # every pair is boxy: the routing below folds to its rect
+        # branch, and the sweep kernel gets no WKB
+        both_boxy, rx, lx = "true", "CAST(NULL AS BINARY)", "CAST(NULL AS BINARY)"
+    else:
+        both_boxy = "_rx.boxy AND _lx.boxy"
+        # the kernel args are NULL-masked on boxy pairs, as in
+        # boolean_intersect: the extracted Python node runs on EVERY
+        # candidate row, and a NULL arg ships no WKB and skips the parse
+        rx, lx = (
+            f"CASE WHEN NOT ({both_boxy}) THEN {side}.geom END"
+            for side in ("_rx", "_lx")
+        )
     x0 = "greatest(element_at(_rx.bbox, 1), element_at(_lx.bbox, 1))"
     y0 = "greatest(element_at(_rx.bbox, 2), element_at(_lx.bbox, 2))"
     x1 = "least(element_at(_rx.bbox, 3), element_at(_lx.bbox, 3))"
@@ -439,15 +482,13 @@ def intersection_percent_by_area(
         # need not know it by a SQL name), so one Column operator joins
         # it to the SQL text of the boxy branch.
         w, h = f"({x1} - {x0})", f"({y1} - {y0})"
-        rect_area = f"CASE WHEN {w} > 0 AND {h} > 0 THEN {w} * {h} ELSE 0.0D END"
-        per_id = (
-            cand.select(
-                F.expr(key),
-                F.when(F.expr(both_boxy), F.expr(rect_area))
-                .otherwise(K.st_intersection_area(F.expr(rx), F.expr(lx)))
-                .alias("_ia"),
-                F.expr("_rx.area AS _ra"),
+        ia = F.expr(f"CASE WHEN {w} > 0 AND {h} > 0 THEN {w} * {h} ELSE 0.0D END")
+        if not boxes:
+            ia = F.when(F.expr(both_boxy), ia).otherwise(
+                K.st_intersection_area(F.expr(rx), F.expr(lx))
             )
+        per_id = (
+            cand.select(F.expr(key), ia.alias("_ia"), F.expr("_rx.area AS _ra"))
             .groupBy(id_col)
             .agg(F.expr("sum(_ia) AS _zone_area"), F.expr("max(_ra) AS _ra"))
         )
@@ -487,17 +528,14 @@ def intersection_geom(
     tiles); pass ``dissolve=True`` for an OVERLAPPING layer so shared
     regions are not double-counted downstream.
 
-    ``record_geom`` and ``layer_geom`` each name a WKB (binary) column
-    or a prepared column of type ``K.PREPARED_T``
-    (``struct<geom:binary,bbox:array<double>,boxy:boolean,area:double>``,
-    what ``st_prepare`` and ``st_poly_prep`` return). A prepared column
-    is used as-is, its ``geom`` field feeding the exact kernels; a WKB
-    column is prepared here by ``st_prepare`` (records) or
-    ``st_bbox_boxy`` (layer). Any other type raises ValueError.
+    ``record_geom`` and ``layer_geom`` name WKB, ``K.PREPARED_T`` or
+    ``K.BOX_T`` columns (see ``_prepared``); a WKB side is prepared here
+    by ``st_prepare`` (records) or ``st_bbox_boxy`` (layer).
 
     ``cell`` picks the candidate-pair plan as in ``boolean_intersect``:
     ``None`` broadcasts the layer, a positive cell size runs the grid
-    equi-join."""
+    equi-join. The output is geometry, so a box side always feeds its
+    WKB to the exact kernels."""
     agg = K.st_union_agg if dissolve else K.st_collect_agg
     rec = _prepared(records, record_geom, "_rx", K.st_prepare, id_col)
     lay = _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy))

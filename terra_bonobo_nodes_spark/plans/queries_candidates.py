@@ -2076,21 +2076,16 @@ def j2_overlay_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_custkey") % 7).cast("double").alias("kx"),
         (F.col("c_custkey") % 5).cast("double").alias("ky"),
     )
-    kx, ky = F.col("kx"), F.col("ky")
-    # fused vectorized prep — see _customer_rects
-    rpp = K.st_poly_prep(
-        F.array(kx, kx + 4, kx + 4, kx),
-        F.array(ky, ky, ky + 4, ky + 4),
+    # both sides are axis squares, so K.BOX_T built in SQL: the leg
+    # plans no prep kernel and no exact kernel, only the rect sweep
+    records = cust.select(
+        F.col("c_custkey").alias("identifier"),
+        K.st_rect_box("kx", "ky", "kx + 4", "ky + 4").alias("prep"),
     )
-    records = cust.select(F.col("c_custkey").alias("identifier"), rpp.alias("prep"))
     t = spark.range(0, 40, 1, 1)  # one partition — see _tile_layer
-    x0 = (F.col("id") % 5).cast("double")
-    y0 = (F.col("id") % 4).cast("double")
-    tpp = K.st_poly_prep(
-        F.array(x0, x0 + 4, x0 + 4, x0),
-        F.array(y0, y0, y0 + 4, y0 + 4),
-    )
-    tiles = t.select(tpp.alias("layer_prep"))
+    tiles = t.selectExpr(
+        "double(id % 5) AS x0", "double(id % 4) AS y0"
+    ).select(K.st_rect_box("x0", "y0", "x0 + 4", "y0 + 4").alias("layer_prep"))
     dissolve = leg(
         intersection_percent_by_area(records, tiles, dissolve=True, **prep),
         "dissolve",

@@ -388,43 +388,22 @@ GROUP BY p.event_id
 def _j1_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Point-events vs nation rectangles, shared by the broadcast and
     grid J1 registrations (one oracle, two physical strategies). Parsed
-    SQL text throughout (``sqltext`` says why), with only the kernels'
-    calls as Columns."""
-    # NOT spread: spreading the events scan before the point build was
-    # measured slower (1.83 s unspread against 2.22 s, min of a bench
-    # run) — the extra exchange plus 32-task downstream stages across
-    # both strategies cost more than the single-task st_point+bbox prep
-    # saves (points are cheap to prepare; contrast the md5/HOF chains
-    # that do win from spread)
+    SQL text throughout (``sqltext`` says why)."""
+    # the events scan is not spread: with both sides built in SQL there
+    # is no Python prep for more tasks to share, only an extra exchange
     ev = load_table(spark, sf_dir, "events").selectExpr(
         "event_id AS identifier", "(value % 360) - 180 AS x", "(value % 170) - 85 AS y"
     )
-    # a point's prep is closed-form — bbox [x, y, x, y], always boxy,
-    # area 0 — so the prepared struct builds in whole-stage codegen
-    # around the vectorized st_point and NO WKB parse happens for it;
-    # the joins take it as record_geom="prep" and skip their per-row
-    # st_bbox_boxy pass
-    ok = "NOT (x IS NULL OR y IS NULL OR isnan(x) OR isnan(y))"
-    pts = ev.withColumn(
-        "prep",
-        F.struct(
-            K.st_point(F.expr("x"), F.expr("y")).alias("geom"),
-            F.expr(f"CASE WHEN {ok} THEN array(x, y, x, y) END AS bbox"),
-            F.expr(f"{ok} AS boxy"),
-            F.expr("0.0D AS area"),
-        ),
-    )
+    # points and axis rects ARE their envelopes: as K.BOX_T the joins
+    # decide every pair by the bbox join alone and plan no Python node
+    pts = ev.withColumn("prep", K.st_point_box("x", "y"))
     nation = load_table(spark, sf_dir, "nation").selectExpr(
         "CAST(n_nationkey * 12 AS DOUBLE) - 160 AS x0",
         "CAST((n_nationkey % 5) * 30 AS DOUBLE) - 75 AS y0",
     )
-    # same rectangle ring the WKT text built (float->string->float
-    # round-trips are exact), one fused vectorized crossing
-    pp = K.st_poly_prep(
-        F.expr("array(x0, x0 + 10, x0 + 10, x0)"),
-        F.expr("array(y0, y0, y0 + 20, y0 + 20)"),
+    layer = nation.select(
+        K.st_rect_box("x0", "y0", "x0 + 10", "y0 + 20").alias("layer_prep")
     )
-    layer = nation.select(pp.alias("layer_prep"))
     return pts, layer
 
 

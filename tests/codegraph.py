@@ -23,6 +23,7 @@ base commit::
 from __future__ import annotations
 
 import ast
+import copy
 import subprocess
 import sys
 from collections.abc import Iterable
@@ -208,22 +209,35 @@ class Resolver:
         return out
 
 
+def _code(node: ast.AST) -> str:
+    """``node``'s AST as text, without the docstrings of it and of the
+    definitions inside it, and without positions: an edit to a
+    docstring or a comment alone, or a move, is no code change."""
+    node = copy.deepcopy(node)
+    for n in ast.walk(node):
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            first = n.body[0]
+            if isinstance(first, ast.Expr) and isinstance(
+                getattr(first.value, "value", None), str
+            ):
+                n.body = n.body[1:] or [ast.Pass()]
+    return ast.dump(node)
+
+
 def changed_defs(
     old: dict[str, str], new: dict[str, str], exempt: Iterable[str] = ()
 ) -> set[Key]:
-    """Top-level definitions whose source text differs between two trees
-    (module -> source maps); a name in ``exempt`` never counts."""
+    """Top-level definitions whose code (see ``_code``) differs between
+    two trees (module -> source maps); a name in ``exempt`` never
+    counts."""
     exempt = set(exempt)
     out: set[Key] = set()
 
-    def texts(src: str) -> dict[str, str]:
-        return {
-            k: ast.get_source_segment(src, v) or ""
-            for k, v in top_segments(src).items()
-        }
+    def codes(src: str) -> dict[str, str]:
+        return {k: _code(v) for k, v in top_segments(src).items()}
 
     for mod in set(old) | set(new):
-        a, b = texts(old.get(mod, "")), texts(new.get(mod, ""))
+        a, b = codes(old.get(mod, "")), codes(new.get(mod, ""))
         out |= {
             (mod, nm)
             for nm in set(a) | set(b)
@@ -267,13 +281,14 @@ def sources_at(rev: str) -> dict[str, str]:
 SCHEDULE = f"{PACKAGE}.plans.registry"
 
 
-def affected_queries(
-    base: str, queries: dict, exempt_symbols: Iterable[str] = ()
+def affected_between(
+    old: dict[str, str],
+    new: dict[str, str],
+    queries: dict,
+    exempt_symbols: Iterable[str] = (),
 ) -> set[str]:
     """Registered names whose function, or anything it references, has
-    changed since ``base`` (working tree against that commit)."""
-    new = package_sources()
-    old = sources_at(base)
+    changed from tree ``old`` to tree ``new`` (module -> source maps)."""
     direct = {
         k
         for k in changed_defs(old, new, exempt_symbols)
@@ -287,6 +302,13 @@ def affected_queries(
         for name, q in queries.items()
         if (q.spark_fn.__module__, q.spark_fn.__name__) in changed
     }
+
+
+def affected_queries(
+    base: str, queries: dict, exempt_symbols: Iterable[str] = ()
+) -> set[str]:
+    """``affected_between`` the ``base`` commit and the working tree."""
+    return affected_between(sources_at(base), package_sources(), queries, exempt_symbols)
 
 
 if __name__ == "__main__":

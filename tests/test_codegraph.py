@@ -107,3 +107,24 @@ def test_closure_keeps_same_named_package_definitions_apart():
     for other in ("distinct", "hashing", "bloom"):
         assert "_SEED" in resolver.defs[f"{llm}.{other}"]
         assert not any(mod == f"{llm}.{other}" for mod, _ in seed)
+
+
+def test_a_docstring_edit_alone_changes_no_row():
+    """A definition changes with its code, not its docstring: rewording
+    ``_bbox_overlap_sql``'s docstring flags no registered row, while an
+    edit to its predicate still reaches j1_boolean_intersect."""
+    from terra_bonobo_nodes_spark.plans.registry import all_queries
+
+    from tests.codegraph import affected_between
+
+    old = package_sources()
+    mod = f"{PACKAGE}.operators.spatial"
+    doc = '"""JVM-evaluated envelope-overlap predicate'
+    code = "element_at({a}, 1) <= element_at({b}, 3)"
+    assert old[mod].count(doc) == 1 and old[mod].count(code) == 1
+    reworded = dict(old, **{mod: old[mod].replace(doc, '"""The overlap predicate')})
+    assert changed_defs(old, reworded) == set()
+    assert affected_between(old, reworded, all_queries()) == set()
+    edited = dict(old, **{mod: old[mod].replace(code, code.replace("<=", "<"))})
+    assert changed_defs(old, edited) == {(mod, "_bbox_overlap_sql")}
+    assert "j1_boolean_intersect" in affected_between(old, edited, all_queries())

@@ -312,3 +312,216 @@ def test_geometry_parsers_share_the_auto_repair():
     assert list(K._st_geomfromany.func(pd.Series(geojson + wkt + [None]))) == (
         want + want + [None]
     )
+
+
+# --- K.BOX_T: SQL-built boxes against the Python preps they replace ----------
+
+_FINITE = st.one_of(
+    st.integers(-3, 3).map(float),
+    st.sampled_from([-0.0, 1e-13, 1e300, -1e300, 1.7e308]),
+    st.floats(allow_nan=False, allow_infinity=False),
+)
+
+
+def _hexed(bbox):
+    return None if bbox is None else [float(v).hex() for v in bbox]
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.tuples(_FINITE, _FINITE, _FINITE, _FINITE), min_size=1, max_size=20))
+def test_box_constructors_match_the_python_preps(spark, corners):
+    """Over finite corners, st_rect_box and st_point_box give the bbox
+    (NULL where it is NULL, signs of zero included) and the area that
+    st_poly_prep gives for the box's ring and the former hand-built
+    point prep gave, and st_box_wkb gives their geom byte for byte."""
+    from terra_bonobo_nodes_spark.operators.spatial import _prepared
+
+    df = spark.createDataFrame(
+        [(i, *c) for i, c in enumerate(corners)],
+        "id int, x0 double, y0 double, x1 double, y1 double",
+    )
+    boxes = df.select(
+        "id",
+        K.st_rect_box("x0", "y0", "x1", "y1").alias("rect"),
+        K.st_point_box("x0", "y0").alias("pt"),
+    )
+    got = {}
+    for side in ("rect", "pt"):
+        prep = _prepared(boxes, side, "p", K.st_prepare, "id")
+        got[side] = {r.id: r.p for r in prep.collect()}
+    # the box's ring runs counter-clockwise from its min corner
+    lo = [(min(a, c), min(b, d), max(a, c), max(b, d)) for a, b, c, d in corners]
+    xs = pd.Series([np.array([p, r, r, p]) for p, q, r, s in lo], dtype=object)
+    ys = pd.Series([np.array([q, q, s, s]) for p, q, r, s in lo], dtype=object)
+    ring = K._st_poly_prep.func(xs, ys)
+    x = pd.Series([c[0] for c in corners], dtype=np.float64)
+    y = pd.Series([c[1] for c in corners], dtype=np.float64)
+    point_wkb = list(K._st_point.func(x, y))
+    for i, (a, b, c, d) in enumerate(corners):
+        rect, pt = got["rect"][i], got["pt"][i]
+        want = ring.iloc[i]
+        assert _hexed(rect.bbox) == _canon(want["bbox"]), (i, corners[i])
+        assert rect.boxy
+        if rect.bbox is not None:
+            assert _canon(rect.area) == _canon(want["area"])
+            assert bytes(rect.geom) == bytes(want["geom"])
+            # the given corner order gives the same bbox
+            given = K._st_poly_prep.func(
+                pd.Series([np.array([a, c, c, a])]), pd.Series([np.array([b, b, d, d])])
+            )
+            assert _hexed(rect.bbox) == _canon(given["bbox"].iloc[0])
+        # the former hand-built point prep: bbox [x, y, x, y], area 0
+        assert _hexed(pt.bbox) == [a.hex(), b.hex(), a.hex(), b.hex()]
+        assert pt.area == 0.0 and pt.boxy
+        assert bytes(pt.geom) == point_wkb[i]
+
+
+def test_box_constructors_reject_invalid_and_degenerate_input(spark):
+    """NULL, NaN and infinite coordinates, and a rectangle side no
+    longer than ops.EPS, give bbox NULL (the row never joins) and
+    POINT EMPTY as WKB; st_poly_prep drops the same rings."""
+    inf, nan = math.inf, math.nan
+    bad = [
+        (None, 0.0, 1.0, 1.0),
+        (nan, 0.0, 1.0, 1.0),
+        (0.0, inf, 1.0, 1.0),
+        (-inf, 0.0, 1.0, 1.0),
+        (0.0, 0.0, 0.0, 1.0),  # zero width
+        (0.0, 0.0, 1.0, 1e-12),  # height == EPS
+        (0.0, -0.0, 1.0, 0.0),  # a side between the two zeros
+    ]
+    df = spark.createDataFrame(
+        [(i, *c) for i, c in enumerate(bad)],
+        "id int, x0 double, y0 double, x1 double, y1 double",
+    )
+    rows = df.select(
+        "id",
+        K.st_rect_box("x0", "y0", "x1", "y1").alias("r"),
+        K.st_point_box("x0", "y0").alias("p"),
+    ).collect()
+    assert all(r.r.bbox is None for r in rows)
+    assert [r.p.bbox is None for r in sorted(rows, key=lambda r: r.id)] == [
+        True, True, True, True, False, False, False
+    ]
+    wkb = K._st_box_wkb.func(pd.Series([None, np.array([1.0, 2.0, 1.0, 2.0])]))
+    assert list(wkb) == [W.write_wkb(W.POINT_EMPTY), W.write_wkb(("Point", (1.0, 2.0)))]
+    for a, b, c, d in bad[4:]:
+        ring = K._st_poly_prep.func(
+            pd.Series([np.array([a, c, c, a])]), pd.Series([np.array([b, b, d, d])])
+        )
+        assert ring["bbox"].iloc[0] is None
+
+
+def test_signed_zero_box_bbox_keeps_each_corner_sign(spark):
+    """The signed-zero case of the vectorized bbox: the SQL bbox keeps
+    each corner's sign, as the per-row prep does. A ring that holds both
+    0.0 and -0.0 on one axis has a zero-length side, so st_rect_box
+    gives NULL there and never picks between the two signs."""
+    df = spark.createDataFrame(
+        [(0, -0.0, 0.0, 2.0, 3.0), (1, 2.0, 3.0, -0.0, -0.0)],
+        "id int, x0 double, y0 double, x1 double, y1 double",
+    )
+    got = {
+        r.id: (r.b.bbox, r.p.bbox)
+        for r in df.select(
+            "id",
+            K.st_rect_box("x0", "y0", "x1", "y1").alias("b"),
+            K.st_point_box("x0", "y0").alias("p"),
+        ).collect()
+    }
+    assert _hexed(got[0][0]) == _hexed([-0.0, 0.0, 2.0, 3.0])
+    assert _hexed(got[1][0]) == _hexed([-0.0, -0.0, 2.0, 3.0])
+    assert _hexed(got[0][1]) == _hexed([-0.0, 0.0, -0.0, 0.0])
+    per_row = K._prep_row(W.write_wkb(("Point", (-0.0, 0.0))), repair=False)[1]
+    assert _hexed(per_row) == _hexed(got[0][1])
+    ring = [(-0.0, 0.0), (2.0, 0.0), (2.0, 3.0), (-0.0, 3.0), (-0.0, 0.0)]
+    per_row = K._prep_row(W.write_wkb(("Polygon", [ring])), repair=True)[1]
+    assert _hexed(per_row) == _hexed(got[0][0])
+
+
+def _ell_wkb(x, y):
+    ring = [(x, y), (x + 4, y), (x + 4, y + 2), (x + 2, y + 2), (x + 2, y + 4),
+            (x, y + 4), (x, y)]
+    return W.write_wkb(("Polygon", [ring]))
+
+
+@pytest.fixture(scope="module")
+def mixed_sides(spark):
+    """Points and squares as boxes and as the same WKB, against concave
+    L-shapes as WKB: records and a layer of each kind."""
+    pts = [(f"p{i}", float(i % 7) - 1.5, float(i % 5) - 0.5) for i in range(30)]
+    sq = [(f"s{i}", float(i % 6) - 2.0, float(i % 4) - 1.0) for i in range(24)]
+    box_rec = spark.createDataFrame(pts, "identifier string, x double, y double").select(
+        "identifier", K.st_point_box("x", "y").alias("g"), K.st_point("x", "y").alias("w")
+    ).unionByName(
+        spark.createDataFrame(sq, "identifier string, x double, y double").select(
+            "identifier",
+            K.st_rect_box("x", "y", "x + 1.5", "y + 1.5").alias("g"),
+            K.st_make_polygon(
+                F.expr("array(x, x + 1.5, x + 1.5, x)"), F.expr("array(y, y, y + 1.5, y + 1.5)")
+            ).alias("w"),
+        )
+    )
+    ells = spark.createDataFrame(
+        [(f"l{i}", _ell_wkb(float(i % 4) - 2.0, float(i % 3) - 2.0)) for i in range(12)],
+        "identifier string, g binary",
+    )
+    cells = spark.createDataFrame(
+        [(float(i % 4) - 2.0, float(i // 4) - 2.0) for i in range(16)], "x double, y double"
+    ).select(
+        K.st_rect_box("x", "y", "x + 1", "y + 1").alias("g"),
+        K.st_make_polygon(
+            F.expr("array(x, x + 1, x + 1, x)"), F.expr("array(y, y, y + 1, y + 1)")
+        ).alias("w"),
+    )
+    ell_layer = ells.select("g", F.col("g").alias("w"))
+    return box_rec, ells, cells, ell_layer
+
+
+def _answers(op, rec, lay, rg, lg, cell):
+    from terra_bonobo_nodes_spark.operators.spatial import (
+        boolean_intersect,
+        intersection_geom,
+        intersection_percent_by_area,
+    )
+
+    kw = dict(record_geom=rg, layer_geom=lg, cell=cell)
+    lay = lay.select(F.col(lg))
+    if op == "boolean_intersect":
+        out = boolean_intersect(rec, lay, out="v", **kw)
+    elif op.startswith("intersection_percent"):
+        out = intersection_percent_by_area(
+            rec, lay, out="v", dissolve=op.endswith("dissolve"), **kw
+        )
+    else:
+        # the clipped area: the collected parts' order is the
+        # aggregate's input order, which the plan does not fix
+        out = intersection_geom(rec, lay, geom_dest="zone", **kw)
+        out = out.withColumn("v", K.st_area("zone"))
+    return {r.identifier: r.v for r in out.select("identifier", "v").collect()}
+
+
+@pytest.mark.parametrize("cell", [None, 1.5])
+@pytest.mark.parametrize(
+    "op",
+    [
+        "boolean_intersect",
+        "intersection_percent_by_area",
+        "intersection_percent_by_area_dissolve",
+        "intersection_geom",
+    ],
+)
+def test_box_sides_answer_as_their_wkb(mixed_sides, op, cell):
+    """Box points and squares against concave L tiles, L records
+    against box cells, and boxes against boxes: each join answers
+    exactly as it does for the same geometry given as WKB."""
+    box_rec, ells, cells, ell_layer = mixed_sides
+    if op.startswith("intersection_percent"):
+        # a point record has no area to divide by
+        box_rec = box_rec.filter("identifier LIKE 's%'")
+    for rec, lay in ((box_rec, ell_layer), (ells, cells), (box_rec, cells)):
+        rec_g = "g" if "w" not in rec.columns else "w"
+        want = _answers(op, rec, lay, rec_g, "w", cell)
+        got = _answers(op, rec, lay, "g", "g", cell)
+        assert got == want
+        assert any(v not in (False, 0.0, None) for v in want.values())

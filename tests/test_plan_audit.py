@@ -445,15 +445,15 @@ def _noop(df) -> None:
 
 def test_spatial_rows_run_each_prep_kernel_once(spark):
     """boolean_intersect persists neither side and the join-prep kernels
-    evaluate once per row: j1 (a broadcast and a grid call) runs one
-    point build, one layer prep and one exact kernel per call, g9 and
-    j3 one prep per side."""
+    evaluate once per row: j1 (a broadcast and a grid call over box
+    points and box rects) plans no Python node at all, g9 and j3 one
+    prep per side."""
     q = all_queries()
     counts, plan = _python_nodes(
         spark, lambda: _noop(q["j1_boolean_intersect"].spark_fn(spark, SF_DIR))
     )
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
-    assert counts == {"_st_point": 2, "_st_poly_prep": 2, "_st_intersects": 2}
+    assert counts == {}
     counts, _ = _python_nodes(
         spark, lambda: _noop(q["g9_line_clip_length"].spark_fn(spark, SF_DIR))
     )
@@ -467,16 +467,17 @@ def test_spatial_rows_run_each_prep_kernel_once(spark):
 def test_overlay_surface_reads_each_side_once(spark):
     """intersection_percent_by_area persists neither side and builds one
     candidate join per call: the three legs of j2_overlay_surface run
-    one prep per side each, and the dissolve leg's union needs no
-    grouped aggregate and no per-pair intersects or intersection
-    kernel — one covered-area call per record measures it."""
+    one prep per WKB-prepared side each, and the dissolve leg's union
+    over boxes needs no prep, no grouped aggregate and no per-pair
+    intersects or intersection kernel — one covered-area call per
+    record measures it."""
     run = all_queries()["j2_overlay_surface"].spark_fn
     counts, plan = _python_nodes(spark, lambda: _noop(run(spark, SF_DIR)))
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
-    assert counts["_st_poly_prep"] == 6
+    assert counts["_st_poly_prep"] == 4
     assert "_st_union_area_agg" not in plan
     assert "_st_intersects" not in counts and "_st_intersection" not in counts
-    assert sum(counts.values()) == 9, counts
+    assert sum(counts.values()) == 7, counts
 
 
 def test_feature_layer_merge_reads_the_batch_once(spark, tmp_path):
@@ -542,12 +543,12 @@ def test_decontaminate_substring_runs_one_kernel_node_per_side(spark):
 
 
 # py4j commands each geo_ingest row sends while it is built a second
-# time at sf0.001 (281, 134 and 80), plus 10%. A Column operator costs
+# time at sf0.001 (166, 134 and 80), plus 10%. A Column operator costs
 # about 12 round trips and parsed SQL text about 3, so a row that goes
 # back to op-by-op Column chains fails here (j1 built that way sends
 # 758).
 GEO_INGEST_PY4J_BUDGET = {
-    "j1_boolean_intersect": 309,
+    "j1_boolean_intersect": 183,
     "s2_geojson_reader_roundtrip": 147,
     "s12_warc_wet_roundtrip": 88,
 }
