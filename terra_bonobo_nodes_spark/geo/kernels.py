@@ -455,8 +455,10 @@ def st_rect_box(x0: str, y0: str, x1: str, y1: str) -> Column:
     """:data:`BOX_T` of the axis rectangle with opposite corners (x0, y0)
     and (x1, y1), from SQL expressions: bbox ``[min x, min y, max x, max
     y]``. NULL unless every corner coordinate is finite and each side is
-    longer than ``ops.EPS`` — the rectangles whose ring ``st_poly_prep``
-    keeps (a shorter side is a duplicate vertex to ``make_valid``)."""
+    longer than ``ops.EPS``. Over finite corners these are the
+    rectangles whose ring ``st_poly_prep`` keeps (a shorter side is a
+    duplicate vertex to ``make_valid``); an infinite corner, which
+    ``st_poly_prep`` keeps with an infinite bbox, is NULL here."""
     x0, y0, x1, y1 = (f"double({v})" for v in (x0, y0, x1, y1))
     return F.expr(
         f"named_struct('bbox', CASE WHEN {_finite_sql(x0, y0, x1, y1)} "
@@ -902,12 +904,6 @@ def st_poly_prep(xs, ys) -> Column:
     NumPy-vectorized crossing — the fast lane for synthesized
     single-ring polygon columns feeding the spatial joins."""
     return _st_poly_prep_once(_col(xs), _col(ys))
-
-
-def st_box_wkb(bbox) -> Column:
-    """WKB of a :data:`BOX_T` bbox column: what an exact kernel reads
-    for a box."""
-    return _st_box_wkb(_col(bbox))
 
 
 def st_xy(g) -> Column:

@@ -246,13 +246,13 @@ def _prepared(
     alias: str,
     default: Callable[[Column], Column],
     *keep: str,
-    geom: bool = True,
+    bare: bool = False,
 ) -> DataFrame:
     """``df``'s ``keep`` columns and one side of a spatial join, aliased
     to ``alias``: a struct with ``bbox`` (``[x0, y0, x1, y1]``, what the
     candidate join reads), ``boxy``, ``area`` and ``geom`` (WKB, what
-    the exact kernels read; a box side leaves it out when ``geom`` is
-    False).
+    the exact kernels read). With ``bare`` a box side is its ``bbox``
+    alone (see ``_sides``).
 
     This is the prepared-geometry contract of the three joins: their
     ``record_geom`` and ``layer_geom`` each name a column of one of
@@ -269,33 +269,30 @@ def _prepared(
       ``st_point_box`` and ``st_rect_box`` return): a geometry that is
       its envelope, built in SQL. It is boxy and its area is SQL
       arithmetic, so it costs no Python, unless the join reads its WKB:
-      then one vectorized ``st_box_wkb`` pass builds ``geom``.
+      then one vectorized ``_st_box_wkb`` pass builds ``geom``.
 
     A boxy pair (points, axis rects: see ``st_bbox_boxy``) needs no
     exact kernel: its bbox overlap is the intersects answer and its
-    overlap rect the intersection. So each join asks ``_is_box`` at plan
-    time whether both sides are boxes, and then plans no exact kernel
-    and builds no WKB where its output is not geometry. One projection,
-    in parsed SQL text (the ``_bbox_overlap_sql`` rationale) except for
-    the Python kernels' calls."""
-    try:
-        dt = df.schema[name].dataType
-    except KeyError:
-        dt = None
+    overlap rect the intersection. One projection, in parsed SQL text
+    (the ``_bbox_overlap_sql`` rationale) except for the Python
+    kernels' calls."""
     kept = [ident(k) for k in keep]
+    if _is_box(df, name):
+        if bare:
+            return df.selectExpr(*kept, f"{ident(name)} AS {alias}")
+        bbox = f"{ident(name)}.bbox"
+        box = (
+            f"named_struct('bbox', {bbox}, 'boxy', true, "
+            f"'area', {K.box_area_sql(bbox)})"
+        )
+        prep = F.expr(box).withField("geom", K._st_box_wkb(F.expr(bbox))).alias(alias)
+        return df.select(*map(F.expr, kept), prep)
+    dt = df.schema[name].dataType if name in df.columns else None
     if isinstance(dt, BinaryType):
         prep = default(F.expr(ident(name))).alias(alias)
         return df.select(*map(F.expr, kept), prep)
     if dt is not None and dt.simpleString() == K.PREPARED_T.simpleString():
         return df.selectExpr(*kept, f"{ident(name)} AS {alias}")
-    if dt is not None and dt.simpleString() == K.BOX_T.simpleString():
-        bbox = f"{ident(name)}.bbox"
-        area = K.box_area_sql(bbox)
-        box = f"named_struct('bbox', {bbox}, 'boxy', true, 'area', {area})"
-        if not geom:
-            return df.selectExpr(*kept, f"{box} AS {alias}")
-        prep = F.expr(box).withField("geom", K.st_box_wkb(F.expr(bbox))).alias(alias)
-        return df.select(*map(F.expr, kept), prep)
     got = "no such column" if dt is None else dt.simpleString()
     raise ValueError(
         f"spatial join geometry column {name!r} must be binary (WKB), "
@@ -309,6 +306,27 @@ def _is_box(df: DataFrame, name: str) -> bool:
     return name in df.columns and (
         df.schema[name].dataType.simpleString() == K.BOX_T.simpleString()
     )
+
+
+def _sides(
+    records: DataFrame,
+    record_geom: str,
+    record_prep: Callable[[Column], Column],
+    layer: DataFrame,
+    layer_geom: str,
+    layer_prep: Callable[[Column], Column],
+    id_col: str,
+) -> tuple[DataFrame, DataFrame, bool]:
+    """The record side ``_rx`` (keeping ``id_col``) and the layer side
+    ``_lx`` of a spatial join whose output is not geometry (see
+    ``_prepared``), and whether both are boxes, read from the schema at
+    plan time. Then every pair is boxy, so the join plans no exact
+    kernel, and each side is its bare bbox: no WKB is built, and a
+    box's area is ``K.box_area_sql`` of its bbox."""
+    boxes = _is_box(records, record_geom) and _is_box(layer, layer_geom)
+    rec = _prepared(records, record_geom, "_rx", record_prep, id_col, bare=boxes)
+    lay = _prepared(layer, layer_geom, "_lx", layer_prep, bare=boxes)
+    return rec, lay, boxes
 
 
 def _with_geom(prep: Callable[[Column], Column]) -> Callable[[Column], Column]:
@@ -344,12 +362,10 @@ def boolean_intersect(
     answer and no kernel is planned. Each side is read once, with no
     cache. Rows with no layer match keep flag=False via left join +
     coalesce."""
-    exact = not (_is_box(records, record_geom) and _is_box(layer, layer_geom))
     prep = _with_geom(K.st_bbox_boxy)
-    rec = _prepared(records, record_geom, "_rx", prep, id_col, geom=exact)
-    lay = _prepared(layer, layer_geom, "_lx", prep, geom=exact)
+    rec, lay, boxes = _sides(records, record_geom, prep, layer, layer_geom, prep, id_col)
     hits = _candidates(rec, lay, cell)
-    if exact:
+    if not boxes:
         both_boxy = "_rx.boxy AND _lx.boxy"
         # NULL-mask the kernel args on the boxy pairs: Catalyst extracts
         # the pandas UDF out of the Filter into an ArrowEvalPython node
@@ -410,13 +426,13 @@ def intersection_percent_by_area(
     or collects the rects and features, and carries the area
     denominator. When both sides are boxes every pair is boxy, and only
     the closed-form and rect-corner branches are planned."""
-    boxes = _is_box(records, record_geom) and _is_box(layer, layer_geom)
     # ONE fused kernel pass prepares a WKB record side: make_valid
     # (idempotent, so the reference's per-pair repair collapses to
     # per-row), bbox, boxy flag, and the area denominator
-    geom = not boxes
-    rec = _prepared(records, record_geom, "_rx", K.st_prepare, id_col, geom=geom)
-    lay = _prepared(layer, layer_geom, "_lx", _with_geom(K.st_bbox_boxy), geom=geom)
+    rec, lay, boxes = _sides(
+        records, record_geom, K.st_prepare,
+        layer, layer_geom, _with_geom(K.st_bbox_boxy), id_col,
+    )
     cand = _candidates(rec, lay, cell)
     # parsed SQL text throughout (the _bbox_overlap_sql rationale)
     key = ident(id_col)
@@ -424,8 +440,9 @@ def intersection_percent_by_area(
         # every pair is boxy: the routing below folds to its rect
         # branch, and the sweep kernel gets no WKB
         both_boxy, rx, lx = "true", "CAST(NULL AS BINARY)", "CAST(NULL AS BINARY)"
+        ra = K.box_area_sql("_rx.bbox")
     else:
-        both_boxy = "_rx.boxy AND _lx.boxy"
+        both_boxy, ra = "_rx.boxy AND _lx.boxy", "_rx.area"
         # the kernel args are NULL-masked on boxy pairs, as in
         # boolean_intersect: the extracted Python node runs on EVERY
         # candidate row, and a NULL arg ships no WKB and skips the parse
@@ -453,7 +470,7 @@ def intersection_percent_by_area(
                 ),
                 f"{rx} AS _rg",
                 f"{lx} AS _lg",
-                "_rx.area AS _ra",
+                f"{ra} AS _ra",
             )
             .groupBy(id_col)
             # JVM collect_list (it skips the NULLs: a boxy pair adds
@@ -488,7 +505,7 @@ def intersection_percent_by_area(
                 K.st_intersection_area(F.expr(rx), F.expr(lx))
             )
         per_id = (
-            cand.select(F.expr(key), ia.alias("_ia"), F.expr("_rx.area AS _ra"))
+            cand.select(F.expr(key), ia.alias("_ia"), F.expr(f"{ra} AS _ra"))
             .groupBy(id_col)
             .agg(F.expr("sum(_ia) AS _zone_area"), F.expr("max(_ra) AS _ra"))
         )

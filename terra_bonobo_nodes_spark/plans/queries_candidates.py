@@ -2071,16 +2071,13 @@ def j2_overlay_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dissolve fixture: 4x4 squares on a (kx, ky) lattice vs 40
     # grid-snapped heavily overlapping 4x4 tiles (the standalone row's
     # fixture verbatim)
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.col("c_custkey") % 7).cast("double").alias("kx"),
-        (F.col("c_custkey") % 5).cast("double").alias("ky"),
+    cust = load_table(spark, sf_dir, "customer").selectExpr(
+        "c_custkey AS identifier", "double(c_custkey % 7) AS kx", "double(c_custkey % 5) AS ky"
     )
     # both sides are axis squares, so K.BOX_T built in SQL: the leg
     # plans no prep kernel and no exact kernel, only the rect sweep
     records = cust.select(
-        F.col("c_custkey").alias("identifier"),
-        K.st_rect_box("kx", "ky", "kx + 4", "ky + 4").alias("prep"),
+        "identifier", K.st_rect_box("kx", "ky", "kx + 4", "ky + 4").alias("prep")
     )
     t = spark.range(0, 40, 1, 1)  # one partition — see _tile_layer
     tiles = t.selectExpr(

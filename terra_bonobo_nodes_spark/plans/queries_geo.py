@@ -27,39 +27,44 @@ from terra_bonobo_nodes_spark.plans.registry import register
 from terra_bonobo_nodes_spark.tables import load_table
 
 
-def _customer_rects(spark: SparkSession, sf_dir: str, half: float = 3.0) -> DataFrame:
-    """Axis-aligned square per customer, center derived from acctbal/key."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.col("c_acctbal") % 100.0).alias("cx"),
-        (F.col("c_custkey") % 100).cast("double").alias("cy"),
+def _customer_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(identifier, cx, cy) per customer, from acctbal/key: the anchor
+    each customer fixture builds its shape on (RECTS_SQL's ``rect``)."""
+    return load_table(spark, sf_dir, "customer").selectExpr(
+        "c_custkey AS identifier",
+        "c_acctbal % 100.0D AS cx",
+        "double(c_custkey % 100) AS cy",
     )
-    h = F.lit(half)
-    cx, cy = F.col("cx"), F.col("cy")
-    # ONE fused, vectorized crossing: the prepared geometry (st_prepare's
-    # struct), which the spatial joins take as record_geom="prep" and
-    # use as-is instead of running their own per-row prepare pass
-    pp = K.st_poly_prep(
-        F.array(cx - h, cx + h, cx + h, cx - h),
-        F.array(cy - h, cy - h, cy + h, cy + h),
-    )
-    return cust.select(F.col("c_custkey").alias("identifier"), pp.alias("prep"))
 
 
-def _tile_layer(spark: SparkSession) -> DataFrame:
-    """110 disjoint 10x10 tiles covering x in [-100,0), y in [-10,100),
-    as one prepared column ``layer_prep`` (see _customer_rects)."""
+def _tile_origins(spark: SparkSession) -> DataFrame:
+    """(x0, y0), the min corner of each of the 110 cells of the 10-grid
+    covering x in [-100,0), y in [-10,100) (TILES_SQL)."""
     # ONE partition: a dimension-sized broadcast layer planned as 32
     # range slices turns each chained kernel into a 32-task Python
     # stage (~1s of worker dispatch for 110 rows)
-    t = spark.range(0, 110, 1, 1)
-    x0 = ((F.col("id") % 10) * 10 - 100).cast("double")
-    y0 = ((F.col("id") / 10).cast("long") * 10 - 10).cast("double")
-    pp = K.st_poly_prep(
-        F.array(x0, x0 + 10, x0 + 10, x0),
-        F.array(y0, y0, y0 + 10, y0 + 10),
+    return spark.range(0, 110, 1, 1).selectExpr(
+        "double((id % 10) * 10 - 100) AS x0", "double(id div 10 * 10 - 10) AS y0"
     )
-    return t.select(pp.alias("layer_prep"))
+
+
+def _customer_rects(spark: SparkSession, sf_dir: str, half: float = 3.0) -> DataFrame:
+    """Axis-aligned square per customer around its anchor, as one
+    :data:`K.BOX_T` column ``prep``: built in SQL, so the joins take it
+    as record_geom="prep" with no Python prepare pass."""
+    h = f"{float(half)!r}D"
+    return _customer_anchors(spark, sf_dir).select(
+        "identifier",
+        K.st_rect_box(f"cx - {h}", f"cy - {h}", f"cx + {h}", f"cy + {h}").alias("prep"),
+    )
+
+
+def _tile_layer(spark: SparkSession) -> DataFrame:
+    """The 110 disjoint 10x10 tiles of the 10-grid as one
+    :data:`K.BOX_T` column ``layer_prep`` (see _customer_rects)."""
+    return _tile_origins(spark).select(
+        K.st_rect_box("x0", "y0", "x0 + 10", "y0 + 10").alias("layer_prep")
+    )
 
 
 TILES_SQL = """
@@ -78,30 +83,22 @@ rect AS (
 
 
 def _customer_ells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concave L per customer: 4x2 base + 2x2 tower (area 12)."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.col("c_acctbal") % 100.0).alias("cx"),
-        (F.col("c_custkey") % 100).cast("double").alias("cy"),
-    )
-    cx, cy = F.col("cx"), F.col("cy")
+    """Concave L per customer: 4x2 base + 2x2 tower (area 12), as one
+    prepared column ``prep`` (ONE fused, vectorized st_poly_prep pass)."""
     pp = K.st_poly_prep(
-        F.array(cx, cx + 4, cx + 4, cx + 2, cx + 2, cx),
-        F.array(cy, cy, cy + 2, cy + 2, cy + 4, cy + 4),
+        F.expr("array(cx, cx + 4, cx + 4, cx + 2, cx + 2, cx)"),
+        F.expr("array(cy, cy, cy + 2, cy + 2, cy + 4, cy + 4)"),
     )
-    return cust.select(F.col("c_custkey").alias("identifier"), pp.alias("prep"))
+    return _customer_anchors(spark, sf_dir).select("identifier", pp.alias("prep"))
 
 
 def _ell_tile_layer(spark: SparkSession) -> DataFrame:
     """Concave L tiles on the 10-grid: 10x5 base + 5x5 tower (area 75)."""
-    t = spark.range(0, 110, 1, 1)  # one partition — see _tile_layer
-    x0 = ((F.col("id") % 10) * 10 - 100).cast("double")
-    y0 = ((F.col("id") / 10).cast("long") * 10 - 10).cast("double")
     pp = K.st_poly_prep(
-        F.array(x0, x0 + 10, x0 + 10, x0 + 5, x0 + 5, x0),
-        F.array(y0, y0, y0 + 5, y0 + 5, y0 + 10, y0 + 10),
+        F.expr("array(x0, x0 + 10, x0 + 10, x0 + 5, x0 + 5, x0)"),
+        F.expr("array(y0, y0, y0 + 5, y0 + 5, y0 + 10, y0 + 10)"),
     )
-    return t.select(pp.alias("layer_prep"))
+    return _tile_origins(spark).select(pp.alias("layer_prep"))
 
 
 ELLS_SQL = """
@@ -477,16 +474,10 @@ def g9_line_clip_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     chord, which the oracle states in closed form. The chord sits at
     cy+0.5 so it never lies ON a tile boundary (boundary segments
     would be claimed by both adjacent tiles)."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.col("c_acctbal") % 100.0).alias("cx"),
-        (F.col("c_custkey") % 100).cast("double").alias("cy"),
+    chord = K.st_make_line(
+        F.expr("array(cx - 20, cx + 20)"), F.expr("array(cy + 0.5D, cy + 0.5D)")
     )
-    cx, y = F.col("cx"), F.col("cy") + 0.5
-    lines = cust.select(
-        F.col("c_custkey").alias("identifier"),
-        K.st_make_line(F.array(cx - 20, cx + 20), F.array(y, y)).alias("geom"),
-    )
+    lines = _customer_anchors(spark, sf_dir).select("identifier", chord.alias("geom"))
     clipped = intersection_geom(
         lines, _tile_layer(spark), layer_geom="layer_prep", geom_dest="zone"
     )

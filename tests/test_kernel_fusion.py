@@ -333,7 +333,7 @@ def test_box_constructors_match_the_python_preps(spark, corners):
     """Over finite corners, st_rect_box and st_point_box give the bbox
     (NULL where it is NULL, signs of zero included) and the area that
     st_poly_prep gives for the box's ring and the former hand-built
-    point prep gave, and st_box_wkb gives their geom byte for byte."""
+    point prep gave, and _st_box_wkb gives their geom byte for byte."""
     from terra_bonobo_nodes_spark.operators.spatial import _prepared
 
     df = spark.createDataFrame(
@@ -379,7 +379,9 @@ def test_box_constructors_match_the_python_preps(spark, corners):
 def test_box_constructors_reject_invalid_and_degenerate_input(spark):
     """NULL, NaN and infinite coordinates, and a rectangle side no
     longer than ops.EPS, give bbox NULL (the row never joins) and
-    POINT EMPTY as WKB; st_poly_prep drops the same rings."""
+    POINT EMPTY as WKB. st_poly_prep drops the same finite rings; a
+    ring with an infinite corner it keeps, with an infinite bbox and a
+    NaN area, where st_rect_box gives NULL."""
     inf, nan = math.inf, math.nan
     bad = [
         (None, 0.0, 1.0, 1.0),
@@ -405,11 +407,14 @@ def test_box_constructors_reject_invalid_and_degenerate_input(spark):
     ]
     wkb = K._st_box_wkb.func(pd.Series([None, np.array([1.0, 2.0, 1.0, 2.0])]))
     assert list(wkb) == [W.write_wkb(W.POINT_EMPTY), W.write_wkb(("Point", (1.0, 2.0)))]
-    for a, b, c, d in bad[4:]:
+    for i, (a, b, c, d) in enumerate(bad[2:], start=2):
         ring = K._st_poly_prep.func(
             pd.Series([np.array([a, c, c, a])]), pd.Series([np.array([b, b, d, d])])
-        )
-        assert ring["bbox"].iloc[0] is None
+        ).iloc[0]
+        if i < 4:
+            assert any(math.isinf(v) for v in ring["bbox"]) and math.isnan(ring["area"])
+        else:
+            assert ring["bbox"] is None
 
 
 def test_signed_zero_box_bbox_keeps_each_corner_sign(spark):

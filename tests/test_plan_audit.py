@@ -446,8 +446,8 @@ def _noop(df) -> None:
 def test_spatial_rows_run_each_prep_kernel_once(spark):
     """boolean_intersect persists neither side and the join-prep kernels
     evaluate once per row: j1 (a broadcast and a grid call over box
-    points and box rects) plans no Python node at all, g9 and j3 one
-    prep per side."""
+    points and box rects) plans no Python node at all; g9 and j3, whose
+    output is geometry, one prep or box-WKB pass per side."""
     q = all_queries()
     counts, plan = _python_nodes(
         spark, lambda: _noop(q["j1_boolean_intersect"].spark_fn(spark, SF_DIR))
@@ -457,27 +457,27 @@ def test_spatial_rows_run_each_prep_kernel_once(spark):
     counts, _ = _python_nodes(
         spark, lambda: _noop(q["g9_line_clip_length"].spark_fn(spark, SF_DIR))
     )
-    assert counts["_st_prepare"] == 1 and counts["_st_poly_prep"] == 1
+    assert counts["_st_prepare"] == 1 and counts["_st_box_wkb"] == 1
     counts, _ = _python_nodes(
         spark, lambda: _noop(q["j3_intersection_geom_area"].spark_fn(spark, SF_DIR))
     )
-    assert counts["_st_poly_prep"] == 2
+    assert counts["_st_box_wkb"] == 2
 
 
 def test_overlay_surface_reads_each_side_once(spark):
     """intersection_percent_by_area persists neither side and builds one
-    candidate join per call: the three legs of j2_overlay_surface run
-    one prep per WKB-prepared side each, and the dissolve leg's union
-    over boxes needs no prep, no grouped aggregate and no per-pair
-    intersects or intersection kernel — one covered-area call per
-    record measures it."""
+    candidate join per call. Of the three legs of j2_overlay_surface
+    only the concave one runs a prep per side and an exact area kernel;
+    the pairwise and dissolve legs are boxes on both sides, so they run
+    no prep and no exact kernel, and the dissolve leg's union needs no
+    grouped aggregate — one covered-area call per record measures it."""
     run = all_queries()["j2_overlay_surface"].spark_fn
     counts, plan = _python_nodes(spark, lambda: _noop(run(spark, SF_DIR)))
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
-    assert counts["_st_poly_prep"] == 4
+    assert counts["_st_poly_prep"] == 2 and counts["_st_intersection_area"] == 1
     assert "_st_union_area_agg" not in plan
     assert "_st_intersects" not in counts and "_st_intersection" not in counts
-    assert sum(counts.values()) == 7, counts
+    assert sum(counts.values()) == 4, counts
 
 
 def test_feature_layer_merge_reads_the_batch_once(spark, tmp_path):
